@@ -36,24 +36,7 @@ object Bench {
     val loadStart = load1()
     val ticksStart = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // per-process warehouse: concurrent graft JVMs must not race on
-      // ./spark-warehouse table dirs (Scratch.warehouseDir scaladoc)
-      .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-      // default is 100 entries — a ~400-query board evicts constantly
-      // and re-janino-compiles every stage on the second timing pass; a
-      // long-lived cluster session sizes this to its workload (static
-      // conf, must be set before the session exists). Identical
-      // generated classes, identical work per run — only the compile
-      // step is cached, which is the cache's documented purpose.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     // Warm the session before timing: JVM/codegen/parquet-reader init is
     // one-time startup cost, not part of any query (a long-lived cluster
     // session amortizes it across every job it ever runs). Touch every

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for the load-bearing queries so the
   * shuffle/broadcast/pushdown shape can be audited (SURVEY.md §4.2).
   * Usage: runMain graft.PlanAudit <sfDir> [queryKey ...]
@@ -12,14 +10,7 @@ object PlanAudit {
     val keys = if (args.length > 1) args.tail.toSeq
       else Seq("filter_pred", "join_multiway", "join_theta_range",
                "agg_groupby", "dedup_ngram_jaccard", "sim_knn_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     keys.foreach { k =>
       println(s"\n=== PLAN: $k ===")
       SparkEntry.queries(k)(spark, sfDir).explain("formatted")

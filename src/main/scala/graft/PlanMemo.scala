@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Session-scoped memoization keyed by a DataFrame's PLAN and its DATA
@@ -22,14 +22,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    flagged in the semanticHash-only banding memo. Non-file leaves
   *    (LocalRelation, in-memory streams) are immutable by construction
   *    and contribute nothing.
-  *  - **Session-weak + lock-free compute**: sessions key a WeakHashMap
-  *    (a stopped, dereferenced session's entries are collectable) and
-  *    `compute` runs OUTSIDE any lock — concurrent first-callers over
-  *    DIFFERENT corpora never serialize behind each other's Spark jobs
-  *    (the r13 advisor's banding-probe finding, kept). Two concurrent
-  *    first-callers on the SAME key may both compute; deterministic
-  *    probes make the duplicate result identical, and
-  *    `putIfAbsent`-then-read keeps the outcome single-valued.
+  *  - **Session scope**: decisions live in `SessionMemo`, so a new
+  *    session re-probes and concurrent first-callers over DIFFERENT
+  *    corpora never serialize behind each other's Spark jobs.
   */
 object PlanMemo {
 
@@ -62,27 +57,10 @@ object PlanMemo {
     acc
   }
 
-  private val memos = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Long), Any]]()
-
   /** Memoize `compute` per (session, tag, plan semanticHash, data
     * version). `tag` namespaces independent decisions over the same
     * frame (banding layout vs scan width). */
-  def cached[T](df: DataFrame, tag: String)(compute: => T): T = {
-    val key = (tag, df.queryExecution.analyzed.semanticHash(),
-               dataVersion(df))
-    val perSession = memos.synchronized {
-      Option(memos.get(df.sparkSession)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap[(String, Int, Long), Any]()
-        memos.put(df.sparkSession, m); m
-      }
-    }
-    perSession.get(key) match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
-        val v = compute
-        perSession.putIfAbsent(key, v)
-        perSession(key).asInstanceOf[T]
-    }
-  }
+  def cached[T](df: DataFrame, tag: String)(compute: => T): T =
+    SessionMemo(df.sparkSession,
+      (tag, df.queryExecution.analyzed.semanticHash(), dataVersion(df)))(compute)
 }

@@ -18,12 +18,12 @@ import org.apache.spark.sql.SparkSession
   * Protocol per (dir, key): one untimed WARM run first (pays the JIT /
   * codegen / session-memo investment — codebooks, staged layouts,
   * UserFrames — so the timed runs measure the steady-state query, the
-  * thing that must scale), then min-of-2 timed runs. The warm (first)
-  * run's time is also reported: for memoized keys it shows how the
-  * INVESTMENT grows, which matters independently (an n^1.5 codebook
-  * training is fine; an n^2 one is not). Byte metrics come from the
-  * SECOND timed run only (counters reset right before it), so they are
-  * steady-state too.
+  * thing that must scale), then min-of-N timed runs (`timedRuns`).
+  * The warm (first) run's time is also reported: for memoized keys it
+  * shows how the INVESTMENT grows, which matters independently (an
+  * n^1.5 codebook training is fine; an n^2 one is not). Byte metrics
+  * come from the LAST timed run only (counters reset right before it),
+  * so they are steady-state too.
   *
   * Reading the exponents: keys have a fixed ~0.1-0.2 s scheduling floor
   * that data growth does not touch, so CHEAP keys (tA under ~0.3 s)
@@ -100,6 +100,17 @@ object ScaleProbe {
 
   private case class Mem(sw: Long, spill: Long, px: Long)
 
+  /** SPARK_GRAFT_PROBE_RUNS, the timed-run count this probe and
+    * CrossoverProbe share (default 2): more than one run means one
+    * untimed warm run plus min-of-runs. The knob is for DEEP probe
+    * points (100×): when a single run is minutes long, warm + min-of-2
+    * triples a probe that JIT/session constants (~3-5 s) cannot
+    * meaningfully bias, and 1 collapses it to one timed run whose own
+    * byte capture is used. */
+  private[graft] def timedRuns(): Int =
+    scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt)
+      .getOrElse(2).max(1)
+
   def main(args: Array[String]): Unit = {
     // the per-key lines below use f"%.3f": on a decimal-comma default
     // locale they would emit invalid JSON — pin the process locale
@@ -111,16 +122,7 @@ object ScaleProbe {
       else DefaultKeys
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     val mem = new MemListener
     spark.sparkContext.addSparkListener(mem)
 
@@ -145,32 +147,19 @@ object ScaleProbe {
     // of the exponent summary instead of killing the whole probe (full-
     // board runs hit a handful of keys whose staging assumes the
     // driver's exact corpus layout).
-    // Protocol knob for DEEP probe points (100×): when a single run is
-    // minutes long, the warm-run + min-of-2 discipline triples a probe
-    // that JIT/session constants (~3-5 s) cannot meaningfully bias —
-    // SPARK_GRAFT_PROBE_RUNS=1 collapses to one timed run whose own
-    // byte capture is used. Default keeps the honest 2-run protocol.
-    val timedRuns = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt)
-      .getOrElse(2).max(1)
+    val runs = timedRuns()
     val results = (for (key <- keys) yield {
       val fn = SparkEntry.queries(key)
       def probe(dir: String): (Double, Double, Mem) = {
-        if (timedRuns == 1) {
-          Thread.sleep(200); mem.reset()
-          val t = time(fn, dir)
-          Thread.sleep(200)
-          return (t, t, Mem(mem.shuffleWrite.get, mem.spill.get,
-                            mem.peakExec.get))
+        val warm = if (runs > 1) Some(time(fn, dir)) else None
+        val times = (1 to runs).map { i =>
+          // steady-state byte capture: reset right before the last timed
+          // run, then give the async listener bus a moment to drain
+          if (i == runs) { Thread.sleep(200); mem.reset() }
+          time(fn, dir)
         }
-        val warm = time(fn, dir)
-        val t1 = time(fn, dir)
-        // steady-state byte capture: reset right before the second timed
-        // run, then give the async listener bus a moment to drain
-        Thread.sleep(200); mem.reset()
-        val t2 = time(fn, dir)
         Thread.sleep(200)
-        (warm, math.min(t1, t2),
+        (warm.getOrElse(times.head), times.min,
          Mem(mem.shuffleWrite.get, mem.spill.get, mem.peakExec.get))
       }
       try {

@@ -26,11 +26,6 @@ object Scratch {
     d.toString
   }
 
-  private val staged =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String,
-        java.util.concurrent.CompletableFuture[String]]]()
-
   /** Session-memoized staging directory: `build` writes the layout into
     * a fresh scratch dir on the FIRST call per (session, key); every
     * later call returns the same dir without rebuilding. For operators
@@ -40,47 +35,21 @@ object Scratch {
     * invocation (twice per bench pass) is pure waste, the same
     * economics as persistBucketed and the DailyFrames/coPurchaseFrames
     * memos. Sink keys whose graded semantics IS the write must NOT use
-    * this. Keyed by the SparkSession OBJECT through a WeakHashMap (a
-    * stopped, dereferenced session's entry is collectable; a new
-    * session re-stages), inner key chosen by the caller and must
-    * include the sf dir so scale factors never cross-contaminate.
+    * this. The key is chosen by the caller and must include the sf dir
+    * so scale factors never cross-contaminate; locking and retry-after-
+    * failure are `SessionMemo`'s.
     *
-    * Locking: the global monitor is held only long enough to install a
-    * per-(session, key) promise — the multi-second Spark write in
-    * `build` runs OUTSIDE it, so concurrent staging of UNRELATED keys
-    * proceeds in parallel and only same-key callers block (on the
-    * promise, not the global lock). A failed build clears its promise
-    * so a later caller can retry instead of joining a poisoned future.
     * Warm hits log to stderr: memoized keys time only the read after
     * their first invocation, so a per-key first-pass bench number is
     * order-dependent — the log line makes that visible in the run. */
   def stagedDir(s: org.apache.spark.sql.SparkSession, key: String,
                 prefix: String)(build: String => Unit): String = {
-    val (fut, owner) = staged.synchronized {
-      val perKey = Option(staged.get(s)).getOrElse {
-        val m = scala.collection.mutable.Map[String,
-          java.util.concurrent.CompletableFuture[String]]()
-        staged.put(s, m); m
-      }
-      perKey.get(key) match {
-        case Some(f) => (f, false)
-        case None =>
-          val f = new java.util.concurrent.CompletableFuture[String]()
-          perKey.put(key, f); (f, true)
-      }
+    var built = false
+    val d = SessionMemo(s, ("Scratch.stagedDir", key)) {
+      val d = dir(prefix); build(d); built = true; d
     }
-    if (owner) {
-      try fut.complete { val d = dir(prefix); build(d); d }
-      catch {
-        case t: Throwable =>
-          staged.synchronized {
-            Option(staged.get(s)).foreach(_.remove(key)); ()
-          }
-          fut.completeExceptionally(t)
-          throw t
-      }
-    } else System.err.println(s"[scratch] warm staging memo hit: $key")
-    fut.join()
+    if (!built) System.err.println(s"[scratch] warm staging memo hit: $key")
+    d
   }
 
   /** Per-PROCESS warehouse directory for every harness SparkSession

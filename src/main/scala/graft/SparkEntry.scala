@@ -18,7 +18,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.aggGroupBy(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.1 scans
     "scan_parquet"      -> Relational.scanParquet _,
     "scan_json_lines"   -> Relational.scanJsonLines _,
@@ -484,7 +484,7 @@ object SparkEntry {
       s"SELECT * FROM ($rows) ORDER BY col_x, col_y"
   }
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "scan_parquet" ->
       "SELECT l_orderkey, l_linenumber FROM lineitem ORDER BY l_orderkey, l_linenumber",
     // scan_schema_evolution: old batch lacks n_chars → NULL after the

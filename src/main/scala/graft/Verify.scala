@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // per-process warehouse: concurrent graft JVMs must not race on
-      // ./spark-warehouse table dirs (Scratch.warehouseDir scaladoc)
-      .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-      // sized for the ~400-query board (Bench.scala has the rationale)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (unset in the driver's run): comma-separated
     // key list restricts both the query dump and the oracle manifest.

@@ -25,34 +25,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: at 100 TB this is the classic shared daily rollup a
   * warehouse materializes once per day — the memo is that materialized
-  * view, session-scoped. Keyed by the SparkSession OBJECT through a
-  * WeakHashMap (reference equality — an identity HASH may collide
-  * across live sessions) so a restarted session's checkpoint blocks are
-  * GC-collectable with it; a stopped-context guard drops entries
-  * eagerly on next access.
+  * view, session-scoped (`SessionMemo`).
   */
 private[graft] object DailyFrames {
-  private val memo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  def daily(s: SparkSession, sf: String): DataFrame = memo.synchronized {
-    if (s.sparkContext.isStopped) memo.remove(s)
-    val perSf = {
-      val existing = memo.get(s)
-      if (existing != null) existing
-      else {
-        val m = scala.collection.mutable.Map.empty[String, DataFrame]
-        memo.put(s, m); m
-      }
-    }
-    perSf.getOrElseUpdate(sf, {
+  def daily(s: SparkSession, sf: String): DataFrame =
+    graft.SessionMemo(s, ("DailyFrames.daily", sf)) {
       graft.Tables.events(s, sf)
         .groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("c"),
              count(col("value")).as("cv"),
              round(sum(col("value")), 4).as("x4"))
         .localCheckpoint(true)
-    })
-  }
+    }
 }

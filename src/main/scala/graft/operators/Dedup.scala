@@ -198,9 +198,9 @@ object Dedup {
     *              iterative path (specs pin it that way).
     * @param eagerEdges finalize the edge checkpoint at creation instead
     *              of at the dispatch probe's count — measurement knob
-    *              for the eager-vs-lazy trade (CcProbe); lazy is the
-    *              shipped default (measured over-cap at the 30× organic
-    *              corpus, see CcProbe results in PROGRESS r14).
+    *              for the eager-vs-lazy trade (`CrossoverProbe cc`);
+    *              lazy is the shipped default (measured over-cap at the
+    *              30× organic corpus, see PROGRESS r14).
     * @return columns `id`, `label` (= min id of the component). */
   private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
                                          maxIters: Int,
@@ -992,21 +992,21 @@ object Dedup {
     *    Σ block²: r14 quiet-host numbers 11.7 s at 10× vs the grid's
     *    22.3, 16.0 vs 118.9 at 30×, 47.4 s at 100× (the r13 form read
     *    107.1 s), α(10×→100×) = 0.55. DedupSimilaritySpec pins both
-    *    paths equal on the graded corpus and DispatchProbe re-asserted
-    *    row-equality at 10×/30×. */
+    *    paths equal on the graded corpus and `CrossoverProbe
+    *    containment` re-asserted row-equality at 10×/30×. */
   def dedupContainment(s: SparkSession, sf: String): DataFrame = {
     val docs = jaccardDocs(s, sf)
     if (containmentPicksGrid(docs)) containmentGridJoin(docs)
     else containmentPrefixJoin(docs)
   }
 
-  /** The dispatch predicate, exposed so DispatchProbe can report what
+  /** The dispatch predicate, exposed so CrossoverProbe can report what
     * the threshold WOULD pick next to what actually measures faster.
     * Row-count based since r13 — the r12 512 MB byte-estimate threshold
     * had the mis-scaling blockPairSpaceBounded documents (compressed
     * low-entropy text: a 500 k-doc corpus estimated 24 MB, so the grid
     * ran at every organic scale); the grid's Σ block² cost is driven by
-    * block ROWS. Crossover validated by DispatchProbe on the fixed
+    * block ROWS. Crossover validated by CrossoverProbe on the fixed
     * corpora (numbers in PROGRESS r13). */
   private[graft] def containmentPicksGrid(docs: DataFrame): Boolean =
     blockPairSpaceBounded(docs, ContainmentGridMaxRows)

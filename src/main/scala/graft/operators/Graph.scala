@@ -210,30 +210,9 @@ object Graph {
     * family's 31 s bench cost). The checkpoints live for the session
     * (the same amortization the shared session itself is) and are
     * released with it; per-kernel CpTrackers never see these ids, so
-    * their releaseAllExcept can't evict the shared frames.
-    *
-    * Keyed by the SparkSession OBJECT through a WeakHashMap (not an
-    * identity hash, which is a hash and may collide across two live
-    * sessions — handing one session RDDs pinned to another context):
-    * reference equality is exact, and a restarted session's entry is
-    * GC-collectable the moment the old session is, so stale checkpoint
-    * blocks don't pin the old context for the JVM lifetime. A
-    * stopped-context guard drops the entry eagerly on next access. */
-  private val edgeMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (DataFrame, DataFrame)]]()
+    * their releaseAllExcept can't evict the shared frames. */
   private def coPurchaseFrames(s: SparkSession, sf: String): (DataFrame, DataFrame) =
-    edgeMemo.synchronized {
-      if (s.sparkContext.isStopped) edgeMemo.remove(s)
-      val perSf = {
-        val existing = edgeMemo.get(s)
-        if (existing != null) existing
-        else {
-          val m = scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)]
-          edgeMemo.put(s, m); m
-        }
-      }
-      perSf.getOrElseUpdate(sf, {
+    graft.SessionMemo(s, ("Graph.coPurchaseFrames", sf)) {
       val items = Tables.lineitem(s, sf)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       val oriented = items.as("a").join(items.as("b"),
@@ -247,40 +226,24 @@ object Graph {
         .unionAll(oriented.select(col("v").as("u"), col("u").as("v")))
         .localCheckpoint(true)
       (oriented, sym)
-      })
     }
   /** Distinct (part, supplier) bipartite edge set shared by four
     * kernels (hits, pagerank, random_walk, degree_stats) that each
     * previously re-derived the same lineitem-distinct — and graphHits
     * fed it to THREE reinforcement joins un-memoized, re-running the
     * scan+distinct per round (r10 verdict ask #2, board's most
-    * expensive key at 3.28 s). Same session-lifetime amortization and
-    * WeakHashMap keying as coPurchaseFrames above (see that scaladoc
-    * for the stopped-context / GC rationale). Stored raw (p = partkey,
-    * q = suppkey as longs); the 2k / 2k+1 node encodings pagerank and
-    * random_walk use are bijective per side, so deriving them POST-memo
-    * is a cheap projection that preserves distinctness. */
-  private val bipMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
+    * expensive key at 3.28 s). Same session-lifetime amortization as
+    * coPurchaseFrames above. Stored raw (p = partkey, q = suppkey as
+    * longs); the 2k / 2k+1 node encodings pagerank and random_walk use
+    * are bijective per side, so deriving them POST-memo is a cheap
+    * projection that preserves distinctness. */
   private def bipartiteEdges(s: SparkSession, sf: String): DataFrame =
-    bipMemo.synchronized {
-      if (s.sparkContext.isStopped) bipMemo.remove(s)
-      val perSf = {
-        val existing = bipMemo.get(s)
-        if (existing != null) existing
-        else {
-          val m = scala.collection.mutable.Map.empty[String, DataFrame]
-          bipMemo.put(s, m); m
-        }
-      }
-      perSf.getOrElseUpdate(sf, {
-        Tables.lineitem(s, sf)
-          .select(col("l_partkey").cast("long").as("p"),
-                  col("l_suppkey").cast("long").as("q"))
-          .distinct()
-          .localCheckpoint(true)
-      })
+    graft.SessionMemo(s, ("Graph.bipartiteEdges", sf)) {
+      Tables.lineitem(s, sf)
+        .select(col("l_partkey").cast("long").as("p"),
+                col("l_suppkey").cast("long").as("q"))
+        .distinct()
+        .localCheckpoint(true)
     }
   /** The memoized bipartite frame in the 2k / 2k+1 long-node encoding
     * pagerank and random_walk shuffle on (see pagerank's scaladoc for

@@ -134,11 +134,10 @@ object Similarity {
     * never arrive as a column. It is the ANALYZE-statistics read an
     * index build does once per collection (cached for the session); a
     * column-pruned map-side count is noise next to the LSH build it
-    * sizes. */
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def collectionCount(e: DataFrame, key: String): Long =
-    countCache.getOrElseUpdate(key, e.count())
+    * sizes. Keyed on plan and data version (`PlanMemo`), so a corpus
+    * rewritten at the same path is counted again. */
+  private[graft] def collectionCount(e: DataFrame): Long =
+    graft.PlanMemo.cached(e, "collectionCount")(e.count())
 
   /** In-plan twin of `gridChunksFor`: the largest-label-block scalar is
     * aggregated over the FULL collection and broadcast INTO the plan
@@ -304,7 +303,7 @@ object Similarity {
   /** Float-grid threshold: blocks past this ship 4× their bytes through
     * the replicated grid for no gain — the quantized prescreen is
     * row-identical (lossless bound) and its verify join costs only
-    * output-proportional work. Measured by EmbedDispatchProbe on the
+    * output-proportional work. Measured by `CrossoverProbe embed` on the
     * organic corpora (rowsEqual at every size): quantized 5.73 vs
     * plain 5.86 s at 10× (2 180-row blocks), 11.57 vs 14.20 at 30×,
     * 50.84 vs 128.87 at 100× — the quantized side wins from ~2k-row
@@ -437,7 +436,7 @@ object Similarity {
     * force. */
   def simIvfTopk(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    ivfTopk(s, e, nprobe = nProbeFor(collectionCount(e, sf)),
+    ivfTopk(s, e, nprobe = nProbeFor(collectionCount(e)),
       centsOpt = Some(codebookFor(s, sf)))
   }
 
@@ -446,35 +445,17 @@ object Similarity {
     * dedup_semantic would each train from scratch (identical seeds,
     * sample, and Lloyd rounds over an immutable table): a trained index
     * is a per-session INVESTMENT like the DPP staging layout and the
-    * persisted LSH index, not a per-query cost. Keyed by the
-    * SparkSession object (WeakHashMap) + sf dir + round count; the
-    * value is SESSION-INDEPENDENT data — the collected C×64-float rows
-    * plus their schema, kilobytes — with the local DataFrame rebuilt
-    * per call. Storing the DataFrame itself would defeat the weak key:
-    * Dataset.sparkSession strongly references the session the map is
-    * keyed by, pinning a stopped session for JVM lifetime (ADVICE r11).
-    * Spec paths that train on CUSTOM frames bypass this (they pass
-    * their own `e`). */
-  private val codebookMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Int),
-        (org.apache.spark.sql.types.StructType,
-         Array[org.apache.spark.sql.Row])]]()
-
-  /** Memo accessor shared by the IVF and PQ codebooks: train on first
-    * call per (session, tag), then rebuild a local frame from the
-    * collected rows on every call (createDataFrame over local rows is
-    * plan-free and the consumer broadcasts it anyway). */
+    * persisted LSH index, not a per-query cost. Memoized per
+    * (session, sf dir, round count) in `SessionMemo`; the value is
+    * SESSION-INDEPENDENT data — the collected C×64-float rows plus
+    * their schema, kilobytes — with a local DataFrame rebuilt per call
+    * (createDataFrame over local rows is plan-free and the consumer
+    * broadcasts it anyway). Spec paths that train on CUSTOM frames
+    * bypass this (they pass their own `e`). */
   private def memoizedCodebook(s: SparkSession, tag: (String, Int))
                               (train: => DataFrame): DataFrame = {
-    val (schema, rows) = codebookMemo.synchronized {
-      val perKey = Option(codebookMemo.get(s)).getOrElse {
-        val m = scala.collection.mutable.Map[(String, Int),
-          (org.apache.spark.sql.types.StructType,
-           Array[org.apache.spark.sql.Row])]()
-        codebookMemo.put(s, m); m
-      }
-      perKey.getOrElseUpdate(tag, { val df = train; (df.schema, df.collect()) })
+    val (schema, rows) = graft.SessionMemo(s, ("Similarity.codebook", tag)) {
+      val df = train; (df.schema, df.collect())
     }
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
@@ -621,7 +602,7 @@ object Similarity {
     * the distinct shuffles 20 bytes/row, not 2×64 floats. */
   def simAnnLsh(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    val planes = lshPlanesFor(collectionCount(e, sf))
+    val planes = lshPlanesFor(collectionCount(e))
     annLshTopk(e, dot(s), nPlanes = planes, nTables = lshTablesFor(planes))
   }
 
@@ -688,7 +669,7 @@ object Similarity {
     * probes prune). Everything downstream is the shared query phase. */
   def simAnnLshIncremental(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    val planes = lshPlanesFor(collectionCount(e, sf))
+    val planes = lshPlanesFor(collectionCount(e))
     val tables = lshTablesFor(planes)
     graft.functions.LshBuckets.register(s)
     val cut = broadcast(e.agg(floor(max(col("vec_id")) / 2)
@@ -727,7 +708,7 @@ object Similarity {
     * first call pays the write. */
   def simAnnIndexPersist(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    val planes = lshPlanesFor(collectionCount(e, sf))
+    val planes = lshPlanesFor(collectionCount(e))
     graft.functions.LshBuckets.register(s)
     val index = lshBucketRows(e, lshTablesFor(planes), planes)
     val name = "graft_ann_index_" + sf.replaceAll("[^A-Za-z0-9]", "_")
@@ -807,7 +788,7 @@ object Similarity {
     * shuffle key, smaller index than the single-probe config. */
   def simAnnMultiprobe(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    val planes = lshPlanesFor(collectionCount(e, sf))
+    val planes = lshPlanesFor(collectionCount(e))
     val tables = math.max(1, lshTablesFor(planes) / 2)
     graft.functions.LshBuckets.register(s)
     multiprobeTopk(lshBucketRows(e, tables, planes), dot(s), planes,
@@ -1021,7 +1002,7 @@ object Similarity {
     // keeps stage-2 work at |Q|·2.5√n exact dots — sublinear, and the
     // pool stays a vanishing fraction of the collection.
     val rerank = math.max(50L,
-      math.ceil(2.5 * math.sqrt(collectionCount(e, sf).toDouble)).toLong)
+      math.ceil(2.5 * math.sqrt(collectionCount(e).toDouble)).toLong)
     val candidates = encoded
       .join(broadcast(adc), Seq("sub", "code"))
       .filter(col("qid") =!= col("vec_id"))

@@ -43,28 +43,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: at 100 TB this is the user-day activity rollup every
   * warehouse materializes once per day — the memo is that materialized
-  * view, session-scoped. Keyed by the SparkSession OBJECT through a
-  * WeakHashMap (reference equality — an identity HASH may collide
-  * across live sessions) so a restarted session's checkpoint blocks
-  * are GC-collectable with it; a stopped-context guard drops entries
-  * eagerly on next access.
+  * view, session-scoped (`SessionMemo`).
   */
 private[graft] object UserFrames {
-  private val memo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  def daily(s: SparkSession, sf: String): DataFrame = memo.synchronized {
-    if (s.sparkContext.isStopped) memo.remove(s)
-    val perSf = {
-      val existing = memo.get(s)
-      if (existing != null) existing
-      else {
-        val m = scala.collection.mutable.Map.empty[String, DataFrame]
-        memo.put(s, m); m
-      }
-    }
-    perSf.getOrElseUpdate(sf, {
+  def daily(s: SparkSession, sf: String): DataFrame =
+    graft.SessionMemo(s, ("UserFrames.daily", sf)) {
       graft.Tables.events(s, sf)
         .filter(col("user_id").isNotNull)
         .groupBy(col("user_id"), col("event_type"), to_date(col("ts")).as("d"))
@@ -73,6 +56,5 @@ private[graft] object UserFrames {
              sum(round(col("value") * 100d, 0).cast("long")).as("xsc"),
              max(when(col("value") > 200, 1L).otherwise(0L)).as("v200"))
         .localCheckpoint(true)
-    })
-  }
+    }
 }

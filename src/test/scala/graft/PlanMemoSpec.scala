@@ -31,6 +31,20 @@ class PlanMemoSpec extends SparkSpecBase {
     assert(decide() === 2, "and the new decision memoizes in turn")
   }
 
+  test("collectionCount recounts a corpus rewritten at the same path") {
+    import spark.implicits._
+    val dir = Scratch.dir("graft_planmemo_count_")
+    def write(n: Int): Unit = (1 to n).map(i => (i.toLong, s"doc $i"))
+      .toDF("vec_id", "text").write.mode("overwrite").parquet(dir)
+    def count(): Long =
+      operators.Similarity.collectionCount(spark.read.parquet(dir))
+    write(10)
+    assert(count() === 10L)
+    Thread.sleep(5)
+    write(500)
+    assert(count() === 500L, "a stale count would size the index for 10 rows")
+  }
+
   test("bandingFor re-probes a rewritten corpus (layout tracks the data)") {
     import spark.implicits._
     val dir = Scratch.dir("graft_planmemo_band_")

@@ -13,17 +13,7 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // per-process warehouse: the suite must not race a concurrently
-    // running Verify/Bench JVM on ./spark-warehouse (Scratch.warehouseDir)
-    .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-    // sized for the ~400-query board (Bench.scala has the rationale);
-    // the suite drives the same queries and pays the same eviction tax
-    .config("spark.sql.codegen.cache.maxEntries", "4096")
-    .getOrCreate()
+  // fixed at 4 cores so partition-count-sensitive assertions do not
+  // vary with the host the suite runs on
+  lazy val session: SparkSession = GraftSession.local(4)
 }

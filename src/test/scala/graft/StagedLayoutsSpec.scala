@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, Future, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Contract of Scratch.stagedDir — the session-memoized staging tier the
@@ -67,5 +68,55 @@ class StagedLayoutsSpec extends SparkSpecBase {
     assert(d.nonEmpty)
     assert(builds.get() == 2,
       "the failed attempt must not poison the memo with a broken layout")
+  }
+
+  /** Runs `body` with a way to call stagedDir on a second thread. */
+  private def withThreads(body: ((=> String) => Future[String]) => Unit): Unit = {
+    val pool = Executors.newFixedThreadPool(2)
+    try body(f => pool.submit(new Callable[String] { def call(): String = f }))
+    finally { pool.shutdownNow(); () }
+  }
+
+  test("two threads on one key run build once and get the same dir") {
+    val builds = new AtomicInteger(0)
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val key = s"spec:race:${System.nanoTime()}"
+    def get(): String = Scratch.stagedDir(spark, key, "graft_spec_staged_") { _ =>
+      builds.incrementAndGet()
+      entered.countDown()
+      release.await(30, TimeUnit.SECONDS); ()
+    }
+    withThreads { async =>
+      val first = async(get())
+      assert(entered.await(30, TimeUnit.SECONDS))
+      val second = async(get())
+      Thread.sleep(200) // let the second caller reach the in-flight build
+      release.countDown()
+      assert(first.get(30, TimeUnit.SECONDS) == second.get(30, TimeUnit.SECONDS),
+        "both callers must get the one staged directory")
+      assert(builds.get() == 1, s"build ran ${builds.get()} times, expected 1")
+    }
+  }
+
+  test("a build blocked on key A does not block a call for key B") {
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val n = System.nanoTime()
+    withThreads { async =>
+      val a = async(Scratch.stagedDir(spark, s"spec:slow:$n", "graft_spec_staged_") { _ =>
+        entered.countDown()
+        release.await(30, TimeUnit.SECONDS); ()
+      })
+      assert(entered.await(30, TimeUnit.SECONDS))
+      try {
+        // a timeout here means key B waited on key A's build
+        val dB = async(Scratch.stagedDir(spark, s"spec:fast:$n",
+          "graft_spec_staged_")(_ => ())).get(10, TimeUnit.SECONDS)
+        assert(!a.isDone, "key A's build must still be blocked")
+        release.countDown()
+        assert(a.get(30, TimeUnit.SECONDS) != dB)
+      } finally release.countDown()
+    }
   }
 }

@@ -19,7 +19,7 @@ TAG="$(basename "$SF")"
 OUT_A="/tmp/graft_gates_${TAG}_${CPUS_A}"
 
 echo "== build =="
-sbt -batch compile | tail -1
+sbt -batch Test/compile | tail -1
 
 # Run a Verify dump; fail on a per-query failure line OR a non-zero
 # sbt/Verify exit (a crash that prints no '[verify]...failed' line must
