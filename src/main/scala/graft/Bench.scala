@@ -37,30 +37,7 @@ object Bench {
     val ticksStart = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.cpus())
-    // Warm the session before timing: JVM/codegen/parquet-reader init is
-    // one-time startup cost, not part of any query (a long-lived cluster
-    // session amortizes it across every job it ever runs). Touch every
-    // corpus table's footer/reader path and JIT the common operator
-    // shapes (hash agg, hash join, window) so the first measured query
-    // doesn't absorb session bring-up. Queries below are unchanged and
-    // still do their full work.
-    // Warmup must NEVER abort the bench — a missing/corrupt table here
-    // would kill every timing and the JSON line (queries themselves
-    // degrade per-query to -1); swallow and move on.
-    def warm(f: => Unit): Unit = try f catch { case _: Throwable => () }
-    warm(spark.range(1000000L).selectExpr("sum(id)").collect())
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings")
-      .foreach(t => warm(spark.read.parquet(s"$sfDir/$t.parquet").count()))
-    warm(Tables.events(spark, sfDir).count())  // nanos-legacy read path
-    warm {
-      val wn = spark.read.parquet(s"$sfDir/nation.parquet")
-      wn.groupBy("n_regionkey").count()
-        .join(wn, "n_regionkey")
-        .selectExpr("*", "row_number() OVER (PARTITION BY n_regionkey ORDER BY n_name) AS rn")
-        .collect()
-      ()
-    }
+    GraftSession.warmUp(spark, sfDir)
     // Each query is timed as the min of two runs: single-shot numbers on a
     // contended driver machine showed 4-10x noise on byte-identical queries
     // (round-2 tail vs clean re-run). min-of-two is reproducible and still
@@ -150,7 +127,7 @@ object Bench {
     val qs = results.sortBy { case (_, v) => if (v < 0) Double.MaxValue else -v }
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    s"""{"metric":"queries","unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    s"""{"metric":"queries","unit":"sec","queries":$qs,"sf":${Verify.jsonString(sfDir)}}"""
   }
 
   /** The LAST stdout line — the one the driver's tail-parse reads as
@@ -201,6 +178,6 @@ object Bench {
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","errors":$nErrors,""" +
       s""""n":${results.size},"boardSize":$boardSize$partial$loads,""" +
-      s""""slowest":$slowest,"sf":"$sfDir"}"""
+      s""""slowest":$slowest,"sf":${Verify.jsonString(sfDir)}}"""
   }
 }

@@ -126,13 +126,8 @@ object ScaleProbe {
     val mem = new MemListener
     spark.sparkContext.addSparkListener(mem)
 
-    // session bring-up is not a scaling signal: JIT the common operator
-    // shapes and touch both corpora's footers before any timing (same
-    // rationale as Bench's warmup)
-    def warmup(f: => Unit): Unit = try f catch { case _: Throwable => () }
-    warmup(spark.range(1000000L).selectExpr("sum(id)").collect())
-    for (d <- Seq(dirA, dirB); t <- Tables.names)
-      warmup(spark.read.parquet(s"$d/$t.parquet").count())
+    // session bring-up is not a scaling signal
+    GraftSession.warmUp(spark, dirA, dirB)
 
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
              dir: String): Double = {

@@ -33,17 +33,10 @@ object StageSpillProbe {
           // small shuffle (a wide aggregate, an interpreted expression)
           // is exactly what per-key attribution needs to see
           if (spillM + spillD > 0 || sw > (64L << 20) || ms > 500) {
-            // full JSON string escaping — stage names are callsite-
-            // derived and may carry backslashes (Windows-style paths in
-            // callsites) or control chars; a lone quote-replace would
-            // emit an invalid line and break the probe's consumer
-            val name = ev.stageInfo.name.take(120).flatMap {
-              case '"'           => "\\\""
-              case '\\'          => "\\\\"
-              case c if c < ' '  => f"\\u${c.toInt}%04x"
-              case c             => c.toString
-            }
-            rows.add(s"""{"stage":${ev.stageInfo.stageId},"name":"$name",""" +
+            // stage names are callsite-derived and may carry
+            // backslashes (Windows-style paths) or control chars
+            val name = Verify.jsonString(ev.stageInfo.name.take(120))
+            rows.add(s"""{"stage":${ev.stageInfo.stageId},"name":$name,""" +
               s""""tasks":${ev.stageInfo.numTasks},"ms":$ms,"sw":$sw,""" +
               s""""spillMem":$spillM,"spillDisk":$spillD,""" +
               s""""input":${m.inputMetrics.bytesRead},""" +
@@ -58,7 +51,8 @@ object StageSpillProbe {
     val sec = (System.nanoTime() - t0) / 1e9
     Thread.sleep(500) // drain the listener bus
     rows.forEach(println)
-    println(f"""{"key":"$key","dir":"$dir","rows":$n,"sec":$sec%.1f}""")
+    println(f"""{"key":${Verify.jsonString(key)},"dir":${Verify.jsonString(dir)},""" +
+      f""""rows":$n,"sec":$sec%.1f}""")
     System.out.flush()
     try spark.stop() catch { case _: Throwable => () }
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** Deduplication operators for LLM training-data pipelines: exact,
   * MinHash+LSH, SimHash, and exact n-gram Jaccard.
@@ -196,36 +196,13 @@ object Dedup {
     *              pure overhead).
     * @param localMaxEdges driver-finisher threshold; 0 forces the
     *              iterative path (specs pin it that way).
-    * @param eagerEdges finalize the edge checkpoint at creation instead
-    *              of at the dispatch probe's count — measurement knob
-    *              for the eager-vs-lazy trade (`CrossoverProbe cc`);
-    *              lazy is the shipped default (measured over-cap at the
-    *              30× organic corpus, see PROGRESS r14).
     * @return columns `id`, `label` (= min id of the component). */
   private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
                                          maxIters: Int,
                                          jump: Boolean = true,
-                                         localMaxEdges: Int = CcLocalMaxEdges,
-                                         eagerEdges: Boolean = false): DataFrame = {
+                                         localMaxEdges: Int = CcLocalMaxEdges
+                                        ): DataFrame = Checkpoints.scoped { cp =>
     val s = nodes.sparkSession
-    // Track the EXACT persisted RDD behind each localCheckpoint (the
-    // LogicalRDD the checkpointed frame plans to) — never a diff of the
-    // session-global registry, which would also sweep caches a concurrent
-    // query on the shared session created in the meantime.
-    val iterCacheIds = scala.collection.mutable.ArrayBuffer[Int]()
-    def cp(df: DataFrame, eager: Boolean = true): DataFrame = {
-      val c = df.localCheckpoint(eager)
-      c.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          iterCacheIds += lr.rdd.id
-        case _ => ()
-      }
-      c
-    }
-    def releaseIterCaches(): Unit =
-      s.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => iterCacheIds.contains(id) }
-        .foreach { case (_, rdd) => rdd.unpersist(false) }
     // The edge SUBTREE is often the expensive part (a PPJoin prefix
     // filter, an LSH banding...) and must execute exactly ONCE on every
     // path. r12 used a plan-keyed DataFrame persist, which had two
@@ -235,27 +212,21 @@ object Dedup {
     // it out from under the other; and nothing released the cache on an
     // exception mid-call. r13 replaces it with a LAZY localCheckpoint:
     // the checkpoint RDD is created and persist-registered immediately
-    // (so its id is tracked in iterCacheIds BEFORE any job can fail),
-    // is private to this call (instance-keyed — concurrent identical
-    // plans cannot interfere), and is finalized by the first action over
-    // it — the dispatch probe's count — computing every partition
-    // exactly once, fully parallel, for every downstream path. Measured
-    // under-cap at sf0.1 (PPJoin-fed graph_connected_components driver
-    // path): same-host A/B r12-persist 1.90 s vs this variant 1.68 s;
-    // over-cap at the 30× corpus this variant reads 65.5-68.1 s across
-    // three runs vs r12's recorded 66.4 s — time parity; the wins are
-    // isolation and exception safety, not speed. Every exit — normal or
-    // exceptional (the try/catch below) — releases the tracked ids; the
-    // cache lives only within this call.
-    val cached = cp(edges.select(col("a"), col("b")), eager = eagerEdges)
-    // ids belonging to the edge cache alone, so the iterative path can
-    // drop it the moment the symmetric checkpoint supersedes it
-    val edgeCacheIds = iterCacheIds.toSet
-    def dropEdgeCache(): Unit =
-      s.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => edgeCacheIds.contains(id) }
-        .foreach { case (_, rdd) => rdd.unpersist(false) }
-    try {
+    // (so the scope tracks it BEFORE any job can fail), is private to
+    // this call (instance-keyed — concurrent identical plans cannot
+    // interfere), and is finalized by the first action over it — the
+    // dispatch probe's count — computing every partition exactly once,
+    // fully parallel, for every downstream path. Measured under-cap at
+    // sf0.1 (PPJoin-fed graph_connected_components driver path):
+    // same-host A/B r12-persist 1.90 s vs this variant 1.68 s; over-cap
+    // at the 30× corpus this variant reads 65.5-68.1 s across three runs
+    // vs r12's recorded 66.4 s — time parity; the wins are isolation and
+    // exception safety, not speed. Every exit — normal or exceptional —
+    // releases it with the rest of the scope; the cache lives only
+    // within this call. The branches below are if/else expressions, not
+    // early `return`s: a `return` inside the scope's closure is a thrown
+    // control exception, which the scope would treat as a failure.
+    val cached = cp.lazily(edges.select(col("a"), col("b")))
     // Dispatch probe = ONE fully-parallel count over the lazy checkpoint
     // — this IS the finalization job, so every partition of the subtree
     // computes exactly once with all cores on it. (The r12 probe was
@@ -268,11 +239,8 @@ object Dedup {
     // under-cap the driver collect below reads already-cached
     // partitions.)
     val edgeCount = cached.count()
-    if (edgeCount == 0) {
-      releaseIterCaches()
-      return nodes.select(col("id"), col("id").as("label"))
-    }
-    if (localMaxEdges > 0 && edgeCount <= localMaxEdges) {
+    if (edgeCount == 0) nodes.select(col("id"), col("id").as("label"))
+    else if (localMaxEdges > 0 && edgeCount <= localMaxEdges) {
       // Bounded by the cap by construction — never an unbounded collect;
       // the cast is per-row in the cached scan, not a job.
       val probe = cached.select(col("a").cast("long").as("a"),
@@ -284,79 +252,72 @@ object Dedup {
       // Broadcast the (non-singleton nodes only) label map back; nodes
       // are never collected — a mostly-unique corpus has billions of
       // nodes and a tiny edge list, and this stays one broadcast join.
-      // The driver path never re-reads the edges: the cache can go now.
-      releaseIterCaches()
-      return nodes.join(broadcast(mapDf), Seq("id"), "left")
+      // The result never reads the edges, so the scope frees their cache.
+      nodes.join(broadcast(mapDf), Seq("id"), "left")
         .select(col("id"),
                 coalesce(col("uf_label"), col("id")).as("label"))
-    }
-    // Round bound: caller-supplied diameter bound, or derived from the
-    // node count (diameter < n, pointer jumping covers 2^k after k
-    // rounds ⇒ ⌈log₂ n⌉ + 1 always converges; the probe exits earlier).
-    val iters =
-      if (maxIters > 0) maxIters
-      else math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
-        math.max(1L, nodes.count() - 1))).toInt + 1
-    // The rounds read the SYMMETRIC frame; once its eager checkpoint
-    // materializes (reading the finalized edge checkpoint, never the
-    // subtree), the one-directional edge cache is dead weight — drop it
-    // before the rounds so they don't carry 2× the edge bytes.
-    val symRaw = cached.select(col("a"), col("b"))
-      .union(cached.select(col("b").as("a"), col("a").as("b")))
-    val sym = if (iters > 1) { val c = cp(symRaw); dropEdgeCache(); c }
-              else symRaw
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    var converged = false
-    var round = 0
-    // Fixpoint probe: labels only ever DECREASE (min-propagation), so the
-    // label sum is strictly monotone and "sum unchanged" ⟺ "no label
-    // changed" — an exact convergence test for the price of one scan-only
-    // aggregate over the just-checkpointed frame (decimal sum: immune to
-    // overflow at any id range). Far cheaper than an anti-join probe.
-    var prevSum: java.math.BigDecimal = null
-    while (round < iters && !converged) {
-      val nbr = sym.join(labels.select(col("id").as("b"), col("label")), "b")
-        .select(col("a").as("id"), col("label"))
-      val prop = labels.union(nbr).groupBy("id")
-        .agg(min(col("label")).as("label"))
-      // Pointer jumping (label ← label[label]) is what makes long chains
-      // converge in log rounds — but for diameter-≤1 components every
-      // member sees the minimum after ONE neighbor propagation, so the
-      // jump join is pure overhead there.
-      val jumped =
-        if (!jump) prop
-        else prop
-          .join(prop.select(col("id").as("label"), col("label").as("label2")),
-                Seq("label"))
-          .select(col("id"), col("label2").as("label"))
-      // The LAST round's frame feeds straight into the returned plan —
-      // checkpointing it would be one more full job for lineage nobody
-      // re-reads. Intermediate rounds are checkpointed to cut lineage,
-      // then probed for the fixpoint (see prevSum above): a round that
-      // changed no label means every later round would recompute the
-      // same frame, so the probe skips whole join+agg+checkpoint rounds.
-      val isLast = round == iters - 1
-      val next = if (isLast) jumped else cp(jumped)
-      if (!isLast) {
-        val s0 = next.agg(sum(col("label").cast("decimal(38,0)")))
-          .head().getDecimal(0)
-        converged = prevSum != null && prevSum.compareTo(s0) == 0
-        prevSum = s0
+    } else {
+      // Round bound: caller-supplied diameter bound, or derived from the
+      // node count (diameter < n, pointer jumping covers 2^k after k
+      // rounds ⇒ ⌈log₂ n⌉ + 1 always converges; the probe exits earlier).
+      val iters =
+        if (maxIters > 0) maxIters
+        else math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
+          math.max(1L, nodes.count() - 1))).toInt + 1
+      // The rounds read the SYMMETRIC frame; once its eager checkpoint
+      // materializes (reading the finalized edge checkpoint, never the
+      // subtree), the one-directional edge cache is dead weight — drop it
+      // before the rounds so they don't carry 2× the edge bytes.
+      val symRaw = cached.select(col("a"), col("b"))
+        .union(cached.select(col("b").as("a"), col("a").as("b")))
+      val sym = if (iters > 1) { val c = cp(symRaw); cp.drop(cached); c }
+                else symRaw
+      var labels = nodes.select(col("id"), col("id").as("label"))
+      var converged = false
+      var round = 0
+      // Fixpoint probe: labels only ever DECREASE (min-propagation), so
+      // the label sum is strictly monotone and "sum unchanged" ⟺ "no
+      // label changed" — an exact convergence test for the price of one
+      // scan-only aggregate over the just-checkpointed frame (decimal
+      // sum: immune to overflow at any id range). Far cheaper than an
+      // anti-join probe.
+      var prevSum: java.math.BigDecimal = null
+      while (round < iters && !converged) {
+        val nbr = sym.join(labels.select(col("id").as("b"), col("label")), "b")
+          .select(col("a").as("id"), col("label"))
+        val prop = labels.union(nbr).groupBy("id")
+          .agg(min(col("label")).as("label"))
+        // Pointer jumping (label ← label[label]) is what makes long
+        // chains converge in log rounds — but for diameter-≤1 components
+        // every member sees the minimum after ONE neighbor propagation,
+        // so the jump join is pure overhead there.
+        val jumped =
+          if (!jump) prop
+          else prop
+            .join(prop.select(col("id").as("label"), col("label").as("label2")),
+                  Seq("label"))
+            .select(col("id"), col("label2").as("label"))
+        // The LAST round's frame feeds straight into the returned plan —
+        // checkpointing it would be one more full job for lineage nobody
+        // re-reads. Intermediate rounds are checkpointed to cut lineage,
+        // then probed for the fixpoint (see prevSum above): a round that
+        // changed no label means every later round would recompute the
+        // same frame, so the probe skips whole join+agg+checkpoint rounds.
+        val isLast = round == iters - 1
+        val next = if (isLast) jumped else cp(jumped)
+        if (!isLast) {
+          val s0 = next.agg(sum(col("label").cast("decimal(38,0)")))
+            .head().getDecimal(0)
+          converged = prevSum != null && prevSum.compareTo(s0) == 0
+          prevSum = s0
+        }
+        labels = next
+        round += 1
       }
-      labels = next
-      round += 1
+      // materialize the result so it reads none of the round checkpoints:
+      // the scope keeps only this one and frees the rest
+      cp(labels)
     }
-    // materialize the result BEFORE dropping the iteration caches it
-    // still references; the result's own checkpoint is not in the tracked
-    // set, so it survives the sweep
-    val result = labels.localCheckpoint(true)
-    releaseIterCaches()
-    result
-    // Exception on ANY path (probe collect, a checkpoint job, a round,
-    // the node count) must not leak the tracked caches into the
-    // long-lived shared session: one failed key in a Verify/Bench board
-    // would otherwise carry the edge cache for the rest of the run.
-    } catch { case t: Throwable => releaseIterCaches(); throw t }
   }
 
   /** End-to-end near-duplicate removal — the composite a real corpus

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** Iterative / combinatorial graph analytics over relations — PageRank
   * and triangle counting, the two canonical "not just SQL" distributed
@@ -40,26 +40,17 @@ object Graph {
     *      i's broadcast reads iteration i−1's materialized rows
     *      instead of re-executing the whole rank lineage (the r7
     *      uncached chain made work quadratic in the iteration count).
-    * Every checkpoint except the final rank snapshot is explicitly
-    * unpersisted before returning (exact-RDD tracking, the
-    * connectedComponents pattern — nothing accumulates in the
-    * long-lived harness session). At 100 TB ranks may outgrow a
+    * The kernel runs in a `Checkpoints.scoped` block: every checkpoint
+    * but the final rank snapshot the result reads is released on
+    * return, and all of them if a step throws — nothing accumulates in
+    * the long-lived harness session. At 100 TB ranks may outgrow a
     * broadcast; the fallback is a shuffle hash join against the edge
     * checkpoint pre-partitioned on src. Every node has outdegree ≥ 1
     * by construction (undirected edges), so no dangling-mass
     * correction term is needed; top-100 is distributed
     * TakeOrderedAndProject, never a global sort.
     */
-  def graphPagerank(s: SparkSession, sf: String): DataFrame = {
-    val cpIds = scala.collection.mutable.ArrayBuffer[Int]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      c.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => cpIds += lr.rdd.id
-        case _ => ()
-      }
-      c
-    }
+  def graphPagerank(s: SparkSession, sf: String): DataFrame = Checkpoints.scoped { cp =>
     // nodes travel as LONGS internally (part k → 2k, supplier k → 2k+1):
     // the "p…"/"s…" strings the result (and oracle) speak are built only
     // on the final 100 rows — hashing/shuffling strings through every
@@ -87,14 +78,8 @@ object Graph {
               lit(0.85) * sum(col("c"))).as("r"),
              max(col("nn")).as("nn")))
     }
-    // release every checkpoint except the final rank snapshot — the
-    // returned plan reads only it
-    val keep = ranks.queryExecution.analyzed.collectLeaves().collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    s.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => cpIds.contains(id) && !keep.contains(id) }
-      .foreach { case (_, rdd) => rdd.unpersist(false) }
+    // the returned plan reads only the final rank snapshot, so the scope
+    // keeps that checkpoint and frees the edge, degree and earlier ranks
     ranks
       .select(concat(when(col("node") % 2 === 0, lit("p")).otherwise(lit("s")),
                      shiftright(col("node"), 1)).as("node"),
@@ -209,8 +194,8 @@ object Graph {
     * self-join + support filter from scratch (~5-8 s of the graph
     * family's 31 s bench cost). The checkpoints live for the session
     * (the same amortization the shared session itself is) and are
-    * released with it; per-kernel CpTrackers never see these ids, so
-    * their releaseAllExcept can't evict the shared frames. */
+    * released with it; they are taken outside any `Checkpoints.scoped`
+    * block, so no kernel's scope can evict the shared frames. */
   private def coPurchaseFrames(s: SparkSession, sf: String): (DataFrame, DataFrame) =
     graft.SessionMemo(s, ("Graph.coPurchaseFrames", sf)) {
       val items = Tables.lineitem(s, sf)
@@ -322,15 +307,13 @@ object Graph {
     * level i reads level i−1's materialized rows instead of replaying
     * the whole expansion lineage (work linear in depth, the pagerank
     * lesson). Frontiers and the visited set are node-grain — edge-sized
-    * frames exist only inside a single level's join. All checkpoints
-    * except the final visited snapshot are unpersisted on exit. At
+    * frames exist only inside a single level's join. The checkpoint
+    * scope frees every checkpoint but the final aggregate's on exit. At
     * 100 TB the visited anti-join shuffles on node id per level —
     * pre-partitioning visited and the symmetric edge list on the same
     * key makes the loop exchange-free after level 1.
     */
-  def graphBfsDistance(s: SparkSession, sf: String): DataFrame = {
-    val tracker = new CpTracker(s)
-    def cp(df: DataFrame): DataFrame = tracker(df)
+  def graphBfsDistance(s: SparkSession, sf: String): DataFrame = Checkpoints.scoped { cp =>
     val edges = coPurchaseSym(s, sf)
     // source = min node, derived in-plan (no driver .head()); an empty
     // edge set yields a null node filtered to an empty result
@@ -351,16 +334,14 @@ object Graph {
       visited = visited.unionAll(next)
       frontier = next
     }
-    // Materialize the ≤5-row aggregate as its own checkpoint, then
-    // release EVERY per-level frontier checkpoint: releasing "all
-    // except visited" kept all five (visited is a unionAll whose
-    // leaves ARE the per-level checkpoints), pinning 5 RDDs per
-    // invocation across the amortized session's bench iterations.
-    val out = cp(visited.groupBy(col("dist"))
+    // Materialize the ≤5-row aggregate as its own checkpoint, so the
+    // scope can release EVERY per-level frontier checkpoint: returning
+    // visited's aggregate unmaterialized would keep all five (visited
+    // is a unionAll whose leaves ARE the per-level checkpoints),
+    // pinning 5 RDDs per invocation across the amortized session.
+    cp(visited.groupBy(col("dist"))
       .agg(count(lit(1)).cast("bigint").as("n_nodes"))
       .orderBy("dist"))
-    tracker.releaseAllExcept(out)
-    out
   }
 
   /** Neighborhood-Jaccard link prediction over the co-purchase graph:
@@ -401,42 +382,6 @@ object Graph {
     out
   }
 
-  /** Tracks the RDDs behind eager localCheckpoints taken inside an
-    * iterative kernel so everything EXCEPT the frames the final result
-    * still reads can be unpersisted on exit — the long-lived harness
-    * session runs hundreds of keys, and leaked checkpoint blocks
-    * accumulate across them (the round-7 `.cache()` advice item,
-    * generalized). */
-  private final class CpTracker(s: SparkSession) {
-    private val ids = scala.collection.mutable.ArrayBuffer[Int]()
-    private def leafIds(df: DataFrame): Seq[Int] =
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.toSeq
-    def apply(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      ids ++= leafIds(c)
-      c
-    }
-    /** LAZY localCheckpoint: truncates lineage (and with it, the
-      * exponential logical-tree growth of self-referencing iterative
-      * plans) WITHOUT the eager form's synchronous materialization job —
-      * the RDD computes inside whatever action first needs it, shared by
-      * object identity across every reference. Tracked for release like
-      * the eager form (persist() registers the blocks immediately). */
-    def lazily(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(false)
-      ids ++= leafIds(c)
-      c
-    }
-    def releaseAllExcept(keep: DataFrame*): Unit = {
-      val keepIds = keep.flatMap(leafIds).toSet
-      s.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => ids.contains(id) && !keepIds.contains(id) }
-        .foreach { case (_, rdd) => rdd.unpersist(false) }
-    }
-  }
-
   /** K-core peeling profile over the co-purchase graph: four rounds of
     * "drop every node with degree < 2, then re-count", emitting one row
     * per round with the surviving node and edge counts. The 2-core is
@@ -465,16 +410,14 @@ object Graph {
     * sf0.1). Fewer jobs = fewer synchronous barriers = fewer whole
     * stages a contended host can stall (the driver-host inflation
     * mechanism the r14 adjudication measured at 9.35 s driver vs
-    * 2.45 s quiet for this key). The 4-row checkpoint also means
-    * releaseAllExcept can free every edge-sized block before return,
-    * same as before. True k-core at 100 TB runs the same loop to a
-    * fixpoint with a convergence check on the dropped-node count per
-    * round — and at fixpoint depth it re-inserts a checkpoint every
-    * few rounds to bound plan depth, the cadence this fixed-depth
-    * profile no longer needs.
+    * 2.45 s quiet for this key). The 4-row checkpoint also means the
+    * checkpoint scope frees every edge-sized block before return. True
+    * k-core at 100 TB runs the same loop to a fixpoint with a
+    * convergence check on the dropped-node count per round — and at
+    * fixpoint depth it re-inserts a checkpoint every few rounds to bound
+    * plan depth, the cadence this fixed-depth profile no longer needs.
     */
-  def graphKcore(s: SparkSession, sf: String): DataFrame = {
-    val tracker = new CpTracker(s)
+  def graphKcore(s: SparkSession, sf: String): DataFrame = Checkpoints.scoped { cp =>
     var adj = coPurchaseSym(s, sf)
     val rounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (r <- 1 to 4) {
@@ -489,9 +432,7 @@ object Graph {
           .crossJoin(adj.agg(expr("count(1) div 2").as("n_edges")))
           .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
     }
-    val out = tracker(rounds.reduce(_ unionAll _))
-    tracker.releaseAllExcept(out)
-    out.orderBy("round")
+    cp(rounds.reduce(_ unionAll _)).orderBy("round")
   }
 
   /** Adamic–Adar link prediction over the co-purchase graph — the
@@ -630,11 +571,11 @@ object Graph {
     * immediately (tree stays ≤ 2² copies per cadence segment), but the
     * RDD materializes INSIDE the key's single collect job, with both
     * same-round references sharing one computation by RDD object
-    * identity. Blocks are tracked and released after the collect, same
-    * as the eager form was.
+    * identity. The ≤ 20-row result is collected into a local relation,
+    * so the checkpoint scope frees every lazy-checkpoint block on
+    * return.
     */
-  def graphModularity(s: SparkSession, sf: String): DataFrame = {
-    val tracker = new CpTracker(s)
+  def graphModularity(s: SparkSession, sf: String): DataFrame = Checkpoints.scoped { cp =>
     val edges = coPurchaseSym(s, sf)
     var labels = edges.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
@@ -645,7 +586,7 @@ object Graph {
         .groupBy(col("node")).agg(min(col("lab")).as("lab"))
       // lazy cadence checkpoint: bounds the doubling logical tree
       // without the eager form's per-checkpoint job
-      if (r % 2 == 0) labels = tracker.lazily(labels)
+      if (r % 2 == 0) labels = cp.lazily(labels)
     }
     val lu = broadcast(labels.select(col("node").as("u"), col("lab").as("lu")))
     val lv = broadcast(labels.select(col("node").as("v"), col("lab").as("lv")))
@@ -675,14 +616,11 @@ object Graph {
       .orderBy(col("n_nodes").desc, col("lab").asc)
       .limit(20)
     // the result is ≤ 20 rows BY CONSTRUCTION — materialize it in the
-    // one job the key now costs, then release the lazy-checkpoint
-    // blocks so nothing node-sized stays pinned for the harness
+    // one job the key now costs; the local relation reads no
+    // checkpoint, so nothing node-sized stays pinned for the harness
     // session's lifetime (the session-memoized edges frame is shared
     // infrastructure, not this key's to release)
-    val materialized = s.createDataFrame(
-      java.util.Arrays.asList(out.collect(): _*), out.schema)
-    tracker.releaseAllExcept()
-    materialized
+    Checkpoints.local(out)
   }
 
   def graphAssortativity(s: SparkSession, sf: String): DataFrame = {
@@ -789,7 +727,7 @@ object Graph {
     * node-grain score frame plus a hash aggregate — the BFS/LPA
     * per-round shape; normalizers are 1-row broadcast crossJoins (q2
     * idiom); top-10s are TakeOrdered. */
-  def graphHits(s: SparkSession, sf: String): DataFrame = {
+  def graphHits(s: SparkSession, sf: String): DataFrame = Checkpoints.scoped { cp =>
     // session-memoized checkpoint: the three reinforcement rounds below
     // each join against li, and before the memo each re-derived the
     // scan+distinct (r10 verdict ask #2)
@@ -804,7 +742,6 @@ object Graph {
     // normalize itself is a map over the tiny frame, recomputed freely.
     // Score frames broadcast into the edge joins explicitly — node
     // grain is orders of magnitude under any broadcast bound.
-    val tracker = new CpTracker(s)
     def normalized(scores: DataFrame, key: String, raw: String,
                    out: String): DataFrame = {
       val mx = broadcast(scores.agg(max(col(raw)).as("mx")))
@@ -813,12 +750,12 @@ object Graph {
           round(col(raw).cast("double") / col("mx").cast("double"), 6)
             .cast("decimal(9,6)").as(out))
     }
-    val a1 = tracker(li.groupBy(col("q")).agg(count(lit(1)).as("a1")))
+    val a1 = cp(li.groupBy(col("q")).agg(count(lit(1)).as("a1")))
     val a1n = normalized(a1, "q", "a1", "an")
-    val h1 = tracker(li.join(broadcast(a1n), Seq("q"))
+    val h1 = cp(li.join(broadcast(a1n), Seq("q"))
       .groupBy(col("p")).agg(sum(col("an")).as("h1")))
     val h1n = normalized(h1, "p", "h1", "hn")
-    val a2 = tracker(li.join(broadcast(h1n), Seq("p"))
+    val a2 = cp(li.join(broadcast(h1n), Seq("p"))
       .groupBy(col("q")).agg(sum(col("hn")).as("a2")))
     val a2n = normalized(a2, "q", "a2", "an")
     val hubs = h1n
@@ -832,14 +769,12 @@ object Graph {
     // rank window runs on the ≤20-row union — bounded by construction
     val w = Window.partitionBy(col("side"))
       .orderBy(col("score").desc, col("node").asc)
-    // materialize the ≤20-row result, then release every round
+    // materialize the ≤20-row result so the scope releases every round
     // checkpoint (the graphBfsDistance discipline — nothing edge- or
     // node-sized may outlive the call in the long-lived session)
-    val out = tracker(auths.unionAll(hubs)
+    cp(auths.unionAll(hubs)
       .withColumn("rn", row_number().over(w).cast("bigint"))
       .orderBy(col("side").asc, col("rn").asc))
-    tracker.releaseAllExcept(out)
-    out
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** Vector similarity search over the 64-dim embeddings table.
   *
@@ -511,12 +511,10 @@ object Similarity {
     // it, round i's broadcast(cents) re-executes rounds 1..i−1's whole
     // assignment lineage — quadratic in the round count, the exact
     // disease the r8 pagerank rewrite removed.
-    def materialize(df: DataFrame): DataFrame =
-      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
     // seed stride ⌈√n⌉ rides a broadcast-scalar crossJoin IN-PLAN (the
     // r7 form took the count as a driver-side pre-pass); greatest(1,·)
     // guards the empty collection's mod-by-zero
-    var cents = materialize(e
+    var cents = Checkpoints.local(e
       .crossJoin(broadcast(e.agg(count(lit(1)).as("n"))))
       .filter(col("vec_id") %
         greatest(lit(1L), ceil(sqrt(col("n"))).cast("long")) === 0)
@@ -528,7 +526,7 @@ object Similarity {
         .agg(avg(element_at(col("embedding"), 1)).as("m0"),
              dims.drop(1).map(i =>
                avg(element_at(col("embedding"), i + 1)).as(s"m$i")): _*)
-      cents = materialize(means
+      cents = Checkpoints.local(means
         .select(col("cent_id"), array(dims.map(i => col(s"m$i")): _*).as("m"))
         .select(col("cent_id"), expr(
           // greatest(..., 1e-12) guards a degenerate cluster whose mean
@@ -921,11 +919,9 @@ object Similarity {
     * broadcast re-executes rounds 1..i−1). Returns the 128-row
     * (sub, code, cv) frame. */
   private def pqTrainCodebook(s: SparkSession, sub: DataFrame): DataFrame = {
-    def materialize(df: DataFrame): DataFrame =
-      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
     // min_by, not first(): several vectors share a seed code and
     // first() is partition-order-dependent — seeds must be stable
-    var cb = materialize(sub.filter(col("vec_id") % 2 === 0)
+    var cb = Checkpoints.local(sub.filter(col("vec_id") % 2 === 0)
       .withColumn("code", expr("CAST((vec_id div 2) % 16 AS INT)"))
       .filter(col("vec_id") < 64)
       .groupBy(col("sub"), col("code"))
@@ -941,7 +937,7 @@ object Similarity {
         .groupBy(col("vec_id"), col("sub"))
         .agg(expr("max_by(code, struct(-d, -code))").as("code"),
              first(col("sv")).as("sv"))
-      cb = materialize(assigned
+      cb = Checkpoints.local(assigned
         .groupBy(col("sub"), col("code"))
         .agg(array(dims.map(i =>
           avg(element_at(col("sv"), i + 1)).cast("float")): _*).as("cv")))

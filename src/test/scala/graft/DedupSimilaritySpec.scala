@@ -560,8 +560,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     }
   }
 
-  test("dedup_cluster labels are a fixpoint and leave no stray caches") {
-    val nBefore = spark.sparkContext.getPersistentRDDs.size
+  test("dedup_cluster labels are a fixpoint") {
     val labels = Dedup.dedupCluster(spark, sfOracle)
     // fixpoint: every doc's representative is itself a cluster member
     // whose representative is the same value (rep of rep = rep)
@@ -571,9 +570,40 @@ class DedupSimilaritySpec extends SparkSpecBase {
       "a representative must represent itself")
     // non-trivial clusters exist (sf0.01 plants bag-of-words dups)
     assert(labels.filter(col("doc_id") =!= col("cluster_rep")).count() > 0)
-    // iteration caches released: only the result's own checkpoint remains
-    assert(spark.sparkContext.getPersistentRDDs.size <= nBefore + 1,
-      "iteration localCheckpoints must be unpersisted")
+  }
+
+  // Every caller of Checkpoints.scoped, plus the CC iterative path the
+  // corpus keys never reach (it needs > CcLocalMaxEdges edges): after one
+  // untimed call has built the key's session memos, a second call plus
+  // count() may leave at most ONE new persisted RDD, and only one the
+  // result itself reads — its own checkpoint. Set difference, not a size
+  // delta, so a memo or another spec's cache collected in between cannot
+  // hide a leak.
+  private val scopeCallers: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+    Seq("graph_pagerank", "graph_bfs_distance", "graph_kcore",
+        "graph_modularity", "graph_hits", "graph_connected_components",
+        "dedup_cluster", "dedup_minhash_cluster", "dedup_semantic")
+      .map(k => k -> (() => SparkEntry.queries(k)(spark, sfOracle))) :+
+      ("connectedComponents iterative path" -> { () =>
+        import spark.implicits._
+        Dedup.connectedComponents((1L to 40L).toDF("id"),
+          (1L until 30L).map(i => (i, i + 1)).toDF("a", "b"),
+          maxIters = -1, localMaxEdges = 0)
+      })
+  scopeCallers.foreach { case (name, run) =>
+    test(s"checkpoint scope: $name leaves only its result's checkpoint") {
+      run().count()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = run()
+      out.count()
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val read = out.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      assert(added.size <= 1 && added.subsetOf(read),
+        s"$name left new persisted RDDs ${added.toSeq.sorted}; " +
+        s"the result reads ${read.toSeq.sorted}")
+    }
   }
 
   test("CC two-phase paths agree on a >1024-diameter chain (derived round bound)") {
