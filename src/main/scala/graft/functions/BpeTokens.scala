@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -169,11 +168,5 @@ object BpeTokenCount {
   private[functions] val builderTok = (exprs: Seq[Expression]) => {
     require(exprs.length == 1, "graft_bpe_tokens takes exactly 1 argument")
     BpeTokenize(exprs.head)
-  }
-
-  /** Idempotent per-session registration (see DotProduct.register). */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    s.sessionState.functionRegistry.registerFunction(identTok, infoTok, builderTok)
   }
 }

@@ -86,43 +86,52 @@ object DotProduct {
     require(exprs.length == 2, "graft_dot takes exactly 2 arguments")
     DotProduct(exprs.head, exprs(1))
   }
-
-  /** Register on a live session (the harness builds its SparkSession
-    * without extension configs, so operators self-register). Idempotent. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }
 
 /** The idiomatic hook for deployments that control session construction:
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Injects every
+  * function in [[GraftExtensions.functions]] plus the native as-of join's
+  * Join→AsOfJoinPlan optimizer rewrite and AsOfJoinPlan→AsOfJoinExec
+  * strategy (plans/AsOfJoin.scala). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((DotProduct.ident, DotProduct.info, DotProduct.builder))
-    ext.injectFunction((DotProductI8.ident, DotProductI8.info,
-                        DotProductI8.builder))
-    ext.injectFunction((SimHash48.ident, SimHash48.info, SimHash48.builder))
-    ext.injectFunction((MinHashSig16.ident, MinHashSig16.info, MinHashSig16.builder))
-    ext.injectFunction((SortedIntersectSize.ident, SortedIntersectSize.info,
-                        SortedIntersectSize.builder))
-    ext.injectFunction((BpeTokenCount.ident, BpeTokenCount.info,
-                        BpeTokenCount.builder))
-    ext.injectFunction((BpeTokenCount.identTok, BpeTokenCount.infoTok,
-                        BpeTokenCount.builderTok))
-    ext.injectFunction((LshBuckets.ident, LshBuckets.info, LshBuckets.builder))
-    ext.injectFunction((ShingleHash64.ident, ShingleHash64.info,
-                        ShingleHash64.builder))
-    ext.injectFunction((UnicodeNorm.identNfc, UnicodeNorm.infoNfc,
-                        UnicodeNorm.builderNfc))
-    ext.injectFunction((UnicodeNorm.identUnaccent, UnicodeNorm.infoUnaccent,
-                        UnicodeNorm.builderUnaccent))
-    // the native as-of join's full stack: marker condition function,
-    // Join→AsOfJoinPlan optimizer rewrite, AsOfJoinPlan→AsOfJoinExec
-    // strategy (plans/AsOfJoin.scala)
-    ext.injectFunction((graft.plans.AsOfJoin.ident, graft.plans.AsOfJoin.info,
-                        graft.plans.AsOfJoin.builder))
-    ext.injectFunction((MisraGriesTopK.ident, MisraGriesTopK.info,
-                        MisraGriesTopK.builder))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** The one list of graft's native SQL functions: the extension
+    * injects it and [[register]] registers it, so the two cannot drift. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      (DotProduct.ident, DotProduct.info, DotProduct.builder),
+      (DotProductI8.ident, DotProductI8.info, DotProductI8.builder),
+      (SimHash48.ident, SimHash48.info, SimHash48.builder),
+      (MinHashSig16.ident, MinHashSig16.info, MinHashSig16.builder),
+      (SortedIntersectSize.ident, SortedIntersectSize.info,
+        SortedIntersectSize.builder),
+      (BpeTokenCount.ident, BpeTokenCount.info, BpeTokenCount.builder),
+      (BpeTokenCount.identTok, BpeTokenCount.infoTok, BpeTokenCount.builderTok),
+      (LshBuckets.ident, LshBuckets.info, LshBuckets.builder),
+      (ShingleHash64.ident, ShingleHash64.info, ShingleHash64.builder),
+      (UnicodeNorm.identNfc, UnicodeNorm.infoNfc, UnicodeNorm.builderNfc),
+      (UnicodeNorm.identUnaccent, UnicodeNorm.infoUnaccent,
+        UnicodeNorm.builderUnaccent),
+      (MisraGriesTopK.ident, MisraGriesTopK.info, MisraGriesTopK.builder),
+      (TDigestQuantiles.ident, TDigestQuantiles.info, TDigestQuantiles.builder),
+      // the as-of marker condition; it needs the rule and strategy too
+      // (`AsOfJoin.ensureRegistered`)
+      (graft.plans.AsOfJoin.ident, graft.plans.AsOfJoin.info,
+        graft.plans.AsOfJoin.builder))
+
+  /** Register every function on a live session (the harness builds its
+    * SparkSession without extension configs, so operators
+    * self-register). Idempotent and silent: the registry warns only when
+    * a name's stored (info, builder) pair changes, and these are vals. */
+  def register(s: SparkSession): Unit =
+    functions.foreach { case (ident, info, builder) =>
+      s.sessionState.functionRegistry.registerFunction(ident, info, builder)
+    }
 }

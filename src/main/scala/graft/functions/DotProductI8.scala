@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -86,8 +85,4 @@ object DotProductI8 {
     require(exprs.length == 2, "graft_dot_i8 takes exactly 2 arguments")
     DotProductI8(exprs.head, exprs(1))
   }
-
-  /** Register on a live session (see DotProduct.register). Idempotent. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

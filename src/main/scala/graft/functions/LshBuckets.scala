@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,8 +92,4 @@ object LshBuckets {
       exprs(1).eval().asInstanceOf[Number].intValue(),
       exprs(2).eval().asInstanceOf[Number].intValue())
   }
-
-  /** Idempotent per-session registration (see DotProduct.register). */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -160,8 +159,4 @@ object MisraGriesTopK {
     require(m > 0 && k > 0 && k <= m, "need 0 < k <= m")
     MisraGriesTopK(exprs.head, m, k)
   }
-
-  /** Register on a live session. Idempotent. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,8 +90,4 @@ object SimHash48 {
     require(exprs.length == 1, "graft_simhash48 takes exactly 1 argument")
     SimHash48(exprs.head)
   }
-
-  /** Idempotent per-session registration (see DotProduct.register). */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

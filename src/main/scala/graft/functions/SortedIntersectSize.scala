@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,8 +90,4 @@ object SortedIntersectSize {
       "graft_sorted_intersect_size takes exactly 2 arguments")
     SortedIntersectSize(exprs.head, exprs(1))
   }
-
-  /** Idempotent per-session registration (see DotProduct.register). */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

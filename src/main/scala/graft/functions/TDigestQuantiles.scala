@@ -1,7 +1,6 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -197,8 +196,4 @@ object TDigestQuantiles {
     require(d >= 10, "delta >= 10")
     TDigestQuantiles(exprs.head, d)
   }
-
-  /** Register on a live session. Idempotent. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,13 +80,6 @@ object UnicodeNorm {
   private[functions] val builderUnaccent = (exprs: Seq[Expression]) => {
     require(exprs.length == 1, "graft_unaccent takes exactly 1 argument")
     StripAccents(exprs.head): Expression
-  }
-
-  /** Register on a live session (harness sessions self-register). */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.registerFunction(identNfc, infoNfc, builderNfc)
-    s.sessionState.functionRegistry.registerFunction(
-      identUnaccent, infoUnaccent, builderUnaccent)
   }
 }
 

@@ -530,7 +530,7 @@ object AdvancedAggs {
   }
 
   def aggHeavyHittersSketch(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.MisraGriesTopK.register(s)
+    graft.functions.GraftExtensions.register(s)
     Tables.documents(s, sf)
       .filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("word"))
@@ -556,7 +556,7 @@ object AdvancedAggs {
     * baseline; this key grades the engine's sketch machinery.
     */
   def aggTdigest(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.TDigestQuantiles.register(s)
+    graft.functions.GraftExtensions.register(s)
     Tables.events(s, sf)
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .groupBy(col("event_type"))

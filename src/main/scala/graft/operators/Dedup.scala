@@ -355,7 +355,7 @@ object Dedup {
     * broadcast join-back, 4.8 s → 1.1 s). Final labels compose the two
     * stages. */
   private[graft] def minhashClusterOf(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSig16.register(docs.sparkSession)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     // The signature subtree appears in several plan branches (band
     // buckets, contraction joins, CC nodes, final label join); it is
     // deliberately NOT checkpointed — exchange reuse dedups most of the
@@ -439,7 +439,7 @@ object Dedup {
     graft.PlanMemo.cached(docs, "banding")(probeBanding(docs))
 
   private def probeBanding(docs: DataFrame): (Int, Int) = {
-    graft.functions.MinHashSig16.register(docs.sparkSession)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     val n = docs.count()
     if (n <= MaxBucket * 2L) return (4, 4)
     val p = math.max(1L, n / 256)
@@ -533,7 +533,7 @@ object Dedup {
     * plan branch; this 16-component pass costs 16/2752 of it. No
     * fan-out needed at that price. */
   private def estSigs(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSig16.register(docs.sparkSession)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"), expr("graft_minhash16(ws)").as("sig"))
   }
 
@@ -550,7 +550,7 @@ object Dedup {
     require(b >= 1 && r >= 1 && b * r >= 16,
       s"banding layout ($b bands × $r rows) must cover the 16-component " +
         "estimate prefix (b·r >= 16)")
-    graft.functions.MinHashSig16.register(df.sparkSession)
+    graft.functions.GraftExtensions.register(df.sparkSession)
     // The signature is the per-row hot loop (b·r components × words),
     // and a small corpus arrives as ONE parquet split — every signature
     // would compute on one core (per-stage probed at sf0.1's 86×32
@@ -609,7 +609,7 @@ object Dedup {
     * different decision lands in a different staging dir). The spec's
     * incremental ≡ full theorem is asserted at this same layout. */
   def dedupNearMinhashIncremental(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.MinHashSig16.register(s)
+    graft.functions.GraftExtensions.register(s)
     val docs = Tables.documents(s, sf).select(col("doc_id"), ws.as("ws"))
     val cut = broadcast(docs.agg(floor(max(col("doc_id")) / 2)
       .cast("long").as("cut")))
@@ -749,7 +749,7 @@ object Dedup {
     * buckets crowd the stop cap. */
   private[graft] def simhashPairsOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.SimHash48.register(s)
+    graft.functions.GraftExtensions.register(s)
     val sigs = docs
       .select(col("doc_id"), col("source"),
         // word hashes via built-in xxhash64, signature via the native
@@ -903,7 +903,7 @@ object Dedup {
     * same Jaccard). Sorted once per doc so the per-pair intersect is a
     * linear merge. */
   private[graft] def jaccardDocs(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.SortedIntersectSize.register(s)
+    graft.functions.GraftExtensions.register(s)
     Tables.documents(s, sf)
       .select(col("doc_id"), col("source"),
               expr("array_sort(transform(array_distinct(split(text, ' ')), w -> xxhash64(w)))")

@@ -139,8 +139,7 @@ object ModelEval {
     val zSum2 = (1.959964 + 0.841621) * (1.959964 + 0.841621)
     Tables.events(s, sf)
       .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .select(substring(md5(col("user_id").cast("string")), 1, 1)
-          .isin("0", "1", "2", "3", "4", "5", "6", "7").as("a"),
+      .select(Stats.arm.as("a"),
         (col("event_type") === "purchase").as("conv"))
       .agg(
         sum(col("a").cast("long")).cast("bigint").as("n_a"),

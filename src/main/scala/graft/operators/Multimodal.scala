@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -56,6 +56,93 @@ object Multimodal {
   private def imageIoNoDiskCache(): Unit =
     javax.imageio.ImageIO.setUseCache(false)
 
+  /** Every codec key's input: the non-null document ids as a typed
+    * Dataset. Codec parallelism must not be coupled to ingest split
+    * count: a small/compacted corpus arrives as ONE parquet split and
+    * would serialize every codec cycle on one core. The repartition
+    * shuffles only 8-byte ids — noise next to the codec work it fans
+    * out across all cores. */
+  private def docIds(s: SparkSession, sf: String): Dataset[Long] = {
+    import s.implicits._
+    Tables.documents(s, sf)
+      .select(col("doc_id")).na.drop()
+      .repartition(s.sparkContext.defaultParallelism)
+      .as[Long]
+  }
+
+  /** The planted 8×8 grayscale PNG of document `id`: pixel(x, y) =
+    * (id·31 + 7x + 13y + phase) mod 256, a closed form the oracle
+    * re-derives pixel-exactly, encoded through ImageIO. Every image key
+    * passes phase 0; framesample passes 17·f for frame f. */
+  private def plantedPng(id: Long, phase: Long): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    for (y <- 0 until 8; x <- 0 until 8)
+      raster.setSample(x, y, 0, ((id * 31 + 7 * x + 13 * y + phase) % 256).toInt)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
+  private def readPng(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+
+  /** The planted audio clip's REAL WAV round trip: document `id`'s
+    * 256-sample 16-bit mono 8 kHz PCM ramp, sample(i) =
+    * ((id·7 + 13i) mod 2000) − 1000, written through the WAVE encoder
+    * and decoded back. Construct one per task, inside `mapPartitions`.
+    *
+    * Provider resolution happens ONCE per task: AudioSystem.write /
+    * getAudioInputStream consult the JDK's provider registry
+    * (JDK13Services — a synchronized global) on EVERY call, which
+    * serializes 32 concurrently-decoding tasks on one lock and erases
+    * the repartition's parallel win (measured ~3× on decode_wav).
+    * ServiceLoader yields the same WAVE SPI classes the registry would;
+    * codec work is unchanged. The reader is picked on the task's first
+    * clip and kept in a mutable field, so an instance is never shared
+    * across tasks. */
+  private final class WavRoundTrip {
+    import scala.jdk.CollectionConverters._
+    private val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
+    private val writer = java.util.ServiceLoader
+      .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
+      .asScala.find(_.isFileTypeSupported(wave)).get
+    private val readers = java.util.ServiceLoader
+      .load(classOf[javax.sound.sampled.spi.AudioFileReader])
+      .asScala.toList
+    private var waveReader: javax.sound.sampled.spi.AudioFileReader = null
+    private val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+
+    /** The decoded samples of `id`'s clip and the decoded stream's
+      * sample rate. */
+    def apply(id: Long): (Array[Short], Float) = {
+      val pcm = new Array[Byte](256 * 2)
+      for (i <- 0 until 256) {
+        val v = (((id * 7 + 13L * i) % 2000) - 1000).toShort
+        pcm(2 * i) = (v & 0xff).toByte
+        pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
+      }
+      val ais = new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(pcm), fmt, 256)
+      val bos = new java.io.ByteArrayOutputStream()
+      writer.write(ais, wave, bos)
+      if (waveReader == null)
+        waveReader = readers.find { r =>
+          try { r.getAudioInputStream(
+            new java.io.ByteArrayInputStream(bos.toByteArray)); true }
+          catch { case _: Exception => false }
+        }.get
+      val in = waveReader.getAudioInputStream(
+        new java.io.ByteArrayInputStream(bos.toByteArray))
+      val decoded = in.readAllBytes()
+      val samples = Array.tabulate(decoded.length / 2) { i =>
+        ((decoded(2 * i) & 0xff) | (decoded(2 * i + 1) << 8)).toShort
+      }
+      (samples, in.getFormat.getSampleRate)
+    }
+  }
+
   /** REAL image decode — PNG needs no external codec (`javax.imageio`
     * ships with the JDK), so the decode path is a genuine
     * encode→decode round trip: an 8×8 grayscale PNG is
@@ -76,35 +163,17 @@ object Multimodal {
     */
   def multimodalDecodePng(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      // decode parallelism must not be coupled to ingest split count: a
-      // small/compacted corpus arrives as ONE parquet split and would
-      // serialize every ImageIO cycle on one core. The repartition
-      // shuffles only 8-byte ids — noise next to the codec work it fans
-      // out across all cores.
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
         imageIoNoDiskCache()
-        it.map { id =>
-          val img = new java.awt.image.BufferedImage(
-            8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          for (y <- 0 until 8; x <- 0 until 8)
-            raster.setSample(x, y, 0, ((id * 31 + 7 * x + 13 * y) % 256).toInt)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          (id, bos.toByteArray)
-        }
+        it.map(id => (id, plantedPng(id, 0)))
       }
       .toDF("doc_id", "png")
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         imageIoNoDiskCache()
         it.map { case (id, bytes) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
+          val img = readPng(bytes)
           val r = img.getRaster
           var sum = 0L
           for (y <- 0 until img.getHeight; x <- 0 until img.getWidth)
@@ -126,27 +195,15 @@ object Multimodal {
     * implementation-defined AreaAveraging rounding). Emits the
     * downsampled mean and the (0,0) output pixel as witnesses.
     * Fetch → decode → resize never leaves the task; the only shuffle
-    * is the id-only codec fan-out (see decode_png).
+    * is the id-only codec fan-out (see `docIds`).
     */
   def multimodalResizePng(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      // decouple codec parallelism from input splits (see decode_png)
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
         imageIoNoDiskCache()
         it.map { id =>
-          val img = new java.awt.image.BufferedImage(
-            8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          for (y <- 0 until 8; x <- 0 until 8)
-            raster.setSample(x, y, 0, ((id * 31 + 7 * x + 13 * y) % 256).toInt)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          val decoded = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bos.toByteArray))
+          val decoded = readPng(plantedPng(id, 0))
           val r = decoded.getRaster
           val ds = Array.ofDim[Long](4, 4)
           for (v <- 0 until 4; u <- 0 until 4) {
@@ -170,63 +227,23 @@ object Multimodal {
     * mono PCM clip is synthesized per document (sample(i) =
     * ((id·7 + 13i) mod 2000) − 1000, so every statistic is
     * integer-exact for the oracle), written through the real WAVE
-    * encoder, decoded back via AudioSystem, and summarized. No
+    * encoder and decoded back (`WavRoundTrip`), and summarized. No
     * rounding anywhere — all four outputs are exact integers.
-    * Codec work fans out over the id-only repartition like the image
-    * path; bytes stay in the decoding task.
+    * Codec work fans out over `docIds` like the image path; bytes stay
+    * in the decoding task.
     */
   def multimodalDecodeWav(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      // decouple codec parallelism from input splits (see decode_png)
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
-        // Provider resolution ONCE per task: AudioSystem.write /
-        // getAudioInputStream consult the JDK's provider registry
-        // (JDK13Services — a synchronized global) on EVERY call, which
-        // serializes 32 concurrently-decoding tasks on one lock and
-        // erases the repartition's parallel win (measured ~3× on this
-        // key). ServiceLoader yields the same WAVE SPI classes the
-        // registry would; codec work is unchanged.
-        import scala.jdk.CollectionConverters._
-        val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
-        val writer = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
-          .asScala.find(_.isFileTypeSupported(wave)).get
-        val readers = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileReader])
-          .asScala.toList
-        var waveReader: javax.sound.sampled.spi.AudioFileReader = null
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+        val wav = new WavRoundTrip
         it.map { id =>
-          val pcm = new Array[Byte](256 * 2)
-          for (i <- 0 until 256) {
-            val v = (((id * 7 + 13L * i) % 2000) - 1000).toShort
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-          }
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, 256)
-          val bos = new java.io.ByteArrayOutputStream()
-          writer.write(ais, wave, bos)
-          if (waveReader == null)
-            waveReader = readers.find { r =>
-              try { r.getAudioInputStream(
-                new java.io.ByteArrayInputStream(bos.toByteArray)); true }
-              catch { case _: Exception => false }
-            }.get
-          val in = waveReader.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bos.toByteArray))
-          val decoded = in.readAllBytes()
-          val n = decoded.length / 2
+          val (pcm, rate) = wav(id)
           var sum = 0L; var mx = Long.MinValue
-          for (i <- 0 until n) {
-            val v = ((decoded(2 * i) & 0xff) | (decoded(2 * i + 1) << 8)).toShort.toLong
+          for (v <- pcm) {
             sum += v; if (v > mx) mx = v
           }
-          (id, n.toLong, in.getFormat.getSampleRate.toLong, sum, mx)
+          (id, pcm.length.toLong, rate.toLong, sum, mx)
         }
       }
       .toDF("doc_id", "n_samples", "sample_rate", "sum_samples", "max_sample")
@@ -244,54 +261,22 @@ object Multimodal {
     * is integer-exact, and RMS = sqrt(ss/64) is one IEEE-identical
     * sqrt per frame.
     *
-    * Scale shape: identical to decode_wav — id-only repartition fans
-    * the codec work across all cores, one ServiceLoader provider
-    * resolution per task (not per clip), bytes never leave the task;
-    * the 4-row-per-clip explode happens inside the decoding task.
+    * Scale shape: the `docIds` fan-out spreads the codec work across
+    * all cores, one `WavRoundTrip` (one provider resolution) per task,
+    * not per clip; bytes never leave the task; the 4-row-per-clip
+    * explode happens inside the decoding task.
     */
   def multimodalWavEnergy(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
-        import scala.jdk.CollectionConverters._
-        val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
-        val writer = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
-          .asScala.find(_.isFileTypeSupported(wave)).get
-        val readers = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileReader])
-          .asScala.toList
-        var waveReader: javax.sound.sampled.spi.AudioFileReader = null
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+        val wav = new WavRoundTrip
         it.flatMap { id =>
-          val pcm = new Array[Byte](256 * 2)
-          for (i <- 0 until 256) {
-            val v = (((id * 7 + 13L * i) % 2000) - 1000).toShort
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-          }
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, 256)
-          val bos = new java.io.ByteArrayOutputStream()
-          writer.write(ais, wave, bos)
-          if (waveReader == null)
-            waveReader = readers.find { r =>
-              try { r.getAudioInputStream(
-                new java.io.ByteArrayInputStream(bos.toByteArray)); true }
-              catch { case _: Exception => false }
-            }.get
-          val in = waveReader.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bos.toByteArray))
-          val decoded = in.readAllBytes()
+          val (pcm, _) = wav(id)
           (0 until 4).map { f =>
             var ss = 0L
             for (i <- 0 until 64) {
-              val k = f * 64 + i
-              val v = ((decoded(2 * k) & 0xff) |
-                       (decoded(2 * k + 1) << 8)).toShort.toLong
+              val v = pcm(f * 64 + i).toLong
               ss += v * v
             }
             (id, f.toLong, ss, math.sqrt(ss / 64.0))
@@ -313,28 +298,17 @@ object Multimodal {
     * replays the bin counts in SQL and the REAL codec path is
     * hash-checked — integer counts, nothing rounds.
     *
-    * Scale shape: identical to decode_png — id-only repartition fans
-    * the codec work, the histogram is computed inside the decoding task
-    * (an 8-entry array), and only (id, bin, count) rows leave it.
+    * Scale shape: the `docIds` fan-out spreads the codec work, the
+    * histogram is computed inside the decoding task (an 8-entry array),
+    * and only (id, bin, count) rows leave it.
     */
   def multimodalImageHistogram(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
         imageIoNoDiskCache()
         it.flatMap { id =>
-          val img = new java.awt.image.BufferedImage(
-            8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          for (y <- 0 until 8; x <- 0 until 8)
-            raster.setSample(x, y, 0, ((id * 31 + 7 * x + 13 * y) % 256).toInt)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          val back = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bos.toByteArray))
+          val back = readPng(plantedPng(id, 0))
           val r = back.getRaster
           val bins = new Array[Long](8)
           for (y <- 0 until 8; x <- 0 until 8)
@@ -359,11 +333,7 @@ object Multimodal {
     */
   def multimodalFramesamplePng(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      // decouple codec parallelism from input splits (see decode_png)
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
         imageIoNoDiskCache()
         it.map { id =>
@@ -371,15 +341,8 @@ object Multimodal {
           val bos = new java.io.ByteArrayOutputStream()
           val dos = new java.io.DataOutputStream(bos)
           for (f <- 0 until 6) {
-            val img = new java.awt.image.BufferedImage(
-              8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val r = img.getRaster
-            for (y <- 0 until 8; x <- 0 until 8)
-              r.setSample(x, y, 0,
-                ((id * 31 + 7 * x + 13 * y + 17 * f) % 256).toInt)
-            val fb = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", fb)
-            dos.writeInt(fb.size()); fb.writeTo(dos)
+            val fb = plantedPng(id, 17 * f)
+            dos.writeInt(fb.length); dos.write(fb)
           }
           (id, bos.toByteArray)
         }
@@ -397,8 +360,7 @@ object Multimodal {
             val bytes = new Array[Byte](len)
             in.readFully(bytes)
             if (f % 2 == 0) { // decode only the kept frames
-              val img = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(bytes))
+              val img = readPng(bytes)
               val r = img.getRaster
               for (y <- 0 until img.getHeight; x <- 0 until img.getWidth)
                 sum += r.getSample(x, y, 0)
@@ -417,64 +379,28 @@ object Multimodal {
 
   /** REAL sample-rate conversion — the audio-pipeline op after decode
     * and energy scoring: the 256-sample 8 kHz planted clip goes through
-    * the REAL WAV encode→decode cycle (same provider-resolution
-    * discipline as decode_wav), then 2:1 downsample to 4 kHz by exact
-    * pair averaging. (a+b)/2.0 on 16-bit ints is IEEE-exact, so the
-    * first/peak/RMS witnesses are oracle-replayable from the planted
-    * formula — a codec that altered one sample shifts some witness.
+    * the REAL WAV encode→decode cycle (`WavRoundTrip`, one per task),
+    * then 2:1 downsample to 4 kHz by exact pair averaging. (a+b)/2.0 on
+    * 16-bit ints is IEEE-exact, so the first/peak/RMS witnesses are
+    * oracle-replayable from the planted formula — a codec that altered
+    * one sample shifts some witness.
     *
-    * Scale shape: identical to decode_wav — id-only repartition fans
-    * codec work across cores, resample runs in the decoding task,
-    * bytes never shuffle; output is 5 scalars per clip.
+    * Scale shape: the `docIds` fan-out spreads codec work across cores,
+    * resample runs in the decoding task, bytes never shuffle; output is
+    * 5 scalars per clip.
     */
   def multimodalWavResample(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      // decouple codec parallelism from input splits (see decode_png)
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    docIds(s, sf)
       .mapPartitions { it =>
-        import scala.jdk.CollectionConverters._
-        val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
-        val writer = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
-          .asScala.find(_.isFileTypeSupported(wave)).get
-        val readers = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileReader])
-          .asScala.toList
-        var waveReader: javax.sound.sampled.spi.AudioFileReader = null
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+        val wav = new WavRoundTrip
         it.map { id =>
-          val pcm = new Array[Byte](256 * 2)
-          for (i <- 0 until 256) {
-            val v = (((id * 7 + 13L * i) % 2000) - 1000).toShort
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-          }
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, 256)
-          val bos = new java.io.ByteArrayOutputStream()
-          writer.write(ais, wave, bos)
-          if (waveReader == null)
-            waveReader = readers.find { r =>
-              try { r.getAudioInputStream(
-                new java.io.ByteArrayInputStream(bos.toByteArray)); true }
-              catch { case _: Exception => false }
-            }.get
-          val in = waveReader.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bos.toByteArray))
-          val decoded = in.readAllBytes()
-          val n = decoded.length / 2
+          val (pcm, _) = wav(id)
           // 2:1 box resample on the DECODED stream: out(j) = (s(2j)+s(2j+1))/2
           var first = 0.0; var peak = Double.MinValue; var ss = 0.0
           var j = 0
-          while (2 * j + 1 < n) {
-            val a = ((decoded(4 * j) & 0xff) |
-              (decoded(4 * j + 1) << 8)).toShort.toDouble
-            val b = ((decoded(4 * j + 2) & 0xff) |
-              (decoded(4 * j + 3) << 8)).toShort.toDouble
-            val o = (a + b) / 2.0
+          while (2 * j + 1 < pcm.length) {
+            val o = (pcm(2 * j).toDouble + pcm(2 * j + 1).toDouble) / 2.0
             if (j == 0) first = o
             if (o > peak) peak = o
             ss += o * o
@@ -506,7 +432,7 @@ object Multimodal {
     * side provably finds the same pairs the oracle's n² scan does.
     *
     * Scale shape: codec work fans out over the id-only repartition
-    * (see decode_png); candidates come from a band equi-join (the LSH
+    * (see `docIds`); candidates come from a band equi-join (the LSH
     * band shape — shuffle ∝ docs·4, pair space ∝ band-bucket
     * occupancy), the exact hamming filter prunes to true pairs, and
     * the per-doc counts are one HashAggregate + a broadcast-size
@@ -514,23 +440,11 @@ object Multimodal {
     */
   def multimodalPhash(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    val hashes = Tables.documents(s, sf)
-      .select(col("doc_id")).na.drop()
-      // decouple codec parallelism from input splits (see decode_png)
-      .repartition(s.sparkContext.defaultParallelism)
-      .as[Long]
+    val hashes = docIds(s, sf)
       .mapPartitions { it =>
         imageIoNoDiskCache()
         it.map { id =>
-          val img = new java.awt.image.BufferedImage(
-            8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          for (y <- 0 until 8; x <- 0 until 8)
-            raster.setSample(x, y, 0, ((id * 31 + 7 * x + 13 * y) % 256).toInt)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          val decoded = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bos.toByteArray))
+          val decoded = readPng(plantedPng(id, 0))
           val r = decoded.getRaster
           val px = Array.ofDim[Int](64)
           var sum = 0L

@@ -136,7 +136,7 @@ object Pipeline {
     * whitespace twin stays oracle-paired, this one is oracle-N (vocab is
     * engine-specific) and spec-pinned. */
   def packBpe(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.BpeTokenCount.register(s)
+    graft.functions.GraftExtensions.register(s)
     val budget = 2048L
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("doc_id").asc)
@@ -763,7 +763,7 @@ object Pipeline {
     * docs-per-shingle on a deduped corpus.
     */
   def pipelineCorpusBuild(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.ShingleHash64.register(s)
+    graft.functions.GraftExtensions.register(s)
     val ws = split(col("text"), " ")
     val alphaR = round(
       length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double") /

@@ -23,7 +23,7 @@ object Similarity {
     * left-to-right double fold as the declarative
     * `aggregate(zip_with(...))` form, compiled instead of interpreted. */
   private def dot(s: SparkSession)(a: String, b: String) = {
-    graft.functions.DotProduct.register(s)
+    graft.functions.GraftExtensions.register(s)
     expr(s"graft_dot($a, $b)")
   }
 
@@ -352,7 +352,7 @@ object Similarity {
     * by the result, not the pair space. */
   private[graft] def dedupEmbedCosineQuantized(s: SparkSession,
                                                e: DataFrame): DataFrame = {
-    graft.functions.DotProductI8.register(s)
+    graft.functions.GraftExtensions.register(s)
     val stats = blockStats(e)
     val q = e
       .select(col("label"), col("vec_id"), col("embedding"),
@@ -644,7 +644,7 @@ object Similarity {
   private[graft] def annLshTopk(e: DataFrame, dotF: (String, String) => org.apache.spark.sql.Column,
                                 nPlanes: Int = 4, maxBucket: Int = 4096,
                                 k: Int = 5, nTables: Int = 8): DataFrame = {
-    graft.functions.LshBuckets.register(e.sparkSession)
+    graft.functions.GraftExtensions.register(e.sparkSession)
     lshQueryTopk(lshBucketRows(e, nTables, nPlanes), dotF, maxBucket, k)
   }
 
@@ -669,7 +669,7 @@ object Similarity {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
     val tables = lshTablesFor(planes)
-    graft.functions.LshBuckets.register(s)
+    graft.functions.GraftExtensions.register(s)
     val cut = broadcast(e.agg(floor(max(col("vec_id")) / 2)
       .cast("long").as("cut")))
     // The standing half is a per-session INVESTMENT (Scratch.stagedDir
@@ -707,7 +707,7 @@ object Similarity {
   def simAnnIndexPersist(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
-    graft.functions.LshBuckets.register(s)
+    graft.functions.GraftExtensions.register(s)
     val index = lshBucketRows(e, lshTablesFor(planes), planes)
     val name = "graft_ann_index_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val persisted = ScalePatterns.persistBucketed(s, index,
@@ -788,7 +788,7 @@ object Similarity {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
     val tables = math.max(1, lshTablesFor(planes) / 2)
-    graft.functions.LshBuckets.register(s)
+    graft.functions.GraftExtensions.register(s)
     multiprobeTopk(lshBucketRows(e, tables, planes), dot(s), planes,
       maxBucket = 4096, k = 5)
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -13,6 +13,96 @@ import graft.Tables
   */
 object Stats {
 
+  /** The A/B arm every experiment key shares: users hash into arms by
+    * md5's first hex char, 0-7 → A (true), else B — md5 is the
+    * cross-engine-identical hash. Callers add their own
+    * `.cast("long")` or `when(arm, …)`. */
+  private[operators] val arm: Column =
+    substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
+      .isin("0", "1", "2", "3", "4", "5", "6", "7")
+
+  /** The treatment midpoint of `ev`'s day column `d` — d0 + (d1 − d0)
+    * div 2 over the corpus span — as a broadcast one-row frame `mid`.
+    * Days before it are the pre period, the rest the post period. */
+  private[operators] def midpoint(ev: DataFrame): DataFrame =
+    broadcast(ev.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
+      .select(expr("date_add(d0, cast(datediff(d1, d0) div 2 as int))")
+        .as("mid")))
+
+  /** Per-(event_type, d) daily counts `c` as doubles on each type's own
+    * contiguous d0..d1 day grid: missing days are true zeros, so lags
+    * align calendar-wise, not row-wise. Only the (type, day) aggregate
+    * is data-sized; the grid and its join are calendar-bounded. */
+  private[operators] def typeDayCounts(s: SparkSession, sf: String): DataFrame = {
+    val daily = DailyFrames.daily(s, sf)
+      // a NULL type would order NULLS FIRST here vs DuckDB's NULLS LAST,
+      // and its all-zero gap-filled series yields corr = NaN vs NULL —
+      // exclude it on both engines (matches sample_reservoir_group)
+      .filter(col("event_type").isNotNull)
+      .select(col("event_type"), col("d"), col("c"))
+    val grid = daily.groupBy(col("event_type"))
+      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
+      .select(col("event_type"),
+              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
+    grid.join(daily, Seq("event_type", "d"), "left")
+      .select(col("event_type"), col("d"),
+              coalesce(col("c"), lit(0L)).cast("double").as("c"))
+  }
+
+  /** Per-user daily purchase totals on each user's own contiguous
+    * first..last purchase-day grid: (user_id, d, day_value), with
+    * day_value NULL on gap days. Aggregate first (events → one row per
+    * (user, day)), then explode each user's span, so the grid is
+    * bounded by span-days × users, never events × days; the grid⋈daily
+    * join is a hash join between two user-day-grain frames. Day totals
+    * round at 4 on both engines (non-integral doubles, §0.3). */
+  private[operators] def userPurchaseDays(s: SparkSession, sf: String): DataFrame = {
+    val daily = Tables.events(s, sf)
+      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
+      .groupBy(col("user_id"), to_date(col("ts")).as("d"))
+      .agg(round(sum(col("value")), 4).as("day_value"))
+    daily.groupBy(col("user_id"))
+      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
+      .select(col("user_id"),
+              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
+      .join(daily, Seq("user_id", "d"), "left")
+  }
+
+  /** One-step event-type transition counts (from_t, to_t, c) over each
+    * user's (ts, event_id)-ordered journey — the data-sized part of
+    * every Markov-chain key: one per-user lag window (user-grain
+    * parallelism), then one ≤|types|² aggregate. */
+  private[operators] def transitionCounts(s: SparkSession, sf: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").asc, col("event_id").asc)
+    Tables.events(s, sf)
+      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
+      .select(col("user_id"), col("event_type").as("to_t"),
+        lag(col("event_type"), 1).over(w).as("from_t"))
+      .filter(col("from_t").isNotNull)
+      .groupBy(col("from_t"), col("to_t"))
+      .agg(count(lit(1)).as("c"))
+  }
+
+  /** Cramer's rule for the symmetric 3×3 system A·b = r, over columns
+    * a11 a12 a13 a22 a23 a33 and r1 r2 r3: the determinant `det` and
+    * the numerators `n0`, `n1`, `n2` (b_i = n_i / det). Spliced into a
+    * `selectExpr` after the caller's pass-through columns. */
+  private val cramer3: Seq[String] = Seq(
+    "a11 * (a22 * a33 - a23 * a23) - a12 * (a12 * a33 - a23 * a13) + a13 * (a12 * a23 - a22 * a13) as det",
+    "r1 * (a22 * a33 - a23 * a23) - a12 * (r2 * a33 - a23 * r3) + a13 * (r2 * a23 - a22 * r3) as n0",
+    "a11 * (r2 * a33 - r3 * a23) - r1 * (a12 * a33 - a23 * a13) + a13 * (a12 * r3 - r2 * a13) as n1",
+    "a11 * (a22 * r3 - a23 * r2) - a12 * (a12 * r3 - r2 * a13) + r1 * (a12 * a23 - a22 * a13) as n2")
+
+  /** The source × lang contingency cells (obs per non-null pair) of
+    * the documents table — ONE partial+final HashAggregate, the only
+    * data-sized step of every contingency key. */
+  private def sourceLangCells(s: SparkSession, sf: String): DataFrame =
+    Tables.documents(s, sf)
+      .filter(col("source").isNotNull && col("lang").isNotNull)
+      .groupBy(col("source"), col("lang"))
+      .agg(count(lit(1)).as("obs"))
+
   /** A/B experiment comparison (Welch's t): users hash deterministically
     * into arms (md5 first hex char, 0-7 → A, else B — md5 is the
     * cross-engine-identical hash), the purchase-value metric aggregates
@@ -24,10 +114,8 @@ object Stats {
     * 1-row result. No join, no second pass, map-side combinable.
     */
   def experimentTtest(s: SparkSession, sf: String): DataFrame = {
-    val a = substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
-    val va = when(a, col("value"))
-    val vb = when(!a, col("value"))
+    val va = when(arm, col("value"))
+    val vb = when(!arm, col("value"))
     Tables.events(s, sf)
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
       .agg(count(va).as("n_a"), count(vb).as("n_b"),
@@ -95,23 +183,10 @@ object Stats {
     * zero rows with `observed = false`. Downstream models (retention
     * curves, forecasting) need the gaps as rows, not as absences.
     *
-    * Scale shape: aggregate first (events → one row per (user, day)),
-    * THEN build the grid from each user's own [min, max] span — the
-    * explode is bounded by span-days × users, never events × days; the
-    * grid⋈daily join is a hash join on (user_id, day) between two
-    * user-day-grain frames. Day totals are rounded on both engines
-    * (non-integral doubles, §0.3 convention).
+    * Scale shape: the `userPurchaseDays` grid and one map-side select.
     */
   def timeseriesResample(s: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.events(s, sf)
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-      .agg(round(sum(col("value")), 4).as("day_value"))
-    val grid = daily.groupBy(col("user_id"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("user_id"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    grid.join(daily, Seq("user_id", "d"), "left")
+    userPurchaseDays(s, sf)
       .select(col("user_id"), col("d"),
               coalesce(col("day_value"), lit(0.0)).as("day_value"),
               col("day_value").isNotNull.as("observed"))
@@ -133,10 +208,7 @@ object Stats {
     val wRow = Window.partitionBy(col("source"))
     val wCol = Window.partitionBy(col("lang"))
     val wAll = Window.partitionBy()
-    Tables.documents(s, sf)
-      .filter(col("source").isNotNull && col("lang").isNotNull)
-      .groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("obs"))
+    sourceLangCells(s, sf)
       .withColumn("exp",
         sum(col("obs")).over(wRow) * sum(col("obs")).over(wCol) /
           sum(col("obs")).over(wAll))
@@ -317,24 +389,16 @@ object Stats {
     * semantics, "last known state"). Leading days are always observed
     * because each user's grid starts at their first active day.
     *
-    * Scale shape: same grid build as the resample, plus ONE running
+    * Scale shape: the `userPurchaseDays` grid, plus ONE running
     * `last(ignoreNulls)` window per user — the join output is already
     * hash-partitioned by (user_id, d), but the window needs user_id
     * clustering, so the window adds the single per-user exchange; frame
     * is rows-unbounded-preceding (O(1) state per row, no buffering).
     */
   def timeseriesFfill(s: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.events(s, sf)
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-      .agg(round(sum(col("value")), 4).as("day_value"))
-    val grid = daily.groupBy(col("user_id"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("user_id"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("d").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.join(daily, Seq("user_id", "d"), "left")
+    userPurchaseDays(s, sf)
       .select(col("user_id"), col("d"),
               last(col("day_value"), ignoreNulls = true).over(w)
                 .as("filled_value"),
@@ -373,8 +437,6 @@ object Stats {
     * integer-exact, so ks_d is bit-identical to the global form.
     */
   def statsKsTest(s: SparkSession, sf: String): DataFrame = {
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
     // collapse to per-distinct-value arm counts BEFORE the running sums:
     // a running window over raw tied rows would see an arbitrary intra-
     // tie order (engine-dependent intermediate ECDFs); the sup of a step
@@ -461,19 +523,7 @@ object Stats {
     * tiny daily frame. `corr` is sum-of-moments, map-side combinable.
     */
   def statsAutocorr(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      // a NULL type would order NULLS FIRST here vs DuckDB's NULLS LAST,
-      // and its all-zero gap-filled series yields corr = NaN vs NULL —
-      // exclude it on both engines (matches sample_reservoir_group)
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("d"), col("c"))
-    val grid = daily.groupBy(col("event_type"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("event_type"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val filled = grid.join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-              coalesce(col("c"), lit(0L)).cast("double").as("c"))
+    val filled = typeDayCounts(s, sf)
     val w = Window.partitionBy(col("event_type")).orderBy(col("d").asc)
     filled
       .select(col("event_type"), col("c"),
@@ -502,16 +552,7 @@ object Stats {
     * three lag windows over the tiny daily frame, map-side-combinable
     * corr moments; the recursion is per-type scalar arithmetic. */
   def statsPartialAutocorr(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("d"), col("c"))
-    val grid = daily.groupBy(col("event_type"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("event_type"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val filled = grid.join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-              coalesce(col("c"), lit(0L)).cast("double").as("c"))
+    val filled = typeDayCounts(s, sf)
     val w = Window.partitionBy(col("event_type")).orderBy(col("d").asc)
     filled
       .select(col("event_type"), col("c"),
@@ -635,12 +676,7 @@ object Stats {
     // and divide once — order-free by construction (r11 ask #4)
     val ev = UserFrames.daily(s, sf)
       .select(col("user_id"), col("d"), col("c"), col("xsc"))
-    val span = broadcast(ev.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(expr("date_add(d0, cast(datediff(d1, d0) div 2 as int))")
-        .as("mid")))
-    val treated = substring(md5(col("user_id").cast("string")
-      .cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
+    val span = midpoint(ev)
     val users = ev.crossJoin(span)
       .groupBy(col("user_id"))
       .agg(sum(when(col("d") < col("mid"), col("c")).otherwise(0L)).as("x1"),
@@ -650,7 +686,7 @@ object Stats {
         (sum(when(col("d") >= col("mid"), coalesce(col("xsc"), lit(0L)))
           .otherwise(lit(0L))).cast("double") / 100d)
           .cast("decimal(18,4)").as("y"))
-      .withColumn("t", treated)
+      .withColumn("t", arm)
     // 3x3 normal equations on exact moments; Cramer in doubles, round-6
     val fit = broadcast(users.agg(
         count(lit(1)).as("n"), sum(col("x1")).as("sx1"),
@@ -667,11 +703,7 @@ object Stats {
         "cast(sx12 as double) as a23", "cast(sx22 as double) as a33",
         "cast(st as double) as r1", "cast(stx1 as double) as r2",
         "cast(stx2 as double) as r3")
-      .selectExpr(
-        "a11 * (a22 * a33 - a23 * a23) - a12 * (a12 * a33 - a23 * a13) + a13 * (a12 * a23 - a22 * a13) as det",
-        "r1 * (a22 * a33 - a23 * a23) - a12 * (r2 * a33 - a23 * r3) + a13 * (r2 * a23 - a22 * r3) as n0",
-        "a11 * (r2 * a33 - r3 * a23) - r1 * (a12 * a33 - a23 * a13) + a13 * (a12 * r3 - r2 * a13) as n1",
-        "a11 * (a22 * r3 - a23 * r2) - a12 * (a12 * r3 - r2 * a13) + r1 * (a12 * a23 - a22 * a13) as n2")
+      .selectExpr(cramer3: _*)
       .selectExpr("round(n0 / nullif(det, 0.0d) , 6) as b0",
         "round(n1 / nullif(det, 0.0d), 6) as b1",
         "round(n2 / nullif(det, 0.0d), 6) as b2"))
@@ -741,9 +773,7 @@ object Stats {
     val ev = UserFrames.daily(s, sf)
       .filter(col("cv") > 0 && col("event_type").isNotNull)
       .select(col("user_id"), col("d"), col("xsc"))
-    val span = broadcast(ev.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(expr("date_add(d0, cast(datediff(d1, d0) div 2 as int))")
-        .as("mid")))
+    val span = midpoint(ev)
     ev.crossJoin(span)
       .groupBy(col("user_id"))
       .agg(((sum(when(col("d") >= col("mid"), col("xsc")).otherwise(lit(0L))) -
@@ -813,11 +843,8 @@ object Stats {
           "cast(sylxl as double) as a23", "cast(sxlxl as double) as a33",
           "cast(sy as double) as r1", "cast(syyl as double) as r2",
           "cast(syxl as double) as r3", "cast(syy as double) as syy")
-        .selectExpr("n_obs", "a11", "a12", "a22", "r1", "r2", "r3", "syy",
-          "a11 * (a22 * a33 - a23 * a23) - a12 * (a12 * a33 - a23 * a13) + a13 * (a12 * a23 - a22 * a13) as det",
-          "r1 * (a22 * a33 - a23 * a23) - a12 * (r2 * a33 - a23 * r3) + a13 * (r2 * a23 - a22 * r3) as n0",
-          "a11 * (r2 * a33 - r3 * a23) - r1 * (a12 * a33 - a23 * a13) + a13 * (a12 * r3 - r2 * a13) as n1",
-          "a11 * (a22 * r3 - a23 * r2) - a12 * (a12 * r3 - r2 * a13) + r1 * (a12 * a23 - a22 * a13) as n2")
+        .selectExpr(Seq("n_obs", "a11", "a12", "a22", "r1", "r2", "r3", "syy")
+          ++ cramer3: _*)
         .selectExpr("n_obs", "a11", "a12", "a22", "r1", "r2", "r3", "syy",
           "round(n0 / nullif(det, 0.0d), 6) as b0",
           "round(n1 / nullif(det, 0.0d), 6) as b1",
@@ -939,16 +966,7 @@ object Stats {
     * calendar-bounded per-type windows, one tiny final reduction.
     */
   def statsLjungBox(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("d"), col("c"))
-    val grid = daily.groupBy(col("event_type"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("event_type"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val filled = grid.join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-              coalesce(col("c"), lit(0L)).cast("double").as("c"))
+    val filled = typeDayCounts(s, sf)
     val wp = Window.partitionBy(col("event_type"))
     val w = wp.orderBy(col("d").asc)
     filled
@@ -1038,8 +1056,6 @@ object Stats {
     * stay ≪ 2⁵³, so the decomposed sum is exactly the global one.
     */
   def statsMannWhitney(s: SparkSession, sf: String): DataFrame = {
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
     val byVal = Tables.events(s, sf)
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull
         && col("value").isNotNull)  // null metric: no rank position (and
@@ -1130,8 +1146,6 @@ object Stats {
     * conversion-free corpus yields NULL statistics, never an ANSI
     * divide-by-zero. */
   def statsProportionsZtest(s: SparkSession, sf: String): DataFrame = {
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7").cast("long")
     def nz(c: org.apache.spark.sql.Column) = nullif(c, lit(0))
     val pHat = (col("xa") + col("xb")).cast("double") /
       nz((col("na") + col("nb")).cast("double"))
@@ -1160,14 +1174,14 @@ object Stats {
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase", col("v200"))
         .otherwise(lit(0L))).as("x"))
-      .select(arm.as("a"), lit(1L).as("n"), col("x"))
+      .select(arm.cast("long").as("a"), lit(1L).as("n"), col("x"))
     val eventFlags = uf
       .filter(col("event_type").isNotNull)
       .groupBy(col("user_id"))
       .agg(sum(col("c")).as("n"),
         sum(when(col("event_type") === "purchase", col("c"))
           .otherwise(lit(0L))).as("x"))
-      .select(arm.as("a"), col("n"), col("x"))
+      .select(arm.cast("long").as("a"), col("n"), col("x"))
     zRow("event", eventFlags).unionByName(zRow("user", userFlags))
       .orderBy("grain")
   }
@@ -1512,7 +1526,7 @@ object Stats {
     * interior gaps always have both anchors; the boundary fallbacks
     * still guard the degenerate single-observation user.
     *
-    * Scale shape: same grid build as ffill, plus TWO
+    * Scale shape: the `userPurchaseDays` grid, plus TWO
     * `last/first(ignoreNulls)` windows per user carrying (day, value)
     * anchor structs — both partitioned by user_id in the SAME
     * clustering, so the second window reuses the first's exchange and
@@ -1520,19 +1534,11 @@ object Stats {
     * running-unbounded in one direction each (O(1) state per row).
     */
   def timeseriesInterpolate(s: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.events(s, sf)
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-      .agg(round(sum(col("value")), 4).as("day_value"))
-    val grid = daily.groupBy(col("user_id"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("user_id"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
     val wBack = Window.partitionBy(col("user_id")).orderBy(col("d").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wFwd = Window.partitionBy(col("user_id")).orderBy(col("d").asc)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val anchor = grid.join(daily, Seq("user_id", "d"), "left")
+    val anchor = userPurchaseDays(s, sf)
       .select(col("user_id"), col("d"), col("day_value"),
         last(when(col("day_value").isNotNull,
           struct(col("d").as("pd"), col("day_value").as("pv"))),
@@ -2094,8 +2100,6 @@ object Stats {
     * grain; everything after is scalar algebra on a two-row frame.
     */
   def statsEffectSize(s: SparkSession, sf: String): DataFrame = {
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
     Tables.events(s, sf)
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull
         && col("value").isNotNull)
@@ -2350,10 +2354,7 @@ object Stats {
     val wRow = Window.partitionBy(col("source"))
     val wCol = Window.partitionBy(col("lang"))
     val wAll = Window.partitionBy()
-    Tables.documents(s, sf)
-      .filter(col("source").isNotNull && col("lang").isNotNull)
-      .groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("obs"))
+    sourceLangCells(s, sf)
       .withColumn("exp",
         sum(col("obs")).over(wRow) * sum(col("obs")).over(wCol) /
           sum(col("obs")).over(wAll))
@@ -2554,10 +2555,7 @@ object Stats {
     val wRow = Window.partitionBy(col("source"))
     val wCol = Window.partitionBy(col("lang"))
     val wAll = Window.partitionBy()
-    Tables.documents(s, sf)
-      .filter(col("source").isNotNull && col("lang").isNotNull)
-      .groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("obs"))
+    sourceLangCells(s, sf)
       .select(col("obs").cast("double").as("obs"),
         sum(col("obs")).over(wRow).cast("double").as("rx"),
         sum(col("obs")).over(wCol).cast("double").as("cy"),
@@ -2705,22 +2703,14 @@ object Stats {
     * does.
     *
     * Scale shape: the data-sized work is ONE (from, to) pair count off
-    * the per-user lag window (user-grain parallelism, the
-    * pathTransitions shape); everything after lives at |types|² ≤ 25
+    * the per-user lag window (user-grain parallelism, see
+    * `transitionCounts`); everything after lives at |types|² ≤ 25
     * rows. The chain matrix of a 100 TB corpus is still 25 cells —
     * power iteration at the driver-broadcast grain is the production
     * shape.
     */
   def eventMarkovStationary(s: SparkSession, sf: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val pairs = Tables.events(s, sf)
-      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id"), col("event_type").as("to_t"),
-        lag(col("event_type"), 1).over(w).as("from_t"))
-      .filter(col("from_t").isNotNull)
-      .groupBy(col("from_t"), col("to_t"))
-      .agg(count(lit(1)).as("c"))
+    val pairs = transitionCounts(s, sf)
     val rowTot = pairs.groupBy(col("from_t"))
       .agg(sum(col("c")).as("tot"))
     val p = pairs.join(rowTot, Seq("from_t"))
@@ -2905,11 +2895,7 @@ object Stats {
         "cast(sy as double) as r1", "cast(sty as double) as r2",
         "cast(sxy as double) as r3", "cast(syy as double) as syy",
         "cast(n as bigint) as n_days")
-      .selectExpr("n_days", "r1", "r2", "r3", "syy", "a11",
-        "a11 * (a22 * a33 - a23 * a23) - a12 * (a12 * a33 - a23 * a13) + a13 * (a12 * a23 - a22 * a13) as det",
-        "r1 * (a22 * a33 - a23 * a23) - a12 * (r2 * a33 - a23 * r3) + a13 * (r2 * a23 - a22 * r3) as n0",
-        "a11 * (r2 * a33 - r3 * a23) - r1 * (a12 * a33 - a23 * a13) + a13 * (a12 * r3 - r2 * a13) as n1",
-        "a11 * (a22 * r3 - a23 * r2) - a12 * (a12 * r3 - r2 * a13) + r1 * (a12 * a23 - a22 * a13) as n2")
+      .selectExpr(Seq("n_days", "r1", "r2", "r3", "syy", "a11") ++ cramer3: _*)
       .selectExpr("n_days", "r1", "r2", "r3", "syy", "a11",
         "n0 / det as b0", "n1 / det as b1", "n2 / det as b2")
       .selectExpr("n_days",
@@ -2940,11 +2926,9 @@ object Stats {
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull &&
         col("value").isNotNull)
       .select(col("user_id"), col("value"))
-    val armObs = substring(md5(col("user_id").cast("string").cast("binary")),
-        1, 1).isin("0", "1", "2", "3", "4", "5", "6", "7")
     val obs = base
-      .agg((avg(when(armObs, col("value"))) -
-            avg(when(!armObs, col("value")))).as("d_obs"))
+      .agg((avg(when(arm, col("value"))) -
+            avg(when(!arm, col("value")))).as("d_obs"))
     val armPerm = substring(md5(concat(col("user_id").cast("string"),
         lit(":"), col("i").cast("string")).cast("binary")), 1, 1)
       .isin("0", "1", "2", "3", "4", "5", "6", "7")
@@ -3061,8 +3045,6 @@ object Stats {
     * production pattern for stateless bucketing.
     */
   def statsAbSrm(s: SparkSession, sf: String): DataFrame = {
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")),
-        1, 1).isin("0", "1", "2", "3", "4", "5", "6", "7")
     Tables.events(s, sf)
       .filter(col("user_id").isNotNull)
       .select(col("user_id")).distinct()
@@ -3172,16 +3154,7 @@ object Stats {
     * broadcast back — a ≤|types|-row build side).
     */
   def timeseriesArForecast(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("d"), col("c"))
-    val grid = daily.groupBy(col("event_type"))
-      .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(col("event_type"),
-              explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
-    val filled = grid.join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-              coalesce(col("c"), lit(0L)).cast("double").as("c"))
+    val filled = typeDayCounts(s, sf)
     val wp = Window.partitionBy(col("event_type"))
     val w = wp.orderBy(col("d").asc)
     val lagged = filled
@@ -3243,9 +3216,7 @@ object Stats {
     val ev = UserFrames.daily(s, sf)
       .filter(col("cv") > 0 && col("event_type").isNotNull)
       .select(col("user_id"), col("d"), col("xsc"))
-    val span = broadcast(ev.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(expr("date_add(d0, cast(datediff(d1, d0) div 2 as int))")
-        .as("mid")))
+    val span = midpoint(ev)
     val users = ev.crossJoin(span)
       .groupBy(col("user_id"))
       .agg(
@@ -3347,8 +3318,6 @@ object Stats {
     * map-side combinable throughout.
     */
   def statsTostEquivalence(s: SparkSession, sf: String): DataFrame = {
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")),
-        1, 1).isin("0", "1", "2", "3", "4", "5", "6", "7")
     // session-memoized user-day rollup (r10 verdict ask #6): purchase
     // cells with cv > 0 are exactly the raw value-IS-NOT-NULL rows;
     // per-user revenue sums the cells' exact long cents (r11 ask #4)
@@ -3887,12 +3856,7 @@ object Stats {
       .filter(col("user_id").isNotNull && col("value").isNotNull &&
         col("event_type") === "purchase")
       .select(col("user_id"), to_date(col("ts")).as("d"), col("value"))
-    val span = broadcast(ev.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(expr("date_add(d0, cast(datediff(d1, d0) div 2 as int))")
-        .as("mid")))
-    val treated = substring(md5(col("user_id").cast("string")
-      .cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
+    val span = midpoint(ev)
     ev.crossJoin(span)
       .groupBy(col("user_id"))
       .agg(
@@ -3900,7 +3864,7 @@ object Stats {
           .otherwise(lit(0.0))), 4).cast("decimal(18,4)").as("pre"),
         round(sum(when(col("d") >= col("mid"), col("value"))
           .otherwise(lit(0.0))), 4).cast("decimal(18,4)").as("post"))
-      .withColumn("t", treated)
+      .withColumn("t", arm)
       .groupBy(col("t"))
       .agg(count(lit(1)).as("n"),
            sum(col("pre")).as("sp"), sum(col("post")).as("ss"))
@@ -3950,8 +3914,6 @@ object Stats {
         col("user_id").isNotNull && col("value").isNotNull)
       .select(col("user_id"), to_date(col("ts")).as("d"),
         round(col("value"), 4).cast("decimal(18,4)").as("v"))
-    val arm = substring(md5(col("user_id").cast("string").cast("binary")),
-      1, 1).isin("0", "1", "2", "3", "4", "5", "6", "7")
     // pooled per-event sd from exact decimal moments, round-6
     val sd = broadcast(ev.agg(count(lit(1)).as("n"), sum(col("v")).as("s1"),
         sum(col("v") * col("v")).as("s2"))
@@ -4090,19 +4052,11 @@ object Stats {
     * iteration's reduction is the seeded to-type-ordered fold (the
     * markov discipline).
     *
-    * Scale shape: the data-sized work is the shared per-user lag
-    * window + (from, to) count aggregate; iterations run on the ≤ k²
+    * Scale shape: the data-sized work is `transitionCounts`' per-user
+    * lag window + (from, to) count aggregate; iterations run on the ≤ k²
     * matrix frame. */
   def eventAbsorbingMarkov(s: SparkSession, sf: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val pairs = Tables.events(s, sf)
-      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id"), col("event_type").as("to_t"),
-        lag(col("event_type"), 1).over(w).as("from_t"))
-      .filter(col("from_t").isNotNull)
-      .groupBy(col("from_t"), col("to_t"))
-      .agg(count(lit(1)).as("c"))
+    val pairs = transitionCounts(s, sf)
     val rowTot = pairs.groupBy(col("from_t")).agg(sum(col("c")).as("tot"))
     val p = pairs.join(rowTot, Seq("from_t"))
       .select(col("from_t"), col("to_t"),
@@ -4146,12 +4100,7 @@ object Stats {
     val ev = Tables.events(s, sf)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), to_date(col("ts")).as("d"), col("value"))
-    val span = broadcast(ev.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(expr("date_add(d0, cast(datediff(d1, d0) div 2 as int))")
-        .as("mid")))
-    val treated = substring(md5(col("user_id").cast("string")
-      .cast("binary")), 1, 1)
-      .isin("0", "1", "2", "3", "4", "5", "6", "7")
+    val span = midpoint(ev)
     // covariates ride INTEGER units (revenue in 1e-4, the hurst
     // discipline): a decimal s1² would trip Spark's 38-digit
     // precision-loss cap where the oracle's HUGEINT does not
@@ -4160,7 +4109,7 @@ object Stats {
       .agg(sum(when(col("d") < col("mid"), 1L).otherwise(0L)).as("x1"),
         round(round(sum(when(col("d") < col("mid"), col("value"))
           .otherwise(lit(0.0))), 4) * 10000d).cast("long").as("x2"))
-      .withColumn("t", treated)
+      .withColumn("t", arm)
     def armStats(feature: String, name: String, scale: Double) = {
       val moments = users.groupBy(col("t"))
         .agg(count(lit(1)).as("n"), sum(col(feature)).as("s1"),
@@ -4204,18 +4153,11 @@ object Stats {
     * from-type order (the markov discipline — a bare float SUM is
     * order-dependent).
     *
-    * Scale shape: the data-sized work is the per-user lag window +
-    * (from, to) count aggregate; every fold runs over ≤ k ≈ 5 rows. */
+    * Scale shape: the data-sized work is `transitionCounts`' per-user
+    * lag window + (from, to) count aggregate; every fold runs over
+    * ≤ k ≈ 5 rows. */
   def statsEntropyRate(s: SparkSession, sf: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val pairs = Tables.events(s, sf)
-      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id"), col("event_type").as("to_t"),
-        lag(col("event_type"), 1).over(w).as("from_t"))
-      .filter(col("from_t").isNotNull)
-      .groupBy(col("from_t"), col("to_t"))
-      .agg(count(lit(1)).as("c"))
+    val pairs = transitionCounts(s, sf)
     val rowTot = pairs.groupBy(col("from_t"))
       .agg(sum(col("c")).as("tot"))
     val grand = broadcast(rowTot.agg(sum(col("tot")).as("gt")))

@@ -140,7 +140,7 @@ object TextOps {
     * spec pins hand-tokenized fixtures and the lossless-reconstruction
     * property instead. */
   def textBpeTokenCount(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.BpeTokenCount.register(s)
+    graft.functions.GraftExtensions.register(s)
     Tables.documents(s, sf)
       .select(col("doc_id"), col("lang"),
         size(words()).cast("bigint").as("ws_tokens"),
@@ -294,7 +294,7 @@ object TextOps {
     // bit-identical to the transform/slice/concat_ws/xxhash64 HOF chain
     // it replaces, which interpreted at 7 µs/shingle and dominated the
     // query (measured 1.7 s of a 3.3 s total at sf0.1).
-    graft.functions.ShingleHash64.register(s)
+    graft.functions.GraftExtensions.register(s)
     val docs = Tables.documents(s, sf)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
@@ -713,7 +713,7 @@ object TextOps {
     * final per-doc rollup computes totals and boilerplate hits in ONE
     * aggregate over the marked frame. */
   def textBoilerplateNgrams(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.ShingleHash64.register(s)
+    graft.functions.GraftExtensions.register(s)
     val docGrams = Tables.documents(s, sf)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
@@ -755,7 +755,7 @@ object TextOps {
     * Thresholds compare the ROUNDED fractions so both engines gate on
     * identical values. */
   def textRepetitionFilter(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.ShingleHash64.register(s)
+    graft.functions.GraftExtensions.register(s)
     val d = Tables.documents(s, sf)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
@@ -867,7 +867,7 @@ object TextOps {
     * proves the engine surfaces agree on every real row.
     */
   def textUnicodeNormalize(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.UnicodeNorm.register(s)
+    graft.functions.GraftExtensions.register(s)
     Tables.documents(s, sf)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),

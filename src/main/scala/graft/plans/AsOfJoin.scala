@@ -49,11 +49,12 @@ object AsOfJoin {
     AsOfCondition(exprs(0), exprs(1), exprs(2), exprs(3))
   }
 
-  /** Register marker function + optimizer rule + strategy on a live
+  /** Register marker function (with the rest of
+    * `GraftExtensions.functions`) + optimizer rule + strategy on a live
     * session (the harness builds sessions without extension configs,
     * so operators self-register). Idempotent. */
   def ensureRegistered(s: SparkSession): Unit = synchronized {
-    s.sessionState.functionRegistry.registerFunction(ident, info, builder)
+    graft.functions.GraftExtensions.register(s)
     if (!s.experimental.extraOptimizations.contains(AsOfJoinRule))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ AsOfJoinRule

@@ -12,7 +12,7 @@ class BpeTokenSpec extends SparkSpecBase {
 
   private def tokenized(texts: Seq[String]): Map[String, Seq[String]] = {
     import spark.implicits._
-    graft.functions.BpeTokenCount.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     texts.toDF("text")
       .select(col("text"), expr("graft_bpe_tokens(text)").as("toks"))
       .collect()
@@ -36,7 +36,7 @@ class BpeTokenSpec extends SparkSpecBase {
   }
 
   test("count == tokens.size and tokens reconstruct the text (sf0.01 corpus)") {
-    graft.functions.BpeTokenCount.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Tables.documents(spark, sfOracle)
       .select(col("doc_id"), col("text"),
         expr("graft_bpe_count(text)").as("n"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Self-tests for the oracle-N LLM-pipeline operators (engine-specific
   * hash families): MinHash/LSH with planted near-dups, SimHash, ANN LSH,
-  * and the multimodal decode stub. Fixture docs are generated in-test
+  * and the multimodal codec round-trips. Fixture docs are generated in-test
   * (FIXTURES.md: the corpus has no exact dups at sf0.001). */
 class DedupSimilaritySpec extends SparkSpecBase {
 
@@ -248,7 +248,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // hyperplane family is deterministic in (table, plane, dim); this
     // asserts the resulting top-k is bit-identical to hashing the whole
     // collection from scratch at the same derived (planes, tables).
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
@@ -261,7 +261,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("persisted ann index: bucketed table round-trip answers identically to a rebuild") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
@@ -286,7 +286,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("ann lsh: wider signature (16 planes) refines 8-plane buckets, deterministic") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfSmoke)
     val wide = Similarity.annLshTopk(e, dotF, nPlanes = 16)
@@ -312,7 +312,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("multiprobe: at HALF the tables, recall beats single-probe at the same half and holds the family floor") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
@@ -351,7 +351,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("ann lsh: recall@5 >= 0.5 vs brute force at the default knobs") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sfOracle)
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -399,7 +399,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("ann lsh: stop-bucket cap drops oversized buckets' candidates") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfSmoke)
     // cap of 1 excludes every bucket with >1 member → no candidates at all
@@ -451,7 +451,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(Similarity.simIvfTopk(spark, sfOracle).collect().sameElements(rows))
     // recall@5 vs brute force (informational lower bound: must beat
     // picking 5 of N at random by a wide margin)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sfOracle)
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -557,6 +557,61 @@ class DedupSimilaritySpec extends SparkSpecBase {
         assert(expect(r.getLong(1)) == r.getLong(2),
           s"doc $id bin ${r.getLong(1)}: decoded histogram diverges from plant")
       }
+    }
+  }
+
+  test("decode png: 8x8 raster, mean_gray equals the planted-formula recompute") {
+    val rows = Multimodal.multimodalDecodePng(spark, sfSmoke).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      assert(r.getInt(1) == 8 && r.getInt(2) == 8, s"doc $id: expected 8x8")
+      val sum = (for (y <- 0 until 8; x <- 0 until 8)
+        yield (id * 31 + 7 * x + 13 * y) % 256).sum
+      assert(r.getDouble(3) == sum / 64.0, s"doc $id: mean_gray diverged")
+    }
+  }
+
+  test("resize png: corner and mean_ds equal the planted 2x2 box-filter recompute") {
+    val rows = Multimodal.multimodalResizePng(spark, sfSmoke).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      def px(x: Int, y: Int): Long = (id * 31 + 7 * x + 13 * y) % 256
+      val ds = for (v <- 0 until 4; u <- 0 until 4) yield
+        (px(2 * u, 2 * v) + px(2 * u + 1, 2 * v) +
+          px(2 * u, 2 * v + 1) + px(2 * u + 1, 2 * v + 1)) / 4
+      assert(r.getInt(1) == 4 && r.getInt(2) == 4, s"doc $id: expected 4x4")
+      assert(r.getDouble(3) == ds.sum / 16.0, s"doc $id: mean_ds diverged")
+      assert(r.getLong(4) == ds.head, s"doc $id: corner diverged")
+    }
+  }
+
+  test("decode wav: 256 samples at 8000 Hz, sum and max equal the planted ramp") {
+    val rows = Multimodal.multimodalDecodeWav(spark, sfSmoke).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      val pcm = (0 until 256).map(i => (id * 7 + 13L * i) % 2000 - 1000)
+      assert(r.getLong(1) == 256, s"doc $id: expected 256 samples")
+      assert(r.getLong(2) == 8000, s"doc $id: expected 8000 Hz")
+      assert(r.getLong(3) == pcm.sum, s"doc $id: sum_samples diverged")
+      assert(r.getLong(4) == pcm.max, s"doc $id: max_sample diverged")
+    }
+  }
+
+  test("framesample png: kept frames 0, 2, 4 carry the 17*f phase") {
+    val rows = Multimodal.multimodalFramesamplePng(spark, sfSmoke).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      val sum = (for (f <- Seq(0, 2, 4); y <- 0 until 8; x <- 0 until 8)
+        yield (id * 31 + 7 * x + 13 * y + 17 * f) % 256).sum
+      assert(r.getLong(1) == 6 && r.getLong(2) == 3,
+        s"doc $id: expected 6 frames, 3 sampled")
+      assert(r.getLong(3) == sum, s"doc $id: px_sum diverged")
+      assert(math.abs(r.getDouble(4) - sum / 192.0) < 1e-6,
+        s"doc $id: px_mean diverged")
     }
   }
 

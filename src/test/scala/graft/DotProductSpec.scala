@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.DotProduct
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** Native DotProduct expression: parity with the declarative HOF form,
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class DotProductSpec extends SparkSpecBase {
 
   test("graft_dot is bit-identical to aggregate(zip_with(...)) on the corpus") {
-    DotProduct.register(spark)
+    GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sfSmoke).limit(200)
     val both = e.crossJoin(
         Tables.embeddings(spark, sfSmoke).limit(1)
@@ -20,7 +20,7 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("null array yields null; self-dot of unit vectors is ~1") {
-    DotProduct.register(spark)
+    GraftExtensions.register(spark)
     val df = Tables.embeddings(spark, sfSmoke).limit(50)
       .select(expr("graft_dot(embedding, embedding)").as("selfdot"),
               expr("graft_dot(embedding, CAST(NULL AS ARRAY<FLOAT>))").as("n"))
@@ -29,7 +29,7 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("graft_minhash16 equals the declarative seeded-family formulation") {
-    graft.functions.MinHashSig16.register(spark)
+    GraftExtensions.register(spark)
     val both = Tables.documents(spark, sfSmoke)
       .select(array_distinct(split(col("text"), " ")).as("ws"))
       .select(
@@ -41,7 +41,7 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("graft_shingles equals the declarative slice/concat_ws/xxhash64 chain") {
-    graft.functions.ShingleHash64.register(spark)
+    GraftExtensions.register(spark)
     val both = Tables.documents(spark, sfSmoke)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
@@ -62,7 +62,7 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("type check rejects non-float arrays") {
-    DotProduct.register(spark)
+    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       Tables.embeddings(spark, sfSmoke)
         .select(expr("graft_dot(array(1L, 2L), array(1L, 2L))")).collect()
@@ -70,7 +70,7 @@ class DotProductSpec extends SparkSpecBase {
     assert(err.getMessage.toLowerCase.contains("array<float>"))
   }
 
-  test("GraftExtensions injects all four native functions at session build") {
+  test("GraftExtensions injects every function in the shared list at session build") {
     import org.apache.spark.sql.SparkSession
     // withExtensions only applies at builder time, and getOrCreate
     // short-circuits to an existing session — detach the suite session,
@@ -92,6 +92,17 @@ class DotProductSpec extends SparkSpecBase {
       assert(math.abs(r.getDouble(0) - 2.0) < 1e-12)
       assert(r.getInt(1) == 16)
       assert(r.getLong(3) == 2L)
+      // the extension and GraftExtensions.register share one list: every
+      // ident in it is in the sibling's registry, graft_tdigest included
+      val missing = GraftExtensions.functions.map(_._1)
+        .filterNot(s2.sessionState.functionRegistry.functionExists)
+      assert(missing.isEmpty, s"not injected: $missing")
+      assert(GraftExtensions.functions.size == 14)
+      val td = s2.sql(
+        """SELECT size(graft_tdigest(v, 200)) AS n
+          |FROM VALUES (CAST(1.0 AS DOUBLE)), (CAST(2.0 AS DOUBLE)) AS t(v)
+          |""".stripMargin).head()
+      assert(td.getInt(0) == 3)
     } finally {
       // never stop s2 — it shares the suite's SparkContext
       SparkSession.setActiveSession(prev)

@@ -98,7 +98,7 @@ class PropertiesSpec extends SparkSpecBase {
   }
 
   test("graft_shingles ≡ HOF chain on generated word arrays (incl. empties)") {
-    graft.functions.ShingleHash64.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     // words include empty strings and 1-char tokens — the concat_ws edge
     // space the corpus never exercises
     val wordsGen: Gen[List[String]] = Gen.choose(0, 12).flatMap(n =>

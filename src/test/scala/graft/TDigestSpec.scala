@@ -72,7 +72,7 @@ class TDigestSpec extends SparkSpecBase {
   }
 
   test("tdigest: same bounds hold under a forced 7-way repartition") {
-    graft.functions.TDigestQuantiles.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val rows = Tables.events(spark, sfSmoke)
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .repartition(7)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.UnicodeNorm
+import graft.functions.GraftExtensions
 
 /** Planted-fixture semantics for the native Unicode expressions — the
   * corpus is ASCII, so the oracle pairing proves only the plumbing;
@@ -13,7 +13,7 @@ class UnicodeNormSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def viaSql(fn: String, input: String): String = {
-    UnicodeNorm.register(spark)
+    GraftExtensions.register(spark)
     Seq(input).toDF("t").selectExpr(s"$fn(t)").head().getString(0)
   }
 
@@ -34,7 +34,7 @@ class UnicodeNormSpec extends SparkSpecBase {
   }
 
   test("null and empty propagate; interpreted path matches codegen") {
-    UnicodeNorm.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq[Option[String]](None, Some(""), Some("é"))
       .toDF("t")
       .selectExpr("graft_nfc(t) AS n", "graft_unaccent(t) AS u")

@@ -128,7 +128,7 @@ class WindowsAggsSpec extends SparkSpecBase {
   }
 
   test("misra-gries: exact below capacity, eps-bounded under forced overflow") {
-    graft.functions.MisraGriesTopK.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val words = Tables.documents(spark, sfOracle)
       .filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("word"))
