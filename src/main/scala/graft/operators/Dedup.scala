@@ -119,8 +119,7 @@ object Dedup {
     // probe cap) derives its ⌈log₂ n⌉+1 round bound from the node count
     // with the fixpoint probe exiting the moment a round changes
     // nothing. One job saved per call; at 100 TB, one saved corpus scan.
-    connectedComponents(docs.select(col("doc_id").as("id")), edges,
-                        maxIters = -1)
+    connectedComponents(docs.select(col("doc_id").as("id")), edges)
       .select(col("id").as("doc_id"), col("label").as("cluster_rep"))
       .orderBy("doc_id")
   }
@@ -179,8 +178,7 @@ object Dedup {
     * Iterative phase (the scale path): min-label propagation with pointer
     * jumping (label ← label[label]), the Hash-to-Min/GraphX-style CC loop
     * expressed as DataFrame joins with a localCheckpoint per round to cut
-    * lineage. Round bound: callers with a known component diameter pass
-    * it via maxIters; maxIters ≤ 0 derives ⌈log₂(nodeCount)⌉ + 1 from the
+    * lineage. Round bound: ⌈log₂(nodeCount)⌉ + 1, derived from the
     * data — always sufficient, since no diameter exceeds the node count
     * (the earlier fixed cap of 10 converged on the sf0.1 near-dup chain
     * at exactly round 10 — one longer chain away from silently returning
@@ -190,16 +188,10 @@ object Dedup {
     * @param nodes one column `id` (integral); every node appears in the
     *              output, isolated nodes label themselves.
     * @param edges columns `a`, `b` (one direction; symmetrized here).
-    * @param maxIters iterative-phase round bound; ≤ 0 = derive from data.
-    * @param jump disable pointer jumping when the caller knows every
-    *              component has diameter ≤ 1 (the jump join would be
-    *              pure overhead).
     * @param localMaxEdges driver-finisher threshold; 0 forces the
     *              iterative path (specs pin it that way).
     * @return columns `id`, `label` (= min id of the component). */
   private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                                         maxIters: Int,
-                                         jump: Boolean = true,
                                          localMaxEdges: Int = CcLocalMaxEdges
                                         ): DataFrame = Checkpoints.scoped { cp =>
     val s = nodes.sparkSession
@@ -257,13 +249,11 @@ object Dedup {
         .select(col("id"),
                 coalesce(col("uf_label"), col("id")).as("label"))
     } else {
-      // Round bound: caller-supplied diameter bound, or derived from the
-      // node count (diameter < n, pointer jumping covers 2^k after k
-      // rounds ⇒ ⌈log₂ n⌉ + 1 always converges; the probe exits earlier).
-      val iters =
-        if (maxIters > 0) maxIters
-        else math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(1L, nodes.count() - 1))).toInt + 1
+      // Round bound derived from the node count (diameter < n, pointer
+      // jumping covers 2^k after k rounds ⇒ ⌈log₂ n⌉ + 1 always
+      // converges; the probe exits earlier).
+      val iters = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
+        math.max(1L, nodes.count() - 1))).toInt + 1
       // The rounds read the SYMMETRIC frame; once its eager checkpoint
       // materializes (reading the finalized edge checkpoint, never the
       // subtree), the one-directional edge cache is dead weight — drop it
@@ -288,15 +278,11 @@ object Dedup {
         val prop = labels.union(nbr).groupBy("id")
           .agg(min(col("label")).as("label"))
         // Pointer jumping (label ← label[label]) is what makes long
-        // chains converge in log rounds — but for diameter-≤1 components
-        // every member sees the minimum after ONE neighbor propagation,
-        // so the jump join is pure overhead there.
-        val jumped =
-          if (!jump) prop
-          else prop
-            .join(prop.select(col("id").as("label"), col("label").as("label2")),
-                  Seq("label"))
-            .select(col("id"), col("label2").as("label"))
+        // chains converge in log rounds.
+        val jumped = prop
+          .join(prop.select(col("id").as("label"), col("label").as("label2")),
+                Seq("label"))
+          .select(col("id"), col("label2").as("label"))
         // The LAST round's frame feeds straight into the returned plan —
         // checkpointing it would be one more full job for lineage nobody
         // re-reads. Intermediate rounds are checkpointed to cut lineage,
@@ -381,7 +367,7 @@ object Dedup {
       .select(col("a"), col("b"))
       .filter(col("a") =!= col("b"))
     val cc = connectedComponents(
-      stage1.select(col("rep1").as("id")).distinct(), contracted, maxIters = -1)
+      stage1.select(col("rep1").as("id")).distinct(), contracted)
     stage1.join(cc, stage1("rep1") === cc("id"))
       .select(col("doc_id"), col("label").as("cluster_rep"))
       .orderBy("doc_id")
@@ -648,13 +634,7 @@ object Dedup {
       .filter(col("p.touches_batch"))
       .select(col("p.id1"), col("p.id2"))
       .distinct()
-    val sigs = estSigs(docs)
-    ids
-      .join(sigs.select(col("doc_id").as("id1"), col("sig").as("sig1")), "id1")
-      .join(sigs.select(col("doc_id").as("id2"), col("sig").as("sig2")), "id2")
-      .select(col("id1"), col("id2"),
-        round(expr("size(filter(zip_with(sig1, sig2, (a, b) -> a = b), x -> x))")
-          .cast("double") / 16.0, 4).as("est_jaccard"))
+    withEstimate(ids, estSigs(docs))
       .orderBy(col("est_jaccard").desc, col("id1"), col("id2"))
   }
 
@@ -687,13 +667,19 @@ object Dedup {
           |    struct(m1 AS id1, m2 AS id2))))""".stripMargin)).as("p"))
       .select(col("p.id1"), col("p.id2"))
       .distinct()
+    withEstimate(ids, sigs)
+  }
+
+  /** Joins the 16-component estimate signatures (doc_id, sig) back onto
+    * distinct (id1, id2) pairs: est_jaccard = matching fraction of the
+    * two signatures, 4-rounded. */
+  private def withEstimate(ids: DataFrame, sigs: DataFrame): DataFrame =
     ids
       .join(sigs.select(col("doc_id").as("id1"), col("sig").as("sig1")), "id1")
       .join(sigs.select(col("doc_id").as("id2"), col("sig").as("sig2")), "id2")
       .select(col("id1"), col("id2"),
         round(expr("size(filter(zip_with(sig1, sig2, (a, b) -> a = b), x -> x))")
           .cast("double") / 16.0, 4).as("est_jaccard"))
-  }
 
   /** Max members per SimHash band bucket. Buckets are (source, band,
     * 12-bit band value); one over the cap is skipped as a stop bucket —
@@ -783,20 +769,6 @@ object Dedup {
       .orderBy("source", "id1", "id2")
   }
 
-  /** Stop-bucket cap for the Jaccard prefix-token buckets (same guard as
-    * MaxBucket). A bucket is (source, one prefix token); hash order
-    * makes the prefix a uniform random sample of each doc's tokens, so
-    * occupancy tracks average token frequency (df-ascending order — see
-    * the path scaladoc — is what would make prefixes the rarest tokens).
-    * NOTE the cap is a stop-bucket RECALL trade in the approximate form
-    * (exact = false), exactly like stopword removal: a pair whose only
-    * shared prefix token sits in an over-cap bucket is dropped. The
-    * graded entry runs exact = true, which pair-expands over-cap buckets
-    * too — no bucket trips on any graded corpus (that would need >4096
-    * same-source docs sharing a token in their rarest decile), so the
-    * extra branch is an empty join there. */
-  private val JaccardMaxBucket = 4096
-
   /** Exact word-set (1-gram) Jaccard near-dup pairs, blocked on source,
     * J ≥ 0.9. Fully oracle-checkable — DuckDB computes the same
     * intersection/union arithmetic with list functions.
@@ -811,8 +783,8 @@ object Dedup {
     *    under any fixed global token order, two sets with J ≥ t must
     *    share a token among each set's first n − ⌈t·n⌉ + 1 elements, so
     *    candidates come from equi-joining on (source, prefix token):
-    *    occupancy-bounded buckets plus the stop-bucket cap, never a
-    *    per-block n². (Production refinement on a Zipfian vocabulary:
+    *    occupancy-bounded buckets, never a per-block n². (Production
+    *    refinement on a Zipfian vocabulary:
     *    document-frequency-ascending token order — prefix = rarest
     *    tokens → minimal candidates — worth its extra DF aggregate +
     *    rank window once blocks are large.)
@@ -820,49 +792,11 @@ object Dedup {
     * identical either way (asserted in DedupSimilaritySpec). */
   def dedupNgramJaccard(s: SparkSession, sf: String): DataFrame = {
     val docs = jaccardDocs(s, sf)
-    // The graded entry point must be EXACT at any scale: the capped
-    // prefix path silently drops a pair whose only shared prefix token
-    // sits in an over-cap bucket. exact = true lifts the occupancy
-    // filter's upper bound, so over-cap buckets pair-expand too — on a
-    // healthy corpus (no bucket trips, which is every graded one) the
-    // plan and cost are identical to the capped form, and on a tripped
-    // corpus the price is Σ(over-cap bucket)², not the whole-source
-    // block join the earlier wholesale fallback paid. The capped form
-    // (exact = false) stays available as the approximate scale variant.
-    if (blockPairSpaceBounded(docs, JaccardBlockMaxRows))
+    // the per-source all-pairs space is affordable below the threshold
+    // (Similarity.maxBlockAtMost: block ROWS, not compressed bytes)
+    if (Similarity.maxBlockAtMost(docs, "source", JaccardBlockMaxRows))
       ngramJaccardBlockJoin(docs)
-    else ngramJaccardPrefixJoin(docs, exact = true)
-  }
-
-  /** Dispatch predicate shared by the jaccard and containment
-    * quadratic-vs-prefix dispatches: is the per-source all-pairs space
-    * affordable? r12 dispatched on Catalyst's compressed-bytes plan
-    * estimate, and the 100× organic probe caught that mis-scaling
-    * spectacularly: low-entropy text compresses so well that a
-    * 500 000-doc corpus ESTIMATES 24 MB — under both old byte
-    * thresholds — so the quadratic block join ran at every organic
-    * scale (612 s at 100× vs the prefix path's 111 s, with 17-task
-    * parallelism strangled by the 10-source block structure). The
-    * quadratic driver was never bytes: it is the largest per-source
-    * BLOCK'S ROW COUNT (pair space Σ block²), so that is what the
-    * dispatch measures. The bytes estimate survives only as a
-    * zero-cost fast path: below 1 MB compressed no block can be
-    * catastrophic (every graded SF lands here, so the bench pays no
-    * new job); past it, one column-pruned groupBy-count scan decides —
-    * at 100 TB that statistic comes free from table metadata. */
-  private[graft] def blockPairSpaceBounded(docs: DataFrame,
-                                           maxRows: Long): Boolean = {
-    if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(1L << 20)) return true
-    // past the fast path, one column-pruned groupBy-count scan decides;
-    // PlanMemo-memoized per (session, plan, data version) like the
-    // embed-grid dispatch (r14 advisor class: no eager job per call)
-    val maxBlock = graft.PlanMemo.cached(docs, "maxBlock") {
-      docs.groupBy(col("source"))
-        .agg(count(lit(1)).as("bn"))
-        .agg(coalesce(max(col("bn")), lit(0L))).head().getLong(0)
-    }
-    maxBlock <= maxRows
+    else ngramJaccardPrefixJoin(docs)
   }
 
   /** Partition count for PAIR-GRAIN shuffles of the prefix-join family —
@@ -964,32 +898,26 @@ object Dedup {
   /** The dispatch predicate, exposed so CrossoverProbe can report what
     * the threshold WOULD pick next to what actually measures faster.
     * Row-count based since r13 — the r12 512 MB byte-estimate threshold
-    * had the mis-scaling blockPairSpaceBounded documents (compressed
+    * had the mis-scaling Similarity.maxBlockAtMost documents (compressed
     * low-entropy text: a 500 k-doc corpus estimated 24 MB, so the grid
     * ran at every organic scale); the grid's Σ block² cost is driven by
     * block ROWS. Crossover validated by CrossoverProbe on the fixed
     * corpora (numbers in PROGRESS r13). */
   private[graft] def containmentPicksGrid(docs: DataFrame): Boolean =
-    blockPairSpaceBounded(docs, ContainmentGridMaxRows)
+    Similarity.maxBlockAtMost(docs, "source", ContainmentGridMaxRows)
 
   private val ContainmentGridMaxRows = 1024L
 
-  /** Exact all-pairs over the (source, chunk) fragment-replicate grid —
-    * chunk count ⌈maxBlock/4096⌉ derived IN-PLAN from a broadcast
-    * one-row stats aggregate, so no single task ever owns a source
-    * block. */
+  /** Exact all-pairs over the (source, chunk) fragment-replicate grid
+    * (Similarity.gridReplicated / gridPartitioned) — chunk count
+    * ⌈maxBlock/4096⌉ derived IN-PLAN from a broadcast one-row stats
+    * aggregate, so no single task ever owns a source block. */
   private[graft] def containmentGridJoin(docs: DataFrame): DataFrame = {
-    val stats = broadcast(docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("bn"))
-      .agg(coalesce(max(col("bn")), lit(0L)).as("max_block")))
-    val chunks = least(lit(256L), greatest(lit(4L),
-      expr("(max_block + 4095) DIV 4096")))
-    val l = docs.crossJoin(stats)
-      .select(col("source"), col("doc_id").as("id1"), col("ws").as("w1"),
-              explode(sequence(lit(0), (chunks - 1).cast("int"))).as("chunk"))
-    val r = docs.crossJoin(stats)
-      .select(col("source"), col("doc_id").as("id2"), col("ws").as("w2"),
-              pmod(col("doc_id"), chunks).cast("int").as("chunk"))
+    val stats = Similarity.blockStats(docs, "source")
+    val l = Similarity.gridReplicated(docs, stats,
+      col("source"), col("doc_id").as("id1"), col("ws").as("w1"))
+    val r = Similarity.gridPartitioned(docs, stats, "doc_id",
+      col("source"), col("doc_id").as("id2"), col("ws").as("w2"))
     containmentVerify(
       l.join(r, Seq("source", "chunk")).filter(col("id1") < col("id2"))
         .select(col("source"), col("id1"), col("id2"), col("w1"), col("w2")))
@@ -1159,15 +1087,6 @@ object Dedup {
                 least(col("n1"), col("n2")) * 1.12))
   }
 
-  /** Large-input path: PPJoin prefix filter. Prefix rows carry
-    * (doc_id, n) ONLY — the word arrays would otherwise be replicated
-    * per prefix token through the shuffle; the prefix itself is a
-    * narrow slice of the already-sorted signature. The stop-bucket cap
-    * is a tiny aggregate joined back as a filter (AQE broadcasts it);
-    * pair generation is a plain equi self-join on the bucket key;
-    * candidates are deduped BEFORE the intersect so each surviving pair
-    * is verified exactly once, then the arrays are fetched back with
-    * two candidate-sized joins. */
   /** One row per (doc, prefix token): under a fixed GLOBAL token order,
     * two sets with J ≥ 0.9 must share a token among each set's first
     * n − ⌈0.9·n⌉ + 1 elements (the PPJoin prefix lemma — any total
@@ -1203,67 +1122,58 @@ object Dedup {
               col("col.tok").as("tok"), (col("pos") + 1).as("i"))
   }
 
-  /** @param exact when true, over-cap buckets are ALSO pair-expanded
-    *   (the occupancy filter drops its upper bound) — the result is
-    *   exact at the cost of Σ(over-cap bucket)² extra candidates, zero
-    *   on every graded corpus where no bucket trips; when false,
-    *   over-cap buckets are skipped as stop buckets (the approximate
-    *   scale form).
-    * @param cap bucket-occupancy cap, parameterized for spec coverage. */
-  private[graft] def ngramJaccardPrefixJoin(
-      docs: DataFrame, exact: Boolean = false,
-      cap: Int = JaccardMaxBucket): DataFrame = {
+  /** Large-input path: PPJoin prefix filter, EXACT at any scale — every
+    * (source, prefix token) bucket with at least two members is
+    * pair-expanded, however crowded. Prefix rows carry (doc_id, n) ONLY
+    * — the word arrays would otherwise be replicated per prefix token
+    * through the shuffle; the prefix itself is a narrow slice of the
+    * already-sorted signature. The bucket-occupancy aggregate is joined
+    * back as a filter (AQE broadcasts it); pair generation is a plain
+    * equi self-join on the bucket key; candidates are deduped BEFORE the
+    * intersect so each surviving pair is verified exactly once, then the
+    * arrays are fetched back with two candidate-sized joins. */
+  private[graft] def ngramJaccardPrefixJoin(docs: DataFrame): DataFrame = {
     val pref = prefixTokens(docs)
-    // One bucket-occupancy aggregate feeds both the ok-bucket filter and
-    // (in exact mode) the over-cap filter; exchange reuse dedups the
-    // underlying shuffle between the two consumers.
-    val occupancy = pref.groupBy(col("source"), col("tok"))
+    val buckets = pref.groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("bn"))
-    def candidates(buckets: DataFrame): DataFrame = {
-      val rows = pref.join(buckets.select(col("source"), col("tok")),
-                           Seq("source", "tok"))
-      rows.select(col("source"), col("tok"),
-                  col("doc_id").as("id1"), col("n").as("n1"),
-                  col("i").as("i1"))
-        .join(rows.select(col("source"), col("tok"),
-                          col("doc_id").as("id2"), col("n").as("n2"),
-                          col("i").as("i2")),
-              Seq("source", "tok"))
-        .filter(col("id1") < col("id2"))
-        .filter(greatest(col("n1"), col("n2")) <=
-                least(col("n1"), col("n2")) * 1.12)
-        // PPJoin positional filter (lossless): with both sets in the
-        // same global token order, a qualifying pair's FIRST shared
-        // token sits at positions (i1, i2) with every further shared
-        // token after it, so overlap ≤ 1 + min(n1−i1, n2−i2); J ≥ 0.9
-        // needs overlap ≥ ⌈0.9/1.9·(n1+n2)⌉. On a dense corpus this is
-        // the filter that tames the common-token buckets: docs whose
-        // rare-token budget is exhausted put COMMON tokens in their
-        // prefixes, those buckets grow ∝ corpus, and without the
-        // position bound their pair expansion is the dominant n² term
-        // (measured at the 100× organic probe: the cross-copy pairs it
-        // prunes all share their only prefix token at position ≥ 3 of
-        // one side). The threshold ⌈9(n1+n2)/19⌉ is INTEGER arithmetic:
-        // the double form ceil(0.9/1.9·s) rounds UP by one at s
-        // divisible by 19 (s=133 → 64 vs the exact 63), which would
-        // drop a pair sitting exactly at J = 0.9 — a boundary the
-        // round-before-gate convention deliberately admits. Scope: the
-        // verify gate's rounding admits J down to 0.8999995, whose
-        // overlap bound dips an integer below ⌈9s/19⌉ only once
-        // ~1.4e-7·s ≥ 1/19, i.e. pairs with n1+n2 ≥ ~4·10⁵ tokens —
-        // far past any corpus here; beyond it the threshold would need
-        // deriving from 0.8999995 directly.
-        .filter(lit(1) + least(col("n1") - col("i1"), col("n2") - col("i2"))
-          >= expr("(9 * (n1 + n2) + 18) DIV 19"))
-        .select("source", "id1", "id2")
-    }
-    // exact mode = no upper cap: buckets with bn in [2, cap] plus those
-    // above cap partition the bucket set, so one filter replaces the
-    // union of two candidate subtrees (fewer codegen stages, same rows).
-    val all = candidates(occupancy.filter(
-      if (exact) col("bn") >= 2 else col("bn").between(2, cap)))
+      .filter(col("bn") >= 2)
+    val rows = pref.join(buckets.select(col("source"), col("tok")),
+                         Seq("source", "tok"))
+    val candidates = rows
+      .select(col("source"), col("tok"), col("doc_id").as("id1"),
+              col("n").as("n1"), col("i").as("i1"))
+      .join(rows.select(col("source"), col("tok"), col("doc_id").as("id2"),
+                        col("n").as("n2"), col("i").as("i2")),
+            Seq("source", "tok"))
+      .filter(col("id1") < col("id2"))
+      .filter(greatest(col("n1"), col("n2")) <=
+              least(col("n1"), col("n2")) * 1.12)
+      // PPJoin positional filter (lossless): with both sets in the
+      // same global token order, a qualifying pair's FIRST shared
+      // token sits at positions (i1, i2) with every further shared
+      // token after it, so overlap ≤ 1 + min(n1−i1, n2−i2); J ≥ 0.9
+      // needs overlap ≥ ⌈0.9/1.9·(n1+n2)⌉. On a dense corpus this is
+      // the filter that tames the common-token buckets: docs whose
+      // rare-token budget is exhausted put COMMON tokens in their
+      // prefixes, those buckets grow ∝ corpus, and without the
+      // position bound their pair expansion is the dominant n² term
+      // (measured at the 100× organic probe: the cross-copy pairs it
+      // prunes all share their only prefix token at position ≥ 3 of
+      // one side). The threshold ⌈9(n1+n2)/19⌉ is INTEGER arithmetic:
+      // the double form ceil(0.9/1.9·s) rounds UP by one at s
+      // divisible by 19 (s=133 → 64 vs the exact 63), which would
+      // drop a pair sitting exactly at J = 0.9 — a boundary the
+      // round-before-gate convention deliberately admits. Scope: the
+      // verify gate's rounding admits J down to 0.8999995, whose
+      // overlap bound dips an integer below ⌈9s/19⌉ only once
+      // ~1.4e-7·s ≥ 1/19, i.e. pairs with n1+n2 ≥ ~4·10⁵ tokens —
+      // far past any corpus here; beyond it the threshold would need
+      // deriving from 0.8999995 directly.
+      .filter(lit(1) + least(col("n1") - col("i1"), col("n2") - col("i2"))
+        >= expr("(9 * (n1 + n2) + 18) DIV 19"))
+      .select("source", "id1", "id2")
     jaccardVerify(
-      all.distinct()  // a pair can share several prefix tokens
+      candidates.distinct()  // a pair can share several prefix tokens
         .join(docs.select(col("doc_id").as("id1"), col("ws").as("w1")), "id1")
         .join(docs.select(col("doc_id").as("id2"), col("ws").as("w2")), "id2"))
   }

@@ -143,7 +143,7 @@ object Graph {
     val edges = Dedup.dedupNgramJaccard(s, sf)
       .select(col("id1").as("a"), col("id2").as("b"))
     val nodes = Tables.documents(s, sf).select(col("doc_id").as("id"))
-    Dedup.connectedComponents(nodes, edges, maxIters = -1)
+    Dedup.connectedComponents(nodes, edges)
       .select(col("id").as("doc_id"), col("label").as("component"))
       .withColumn("n_members",
         count(lit(1)).over(Window.partitionBy(col("component"))).cast("bigint"))

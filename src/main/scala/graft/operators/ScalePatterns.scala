@@ -68,30 +68,19 @@ object ScalePatterns {
     s.table(name)
   }
 
-  /** Content identity of a bucketed-table input: md5 over the input
-    * FILE LISTING (every file's path, length, and modification time —
-    * so data regenerated in place at the same path re-buckets), the
-    * canonicalized analyzed plan, the schema, and the bucket spec. Two
-    * DataFrames get the same fingerprint only when they read the same
-    * bytes through the same derivation into the same layout — equal row
-    * counts or look-alike bucket columns are not enough. The listing is
-    * a driver metadata pass over the input's files, paid once per
-    * bucketed-table (re)build decision. */
+  /** Content identity of a bucketed-table input: md5 over the input's
+    * DATA VERSION (`PlanMemo.dataVersion` — every input file's path,
+    * length, and modification time, read from the FileIndex's cached
+    * listing, so data regenerated in place at the same path re-buckets),
+    * the canonicalized analyzed plan, the schema, and the bucket spec.
+    * Two DataFrames get the same fingerprint only when they read the
+    * same bytes through the same derivation into the same layout — equal
+    * row counts or look-alike bucket columns are not enough. No
+    * filesystem call is made: the listing was materialized when the
+    * relation resolved. */
   private def fingerprint(df: DataFrame, key: String, buckets: Int): String = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
-    val inputs = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.inputFiles.sorted.map { p =>
-            val path = new org.apache.hadoop.fs.Path(p)
-            val st = path.getFileSystem(hconf).getFileStatus(path)
-            s"$p#${st.getLen}#${st.getModificationTime}"
-          }.mkString(",")
-        case other => other.toString
-      }
-    }.sorted.mkString(";")
-    val basis = Seq(inputs, df.queryExecution.analyzed.canonicalized.toString,
+    val basis = Seq(graft.PlanMemo.dataVersion(df).toString,
+                    df.queryExecution.analyzed.canonicalized.toString,
                     df.schema.catalogString, key, buckets.toString).mkString("|")
     java.security.MessageDigest.getInstance("MD5")
       .digest(basis.getBytes(java.nio.charset.StandardCharsets.UTF_8))

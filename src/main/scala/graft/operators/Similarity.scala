@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Checkpoints, Tables}
@@ -27,18 +27,25 @@ object Similarity {
     expr(s"graft_dot($a, $b)")
   }
 
-  /** Brute-force cosine top-10 against an in-data query vector (vec_id 0).
-    * The single query row is broadcast; TakeOrderedAndProject keeps the
-    * top-k per partition, so nothing global is sorted. */
-  def simCosineTopk(s: SparkSession, sf: String): DataFrame = {
-    val e = Tables.embeddings(s, sf)
+  /** The brute-force query scan shared by the top-k, range, MMR and
+    * hybrid keys: the in-data query vector (vec_id 0) is broadcast as
+    * `qv`, and every OTHER vector is scored against it as the 6-rounded
+    * codegen dot product, named `score`, after the caller's `cols`. */
+  private def queryScan(s: SparkSession, e: DataFrame, score: String,
+                        cols: Column*): DataFrame = {
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(dot(s)("embedding", "qv"), 6).as("cos"))
+      .select(cols :+ round(dot(s)("embedding", "qv"), 6).as(score): _*)
+  }
+
+  /** Brute-force cosine top-10 against an in-data query vector (vec_id 0).
+    * The single query row is broadcast; TakeOrderedAndProject keeps the
+    * top-k per partition, so nothing global is sorted. */
+  def simCosineTopk(s: SparkSession, sf: String): DataFrame =
+    queryScan(s, Tables.embeddings(s, sf), "cos", col("vec_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(10)
-  }
 
   /** Threshold range search — the other fundamental similarity query
     * next to `simCosineTopk`'s top-k: ALL vectors scoring ≥ τ = 0.2
@@ -55,15 +62,10 @@ object Similarity {
     * result-sized sort. The ANN keys are the sub-linear path; this is
     * the exact baseline they are recall-measured against.
     */
-  def simRangeSearch(s: SparkSession, sf: String): DataFrame = {
-    val e = Tables.embeddings(s, sf)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(dot(s)("embedding", "qv"), 6).as("cos"))
+  def simRangeSearch(s: SparkSession, sf: String): DataFrame =
+    queryScan(s, Tables.embeddings(s, sf), "cos", col("vec_id"))
       .filter(col("cos") >= 0.2)
       .orderBy(col("cos").desc, col("vec_id").asc)
-  }
 
   /** Maximal Marginal Relevance — the diversity-aware re-rank every
     * retrieval-augmented and dataset-curation selector runs on top of
@@ -87,12 +89,8 @@ object Similarity {
     */
   def simMmrDiversify(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, sf)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val cands = e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("embedding"),
-        round(dot(s)("embedding", "qv"), 6).as("rel"))
+    val cands = queryScan(s, Tables.embeddings(s, sf), "rel",
+        col("vec_id"), col("embedding"))
       .orderBy(col("rel").desc, col("vec_id").asc)
       .limit(50)
       .collect()
@@ -139,20 +137,62 @@ object Similarity {
   private[graft] def collectionCount(e: DataFrame): Long =
     graft.PlanMemo.cached(e, "collectionCount")(e.count())
 
-  /** In-plan twin of `gridChunksFor`: the largest-label-block scalar is
-    * aggregated over the FULL collection and broadcast INTO the plan
-    * (q2-style crossJoin), and the chunk count becomes the column
-    * `⌈max_block/4096⌉` clamped to [4, 256] — same formula, zero driver
-    * actions. Both grid sides must crossJoin the SAME full-collection
-    * stats (a side-local max would derive mismatched chunk counts and
-    * the grid join would silently miss cells); the one-row subtree
-    * appears once per side — a column-pruned label aggregate each,
-    * O(#labels) work. */
-  private def blockStats(e: DataFrame): DataFrame =
-    broadcast(e.groupBy(col("label")).agg(count(lit(1)).as("bn"))
+  /** In-plan twin of `gridChunksFor`: the largest-block scalar (blocks
+    * keyed on the `block` column — `label` for the embedding grids,
+    * `source` for containment) is aggregated over the FULL collection
+    * and broadcast INTO the plan (q2-style crossJoin), and the chunk
+    * count becomes the column `⌈max_block/4096⌉` clamped to [4, 256] —
+    * same formula, zero driver actions. Both grid sides must crossJoin
+    * the SAME full-collection stats (a side-local max would derive
+    * mismatched chunk counts and the grid join would silently miss
+    * cells), which is why the grid builders below take `stats` from the
+    * caller; the one-row subtree appears once per side — a
+    * column-pruned block aggregate each, O(#blocks) work. */
+  private[graft] def blockStats(df: DataFrame, block: String): DataFrame =
+    broadcast(df.groupBy(col(block)).agg(count(lit(1)).as("bn"))
       .agg(coalesce(max(col("bn")), lit(0L)).as("max_block")))
-  private def chunksCol: org.apache.spark.sql.Column =
+  private[graft] def chunksCol: Column =
     least(lit(256L), greatest(lit(4L), expr("(max_block + 4095) DIV 4096")))
+
+  /** Replicated side of the fragment-replicate grid: the caller's `cols`
+    * plus one row per chunk in [0, chunks). */
+  private[graft] def gridReplicated(df: DataFrame, stats: DataFrame,
+                                    cols: Column*): DataFrame =
+    df.crossJoin(stats).select(cols :+
+      explode(sequence(lit(0), (chunksCol - 1).cast("int"))).as("chunk"): _*)
+
+  /** Partitioned side of the fragment-replicate grid: the caller's `cols`
+    * plus the row's own chunk, `id` mod chunks. */
+  private[graft] def gridPartitioned(df: DataFrame, stats: DataFrame,
+                                     id: String, cols: Column*): DataFrame =
+    df.crossJoin(stats).select(cols :+
+      pmod(col(id), chunksCol).cast("int").as("chunk"): _*)
+
+  /** Block-size dispatch probe shared by the Jaccard, containment and
+    * embed-cosine quadratic-vs-scalable dispatches: does the largest
+    * block of the `block` column hold at most `maxRows` rows? r12
+    * dispatched on Catalyst's compressed-bytes plan estimate, and the
+    * 100× organic probe caught that mis-scaling spectacularly:
+    * low-entropy text compresses so well that a 500 000-doc corpus
+    * ESTIMATES 24 MB — under both old byte thresholds — so the quadratic
+    * block join ran at every organic scale (612 s at 100× vs the prefix
+    * path's 111 s, with 17-task parallelism strangled by the 10-source
+    * block structure). The quadratic driver was never bytes: it is the
+    * largest BLOCK'S ROW COUNT (pair space Σ block²), so that is what the
+    * probe measures. The bytes estimate survives only as a zero-cost
+    * fast path: below 1 MB estimated no block can be catastrophic (every
+    * graded SF lands here, so the bench pays no job); past it, one
+    * column-pruned groupBy-count scan (the `blockStats` aggregate)
+    * decides — at 100 TB that statistic comes free from table metadata.
+    * The COUNT, not the verdict, is PlanMemo-memoized per (session,
+    * block column, plan, data version), so dispatches over the same
+    * frame with different thresholds probe once, and a rewritten corpus
+    * re-probes. */
+  private[graft] def maxBlockAtMost(df: DataFrame, block: String,
+                                    maxRows: Long): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(1L << 20) ||
+      graft.PlanMemo.cached(df, s"maxBlock:$block")(
+        blockStats(df, block).head().getLong(0)) <= maxRows
 
   private def ceilLog2(x: Long): Int =
     64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, x) - 1)
@@ -170,24 +210,29 @@ object Similarity {
     * per-cell target instead — total work is the operator's
     * exact-semantics price; the approximate escape hatch is the ANN
     * paths below). */
-  private[graft] def gridChunksFor(maxBlockRows: Long,
-                                   targetCellRows: Long = 4096): Int = {
-    val need = (math.max(0L, maxBlockRows) + targetCellRows - 1) / targetCellRows
+  private[graft] def gridChunksFor(maxBlockRows: Long): Int = {
+    val need = (math.max(0L, maxBlockRows) + GridCellRows - 1) / GridCellRows
     math.min(256L, math.max(4L, need)).toInt
   }
 
+  /** Target rows per grid cell side — the 4096 of `chunksCol`. */
+  private val GridCellRows = 4096L
+
   /** Hyperplanes per LSH table, derived from the collection size: bucket
-    * occupancy is ~n/2^p, so p = ⌈log₂(n / targetOccupancy)⌉ holds the
+    * occupancy is ~n/2^p, so p = ⌈log₂(n / LshTargetOccupancy)⌉ holds the
     * expected bucket at the stop-bucket target as n grows (500 vecs → 4
     * planes, the graded config; ~10¹⁰ vectors / 100 TB → 22 planes —
     * the ≥16-bit signature that scale demands). Floor 4 (below it the
     * buckets stop discriminating), cap 24 (finer than ~n/16M buckets
     * splits true neighbor pairs faster than tables can re-join them). */
-  private[graft] def lshPlanesFor(n: Long, targetOccupancy: Long = 4096): Int = {
+  private[graft] def lshPlanesFor(n: Long): Int = {
     // ⌈n / target⌉ via (n−1)/target + 1 — overflow-safe at any Long n
-    val ratio = math.max(0L, n - 1) / targetOccupancy + 1
+    val ratio = math.max(0L, n - 1) / LshTargetOccupancy + 1
     math.min(24, math.max(4, ceilLog2(ratio)))
   }
+
+  /** Expected per-table bucket occupancy `lshPlanesFor` sizes for. */
+  private val LshTargetOccupancy = 4096L
 
   /** LSH tables for a recall target, from the classic union bound
     * 1−(1−pColl^planes)^L ≥ recall ⇒ L = ⌈ln(1−recall)/ln(1−pColl^p)⌉.
@@ -198,15 +243,18 @@ object Similarity {
     * past the cap a deployment holds recall by multiprobe (probing
     * adjacent buckets raises effective pColl) instead of paying
     * unbounded index copies. */
-  private[graft] def lshTablesFor(planes: Int, pColl: Double = 0.75,
-                                  recall: Double = 0.95): Int = {
-    val pAll = math.pow(pColl, planes)
+  private[graft] def lshTablesFor(planes: Int): Int = {
+    val pAll = math.pow(LshPColl, planes)
     if (pAll >= 1.0) 1
     else {
-      val l = math.ceil(math.log(1.0 - recall) / math.log(1.0 - pAll))
+      val l = math.ceil(math.log(1.0 - LshRecall) / math.log(1.0 - pAll))
       math.min(64, math.max(1, l.toInt))
     }
   }
+
+  /** Per-plane collision probability and recall target of `lshTablesFor`. */
+  private val LshPColl = 0.75
+  private val LshRecall = 0.95
 
   /** k-NN join blocked on label: 3 nearest same-label neighbors for each
     * query vector (vec_id < 50).
@@ -220,13 +268,12 @@ object Similarity {
     * (the global top-3 is contained in the per-chunk top-3s). */
   def simKnnJoin(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    val stats = blockStats(e)
-    val q = e.filter(col("vec_id") < 50).crossJoin(stats)
-      .select(col("label"), col("vec_id").as("qid"), col("embedding").as("qv"),
-              explode(sequence(lit(0), (chunksCol - 1).cast("int"))).as("chunk"))
-    val c = e.crossJoin(stats)
-      .select(col("label"), col("vec_id").as("nid"), col("embedding").as("nv"),
-              pmod(col("vec_id"), chunksCol).cast("int").as("chunk"))
+    // stats over ALL of e: only the replicated side is the query subset
+    val stats = blockStats(e, "label")
+    val q = gridReplicated(e.filter(col("vec_id") < 50), stats,
+      col("label"), col("vec_id").as("qid"), col("embedding").as("qv"))
+    val c = gridPartitioned(e, stats, "vec_id",
+      col("label"), col("vec_id").as("nid"), col("embedding").as("nv"))
     val wPartial = Window.partitionBy(col("qid"), col("chunk"))
       .orderBy(col("cos").desc, col("nid").asc)
     val wFinal = Window.partitionBy(col("qid"))
@@ -280,25 +327,10 @@ object Similarity {
   }
 
   /** Dispatch predicate: is the largest label block small enough that
-    * the plain float grid's shuffle is cheap? Row-count based with a
-    * 1 MB estimated-bytes fast path, mirroring
-    * Dedup.blockPairSpaceBounded (graded SFs stay under the fast path
-    * and pay zero extra jobs; past it, one column-pruned groupBy-count
-    * scan decides — free from table metadata at 100 TB). */
-  private[graft] def embedPicksPlainGrid(e: DataFrame): Boolean = {
-    if (e.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(1L << 20)) return true
-    // Past the fast path the decision costs one groupBy-count scan —
-    // PlanMemo-memoized per (session, plan, data version) so repeated
-    // dedupEmbedCosine calls in a session probe once, and a rewritten
-    // corpus re-probes (r14 advisor).
-    graft.PlanMemo.cached(e, "embedGrid") {
-      val maxBlock = e.groupBy(col("label"))
-        .agg(count(lit(1)).as("bn"))
-        .agg(coalesce(max(col("bn")), lit(0L))).head().getLong(0)
-      maxBlock <= EmbedGridMaxRows
-    }
-  }
+    * the plain float grid's shuffle is cheap? (`maxBlockAtMost`: graded
+    * SFs stay under its fast path and pay zero extra jobs.) */
+  private[graft] def embedPicksPlainGrid(e: DataFrame): Boolean =
+    maxBlockAtMost(e, "label", EmbedGridMaxRows)
 
   /** Float-grid threshold: blocks past this ship 4× their bytes through
     * the replicated grid for no gain — the quantized prescreen is
@@ -315,13 +347,11 @@ object Similarity {
     * vectors. */
   private[graft] def dedupEmbedCosinePlain(s: SparkSession,
                                            e: DataFrame): DataFrame = {
-    val stats = blockStats(e)
-    val l = e.crossJoin(stats)
-      .select(col("label"), col("vec_id").as("id1"), col("embedding").as("v1"),
-              explode(sequence(lit(0), (chunksCol - 1).cast("int"))).as("chunk"))
-    val r = e.crossJoin(stats)
-      .select(col("label"), col("vec_id").as("id2"), col("embedding").as("v2"),
-              pmod(col("vec_id"), chunksCol).cast("int").as("chunk"))
+    val stats = blockStats(e, "label")
+    val l = gridReplicated(e, stats,
+      col("label"), col("vec_id").as("id1"), col("embedding").as("v1"))
+    val r = gridPartitioned(e, stats, "vec_id",
+      col("label"), col("vec_id").as("id2"), col("embedding").as("v2"))
     l.join(r, Seq("label", "chunk"))
       .filter(col("id1") < col("id2"))
       .select(col("label"), col("id1"), col("id2"),
@@ -353,7 +383,7 @@ object Similarity {
   private[graft] def dedupEmbedCosineQuantized(s: SparkSession,
                                                e: DataFrame): DataFrame = {
     graft.functions.GraftExtensions.register(s)
-    val stats = blockStats(e)
+    val stats = blockStats(e, "label")
     val q = e
       .select(col("label"), col("vec_id"), col("embedding"),
         (expr("""aggregate(embedding, CAST(0.0 AS DOUBLE),
@@ -366,14 +396,11 @@ object Similarity {
                |  x -> CAST(floor(CAST(x AS DOUBLE) / scale + 0.5d) AS TINYINT))
                |END""".stripMargin).as("q"))
       .withColumn("qa", expr("aggregate(q, 0L, (a, x) -> a + abs(CAST(x AS BIGINT)))"))
-    val l = q.crossJoin(stats)
-      .select(col("label"), col("vec_id").as("id1"), col("q").as("q1"),
-              col("scale").as("s1"), col("qa").as("a1"),
-              explode(sequence(lit(0), (chunksCol - 1).cast("int"))).as("chunk"))
-    val r = q.crossJoin(stats)
-      .select(col("label"), col("vec_id").as("id2"), col("q").as("q2"),
-              col("scale").as("s2"), col("qa").as("a2"),
-              pmod(col("vec_id"), chunksCol).cast("int").as("chunk"))
+    val l = gridReplicated(q, stats, col("label"), col("vec_id").as("id1"),
+      col("q").as("q1"), col("scale").as("s1"), col("qa").as("a1"))
+    val r = gridPartitioned(q, stats, "vec_id", col("label"),
+      col("vec_id").as("id2"), col("q").as("q2"), col("scale").as("s2"),
+      col("qa").as("a2"))
     val survivors = l.join(r, Seq("label", "chunk"))
       .filter(col("id1") < col("id2"))
       .filter(expr(
@@ -430,14 +457,13 @@ object Similarity {
     * valid), codebook materialized once. Every vector is
     * assigned to its nearest centroid (one broadcast pass, n×C dot
     * products with C ≈ √n at scale), and a query scans only the
-    * `NProbe` nearest cells instead of the whole collection.
+    * `nProbeFor` nearest cells instead of the whole collection.
     * Candidate ranking uses true cosine. Oracle-N; the spec checks cell
     * containment, determinism, and measures recall against brute
     * force. */
   def simIvfTopk(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    ivfTopk(s, e, nprobe = nProbeFor(collectionCount(e)),
-      centsOpt = Some(codebookFor(s, sf)))
+    ivfTopk(s, e, nProbeFor(collectionCount(e)), codebookFor(s, sf))
   }
 
   /** Session-memoized coarse-quantizer codebook over the corpus
@@ -446,13 +472,13 @@ object Similarity {
     * sample, and Lloyd rounds over an immutable table): a trained index
     * is a per-session INVESTMENT like the DPP staging layout and the
     * persisted LSH index, not a per-query cost. Memoized per
-    * (session, sf dir, round count) in `SessionMemo`; the value is
+    * (session, sf dir) in `SessionMemo`; the value is
     * SESSION-INDEPENDENT data — the collected C×64-float rows plus
     * their schema, kilobytes — with a local DataFrame rebuilt per call
     * (createDataFrame over local rows is plan-free and the consumer
     * broadcasts it anyway). Spec paths that train on CUSTOM frames
-    * bypass this (they pass their own `e`). */
-  private def memoizedCodebook(s: SparkSession, tag: (String, Int))
+    * bypass this (they call `trainCodebook` on their own `e`). */
+  private def memoizedCodebook(s: SparkSession, tag: String)
                               (train: => DataFrame): DataFrame = {
     val (schema, rows) = graft.SessionMemo(s, ("Similarity.codebook", tag)) {
       val df = train; (df.schema, df.collect())
@@ -460,15 +486,9 @@ object Similarity {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  private def codebookFor(s: SparkSession, sf: String,
-                          lloydIters: Int = KMeansIters): DataFrame =
-    memoizedCodebook(s, (sf, lloydIters))(
-      trainCodebook(s, Tables.embeddings(s, sf), lloydIters))
+  private def codebookFor(s: SparkSession, sf: String): DataFrame =
+    memoizedCodebook(s, sf)(trainCodebook(s, Tables.embeddings(s, sf)))
 
-  /** Parameterized IVF core — `nprobe` and `lloydIters` are knobs a
-    * deployment tunes against its own recall/latency curve (defaults =
-    * the graded configuration; the scaladocs on NProbe/KMeansIters
-    * record the measured curve on this corpus). */
   /** Nearest-centroid assignment: argmax dot, tiebreak LOWER centroid
     * id — expressed as a max_by hash aggregate (struct ordering key,
     * -cent_id for the ascending tiebreak) rather than a row_number
@@ -494,7 +514,7 @@ object Similarity {
       .select(col("cent_id"), col("vec_id"), col("embedding"))
 
   /** Spherical k-means coarse quantizer shared by the IVF index and
-    * SemDeDup: deterministic seeds (every ⌈√n⌉-th vector), `lloydIters`
+    * SemDeDup: deterministic seeds (every ⌈√n⌉-th vector), `KMeansIters`
     * Lloyd rounds on a deterministic 50% sample, means renormalized to
     * unit so dot = cosine stays valid; returned MATERIALIZED (C×64
     * floats ≈ tens of KB — exactly what gets broadcast anyway), so the
@@ -504,8 +524,7 @@ object Similarity {
     * and the broadcast stays C×64 floats — both bounded growth, unlike
     * a fixed sampling stride (C = n/k grows linearly and the n×C
     * assignment goes quadratic). */
-  private[graft] def trainCodebook(s: SparkSession, e: DataFrame,
-                                   lloydIters: Int = KMeansIters): DataFrame = {
+  private[graft] def trainCodebook(s: SparkSession, e: DataFrame): DataFrame = {
     // The codebook is MATERIALIZED once per Lloyd round (C ≈ √n rows —
     // the same bounded collect the final return always did): without
     // it, round i's broadcast(cents) re-executes rounds 1..i−1's whole
@@ -520,7 +539,7 @@ object Similarity {
         greatest(lit(1L), ceil(sqrt(col("n"))).cast("long")) === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv")))
     val trainSet = e.filter(col("vec_id") % 2 === 0)
-    for (_ <- 1 to lloydIters) {
+    for (_ <- 1 to KMeansIters) {
       val dims = 0 until 64
       val means = assignCells(s, trainSet, cents).groupBy(col("cent_id"))
         .agg(avg(element_at(col("embedding"), 1)).as("m0"),
@@ -539,13 +558,10 @@ object Similarity {
     cents
   }
 
-  private[graft] def ivfTopk(s: SparkSession, e: DataFrame,
-                             nprobe: Int = NProbe,
-                             lloydIters: Int = KMeansIters,
-                             centsOpt: Option[DataFrame] = None): DataFrame = {
-    val cents = centsOpt.getOrElse(trainCodebook(s, e, lloydIters))
+  private def ivfTopk(s: SparkSession, e: DataFrame, nprobe: Int,
+                      cents: DataFrame): DataFrame = {
     val assigned = assignCells(s, e, cents)
-    // queries probe their NProbe nearest cells
+    // queries probe their nprobe nearest cells
     val wProbe = Window.partitionBy(col("qid"))
       .orderBy(col("cdot").desc, col("cent_id").asc)
     val probes = e.filter(col("vec_id") < 20)
@@ -604,16 +620,30 @@ object Similarity {
     annLshTopk(e, dot(s), nPlanes = planes, nTables = lshTablesFor(planes))
   }
 
-  /** Query phase shared by the one-shot LSH build and the incremental
-    * index: takes an index frame (tbl, bucket, vec_id, embedding) —
-    * however it was built or merged — and runs the candidate join +
-    * true-cosine top-k. */
-  private def lshQueryTopk(index: DataFrame,
-                           dotF: (String, String) => org.apache.spark.sql.Column,
-                           maxBucket: Int, k: Int): DataFrame = {
-    val q = index.filter(col("vec_id") < 20)
-      .select(col("tbl"), col("bucket"), col("vec_id").as("qid"),
-              col("embedding").as("qv"))
+  /** Query phase shared by every LSH key (one-shot, incremental,
+    * persisted, multiprobe): takes an index frame (tbl, bucket, vec_id,
+    * embedding) — however it was built or merged — and runs the
+    * candidate join + true-cosine top-k. `flips` is the multiprobe
+    * width: 0 probes each query's own bucket only; p > 0 explodes each
+    * query signature into itself plus its p Hamming-1 neighbors (bit i
+    * flipped, i < p). The candidate side (cap included) is the same
+    * either way, and the distinct on (qid, nid, cos) collapses hits
+    * found through several probes or tables. */
+  private def lshQueryTopk(index: DataFrame, dotF: (String, String) => Column,
+                           flips: Int, maxBucket: Int, k: Int): DataFrame = {
+    val queries = index.filter(col("vec_id") < 20)
+    // flips = 0 keeps the plain projection: sequence(0, -1) is [0, -1],
+    // not empty, so a zero-width explode would add two spurious probes
+    val q =
+      if (flips == 0)
+        queries.select(col("tbl"), col("bucket"), col("vec_id").as("qid"),
+                       col("embedding").as("qv"))
+      else
+        queries.select(col("tbl"), col("vec_id").as("qid"),
+          col("embedding").as("qv"),
+          explode(concat(array(col("bucket")),
+            expr(s"transform(sequence(0, ${flips - 1})," +
+                 " i -> bucket ^ shiftleft(1L, i))"))).as("bucket"))
     // stop-bucket cap on the CANDIDATE side only: an oversized bucket
     // contributes no candidates (same semantics as MinHash stop buckets).
     // The count window repartitions on (tbl, bucket), the same key the
@@ -641,11 +671,12 @@ object Similarity {
       posexplode(expr(s"graft_lsh_buckets(embedding, $nTables, $nPlanes)")))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
 
-  private[graft] def annLshTopk(e: DataFrame, dotF: (String, String) => org.apache.spark.sql.Column,
+  private[graft] def annLshTopk(e: DataFrame, dotF: (String, String) => Column,
                                 nPlanes: Int = 4, maxBucket: Int = 4096,
                                 k: Int = 5, nTables: Int = 8): DataFrame = {
     graft.functions.GraftExtensions.register(e.sparkSession)
-    lshQueryTopk(lshBucketRows(e, nTables, nPlanes), dotF, maxBucket, k)
+    lshQueryTopk(lshBucketRows(e, nTables, nPlanes), dotF, flips = 0,
+      maxBucket, k)
   }
 
   /** INCREMENTAL ANN index maintenance — the day-2 operation the
@@ -688,7 +719,7 @@ object Similarity {
       .filter(col("vec_id") > col("cut")).drop("cut"), tables, planes)
     lshQueryTopk(standing.unionByName(
         delta.select(standing.columns.toIndexedSeq.map(col): _*)),
-      dot(s), maxBucket = 4096, k = 5)
+      dot(s), flips = 0, maxBucket = 4096, k = 5)
   }
 
   /** PERSISTED ANN index round-trip — the production deployment shape
@@ -712,7 +743,7 @@ object Similarity {
     val name = "graft_ann_index_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val persisted = ScalePatterns.persistBucketed(s, index,
       Seq("tbl", "bucket"), 8, name)
-    lshQueryTopk(persisted, dot(s), maxBucket = 4096, k = 5)
+    lshQueryTopk(persisted, dot(s), flips = 0, maxBucket = 4096, k = 5)
   }
 
   /** Hybrid retrieval with Reciprocal Rank Fusion — the RAG-serving
@@ -738,12 +769,8 @@ object Similarity {
   def simHybridSearch(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
     val docs = Tables.documents(s, sf)
-    val qv = broadcast(e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv")))
     val wDense = Window.orderBy(col("cos").desc, col("id").asc)
-    val dense = e.filter(col("vec_id") =!= 0).crossJoin(qv)
-      .select(col("vec_id").as("id"),
-              round(dot(s)("embedding", "qv"), 6).as("cos"))
+    val dense = queryScan(s, e, "cos", col("vec_id").as("id"))
       .orderBy(col("cos").desc, col("id").asc).limit(100)
       .withColumn("r_dense", row_number().over(wDense).cast("bigint"))
     val qw = broadcast(docs.filter(col("doc_id") === 0)
@@ -789,54 +816,10 @@ object Similarity {
     val planes = lshPlanesFor(collectionCount(e))
     val tables = math.max(1, lshTablesFor(planes) / 2)
     graft.functions.GraftExtensions.register(s)
-    multiprobeTopk(lshBucketRows(e, tables, planes), dot(s), planes,
+    lshQueryTopk(lshBucketRows(e, tables, planes), dot(s), flips = planes,
       maxBucket = 4096, k = 5)
   }
 
-  /** Query phase of [[simAnnMultiprobe]]: like [[lshQueryTopk]] but the
-    * query side explodes each signature into itself plus its nPlanes
-    * Hamming-1 neighbors; the candidate side (cap included) is
-    * unchanged and the distinct on (qid, nid, cos) collapses hits found
-    * through several probes. */
-  private[graft] def multiprobeTopk(index: DataFrame,
-      dotF: (String, String) => org.apache.spark.sql.Column,
-      nPlanes: Int, maxBucket: Int, k: Int): DataFrame = {
-    val q = index.filter(col("vec_id") < 20)
-      .select(col("tbl"), col("vec_id").as("qid"), col("embedding").as("qv"),
-        explode(concat(array(col("bucket")),
-          expr(s"transform(sequence(0, ${nPlanes - 1})," +
-               " i -> bucket ^ shiftleft(1L, i))"))).as("bucket"))
-    val wBucket = Window.partitionBy(col("tbl"), col("bucket"))
-    val c = index
-      .withColumn("bn", count(lit(1)).over(wBucket))
-      .filter(col("bn") <= maxBucket)
-      .select(col("tbl"), col("bucket"), col("vec_id").as("nid"),
-              col("embedding").as("nv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    q.join(c, Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), round(dotF("qv", "nv"), 6).as("cos"))
-      .distinct()
-      .withColumn("rn", row_number().over(w).cast("bigint"))
-      .filter(col("rn") <= k)
-      .orderBy("qid", "rn")
-  }
-
-  /** Symmetric per-vector int8 quantization — the storage/serving stage
-    * of an embedding pipeline (4× smaller vectors, SIMD-friendly int
-    * dot products; what an ANN index actually holds at 100 TB). Per
-    * vector: scale = max|x| / 127, q_i = ⌊x_i/scale + 0.5⌋ — the
-    * explicit floor(+0.5) rule, NOT round(), because Spark rounds
-    * half-up and DuckDB half-even; floor is bit-identical on both.
-    * Emits the quantized vector (comma-joined, an exact string
-    * compare), the scale, and the L2 reconstruction error.
-    *
-    * Scale shape: pure map-side — one projection over the embeddings
-    * scan, no shuffle except the output sort. The all-zero vector
-    * degenerates to scale 0 / q ≡ 0 (guarded: 0/0 is NaN and a NaN
-    * would cast to null and corrupt the string join).
-    */
   /** SemDeDup — semantic deduplication over embeddings (the Abbas et
     * al. 2023 pattern, the modern LLM-corpus companion to MinHash
     * dedup): cluster the collection with the k-means coarse quantizer,
@@ -856,13 +839,10 @@ object Similarity {
     * it). Oracle-N (k-means cells are engine-specific); the spec plants
     * semantic duplicates and asserts exactly one survivor per group. */
   def dedupSemantic(s: SparkSession, sf: String): DataFrame =
-    semDedup(s, Tables.embeddings(s, sf),
-      centsOpt = Some(codebookFor(s, sf)))
+    semDedup(s, Tables.embeddings(s, sf), codebookFor(s, sf))
 
-  private[graft] def semDedup(s: SparkSession, e: DataFrame,
-                              threshold: Double = 0.4,
-                              centsOpt: Option[DataFrame] = None): DataFrame = {
-    val cents = centsOpt.getOrElse(trainCodebook(s, e))
+  private[graft] def semDedup(s: SparkSession, e: DataFrame, cents: DataFrame,
+                              threshold: Double = 0.4): DataFrame = {
     val a = assignCells(s, e, cents)
     val l = a.select(col("cent_id"), col("vec_id").as("id1"),
                      col("embedding").as("v1"))
@@ -872,13 +852,26 @@ object Similarity {
       .filter(col("id1") < col("id2"))
       .filter(round(dot(s)("v1", "v2"), 6) >= threshold)
       .select(col("id1").as("a"), col("id2").as("b"))
-    Dedup.connectedComponents(
-        e.select(col("vec_id").as("id")), edges, maxIters = -1)
+    Dedup.connectedComponents(e.select(col("vec_id").as("id")), edges)
       .select(col("id").as("vec_id"), col("label").as("rep_id"))
       .withColumn("kept", (col("vec_id") === col("rep_id")).cast("bigint"))
       .orderBy("vec_id")
   }
 
+  /** Symmetric per-vector int8 quantization — the storage/serving stage
+    * of an embedding pipeline (4× smaller vectors, SIMD-friendly int
+    * dot products; what an ANN index actually holds at 100 TB). Per
+    * vector: scale = max|x| / 127, q_i = ⌊x_i/scale + 0.5⌋ — the
+    * explicit floor(+0.5) rule, NOT round(), because Spark rounds
+    * half-up and DuckDB half-even; floor is bit-identical on both.
+    * Emits the quantized vector (comma-joined, an exact string
+    * compare), the scale, and the L2 reconstruction error.
+    *
+    * Scale shape: pure map-side — one projection over the embeddings
+    * scan, no shuffle except the output sort. The all-zero vector
+    * degenerates to scale 0 / q ≡ 0 (guarded: 0/0 is NaN and a NaN
+    * would cast to null and corrupt the string join).
+    */
   def embedQuantizeInt8(s: SparkSession, sf: String): DataFrame = {
     Tables.embeddings(s, sf)
       .select(col("vec_id"),
@@ -971,9 +964,9 @@ object Similarity {
     // trained codebook is session-memoized like the IVF quantizer: a
     // deterministic 128-row artifact over an immutable table — a
     // per-session index investment, not a per-query cost
-    // iters key -1 namespaces the PQ codebook apart from the IVF one
+    // the "pq:" key namespaces the PQ codebook apart from the IVF one
     val cbB = broadcast(
-      memoizedCodebook(s, (s"pq:$sf", -1))(pqTrainCodebook(s, sub)))
+      memoizedCodebook(s, s"pq:$sf")(pqTrainCodebook(s, sub)))
     val encoded = sub
       .join(cbB, Seq("sub"))
       .select(col("vec_id"), col("sub"), col("code"),
@@ -1026,22 +1019,6 @@ object Similarity {
       .orderBy("qid", "rn")
   }
 
-  /** Matryoshka-style truncation recall — the cost/quality probe behind
-    * every "use the first k dims" embedding deployment: for each query,
-    * the top-5 neighbor set under the full 64-dim cosine vs the top-5
-    * under the 16-dim PREFIX score (candidate prefix renormalized;
-    * query norm is rank-constant and drops out), reported as the
-    * per-query overlap — recall@5 of the truncated index against the
-    * full one. High overlap = the prefix carries the ranking signal and
-    * the 4× cheaper index is safe.
-    *
-    * Scale shape: both rankings are the brute-force broadcast-query
-    * plan; the prefix slice/norm are column math at scan speed; the
-    * overlap is a (qid, nid) inner join of two per-query top-5 frames —
-    * everything bounded by |Q|·5 past the scans. Fully SQL-replayable
-    * (slice + the same windows), so this ANN-adjacent key IS
-    * oracle-paired, unlike the index-build families.
-    */
   /** NDCG@10 of the truncated-prefix ranking — the graded-relevance
     * companion to `embedTruncateRecall`'s set overlap: rank candidates
     * by the cheap 16-dim prefix score, but credit each position with
@@ -1091,6 +1068,22 @@ object Similarity {
       .orderBy("qid")
   }
 
+  /** Matryoshka-style truncation recall — the cost/quality probe behind
+    * every "use the first k dims" embedding deployment: for each query,
+    * the top-5 neighbor set under the full 64-dim cosine vs the top-5
+    * under the 16-dim PREFIX score (candidate prefix renormalized;
+    * query norm is rank-constant and drops out), reported as the
+    * per-query overlap — recall@5 of the truncated index against the
+    * full one. High overlap = the prefix carries the ranking signal and
+    * the 4× cheaper index is safe.
+    *
+    * Scale shape: both rankings are the brute-force broadcast-query
+    * plan; the prefix slice/norm are column math at scan speed; the
+    * overlap is a (qid, nid) inner join of two per-query top-5 frames —
+    * everything bounded by |Q|·5 past the scans. Fully SQL-replayable
+    * (slice + the same windows), so this ANN-adjacent key IS
+    * oracle-paired, unlike the index-build families.
+    */
   def embedTruncateRecall(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
     val qs = e.filter(col("vec_id") < 20)

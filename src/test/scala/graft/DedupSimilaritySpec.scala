@@ -113,14 +113,19 @@ class DedupSimilaritySpec extends SparkSpecBase {
       "the cost-based paths must agree pair-for-pair")
   }
 
-  test("ngram jaccard: exact prefix path stays exact when buckets trip the cap") {
-    val docs = Dedup.jaccardDocs(spark, sfOracle)
-    val block = Dedup.ngramJaccardBlockJoin(docs).collect()
-    // cap = 2 forces most prefix buckets over the cap; exact mode must
-    // recover every pair through the over-cap branch regardless
-    val exact = Dedup.ngramJaccardPrefixJoin(docs, exact = true, cap = 2).collect()
-    assert(block.sameElements(exact),
-      "exact prefix mode must match the block join under any cap")
+  test("block-size probe: the counting branch past the 1 MB fast path") {
+    // every graded corpus takes the estimated-bytes fast path, so only a
+    // frame estimated over 1 MB reaches the memoized groupBy-count;
+    // 300 000 ids over 7 residues put 42 858 rows in block 0
+    for (block <- Seq("source", "label")) {
+      val df = spark.range(300000).select(col("id"), (col("id") % 7).as(block))
+      assert(df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(1L << 20),
+        "the frame must miss the estimated-bytes fast path")
+      assert(Similarity.maxBlockAtMost(df, block, 42858L),
+        s"largest $block block is exactly 42 858 rows")
+      assert(!Similarity.maxBlockAtMost(df, block, 42857L),
+        s"one row under the largest $block block must fail")
+    }
   }
 
   test("simhash hamming-0 pairs are exactly the equal-word-set pairs within source") {
@@ -433,7 +438,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val e = vecs.toDF("vec_id", "embedding")
       .withColumn("label", lit("t"))
       .withColumn("embedding", col("embedding").cast("array<float>"))
-    val out = graft.operators.Similarity.semDedup(spark, e, threshold = 0.9)
+    val out = graft.operators.Similarity.semDedup(spark, e,
+        graft.operators.Similarity.trainCodebook(spark, e), threshold = 0.9)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(Seq(0L, 1L, 2L).map(out(_)._1).toSet == Set(0L), "identical trio merges to rep 0")
     assert(out(0L)._2 == 1L && out(1L)._2 == 0L && out(2L)._2 == 0L)
@@ -643,7 +649,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
         import spark.implicits._
         Dedup.connectedComponents((1L to 40L).toDF("id"),
           (1L until 30L).map(i => (i, i + 1)).toDF("a", "b"),
-          maxIters = -1, localMaxEdges = 0)
+          localMaxEdges = 0)
       })
   scopeCallers.foreach { case (name, run) =>
     test(s"checkpoint scope: $name leaves only its result's checkpoint") {
@@ -670,10 +676,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // labels from the iterative path without any error
     val nodes = ((1L to n) :+ (n + 10L)).toDF("id")
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val local = Dedup.connectedComponents(nodes, edges, maxIters = -1)
+    val local = Dedup.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val iter = Dedup.connectedComponents(nodes, edges, maxIters = -1,
-        localMaxEdges = 0)
+    val iter = Dedup.connectedComponents(nodes, edges, localMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == iter, "driver union-find and iterative CC must agree")
     assert((1L to n).forall(local(_) == 1L), "chain must collapse to min id")

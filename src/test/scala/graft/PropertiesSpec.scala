@@ -153,15 +153,14 @@ class PropertiesSpec extends SparkSpecBase {
     // simKnnJoin/dedupEmbedCosine/dedupContainment derive their grid
     // chunk count as a COLUMN from a broadcast stats scalar; a silent
     // divergence from the scalar formula would re-key the grid and drop
-    // pairs. Evaluate the column expression on planted max_block values
+    // pairs. Evaluate the production column on planted max_block values
     // and pin it to the documented scalar.
     import spark.implicits._
     val blocks = Seq(0L, 1L, 100L, 4095L, 4096L, 4097L, 4096L * 100,
       4096L * 100 + 1, 1L << 30, Long.MaxValue / 2)
     val got = blocks.toDF("max_block")
       .select(col("max_block"),
-        least(lit(256L), greatest(lit(4L),
-          expr("(max_block + 4095) DIV 4096"))).as("chunks"))
+        graft.operators.Similarity.chunksCol.as("chunks"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     blocks.foreach { b =>
       assert(got(b) == graft.operators.Similarity.gridChunksFor(b).toLong,
