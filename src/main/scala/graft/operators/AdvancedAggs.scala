@@ -473,20 +473,6 @@ object AdvancedAggs {
       .orderBy("event_type")
   }
 
-  /** Heavy hitters through the NATIVE TypedImperativeAggregate path
-    * (functions/MisraGriesTopK.scala) — the engine-grade sketch
-    * surface: arbitrary mutable state, binary partial buffers,
-    * map-side combine; only 256-entry summaries cross the shuffle at
-    * any corpus size. `profile_heavy_hitters` stays the exact groupBy
-    * baseline; this key grades the sketch machinery itself.
-    *
-    * Oracle-pairable despite being a sketch: the corpus vocabulary
-    * (31 words at every SF) is far below the 256 counters, so
-    * Misra–Gries never overflows and the estimates ARE the exact
-    * counts — hash-stable against the plain GROUP BY top-10. The spec
-    * separately forces overflow with m=4 and asserts the ε = n/m
-    * bounds that hold under any merge order.
-    */
   /** Count–min sketch — Spark's OTHER built-in frequency sketch
     * (`count_min_sketch` aggregate → `util.sketch.CountMinSketch`),
     * completing the sketch family next to HLL (distinct), Misra–Gries
@@ -529,6 +515,20 @@ object AdvancedAggs {
       .orderBy("word")
   }
 
+  /** Heavy hitters through the NATIVE TypedImperativeAggregate path
+    * (functions/MisraGriesTopK.scala) — the engine-grade sketch
+    * surface: arbitrary mutable state, binary partial buffers,
+    * map-side combine; only 256-entry summaries cross the shuffle at
+    * any corpus size. `profile_heavy_hitters` stays the exact groupBy
+    * baseline; this key grades the sketch machinery itself.
+    *
+    * Oracle-pairable despite being a sketch: the corpus vocabulary
+    * (31 words at every SF) is far below the 256 counters, so
+    * Misra–Gries never overflows and the estimates ARE the exact
+    * counts — hash-stable against the plain GROUP BY top-10. The spec
+    * separately forces overflow with m=4 and asserts the ε = n/m
+    * bounds that hold under any merge order.
+    */
   def aggHeavyHittersSketch(s: SparkSession, sf: String): DataFrame = {
     graft.functions.GraftExtensions.register(s)
     Tables.documents(s, sf)

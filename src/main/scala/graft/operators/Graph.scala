@@ -528,18 +528,6 @@ object Graph {
       .limit(20)
   }
 
-  /** Degree assortativity of the co-purchase graph — the one-number
-    * mixing summary: the Pearson correlation of (deg(u), deg(v)) over
-    * the directed edge list. Positive = hubs buy with hubs (social-
-    * network-like), negative = hubs anchor low-degree satellites
-    * (catalog hub-and-spoke) — which of the two regimes holds decides
-    * whether hub-capping is safe for the link-prediction kernels above.
-    *
-    * Scale shape: one degree HashAggregate, two BROADCAST joins
-    * attaching endpoint degrees at edge grain, one corr aggregate
-    * (sum-of-moments, map-side combinable). Degrees are integers, so
-    * only the final coefficient rounds.
-    */
   /** Community structure via bounded min-label propagation, scored with
     * Newman modularity — the "are these communities real" number every
     * clustering of the co-purchase graph needs before it drives
@@ -623,6 +611,18 @@ object Graph {
     Checkpoints.local(out)
   }
 
+  /** Degree assortativity of the co-purchase graph — the one-number
+    * mixing summary: the Pearson correlation of (deg(u), deg(v)) over
+    * the directed edge list. Positive = hubs buy with hubs (social-
+    * network-like), negative = hubs anchor low-degree satellites
+    * (catalog hub-and-spoke) — which of the two regimes holds decides
+    * whether hub-capping is safe for the link-prediction kernels above.
+    *
+    * Scale shape: one degree HashAggregate, two BROADCAST joins
+    * attaching endpoint degrees at edge grain, one corr aggregate
+    * (sum-of-moments, map-side combinable). Degrees are integers, so
+    * only the final coefficient rounds.
+    */
   def graphAssortativity(s: SparkSession, sf: String): DataFrame = {
     val adj = coPurchaseSym(s, sf)
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))

@@ -454,20 +454,6 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
-  /** Gate-attrition funnel — the per-stage drop report every corpus team
-    * publishes next to their filtered dataset (how many documents each
-    * quality gate removed, in order): non-empty → min length → word
-    * count band → alpha-ratio → exact dedup (keep-first among
-    * survivors). Gates reuse the graded operators' exact expressions
-    * (the alpha ratio is textQualityScore's, the duplicate key is THE
-    * bagHash), so the funnel's numbers reconcile with the per-doc keys.
-    *
-    * Scale shape: one scan; the only shuffle is the dedup window on the
-    * content hash (min survivor doc_id per bag — same shuffle
-    * dedup_exact pays); the five stage counts are conditional sums in
-    * ONE aggregate, and `stack` pivots the 1-row result to the 5-row
-    * report. Output is O(stages), independent of corpus size.
-    */
   /** Deterministic per-group reservoir: exactly k = 5 events per event
     * type, chosen by md5 priority over event_id — the distributed
     * equivalent of reservoir sampling (a uniform random k-subset per
@@ -524,6 +510,20 @@ object Pipeline {
       .orderBy("bucket", "shuffle_key", "doc_id")
   }
 
+  /** Gate-attrition funnel — the per-stage drop report every corpus team
+    * publishes next to their filtered dataset (how many documents each
+    * quality gate removed, in order): non-empty → min length → word
+    * count band → alpha-ratio → exact dedup (keep-first among
+    * survivors). Gates reuse the graded operators' exact expressions
+    * (the alpha ratio is textQualityScore's, the duplicate key is THE
+    * bagHash), so the funnel's numbers reconcile with the per-doc keys.
+    *
+    * Scale shape: one scan; the only shuffle is the dedup window on the
+    * content hash (min survivor doc_id per bag — same shuffle
+    * dedup_exact pays); the five stage counts are conditional sums in
+    * ONE aggregate, and `stack` pivots the 1-row result to the 5-row
+    * report. Output is O(stages), independent of corpus size.
+    */
   def filterFunnel(s: SparkSession, sf: String): DataFrame = {
     val nWords = size(split(col("text"), " "))
     val nonAlpha = length(regexp_replace(col("text"), "[a-z ]", ""))
@@ -698,22 +698,6 @@ object Pipeline {
       .orderBy("event_type")
   }
 
-  /** Temperature-scaled language sampling weights (τ = 0.5) — the
-    * standard multilingual mixture smoother: raw char-count shares
-    * p_i are flattened to w_i ∝ p_i^τ so low-resource languages are
-    * upsampled without letting any one dominate. τ = 0.5 is chosen
-    * deliberately: p^0.5 = sqrt(p) is IEEE-correctly-rounded on BOTH
-    * engines (a general pow(p, 0.7) is libm-dependent and could split
-    * in the last ulp). The normalizer Σ√p folds SEQUENTIALLY in lang
-    * order (sorted-array `aggregate` vs ORDER BY list_reduce) so its
-    * op order is pinned; the per-million allocation floors the scaled
-    * weight (floor of identical doubles — boundary-safe).
-    *
-    * Scale shape: ONE lang-grain combinable count aggregate is the
-    * data-sized work; totals and the normalizer broadcast back in-plan.
-    * At 100 TB the lang frame is still dozens of rows — this is a
-    * catalog-statistics-sized computation at any scale.
-    */
   /** END-TO-END corpus build in ONE declarative plan (r10 verdict ask
     * #3) — the daily-driver 100 TB shape: every gate of a training-data
     * recipe chained over a SINGLE scan of `documents`, emitting the
@@ -875,6 +859,22 @@ object Pipeline {
       .orderBy("stage_idx")
   }
 
+  /** Temperature-scaled language sampling weights (τ = 0.5) — the
+    * standard multilingual mixture smoother: raw char-count shares
+    * p_i are flattened to w_i ∝ p_i^τ so low-resource languages are
+    * upsampled without letting any one dominate. τ = 0.5 is chosen
+    * deliberately: p^0.5 = sqrt(p) is IEEE-correctly-rounded on BOTH
+    * engines (a general pow(p, 0.7) is libm-dependent and could split
+    * in the last ulp). The normalizer Σ√p folds SEQUENTIALLY in lang
+    * order (sorted-array `aggregate` vs ORDER BY list_reduce) so its
+    * op order is pinned; the per-million allocation floors the scaled
+    * weight (floor of identical doubles — boundary-safe).
+    *
+    * Scale shape: ONE lang-grain combinable count aggregate is the
+    * data-sized work; totals and the normalizer broadcast back in-plan.
+    * At 100 TB the lang frame is still dozens of rows — this is a
+    * catalog-statistics-sized computation at any scale.
+    */
   def pipelineMixTemperature(s: SparkSession, sf: String): DataFrame = {
     val c = Tables.documents(s, sf)
       .filter(col("lang").isNotNull)

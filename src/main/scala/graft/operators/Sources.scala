@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -91,57 +91,50 @@ object Sources {
     * normally, corrupt rows count separately — which the oracle
     * re-derives arithmetically from the base table, verifying that
     * exactly the planted breakage (and nothing else) was quarantined. */
-  def scanJsonMalformed(s: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val dir = graft.Scratch.dir("graft_badjson_")
-    Tables.documents(s, sf)
-      .select(when(col("doc_id") % 20 === 0,
-                   concat(lit("{\"id\":"), col("doc_id").cast("string")))
-              .otherwise(concat(lit("{\"id\":"), col("doc_id").cast("string"),
-                                lit(",\"n\":"), col("n_chars").cast("string"),
-                                lit("}"))).as("value"))
-      .write.mode("overwrite").text(dir)
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("n", LongType),
-      StructField("_corrupt_record", StringType)))
-    // Quarantine accounting keys ONLY on _corrupt_record presence — how
-    // much of a broken record the parser salvages into typed columns is
-    // engine- and version-dependent (partial-results parsing), so no
-    // graded value may depend on it. One-pass conditional aggregation:
-    // corrupt rows route to bucket −1 (their char sum is NULL); a
-    // separate corrupt-only branch would be rejected by Spark
-    // (QUERY_ONLY_CORRUPT_RECORD_COLUMN — the pruned scan may not read
-    // just the corrupt column).
-    s.read.schema(schema).option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record").json(dir)
-      .groupBy(when(col("_corrupt_record").isNotNull, lit(-1L))
-                 .otherwise(col("id") % 10).as("bucket"))
-      .agg(count(lit(1)).as("n_rows"),
-           sum(when(col("_corrupt_record").isNull, col("n"))).as("sum_chars"))
-      .orderBy("bucket")
-  }
+  def scanJsonMalformed(s: SparkSession, sf: String): DataFrame =
+    quarantineBuckets(s, sf, "json", "graft_badjson_")(
+      when(col("doc_id") % 20 === 0,
+           concat(lit("{\"id\":"), col("doc_id").cast("string")))
+        .otherwise(concat(lit("{\"id\":"), col("doc_id").cast("string"),
+                          lit(",\"n\":"), col("n_chars").cast("string"),
+                          lit("}"))))
 
   /** Malformed-CSV quarantine — the CSV twin of scanJsonMalformed: one
     * row in twenty is planted with a non-numeric value in a LONG
     * column, the PERMISSIVE reader routes it to _corrupt_record, and
-    * the quarantine accounting buckets corrupt rows at −1. Same rule as
-    * the JSON key: graded values depend ONLY on corrupt-record
-    * presence, never on how much of a broken row the parser salvages
-    * (engine/version-dependent). */
-  def scanCsvMalformed(s: SparkSession, sf: String): DataFrame = {
+    * the quarantine accounting buckets corrupt rows at −1 (same rule as
+    * the JSON key, see `quarantineBuckets`). */
+  def scanCsvMalformed(s: SparkSession, sf: String): DataFrame =
+    quarantineBuckets(s, sf, "csv", "graft_badcsv_")(
+      when(col("doc_id") % 20 === 0,
+           concat(col("doc_id").cast("string"), lit(",notanumber")))
+        .otherwise(concat(col("doc_id").cast("string"), lit(","),
+                          col("n_chars").cast("string"))))
+
+  /** Stages one `line` per document as text into a scratch dir, reads
+    * it back as `format` with an `(id, n, _corrupt_record)` schema in
+    * PERMISSIVE mode, and returns the per-bucket quarantine accounting.
+    *
+    * Quarantine accounting keys ONLY on _corrupt_record presence — how
+    * much of a broken record the parser salvages into typed columns is
+    * engine- and version-dependent (partial-results parsing), so no
+    * graded value may depend on it. One-pass conditional aggregation:
+    * corrupt rows route to bucket −1 (their char sum is NULL); a
+    * separate corrupt-only branch would be rejected by Spark
+    * (QUERY_ONLY_CORRUPT_RECORD_COLUMN — the pruned scan may not read
+    * just the corrupt column). */
+  private def quarantineBuckets(s: SparkSession, sf: String, format: String,
+                                prefix: String)(line: Column): DataFrame = {
     import org.apache.spark.sql.types._
-    val dir = graft.Scratch.dir("graft_badcsv_")
-    Tables.documents(s, sf)
-      .select(when(col("doc_id") % 20 === 0,
-                   concat(col("doc_id").cast("string"), lit(",notanumber")))
-              .otherwise(concat(col("doc_id").cast("string"), lit(","),
-                                col("n_chars").cast("string"))).as("value"))
+    val dir = graft.Scratch.dir(prefix)
+    Tables.documents(s, sf).select(line.as("value"))
       .write.mode("overwrite").text(dir)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("n", LongType),
       StructField("_corrupt_record", StringType)))
     s.read.schema(schema).option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record").csv(dir)
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .format(format).load(dir)
       .groupBy(when(col("_corrupt_record").isNotNull, lit(-1L))
                  .otherwise(col("id") % 10).as("bucket"))
       .agg(count(lit(1)).as("n_rows"),
@@ -262,16 +255,6 @@ object Sources {
       .orderBy("doc_id")
   }
 
-  /** Clustered-layout parquet sink: range-partition + sort-within-
-    * partitions on the read key before writing, then answer a selective
-    * range query off the written files. The layout is the point — each
-    * output file covers a narrow, disjoint l_orderkey range, so the
-    * read-back's pushed range predicate prunes at FILE and ROW-GROUP
-    * granularity via parquet min/max stats (the single-key form of
-    * Z-order clustering). sink_partitioned shows directory pruning on a
-    * low-cardinality column; this shows stats pruning on a high-
-    * cardinality one — together they are the two layout levers a 100 TB
-    * table has. Writer-side schema on the read-back (empty-input rule). */
   /** Z-order clustered sink: lineitem laid out on the interleaved-bit
     * Morton curve over (l_partkey, l_suppkey), so range predicates on
     * EITHER key map to contiguous z-ranges — the multi-dimensional
@@ -376,6 +359,16 @@ object Sources {
       .orderBy("min_key", "max_key", "n_rows")
   }
 
+  /** Clustered-layout parquet sink: range-partition + sort-within-
+    * partitions on the read key before writing, then answer a selective
+    * range query off the written files. The layout is the point — each
+    * output file covers a narrow, disjoint l_orderkey range, so the
+    * read-back's pushed range predicate prunes at FILE and ROW-GROUP
+    * granularity via parquet min/max stats (the single-key form of
+    * Z-order clustering). sink_partitioned shows directory pruning on a
+    * low-cardinality column; this shows stats pruning on a high-
+    * cardinality one — together they are the two layout levers a 100 TB
+    * table has. Writer-side schema on the read-back (empty-input rule). */
   def sinkSortedLayout(s: SparkSession, sf: String): DataFrame = {
     val dir = graft.Scratch.dir("graft_sorted_")
     val li = Tables.lineitem(s, sf)

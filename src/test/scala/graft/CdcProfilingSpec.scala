@@ -132,7 +132,7 @@ class CdcProfilingSpec extends SparkSpecBase {
 
   test("quality_constraints: every rule fires on a planted-violations corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_qc").toString
+    val dir = graft.Scratch.dir("graft_qc_")
     Seq(
       (1L, Some(10L), "F", 100.0, "1996-01-01 00:00:00", "1-URGENT"),
       (1L, Some(11L), "O", 200.0, "1996-01-02 00:00:00", "2-HIGH"),   // dup key

@@ -117,10 +117,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("transformWithState counters accumulate across batches (RocksDB store)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streaming.withConf(spark, Streaming.RocksDbStore) {
       val b1 = Seq(ev(1, 0, user = 9, value = 1.5), ev(2, 1, user = 9, value = 2.5))
       val b2 = Seq(ev(3, 2, user = 9, value = 6.0))
       val rows = runBatches(Seq(b1, b2),
@@ -129,11 +126,6 @@ class StreamingSpec extends SparkSpecBase {
         .maxBy(_.getAs[Long]("n_events"))
       assert(last.getAs[Long]("n_events") == 3L)
       assert(math.abs(last.getAs[Double]("sum_value") - 10.0) < 1e-9)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -164,6 +156,44 @@ class StreamingSpec extends SparkSpecBase {
     val streamed = Streaming.streamAggSink(spark, sfSmoke)
     val batch = Streaming.tumblingBatch(spark, sfSmoke)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  /** Runs `body` under a shuffle-partition count the availableNow
+    * runner does not use, and checks the runner's conf scope leaves the
+    * session as it found it: that count back, no state-store provider set. */
+  private def confRestoredAfter[A](body: => A): A =
+    Streaming.withConf(spark, "spark.sql.shuffle.partitions" -> "3") {
+      val out = body
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
+      val provider = spark.conf.getAll.get(Streaming.RocksDbStore._1)
+      assert(provider.isEmpty, s"state-store provider left set: $provider")
+      out
+    }
+
+  test("stream_tws_counter end-to-end run equals the per-user GROUP BY") {
+    val streamed = confRestoredAfter(Streaming.streamTwsCounter(spark, sfSmoke).collect())
+    val batch = Tables.events(spark, sfSmoke)
+      .filter(col("user_id").isNotNull && col("value").isNotNull)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
+      .orderBy("user_id")
+      .collect()
+    assert(streamed.nonEmpty && streamed.length == batch.length)
+    streamed.zip(batch).foreach { case (a, b) =>
+      assert(a.getLong(0) == b.getLong(0) && a.getLong(1) == b.getLong(1), s"$a vs $b")
+      assert(math.abs(a.getDouble(2) - b.getDouble(2)) < 1e-6, s"$a vs $b")
+    }
+  }
+
+  test("stream_foreach_batch emits exactly the windows the final watermark closed") {
+    val streamed = confRestoredAfter(Streaming.streamForeachBatch(spark, sfSmoke).collect())
+    val maxTs = Tables.events(spark, sfSmoke).agg(max(col("ts"))).head().getTimestamp(0)
+    val closed = Streaming.tumblingBatch(spark, sfSmoke)
+      .filter(col("w_start") + expr("INTERVAL 1 HOUR") <=
+              lit(maxTs) - expr("INTERVAL 37 MINUTES"))
+      .collect()
+    assert(streamed.nonEmpty)
+    assert(streamed.toSeq == closed.toSeq)
   }
 
   test("session batch twin matches gaps-and-islands window formulation") {

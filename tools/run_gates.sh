@@ -3,7 +3,9 @@
 # given scale factor (default sf0.01). Builds, dumps all queries, then
 # runs: DuckDB oracle diff, -0.0 cell lint, DuckDB thread-sweep
 # stability, and (if a second CPU count is given) the Spark
-# parallelism-sweep diff between two dumps.
+# parallelism-sweep diff between two dumps. First, before the build, a
+# lint that every scaladoc in src/main attaches to the definition below
+# it.
 #
 # Usage: tools/run_gates.sh [sfDir] [cpusA] [cpusB]
 #   tools/run_gates.sh                          # sf0.01, single 4-way dump
@@ -17,6 +19,15 @@ CPUS_A="${2:-4}"
 CPUS_B="${3:-}"
 TAG="$(basename "$SF")"
 OUT_A="/tmp/graft_gates_${TAG}_${CPUS_A}"
+
+# A `*/` line directly followed by a `/**` line leaves the first scaladoc
+# attached to nothing: the definition below gets the second doc, or none.
+echo "== scaladoc attachment =="
+awk 'FNR == 1 { prev = "" }
+     prev ~ /\*\/[[:space:]]*$/ && $0 ~ /^[[:space:]]*\/\*\*/ {
+       print FILENAME ":" FNR - 1; bad = 1 }
+     { prev = $0 }
+     END { exit bad }' $(find src/main -name '*.scala' | sort)
 
 echo "== build =="
 sbt -batch Test/compile | tail -1
