@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -152,21 +151,4 @@ case class BpeTokenize(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): BpeTokenize =
     copy(child = newChild)
-}
-
-object BpeTokenCount {
-  private[functions] val ident = new FunctionIdentifier("graft_bpe_count")
-  private[functions] val info =
-    new ExpressionInfo(classOf[BpeTokenCount].getName, "graft_bpe_count")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 1, "graft_bpe_count takes exactly 1 argument")
-    BpeTokenCount(exprs.head)
-  }
-  private[functions] val identTok = new FunctionIdentifier("graft_bpe_tokens")
-  private[functions] val infoTok =
-    new ExpressionInfo(classOf[BpeTokenize].getName, "graft_bpe_tokens")
-  private[functions] val builderTok = (exprs: Seq[Expression]) => {
-    require(exprs.length == 1, "graft_bpe_tokens takes exactly 1 argument")
-    BpeTokenize(exprs.head)
-  }
 }

@@ -1,12 +1,15 @@
 package graft.functions
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: dot product of two float arrays as a
@@ -79,15 +82,6 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object DotProduct {
-  private[functions] val ident = new FunctionIdentifier("graft_dot")
-  private[functions] val info = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 2, "graft_dot takes exactly 2 arguments")
-    DotProduct(exprs.head, exprs(1))
-  }
-}
-
 /** The idiomatic hook for deployments that control session construction:
   * `spark.sql.extensions=graft.functions.GraftExtensions`. Injects every
   * function in [[GraftExtensions.functions]] plus the native as-of join's
@@ -102,34 +96,86 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** The one list of graft's native SQL functions: the extension
-    * injects it and [[register]] registers it, so the two cannot drift. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  /** The one list of graft's native SQL functions, one entry each: SQL
+    * name, accepted arities, builder. The extension injects it and
+    * [[register]] registers it, so the two cannot drift. Literal
+    * arguments go through [[intLiteral]]; range checks stay with each
+    * expression's `checkInputDataTypes` or its entry. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
     Seq(
-      (DotProduct.ident, DotProduct.info, DotProduct.builder),
-      (DotProductI8.ident, DotProductI8.info, DotProductI8.builder),
-      (SimHash48.ident, SimHash48.info, SimHash48.builder),
-      (MinHashSig16.ident, MinHashSig16.info, MinHashSig16.builder),
-      (SortedIntersectSize.ident, SortedIntersectSize.info,
-        SortedIntersectSize.builder),
-      (BpeTokenCount.ident, BpeTokenCount.info, BpeTokenCount.builder),
-      (BpeTokenCount.identTok, BpeTokenCount.infoTok, BpeTokenCount.builderTok),
-      (LshBuckets.ident, LshBuckets.info, LshBuckets.builder),
-      (ShingleHash64.ident, ShingleHash64.info, ShingleHash64.builder),
-      (UnicodeNorm.identNfc, UnicodeNorm.infoNfc, UnicodeNorm.builderNfc),
-      (UnicodeNorm.identUnaccent, UnicodeNorm.infoUnaccent,
-        UnicodeNorm.builderUnaccent),
-      (MisraGriesTopK.ident, MisraGriesTopK.info, MisraGriesTopK.builder),
-      (TDigestQuantiles.ident, TDigestQuantiles.info, TDigestQuantiles.builder),
+      fn("graft_dot", 2) { case Seq(l, r) => DotProduct(l, r) },
+      fn("graft_dot_i8", 2) { case Seq(l, r) => DotProductI8(l, r) },
+      fn("graft_simhash48", 1) { case Seq(hs) => SimHash48(hs) },
+      fn("graft_minhash16", 1, 2) {
+        case Seq(ws) => MinHashSig16(ws)
+        case Seq(ws, n) => MinHashSig16(ws, intLiteral("graft_minhash16", "n", n))
+      },
+      fn("graft_sorted_intersect_size", 2) {
+        case Seq(l, r) => SortedIntersectSize(l, r)
+      },
+      fn("graft_bpe_count", 1) { case Seq(t) => BpeTokenCount(t) },
+      fn("graft_bpe_tokens", 1) { case Seq(t) => BpeTokenize(t) },
+      fn("graft_lsh_buckets", 3) { case Seq(emb, t, p) =>
+        LshBuckets(emb, intLiteral("graft_lsh_buckets", "nTables", t),
+          intLiteral("graft_lsh_buckets", "nPlanes", p))
+      },
+      fn("graft_shingles", 2) { case Seq(ws, n) =>
+        ShingleHash64(ws, intLiteral("graft_shingles", "n", n))
+      },
+      fn("graft_nfc", 1) { case Seq(str) => NfcNormalize(str) },
+      fn("graft_unaccent", 1) { case Seq(str) => StripAccents(str) },
+      fn("graft_topk", 3) { case Seq(item, mArg, kArg) =>
+        val m = intLiteral("graft_topk", "m", mArg)
+        val k = intLiteral("graft_topk", "k", kArg)
+        require(m > 0 && k > 0 && k <= m, "need 0 < k <= m")
+        MisraGriesTopK(item, m, k)
+      },
+      fn("graft_tdigest", 2) { case Seq(v, dArg) =>
+        val d = intLiteral("graft_tdigest", "delta", dArg)
+        require(d >= 10, "delta >= 10")
+        TDigestQuantiles(v, d)
+      },
       // the as-of marker condition; it needs the rule and strategy too
       // (`AsOfJoin.ensureRegistered`)
-      (graft.plans.AsOfJoin.ident, graft.plans.AsOfJoin.info,
-        graft.plans.AsOfJoin.builder))
+      fn("graft_asof_marker", 4) {
+        case Seq(lk, rk, lt, rt) => graft.plans.AsOfCondition(lk, rk, lt, rt)
+      })
+
+  /** One registry entry. The builder checks the arity before building;
+    * the ExpressionInfo names the class `build` returns (what `DESCRIBE
+    * FUNCTION` shows), taken from its type, never from an instance. */
+  private def fn[E <: Expression: ClassTag](name: String, arities: Int*)(
+      build: Seq[Expression] => E)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = {
+    val builder: FunctionBuilder = args => {
+      if (!arities.contains(args.length)) throw new IllegalArgumentException(
+        s"$name takes ${arities.mkString(" or ")} argument(s), got ${args.length}")
+      build(args)
+    }
+    (new FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name), builder)
+  }
+
+  /** A literal argument that shapes the expression (a signature length,
+    * a table count, a sketch size): foldable, int or bigint, non-null,
+    * and within Int range. */
+  private def intLiteral(name: String, what: String, e: Expression): Int = {
+    val v =
+      if (e.foldable && (e.dataType == IntegerType || e.dataType == LongType)) e.eval()
+      else null
+    v match {
+      case n: Int => n
+      case n: Long if n.isValidInt => n.toInt
+      case _ => throw new IllegalArgumentException(
+        s"$name $what must be an integer literal, got ${e.sql}")
+    }
+  }
 
   /** Register every function on a live session (the harness builds its
     * SparkSession without extension configs, so operators
     * self-register). Idempotent and silent: the registry warns only when
-    * a name's stored (info, builder) pair changes, and these are vals. */
+    * a name's stored (info, builder) pair changes, and [[functions]] is
+    * a val built once. */
   def register(s: SparkSession): Unit =
     functions.foreach { case (ident, info, builder) =>
       s.sessionState.functionRegistry.registerFunction(ident, info, builder)

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
 
@@ -75,14 +74,4 @@ case class DotProductI8(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductI8 =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProductI8 {
-  private[functions] val ident = new FunctionIdentifier("graft_dot_i8")
-  private[functions] val info =
-    new ExpressionInfo(classOf[DotProductI8].getName, "graft_dot_i8")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 2, "graft_dot_i8 takes exactly 2 arguments")
-    DotProductI8(exprs.head, exprs(1))
-  }
 }

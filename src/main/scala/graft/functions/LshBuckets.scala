@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
@@ -49,7 +48,9 @@ object LshHash {
   * primitive loop instead of the interpreted three-deep HOF pyramid
   * (transform ∘ aggregate ∘ zip_with) it replaced — that pyramid boxed
   * ~nTables·nPlanes·dim lambda steps per row and dominated sim_ann_lsh's
-  * runtime. Table/plane counts must be literals (they shape the loop). */
+  * runtime. Table/plane counts shape the loop, so each must be an
+  * integer literal: foldable int or bigint, non-null, within Int range
+  * (the one literal rule of [[GraftExtensions.functions]]). */
 case class LshBuckets(child: Expression, nTables: Int, nPlanes: Int)
     extends UnaryExpression {
 
@@ -77,19 +78,4 @@ case class LshBuckets(child: Expression, nTables: Int, nPlanes: Int)
 
   override protected def withNewChildInternal(newChild: Expression): LshBuckets =
     copy(child = newChild)
-}
-
-object LshBuckets {
-  private[functions] val ident = new FunctionIdentifier("graft_lsh_buckets")
-  private[functions] val info =
-    new ExpressionInfo(classOf[LshBuckets].getName, "graft_lsh_buckets")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 3,
-      "graft_lsh_buckets takes (embedding, nTables, nPlanes)")
-    require(exprs(1).foldable && exprs(2).foldable,
-      "graft_lsh_buckets table/plane counts must be literals")
-    LshBuckets(exprs.head,
-      exprs(1).eval().asInstanceOf[Number].intValue(),
-      exprs(2).eval().asInstanceOf[Number].intValue())
-  }
 }

@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XxHash64Function, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** n-component MinHash signature over a word array in one pass
   * (default n = 16, the historical layout every estimate is built on;
-  * `graft_minhash16(ws, n)` with a literal n gives the longer
-  * signatures density-adaptive banding needs — see Dedup.bandingFor).
+  * `graft_minhash16(ws, n)` with an integer literal n gives the longer
+  * signatures density-adaptive banding needs — see Dedup.bandingFor; n
+  * follows the one literal rule of [[GraftExtensions.functions]]).
   *
   * Bit-identical to the declarative
   * `transform(sequence(0,n-1), s -> array_min(transform(ws, w -> xxhash64(w, s))))`
@@ -60,31 +60,4 @@ case class MinHashSig16(child: Expression, nComp: Int = 16)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig16 =
     copy(child = newChild)
-}
-
-object MinHashSig16 {
-  private[functions] val ident = new FunctionIdentifier("graft_minhash16")
-  private[functions] val info =
-    new ExpressionInfo(classOf[MinHashSig16].getName, "graft_minhash16")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 1 || exprs.length == 2,
-      "graft_minhash16 takes 1 or 2 arguments")
-    if (exprs.length == 1) MinHashSig16(exprs.head)
-    else {
-      val n = exprs(1) match {
-        case e if e.foldable && (e.dataType == org.apache.spark.sql.types.IntegerType ||
-                                 e.dataType == org.apache.spark.sql.types.LongType) =>
-          // a foldable-but-NULL literal (CAST(NULL AS INT)) passes the
-          // type check; surface the intended argument error, not an NPE
-          e.eval() match {
-            case n: Number => n.intValue()
-            case _ => throw new IllegalArgumentException(
-              "graft_minhash16 second argument must be an integer literal")
-          }
-        case _ => throw new IllegalArgumentException(
-          "graft_minhash16 second argument must be an integer literal")
-      }
-      MinHashSig16(exprs.head, n)
-    }
-  }
 }

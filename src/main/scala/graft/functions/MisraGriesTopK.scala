@@ -1,9 +1,8 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -139,24 +138,4 @@ case class MisraGriesTopK(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MisraGriesTopK =
     copy(child = newChildren.head)
-}
-
-object MisraGriesTopK {
-  private[graft] val ident = new FunctionIdentifier("graft_topk")
-  private[graft] val info =
-    new ExpressionInfo(classOf[MisraGriesTopK].getName, "graft_topk")
-  private[graft] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 3,
-      "graft_topk takes (item, m_counters, k_output)")
-    val m = exprs(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => sys.error(s"graft_topk m must be an int literal: $other")
-    }
-    val k = exprs(2) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => sys.error(s"graft_topk k must be an int literal: $other")
-    }
-    require(m > 0 && k > 0 && k <= m, "need 0 < k <= m")
-    MisraGriesTopK(exprs.head, m, k)
-  }
 }

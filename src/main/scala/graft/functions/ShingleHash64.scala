@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -79,19 +78,4 @@ case class ShingleHash64(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHash64 =
     copy(child = newChild)
-}
-
-object ShingleHash64 {
-  private[functions] val ident = new FunctionIdentifier("graft_shingles")
-  private[functions] val info =
-    new ExpressionInfo(classOf[ShingleHash64].getName, "graft_shingles")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 2, "graft_shingles takes (array<string>, n)")
-    val n = exprs(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_shingles width must be an int literal, got $other")
-    }
-    ShingleHash64(exprs.head, n)
-  }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -80,14 +79,4 @@ case class SimHash48(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SimHash48 =
     copy(child = newChild)
-}
-
-object SimHash48 {
-  private[functions] val ident = new FunctionIdentifier("graft_simhash48")
-  private[functions] val info =
-    new ExpressionInfo(classOf[SimHash48].getName, "graft_simhash48")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 1, "graft_simhash48 takes exactly 1 argument")
-    SimHash48(exprs.head)
-  }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -77,17 +76,4 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectSize =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectSize {
-  private[functions] val ident =
-    new FunctionIdentifier("graft_sorted_intersect_size")
-  private[functions] val info =
-    new ExpressionInfo(classOf[SortedIntersectSize].getName,
-      "graft_sorted_intersect_size")
-  private[functions] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 2,
-      "graft_sorted_intersect_size takes exactly 2 arguments")
-    SortedIntersectSize(exprs.head, exprs(1))
-  }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -183,17 +182,4 @@ object TDigestQuantiles {
   /** Probed quantiles: the median plus the tail the k₁ scale function
     * exists for. */
   private[graft] val probes: Seq[Double] = Seq(0.5, 0.9, 0.99)
-
-  private[graft] val ident = new FunctionIdentifier("graft_tdigest")
-  private[graft] val info =
-    new ExpressionInfo(classOf[TDigestQuantiles].getName, "graft_tdigest")
-  private[graft] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 2, "graft_tdigest takes (value, delta)")
-    val d = exprs(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => sys.error(s"graft_tdigest delta must be an int literal: $other")
-    }
-    require(d >= 10, "delta >= 10")
-    TDigestQuantiles(exprs.head, d)
-  }
 }

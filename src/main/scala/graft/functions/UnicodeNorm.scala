@@ -2,10 +2,9 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,21 +64,6 @@ object UnicodeNorm {
       i += 1
     }
     true
-  }
-
-  private[functions] val identNfc = new FunctionIdentifier("graft_nfc")
-  private[functions] val infoNfc =
-    new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc")
-  private[functions] val builderNfc = (exprs: Seq[Expression]) => {
-    require(exprs.length == 1, "graft_nfc takes exactly 1 argument")
-    NfcNormalize(exprs.head): Expression
-  }
-  private[functions] val identUnaccent = new FunctionIdentifier("graft_unaccent")
-  private[functions] val infoUnaccent =
-    new ExpressionInfo(classOf[StripAccents].getName, "graft_unaccent")
-  private[functions] val builderUnaccent = (exprs: Seq[Expression]) => {
-    require(exprs.length == 1, "graft_unaccent takes exactly 1 argument")
-    StripAccents(exprs.head): Expression
   }
 }
 

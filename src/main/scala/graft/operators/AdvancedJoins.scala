@@ -84,15 +84,9 @@ object AdvancedJoins {
       .orderBy("user_id", "purchase_ts", "purchase_id")
   }
 
-  /** As-of join: for every purchase, the user's most recent view at or
-    * before the purchase timestamp.
-    *
-    * Union-and-window pattern: tag both streams, sort per user by
-    * (ts, tag, event_id) — views sort before a same-instant purchase —
-    * and carry the latest view forward with last(ignoreNulls). One
-    * shuffle on user_id, no join at all; at 100 TB this beats any
-    * join-shaped formulation because the state per key is one row. */
-  def joinAsof(s: SparkSession, sf: String): DataFrame = {
+  /** Views (tag 0, carrying view_id/view_ts) and purchases (tag 1, null
+    * carriers) in one frame — the union the as-of family windows over. */
+  private def taggedViewsPurchases(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.events(s, sf)
     val views = e.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts"), lit(0).as("tag"),
@@ -102,10 +96,26 @@ object AdvancedJoins {
       .select(col("user_id"), col("ts"), lit(1).as("tag"),
               col("event_id"), lit(null).cast("long").as("view_id"),
               lit(null).cast("timestamp").as("view_ts"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("tag").asc, col("event_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     views.unionByName(purchases)
+  }
+
+  /** Per-user (ts, tag, event_id) order: a view sorts before a
+    * same-instant purchase. Each as-of key adds its own rows frame. */
+  private def byUserTime =
+    Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").asc, col("tag").asc, col("event_id").asc)
+
+  /** As-of join: for every purchase, the user's most recent view at or
+    * before the purchase timestamp.
+    *
+    * Union-and-window pattern: tag both streams, sort per user by
+    * (ts, tag, event_id) — views sort before a same-instant purchase —
+    * and carry the latest view forward with last(ignoreNulls). One
+    * shuffle on user_id, no join at all; at 100 TB this beats any
+    * join-shaped formulation because the state per key is one row. */
+  def joinAsof(s: SparkSession, sf: String): DataFrame = {
+    val w = byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    taggedViewsPurchases(s, sf)
       .select(col("user_id"), col("ts"), col("tag"), col("event_id"),
               last(col("view_id"), ignoreNulls = true).over(w).as("last_view_id"),
               last(col("view_ts"), ignoreNulls = true).over(w).as("last_view_ts"))
@@ -128,19 +138,8 @@ object AdvancedJoins {
     * instead of last over the backward one; no join, state per key is
     * one row. */
   def joinAsofForward(s: SparkSession, sf: String): DataFrame = {
-    val e = Tables.events(s, sf)
-    val views = e.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), lit(0).as("tag"),
-              col("event_id"), col("event_id").as("view_id"),
-              col("ts").as("view_ts"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), lit(1).as("tag"),
-              col("event_id"), lit(null).cast("long").as("view_id"),
-              lit(null).cast("timestamp").as("view_ts"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("tag").asc, col("event_id").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    views.unionByName(purchases)
+    val w = byUserTime.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    taggedViewsPurchases(s, sf)
       .select(col("user_id"), col("ts"), col("tag"), col("event_id"),
               first(col("view_id"), ignoreNulls = true).over(w)
                 .as("next_view_id"),
@@ -167,21 +166,9 @@ object AdvancedJoins {
     * parameter. Distances compare in floor-truncated microseconds — the
     * engines' shared instant resolution. */
   def joinAsofNearest(s: SparkSession, sf: String): DataFrame = {
-    val e = Tables.events(s, sf)
-    val views = e.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), lit(0).as("tag"), col("event_id"),
-              col("event_id").as("view_id"), col("ts").as("view_ts"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), lit(1).as("tag"), col("event_id"),
-              lit(null).cast("long").as("view_id"),
-              lit(null).cast("timestamp").as("view_ts"))
-    val wb = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("tag").asc, col("event_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("tag").asc, col("event_id").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val scored = views.unionByName(purchases)
+    val wb = byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wf = byUserTime.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val scored = taggedViewsPurchases(s, sf)
       .select(col("user_id"), col("ts"), col("tag"), col("event_id"),
         last(col("view_id"), ignoreNulls = true).over(wb).as("prev_id"),
         last(col("view_ts"), ignoreNulls = true).over(wb).as("prev_ts"),

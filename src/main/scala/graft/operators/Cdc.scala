@@ -74,20 +74,25 @@ object Cdc {
     * exchange + sort; per-user history fits a task trivially (windows
     * partition by entity, never globally).
     */
-  def scd2Intervals(s: SparkSession, sf: String): DataFrame = {
-    val ord = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val changes = Tables.events(s, sf)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(ord))
-      .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-    changes
-      .withColumn("valid_to", lead(col("ts"), 1).over(ord))
+  def scd2Intervals(s: SparkSession, sf: String): DataFrame =
+    scd2Changes(s, sf)
       .select(col("user_id"), col("event_type"),
               col("ts").as("valid_from"), col("valid_to"),
               col("valid_to").isNull.as("is_current"))
       .orderBy("user_id", "valid_from")
+
+  /** The SCD-2 change points of each user's event_type, each closed by
+    * the next one's ts as `valid_to` (null on the current version) —
+    * the history scd2Intervals reports and joinTemporal probes. */
+  private def scd2Changes(s: SparkSession, sf: String): DataFrame = {
+    val ord = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").asc, col("event_id").asc)
+    Tables.events(s, sf)
+      .filter(col("user_id").isNotNull)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(ord))
+      .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
+      .withColumn("valid_to", lead(col("ts"), 1).over(ord))
   }
 
   /** Snapshot diff — the audit companion to CDC apply: given a base
@@ -144,14 +149,7 @@ object Cdc {
     * (asserted in AnalyticsInvariantsSpec).
     */
   def joinTemporal(s: SparkSession, sf: String): DataFrame = {
-    val ord = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val dim = Tables.events(s, sf)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(ord))
-      .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-      .withColumn("valid_to", lead(col("ts"), 1).over(ord))
+    val dim = scd2Changes(s, sf)
       .select(col("user_id"), col("event_type").as("state"),
               col("ts").as("valid_from"), col("valid_to"))
     val facts = Tables.events(s, sf)

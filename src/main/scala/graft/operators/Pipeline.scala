@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -114,14 +114,17 @@ object Pipeline {
     * packing parallelizes across shards — exactly how a 100 TB corpus is
     * packed in practice (per input shard, never one global order, which
     * would serialize the whole corpus through one reducer). */
-  def packSequences(s: SparkSession, sf: String): DataFrame = {
+  def packSequences(s: SparkSession, sf: String): DataFrame =
+    packBins(s, sf, size(split(col("text"), " ")).cast("bigint"))
+
+  /** The per-shard exclusive-prefix-sum packing of both pack keys, with
+    * `nTokens` counting each document's tokens. */
+  private def packBins(s: SparkSession, sf: String, nTokens: Column): DataFrame = {
     val budget = 2048L
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(col("doc_id").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val w = Window.partitionBy(col("source")).orderBy(col("doc_id").asc)
+      .rowsBetween(Window.unboundedPreceding, -1)
     Tables.documents(s, sf)
-      .select(col("source"), col("doc_id"),
-              size(split(col("text"), " ")).cast("bigint").as("n_tokens"))
+      .select(col("source"), col("doc_id"), nTokens.as("n_tokens"))
       .withColumn("offset", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .select(col("source"), col("doc_id"), col("n_tokens"),
               floor(col("offset") / lit(budget.toDouble)).cast("bigint").as("bin"))
@@ -137,17 +140,7 @@ object Pipeline {
     * engine-specific) and spec-pinned. */
   def packBpe(s: SparkSession, sf: String): DataFrame = {
     graft.functions.GraftExtensions.register(s)
-    val budget = 2048L
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(col("doc_id").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    Tables.documents(s, sf)
-      .select(col("source"), col("doc_id"),
-              expr("graft_bpe_count(text)").as("n_tokens"))
-      .withColumn("offset", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-      .select(col("source"), col("doc_id"), col("n_tokens"),
-              floor(col("offset") / lit(budget.toDouble)).cast("bigint").as("bin"))
-      .orderBy("source", "doc_id")
+    packBins(s, sf, expr("graft_bpe_count(text)"))
   }
 
   /** Conversion funnel (signup → click → purchase, ordered): per user,
@@ -254,9 +247,23 @@ object Pipeline {
     * partitioning on user_id satisfy a clustered distribution on
     * (user_id, session_idx) — so EnsureRequirements inserts no second
     * exchange; per-user event history is the only per-task sort space. */
-  def sessionizeGap(s: SparkSession, sf: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
+  def sessionizeGap(s: SparkSession, sf: String): DataFrame =
+    sessionIndexed(s, sf)
+      .groupBy(col("user_id"), col("session_idx"))
+      .agg(count(lit(1)).as("n_events"),
+           min(col("ts")).as("session_start"),
+           max(col("ts")).as("session_end"),
+           (max(col("ts")).cast("long") - min(col("ts")).cast("long"))
+             .as("duration_sec"))
+      .orderBy("user_id", "session_idx")
+
+  /** Each user event with its session_idx under the 30-minute
+    * inactivity-gap rule (a running count of gap-opened sessions over
+    * the user's (ts, event_id) order) — shared with
+    * Stats.eventPeakConcurrency. */
+  private[operators] def sessionIndexed(s: SparkSession, sf: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").asc, col("event_id").asc)
     Tables.events(s, sf)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_id"), col("ts"))
@@ -265,13 +272,6 @@ object Pipeline {
       .withColumn("new_s",
         when(col("gap_sec").isNull || col("gap_sec") > 1800, 1L).otherwise(0L))
       .withColumn("session_idx", sum(col("new_s")).over(w))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(count(lit(1)).as("n_events"),
-           min(col("ts")).as("session_start"),
-           max(col("ts")).as("session_end"),
-           (max(col("ts")).cast("long") - min(col("ts")).cast("long"))
-             .as("duration_sec"))
-      .orderBy("user_id", "session_idx")
   }
 
   /** Stratified sampling: the smallest-id ⌈20%⌉ of each language stratum

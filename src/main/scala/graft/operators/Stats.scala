@@ -522,10 +522,14 @@ object Stats {
     * the per-type day order, and the corr aggregates all run on the
     * tiny daily frame. `corr` is sum-of-moments, map-side combinable.
     */
-  def statsAutocorr(s: SparkSession, sf: String): DataFrame = {
-    val filled = typeDayCounts(s, sf)
+  def statsAutocorr(s: SparkSession, sf: String): DataFrame =
+    lagCorrs(s, sf).orderBy("event_type")
+
+  /** Per event type: day count and round-6 ACF at lags 1–3, the frame
+    * statsAutocorr reports and statsPartialAutocorr recurses on. */
+  private def lagCorrs(s: SparkSession, sf: String): DataFrame = {
     val w = Window.partitionBy(col("event_type")).orderBy(col("d").asc)
-    filled
+    typeDayCounts(s, sf)
       .select(col("event_type"), col("c"),
               lag(col("c"), 1).over(w).as("c1"),
               lag(col("c"), 2).over(w).as("c2"),
@@ -535,7 +539,6 @@ object Stats {
            round(corr(col("c"), col("c1")), 6).as("acf1"),
            round(corr(col("c"), col("c2")), 6).as("acf2"),
            round(corr(col("c"), col("c3")), 6).as("acf3"))
-      .orderBy("event_type")
   }
 
   /** Partial autocorrelation (lags 1–3) by Durbin–Levinson — the other
@@ -551,19 +554,8 @@ object Stats {
     * Scale shape: identical to statsAutocorr — one day-grain aggregate,
     * three lag windows over the tiny daily frame, map-side-combinable
     * corr moments; the recursion is per-type scalar arithmetic. */
-  def statsPartialAutocorr(s: SparkSession, sf: String): DataFrame = {
-    val filled = typeDayCounts(s, sf)
-    val w = Window.partitionBy(col("event_type")).orderBy(col("d").asc)
-    filled
-      .select(col("event_type"), col("c"),
-              lag(col("c"), 1).over(w).as("c1"),
-              lag(col("c"), 2).over(w).as("c2"),
-              lag(col("c"), 3).over(w).as("c3"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).cast("bigint").as("n_days"),
-           round(corr(col("c"), col("c1")), 6).as("acf1"),
-           round(corr(col("c"), col("c2")), 6).as("acf2"),
-           round(corr(col("c"), col("c3")), 6).as("acf3"))
+  def statsPartialAutocorr(s: SparkSession, sf: String): DataFrame =
+    lagCorrs(s, sf)
       .withColumn("pacf2", round(
         (col("acf2") - col("acf1") * col("acf1")) /
           nullif(lit(1.0d) - col("acf1") * col("acf1"), lit(0.0d)), 6))
@@ -576,7 +568,6 @@ object Stats {
       .select(col("event_type"), col("n_days"), col("acf1"), col("acf2"),
         col("acf3"), col("acf1").as("pacf1"), col("pacf2"), col("pacf3"))
       .orderBy("event_type")
-  }
 
   /** DAU/MAU stickiness — the engagement ratio product analytics runs
     * daily: for every day, active users that day over distinct active
@@ -3420,16 +3411,7 @@ object Stats {
     * only places concurrency changes), per session-UTC day.
     */
   def eventPeakConcurrency(s: SparkSession, sf: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val sessions = Tables.events(s, sf)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), col("event_id"), col("ts"))
-      .withColumn("gap_sec",
-        col("ts").cast("long") - lag(col("ts"), 1).over(w).cast("long"))
-      .withColumn("new_s",
-        when(col("gap_sec").isNull || col("gap_sec") > 1800, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("new_s")).over(w))
+    val sessions = Pipeline.sessionIndexed(s, sf)
       .groupBy(col("user_id"), col("session_idx"))
       .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
     val edges = sessions

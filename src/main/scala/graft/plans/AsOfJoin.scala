@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -40,15 +39,6 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * relies on; `zipPartitions` asserts the co-partitioning.
   */
 object AsOfJoin {
-  private[graft] val ident = new FunctionIdentifier("graft_asof_marker")
-  private[graft] val info =
-    new ExpressionInfo(classOf[AsOfCondition].getName, "graft_asof_marker")
-  private[graft] val builder = (exprs: Seq[Expression]) => {
-    require(exprs.length == 4,
-      "graft_asof_marker takes (leftKey, rightKey, leftTime, rightTime)")
-    AsOfCondition(exprs(0), exprs(1), exprs(2), exprs(3))
-  }
-
   /** Register marker function (with the rest of
     * `GraftExtensions.functions`) + optimizer rule + strategy on a live
     * session (the harness builds sessions without extension configs,

@@ -70,6 +70,53 @@ class DotProductSpec extends SparkSpecBase {
     assert(err.getMessage.toLowerCase.contains("array<float>"))
   }
 
+  test("literal and arity errors name the function; literals may be bigint") {
+    GraftExtensions.register(spark)
+    // every message on the cause chain: analysis may wrap the builder's
+    val errorText = (sql: String) => {
+      val err = intercept[Throwable](spark.sql(sql).collect())
+      Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+        .map(e => s"${e.getClass.getName}: ${e.getMessage}").mkString(" <- ")
+    }
+    val emb = "array(CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT))"
+    val agg = "FROM VALUES ('a', CAST(1.0 AS DOUBLE)) AS t(w, v)"
+    val notLiteral = Seq(
+      "graft_minhash16" -> "SELECT graft_minhash16(array('a'), CAST(NULL AS INT))",
+      "graft_lsh_buckets" -> s"SELECT graft_lsh_buckets($emb, CAST(NULL AS INT), 4)",
+      "graft_lsh_buckets" -> s"SELECT graft_lsh_buckets($emb, 2, CAST(NULL AS INT))",
+      "graft_lsh_buckets" -> s"SELECT graft_lsh_buckets($emb, 2.5, 4)",
+      "graft_shingles" -> "SELECT graft_shingles(array('a', 'b'), CAST(NULL AS INT))",
+      "graft_topk" -> s"SELECT graft_topk(w, CAST(NULL AS INT), 1) $agg",
+      "graft_tdigest" -> s"SELECT graft_tdigest(v, CAST(NULL AS INT)) $agg")
+    val wrongArity = Seq(
+      "graft_simhash48" -> "SELECT graft_simhash48()",
+      "graft_dot" -> s"SELECT graft_dot($emb)",
+      "graft_minhash16" -> "SELECT graft_minhash16()",
+      "graft_lsh_buckets" -> s"SELECT graft_lsh_buckets($emb, 2)",
+      "graft_asof_marker" -> "SELECT graft_asof_marker(1, 2, 3)")
+    for ((name, sql) <- notLiteral) {
+      val text = errorText(sql)
+      assert(text.contains(s"$name ") && text.contains("integer literal"),
+        s"$sql: $text")
+    }
+    for ((name, sql) <- wrongArity) {
+      val text = errorText(sql)
+      assert(text.contains(s"$name takes"), s"$sql: $text")
+    }
+    val r = spark.sql(
+      """SELECT graft_shingles(array('a', 'b'), CAST(2 AS BIGINT)) AS big,
+        |       graft_shingles(array('a', 'b'), 2) AS int""".stripMargin).head()
+    assert(r.getSeq[Long](0) == r.getSeq[Long](1) && r.getSeq[Long](0).size == 1)
+    // DESCRIBE FUNCTION shows the entry's class: each must be the
+    // concrete expression its builder returns
+    for ((_, info, _) <- GraftExtensions.functions) {
+      val cls = Class.forName(info.getClassName)
+      assert(!java.lang.reflect.Modifier.isAbstract(cls.getModifiers) &&
+        classOf[org.apache.spark.sql.catalyst.expressions.Expression]
+          .isAssignableFrom(cls), s"${info.getName}: ${info.getClassName}")
+    }
+  }
+
   test("GraftExtensions injects every function in the shared list at session build") {
     import org.apache.spark.sql.SparkSession
     // withExtensions only applies at builder time, and getOrCreate

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # One-shot local replica of every correctness/determinism gate, for a
-# given scale factor (default sf0.01). Builds, dumps all queries, then
+# given scale factor (default sf0.01). Builds, dumps all queries (each
+# dump fails on any native-function re-registration warning), then
 # runs: DuckDB oracle diff, -0.0 cell lint, DuckDB thread-sweep
 # stability, and (if a second CPU count is given) the Spark
 # parallelism-sweep diff between two dumps. First, before the build, a
@@ -48,6 +49,17 @@ run_verify() {
   fi
   if grep -qE '\[verify\].*failed' /tmp/graft_gates_verify.log; then
     echo "Verify reported per-query failures" >&2
+    exit 1
+  fi
+  # Operators re-register graft's native functions on every call; the
+  # registry logs this line whenever a name's (info, builder) pair is
+  # not the stored one, i.e. when the pair is rebuilt per call.
+  local replaced
+  replaced=$(grep -c 'replaced a previously registered function' \
+    /tmp/graft_gates_verify.log || true)
+  echo "re-registration lines: $replaced"
+  if [[ "$replaced" != 0 ]]; then
+    echo "native functions were re-registered with a new (info, builder)" >&2
     exit 1
   fi
 }
