@@ -50,18 +50,23 @@ object Bench {
     // pass ordering the budget gates only second runs, every key already
     // holds a full-work first timing, and the two samples of a key are
     // minutes apart so a contention burst rarely taints both. Re-runs
-    // stop once the bench's wall clock passes the budget: doubling wall
-    // time is fine at sf0.1 but must not breach a harness time limit at
-    // a larger SF. malformed env must degrade to the default, never
-    // kill the metric
-    val rerunBudgetSec = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_BUDGET_SEC", "300").toDouble)
-      .getOrElse(300.0)
+    // stop once the bench's wall clock passes the 300 s budget: doubling
+    // wall time is fine at sf0.1 but must not breach a harness time limit
+    // at a larger SF.
+    val rerunBudgetSec = 300.0
     val benchT0 = System.nanoTime()
     def wallSec: Double = (System.nanoTime() - benchT0) / 1e9
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A failing key times as -1.0; its reason goes to stderr, so the
+    // two parsed stdout lines stay unchanged.
+    def once(name: String,
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
+            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // Local-iteration filter (unset in the driver's run), the Verify
@@ -84,7 +89,7 @@ object Bench {
     }
     val firstPass = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => (name, fn, once(fn)) }
+      .map { case (name, fn) => (name, fn, once(name, fn)) }
     // Second pass runs MOST-EXPENSIVE-FIRST: the re-run budget gates
     // second runs, and min-of-two matters most on the keys where a
     // contention spike costs whole seconds — a noisy 3 s graph kernel
@@ -93,7 +98,7 @@ object Bench {
     // degrades the CHEAP tail to single-shot, where noise is bounded by
     // the key's own size.
     val results = firstPass.sortBy(-_._3).map { case (name, fn, a) =>
-      val b = if (a < 0 || wallSec > rerunBudgetSec) a else once(fn)
+      val b = if (a < 0 || wallSec > rerunBudgetSec) a else once(name, fn)
       name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
     }
     // stop() BEFORE printing: Spark's shutdown logging must not land after
@@ -109,7 +114,8 @@ object Bench {
     try spark.stop() catch { case _: Throwable => () }
     // Per-query detail goes on its OWN line, first: the full map is ~8 KB
     // and the driver captures only a ~2 KB stdout tail, so the LAST line
-    // must be short (<200 B) to always be captured whole and parse clean.
+    // must be short (<700 B, pinned by BenchOutputSpec) to always be
+    // captured whole and parse clean.
     println(detailLine(results, sfDir))
     println(totalLine(results, sfDir, SparkEntry.queries.size,
                       loadStart, loadEnd, steal))
@@ -120,7 +126,7 @@ object Bench {
     * driver keeps only a ~2 KB stdout tail, so whatever suffix of this
     * line survives is the CHEAP tail — the expensive keys the driver
     * would misread from a truncated slice are the first to fall off,
-    * and the authoritative total line (printed after, <200 B) is always
+    * and the authoritative total line (printed after, <700 B) is always
     * captured whole. Failed keys (-1.0) sort to the very end. */
   private[graft] def detailLine(results: Seq[(String, Double)],
                                 sfDir: String): String = {
@@ -131,7 +137,7 @@ object Bench {
   }
 
   /** The LAST stdout line — the one the driver's tail-parse reads as
-    * the bench result. Must stay short (<200 B) and valid JSON under
+    * the bench result. Must stay short (<700 B) and valid JSON under
     * any key count; BenchOutputSpec pins that contract.
     * A failed query reports -1.0 per-query (visible in the detail line)
     * but must not SUBTRACT from the total — sum only real timings and

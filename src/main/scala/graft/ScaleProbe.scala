@@ -178,8 +178,8 @@ object ScaleProbe {
         case e: Throwable =>
           val msg = (e.getClass.getSimpleName + ": " +
             Option(e.getMessage).getOrElse("").linesIterator.take(1)
-              .mkString).replace("\"", "'").take(160)
-          println(s"""{"key":"$key","err":"$msg"}""")
+              .mkString).take(160)
+          println(s"""{"key":"$key","err":${Verify.jsonString(msg)}}""")
           System.out.flush()
           None
       }

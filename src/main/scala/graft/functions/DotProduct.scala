@@ -127,12 +127,14 @@ object GraftExtensions {
       fn("graft_topk", 3) { case Seq(item, mArg, kArg) =>
         val m = intLiteral("graft_topk", "m", mArg)
         val k = intLiteral("graft_topk", "k", kArg)
-        require(m > 0 && k > 0 && k <= m, "need 0 < k <= m")
+        if (!(m > 0 && k > 0 && k <= m)) throw new IllegalArgumentException(
+          s"graft_topk needs 0 < k <= m, got m=$m, k=$k")
         MisraGriesTopK(item, m, k)
       },
       fn("graft_tdigest", 2) { case Seq(v, dArg) =>
         val d = intLiteral("graft_tdigest", "delta", dArg)
-        require(d >= 10, "delta >= 10")
+        if (d < 10) throw new IllegalArgumentException(
+          s"graft_tdigest needs delta >= 10, got delta=$d")
         TDigestQuantiles(v, d)
       },
       // the as-of marker condition; it needs the rule and strategy too

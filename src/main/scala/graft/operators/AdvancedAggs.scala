@@ -369,36 +369,22 @@ object AdvancedAggs {
     * whenever weight and value correlate.
     *
     * Scale shape: the classic formulation is a global running sum over
-    * the price order — a single-task window. Here it is the repo's
-    * bucketed two-pass prefix (statsKsTest shape): per-distinct-price
-    * weight sums (map-side combinable), a PARTITIONED intra-bucket
-    * running sum, per-bucket offsets over the tiny bucket summary, and
-    * a threshold pick as one aggregate. All comparisons are INTEGER
+    * the price order — a single-task window. Here it is
+    * [[Windows.bucketPrefix]] over per-distinct-price weight sums
+    * (map-side combinable), and a threshold pick as one aggregate. All comparisons are INTEGER
     * (2·cum ≥ W, quantities are integral) — no W/2 fraction, no FP
     * boundary flake.
     */
   def aggWeightedMedian(s: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byVal = Tables.lineitem(s, sf)
       .select(round(col("l_extendedprice"), 2).as("v"),
               col("l_quantity").cast("long").as("wt"))
       .groupBy(col("v")).agg(sum(col("wt")).as("wv"))
-      .withColumn("bkt", Stats.valueBucket(col("v")))
-    val wIntra = Window.partitionBy(col("bkt")).orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrevBkt = Window.orderBy(col("bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = byVal.groupBy(col("bkt"))
-      .agg(sum(col("wv")).as("sw"))
-      .select(col("bkt"),
-        coalesce(sum(col("sw")).over(wPrevBkt), lit(0L)).as("off"),
-        sum(col("sw")).over(Window.partitionBy()).as("w"))
-    byVal
-      .select(col("bkt"), col("v"), sum(col("wv")).over(wIntra).as("cum"))
-      .join(broadcast(offsets), "bkt")
-      .agg(max(col("w")).cast("bigint").as("total_weight"),
-           min(when(lit(2L) * (col("off") + col("cum")) >= col("w"), col("v")))
-             .as("weighted_median"))
+      .withColumn("bkt", Windows.valueBucket(col("v")))
+    Windows.bucketPrefix(byVal, "bkt", Seq(col("v").asc), Seq("wv"))
+      .agg(max(col("wv_total")).cast("bigint").as("total_weight"),
+           min(when(lit(2L) * (col("wv_before") + col("wv")) >=
+             col("wv_total"), col("v"))).as("weighted_median"))
   }
 
   /** EXACT distinct counting via roaring-style bitmap aggregation

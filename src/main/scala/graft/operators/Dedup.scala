@@ -966,21 +966,14 @@ object Dedup {
     // disk spill — 8-byte xxhash tokens halved to int ids halves it.
     // The id only needs to be INJECTIVE (per-doc arrays are re-sorted
     // numerically before the merge-intersect, which is order-agnostic
-    // in the assignment), so it is assigned distributed: hash-bucketed
-    // row_number plus broadcast cumulative bucket offsets — no global
+    // in the assignment), so it is assigned distributed: the count of
+    // tokens before this one from Windows.bucketPrefix — no global
     // single-partition window at any vocabulary size. Deterministic:
     // bucket = pmod(tok, 1024), rank = tok order within bucket.
     val bkted = dfreq.withColumn("bkt", pmod(col("tok"), lit(1024)).cast("int"))
-    val offs = bkted.groupBy(col("bkt")).agg(count(lit(1)).as("c"))
-      .select(col("bkt"),
-        coalesce(sum(col("c")).over(
-          Window.orderBy(col("bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("off"))
-    val dict = bkted
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("bkt")).orderBy(col("tok"))))
-      .join(broadcast(offs), Seq("bkt"))
-      .select(col("tok"), col("df"), (col("off") + col("rn")).cast("int").as("tid"))
+      .withColumn("one", lit(1L))
+    val dict = Windows.bucketPrefix(bkted, "bkt", Seq(col("tok")), Seq("one"))
+      .select(col("tok"), col("df"), (col("one_before") + 1).cast("int").as("tid"))
     val ranked = tok.join(dict, "tok")
       .groupBy(col("source"), col("doc_id"))
       .agg(expr("sort_array(collect_list(struct(df, tok, tid)))").as("r"))

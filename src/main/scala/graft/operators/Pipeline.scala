@@ -402,26 +402,18 @@ object Pipeline {
     * enumerate, NOT one `row_number() OVER (ORDER BY hash)` window —
     * that funnels the corpus through a single task. The hash's first two
     * hex chars split the order into 256 buckets whose lexicographic
-    * order equals the global hash order; within-bucket ranks run in
-    * parallel, the 256-row bucket-count summary cumulates in one trivial
-    * window, and position = bucket offset + local rank after a broadcast
-    * join-back. Same device as Streaming.lateAuditBatch's watermark
-    * scan; the serial step is O(#buckets). */
+    * order equals the global hash order, and position = the count of
+    * documents before this one from [[Windows.bucketPrefix]]; the
+    * serial step is O(#buckets). */
   def shuffleOrder(s: SparkSession, sf: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val d = Tables.documents(s, sf)
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
         md5(col("doc_id").cast("string").cast("binary")).as("h"))
       .withColumn("bkt", substring(col("h"), 1, 2))
-    val wIn = w.partitionBy(col("bkt")).orderBy(col("h"), col("doc_id"))
-    val local = d.withColumn("lr", row_number().over(wIn).cast("bigint"))
-    val wBkt = w.orderBy(col("bkt")).rowsBetween(Long.MinValue, -1)
-    val offs = d.groupBy(col("bkt")).agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(wBkt), lit(0L)))
-      .select(col("bkt"), col("off"))
-    local.join(broadcast(offs), "bkt")
-      .select(col("doc_id"), (col("off") + col("lr") - 1).as("shuffle_pos"))
+      .withColumn("one", lit(1L))
+    Windows.bucketPrefix(d, "bkt", Seq(col("h"), col("doc_id")), Seq("one"))
+      .select(col("doc_id"), col("one_before").as("shuffle_pos"))
       .withColumn("shard", pmod(col("shuffle_pos"), lit(8L)))
       .orderBy("doc_id")
   }

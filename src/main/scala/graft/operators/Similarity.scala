@@ -140,8 +140,11 @@ object Similarity {
   /** In-plan twin of `gridChunksFor`: the largest-block scalar (blocks
     * keyed on the `block` column — `label` for the embedding grids,
     * `source` for containment) is aggregated over the FULL collection
-    * and broadcast INTO the plan (q2-style crossJoin), and the chunk
-    * count becomes the column `⌈max_block/4096⌉` clamped to [4, 256] —
+    * and the grid builders broadcast it INTO the plan (q2-style
+    * crossJoin; the frame itself stays un-hinted, since
+    * [[maxBlockAtMost]] collects it on its own and a hint outside a
+    * join only warns), and the chunk count becomes the column
+    * `⌈max_block/4096⌉` clamped to [4, 256] —
     * same formula, zero driver actions. Both grid sides must crossJoin
     * the SAME full-collection stats (a side-local max would derive
     * mismatched chunk counts and the grid join would silently miss
@@ -149,8 +152,8 @@ object Similarity {
     * caller; the one-row subtree appears once per side — a
     * column-pruned block aggregate each, O(#blocks) work. */
   private[graft] def blockStats(df: DataFrame, block: String): DataFrame =
-    broadcast(df.groupBy(col(block)).agg(count(lit(1)).as("bn"))
-      .agg(coalesce(max(col("bn")), lit(0L)).as("max_block")))
+    df.groupBy(col(block)).agg(count(lit(1)).as("bn"))
+      .agg(coalesce(max(col("bn")), lit(0L)).as("max_block"))
   private[graft] def chunksCol: Column =
     least(lit(256L), greatest(lit(4L), expr("(max_block + 4095) DIV 4096")))
 
@@ -158,14 +161,14 @@ object Similarity {
     * plus one row per chunk in [0, chunks). */
   private[graft] def gridReplicated(df: DataFrame, stats: DataFrame,
                                     cols: Column*): DataFrame =
-    df.crossJoin(stats).select(cols :+
+    df.crossJoin(broadcast(stats)).select(cols :+
       explode(sequence(lit(0), (chunksCol - 1).cast("int"))).as("chunk"): _*)
 
   /** Partitioned side of the fragment-replicate grid: the caller's `cols`
     * plus the row's own chunk, `id` mod chunks. */
   private[graft] def gridPartitioned(df: DataFrame, stats: DataFrame,
                                      id: String, cols: Column*): DataFrame =
-    df.crossJoin(stats).select(cols :+
+    df.crossJoin(broadcast(stats)).select(cols :+
       pmod(col(id), chunksCol).cast("int").as("chunk"): _*)
 
   /** Block-size dispatch probe shared by the Jaccard, containment and

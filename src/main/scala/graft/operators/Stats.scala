@@ -319,23 +319,24 @@ object Stats {
     * Scale shape: the global rank never materializes and there is no
     * global-window sort. Σi·x decomposes per log-scale bucket as
     * off_b·Σx_b + Σ(j·x)_b (j = intra-bucket rank, off_b = users in
-    * lower buckets from a running sum over the tiny bucket summary), so
-    * the plan is one user-shuffle, one bucket-shuffle, and two
-    * O(#buckets) single-partition points — the stream_late_audit
-    * two-pass prefix shape, but join-back-free: no subtree computes
+    * lower buckets from [[Windows.priorBuckets]] over the tiny bucket
+    * summary), so the plan is one user-shuffle, one bucket-shuffle, and
+    * two O(#buckets) single-partition points — the offset phase of
+    * [[Windows.bucketPrefix]] without its join-back: no subtree computes
     * twice (plan-pinned). Tied spends share a bucket and make Σi·x
     * tie-order-independent, so the rank tiebreak never reaches the
     * result.
     */
   def aggGini(s: SparkSession, sf: String): DataFrame = {
-    // monotone log-scale bucket key: needs NO min/max pre-pass (a
-    // bounds scalar would recompute the spend subtree — the q2-style
-    // ReuseExchange defeat), and same-spend ties always share a bucket
+    // monotone log-scale bucket key (Windows.valueBucket): needs NO
+    // min/max pre-pass (a bounds scalar would recompute the spend
+    // subtree — the q2-style ReuseExchange defeat), and same-spend ties
+    // always share a bucket
     val spend = Tables.events(s, sf)
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
       .groupBy(col("user_id"))
       .agg(round(sum(col("value")), 4).as("x"))
-      .withColumn("bkt", floor(log1p(col("x")) * 8.0).cast("bigint"))
+      .withColumn("bkt", Windows.valueBucket(col("x")))
     // decompose Σ global-rank·x per bucket: with j the intra-bucket
     // rank and off_b the count of users in lower buckets,
     // Σ i·x = Σ_b [ off_b·Σx_b + Σ(j·x)_b ] — so ONE window pass per
@@ -348,9 +349,7 @@ object Stats {
       .groupBy(col("bkt"))
       .agg(count(lit(1)).as("n_b"), sum(col("x")).as("sx_b"),
            sum(col("j") * col("x")).as("jx_b"))
-      .withColumn("off_b", coalesce(sum(col("n_b")).over(
-        Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("off_b", Windows.priorBuckets(col("n_b"), "bkt"))
       .agg(sum(col("n_b")).cast("bigint").as("n_users"),
            round(sum(col("sx_b")), 4).as("total_spend"),
            round(lit(2.0) * sum(col("off_b") * col("sx_b") + col("jx_b")) /
@@ -406,15 +405,6 @@ object Stats {
       .orderBy("user_id", "d")
   }
 
-  /** Monotone log-scale bucket key shared by the two nonparametric
-    * tests below — the agg_gini chunking rule (±8 subdivisions per
-    * e-fold), sign-symmetric so any real metric domain chunks
-    * monotonically: ordering by (bkt, value) equals ordering by value,
-    * which is what lets a global running sum decompose into parallel
-    * per-bucket prefixes + a tiny per-bucket offset pass. */
-  private[graft] def valueBucket(v: org.apache.spark.sql.Column) =
-    (signum(v) * floor(log1p(abs(v)) * 8.0)).cast("bigint")
-
   /** Two-sample Kolmogorov–Smirnov test on purchase values between the
     * deterministic md5 arms of `experimentTtest` — the distribution-
     * free companion to the t test (detects shape shifts a mean compare
@@ -428,13 +418,10 @@ object Stats {
     * Distinct rounded doubles grow ~linearly with the corpus, so the
     * running ECDFs must NOT be a global unpartitioned window (that was
     * this operator's round-7 shape — all distinct values through one
-    * task). Instead the distributedRunningSum decomposition
-    * (Windows.scala): per-BUCKET running arm counts (window partitioned
-    * by the monotone value bucket — parallel), per-bucket offsets and
-    * the two grand totals from windows over the ≤ ~hundred-row bucket
-    * summary (the only single-partition points, bounded by bucket
-    * count), broadcast-joined back; ca = offset + local prefix is
-    * integer-exact, so ks_d is bit-identical to the global form.
+    * task). Instead the running arm counts and their grand totals come
+    * from [[Windows.bucketPrefix]] over the value bucket; ca = the
+    * counts before + the value's own is integer-exact, so ks_d is
+    * bit-identical to the global form.
     */
   def statsKsTest(s: SparkSession, sf: String): DataFrame = {
     // collapse to per-distinct-value arm counts BEFORE the running sums:
@@ -451,27 +438,13 @@ object Stats {
       .select(round(col("value"), 4).as("value"), arm.cast("long").as("a"))
       .groupBy(col("value"))
       .agg(sum(col("a")).as("av"), sum(lit(1L) - col("a")).as("bv"))
-      .withColumn("bkt", valueBucket(col("value")))
-    val wIntra = Window.partitionBy(col("bkt")).orderBy(col("value").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrevBkt = Window.orderBy(col("bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = byVal.groupBy(col("bkt"))
-      .agg(sum(col("av")).as("sa"), sum(col("bv")).as("sb"))
-      .select(col("bkt"),
-        coalesce(sum(col("sa")).over(wPrevBkt), lit(0L)).as("offa"),
-        coalesce(sum(col("sb")).over(wPrevBkt), lit(0L)).as("offb"),
-        sum(col("sa")).over(Window.partitionBy()).as("na"),
-        sum(col("sb")).over(Window.partitionBy()).as("nb"))
-    byVal
-      .select(col("bkt"),
-        sum(col("av")).over(wIntra).as("la"),
-        sum(col("bv")).over(wIntra).as("lb"))
-      .join(broadcast(offsets), "bkt")
-      .agg(max(col("na")).cast("bigint").as("n_a"),
-           max(col("nb")).cast("bigint").as("n_b"),
-           round(max(abs((col("offa") + col("la")).cast("double") / col("na") -
-                         (col("offb") + col("lb")).cast("double") / col("nb"))),
+      .withColumn("bkt", Windows.valueBucket(col("value")))
+    Windows.bucketPrefix(byVal, "bkt", Seq(col("value").asc), Seq("av", "bv"))
+      .agg(max(col("av_total")).cast("bigint").as("n_a"),
+           max(col("bv_total")).cast("bigint").as("n_b"),
+           round(max(abs(
+             (col("av_before") + col("av")).cast("double") / col("av_total") -
+             (col("bv_before") + col("bv")).cast("double") / col("bv_total"))),
              6).as("ks_d"))
   }
 
@@ -1041,8 +1014,9 @@ object Stats {
     * prefix DECOMPOSES like agg_gini's Σi·x (no join-back at all):
     * midrank = off_b + intra, so Σ av·midrank = Σ_b [off_b·Σav_b +
     * Σ(av·intra)_b]. One bucket-partitioned window (parallel), one
-    * per-bucket summary whose offset window is the only single-
-    * partition point (bounded by bucket count), then a scalar
+    * per-bucket summary whose offset window ([[Windows.priorBuckets]])
+    * is the only single-partition point (bounded by bucket count), then
+    * a scalar
     * aggregate. Midranks are half-integers and the per-bucket products
     * stay ≪ 2⁵³, so the decomposed sum is exactly the global one.
     */
@@ -1055,10 +1029,8 @@ object Stats {
       .groupBy(col("value"))
       .agg(sum(col("a")).as("av"), sum(lit(1L) - col("a")).as("bv"))
       .withColumn("tv", col("av") + col("bv"))
-      .withColumn("bkt", valueBucket(col("value")))
+      .withColumn("bkt", Windows.valueBucket(col("value")))
     val wIntra = Window.partitionBy(col("bkt")).orderBy(col("value").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wPrevBkt = Window.orderBy(col("bkt").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     byVal
       .withColumn("prev", coalesce(sum(col("tv")).over(wIntra), lit(0L)))
@@ -1068,7 +1040,7 @@ object Stats {
            sum(col("av") * (col("prev").cast("double") +
              (col("tv") + 1).cast("double") / 2)).as("rai"),
            sum(col("tv") * col("tv") * col("tv") - col("tv")).as("tie_b"))
-      .withColumn("offt", coalesce(sum(col("st")).over(wPrevBkt), lit(0L)))
+      .withColumn("offt", Windows.priorBuckets(col("st"), "bkt"))
       .agg(sum(col("sa")).as("na"), sum(col("sb")).as("nb"),
            sum(col("offt").cast("double") * col("sa") + col("rai")).as("ra"),
            sum(col("tie_b")).as("ties"))
@@ -1726,32 +1698,19 @@ object Stats {
   }
 
   /** Distributed midrank (average rank over ties) of `valCol` within
-    * each `grp` partition, at distinct-value grain, via the bucketed
-    * two-pass prefix decomposition (Windows.scala) — the same pattern
-    * that replaced the ks/mann-whitney global windows: per-(group,
-    * bucket) running counts in parallel windows, per-group offsets from
-    * the bounded bucket summary, midrank = cum_before + (ties+1)/2.
+    * each `grp` partition, at distinct-value grain, from
+    * [[Windows.bucketPrefix]] partitioned by `grp`: midrank =
+    * cum_before + (ties+1)/2.
     * Returns (grp, value, midrank); midranks are exact .0/.5 doubles,
     * so downstream arithmetic is engine-stable. */
   private def midranks(df: DataFrame, grp: String, valCol: String): DataFrame = {
     val byVal = df.groupBy(col(grp), col(valCol).as("value"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("bkt", valueBucket(col("value")))
-    val wIntra = Window.partitionBy(col(grp), col("bkt"))
-      .orderBy(col("value").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrevBkt = Window.partitionBy(col(grp)).orderBy(col("bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = byVal.groupBy(col(grp), col("bkt"))
-      .agg(sum(col("cnt")).as("sc"))
-      .select(col(grp), col("bkt"),
-        coalesce(sum(col("sc")).over(wPrevBkt), lit(0L)).as("off"))
-    byVal
-      .select(col(grp), col("bkt"), col("value"), col("cnt"),
-        (sum(col("cnt")).over(wIntra) - col("cnt")).as("lc"))
-      .join(broadcast(offsets), Seq(grp, "bkt"))
+      .withColumn("bkt", Windows.valueBucket(col("value")))
+    Windows.bucketPrefix(byVal, "bkt", Seq(col("value").asc), Seq("cnt"),
+        partition = Seq(grp))
       .select(col(grp), col("value"),
-        (col("off") + col("lc") + (col("cnt") + 1) / lit(2.0)).as("midrank"))
+        (col("cnt_before") + (col("cnt") + 1) / lit(2.0)).as("midrank"))
   }
 
   /** Spearman rank correlation between quantity and extended price per
@@ -1772,9 +1731,8 @@ object Stats {
     * data-sized shuffle is the groupBy to (flag, price) grain, which
     * carries each price's row count and its exact Σ2rq / Σ(2rq)²
     * partial moments. Price midranks are then computed ON that
-    * distinct-price frame in place (intra-bucket running count +
-    * broadcast bucket offsets, 2·midrank = 2·cum_before + ties + 1 —
-    * all integer), and ρ comes from six moment sums kept EXACT in
+    * distinct-price frame in place ([[Windows.bucketPrefix]],
+    * 2·midrank = 2·cum_before + ties + 1 — all integer), and ρ comes from six moment sums kept EXACT in
     * DECIMAL(38,0) (the stats_hurst ladder; doubled midranks are
     * integers, so every addend is an integer and the sums are
     * order-free on both engines — corr()'s FP co-moments would not
@@ -1797,21 +1755,11 @@ object Stats {
       .agg(count(lit(1)).as("cnt"),
            sum(col("rq2").cast(d19)).as("sq"),
            sum(col("rq2").cast(d19) * col("rq2").cast(d19)).as("sqq"))
-      .withColumn("bkt", valueBucket(col("p")))
-    val wIntra = Window.partitionBy(col("f"), col("bkt"))
-      .orderBy(col("p").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrevBkt = Window.partitionBy(col("f")).orderBy(col("bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = byP.groupBy(col("f"), col("bkt"))
-      .agg(sum(col("cnt")).as("sc"))
-      .select(col("f"), col("bkt"),
-        coalesce(sum(col("sc")).over(wPrevBkt), lit(0L)).as("off"))
-    val withRp = byP
-      .withColumn("lc", sum(col("cnt")).over(wIntra) - col("cnt"))
-      .join(broadcast(offsets), Seq("f", "bkt"))
+      .withColumn("bkt", Windows.valueBucket(col("p")))
+    val withRp = Windows.bucketPrefix(byP, "bkt", Seq(col("p").asc),
+        Seq("cnt"), partition = Seq("f"))
       .withColumn("rp2",
-        lit(2L) * (col("off") + col("lc")) + col("cnt") + lit(1L))
+        lit(2L) * col("cnt_before") + col("cnt") + lit(1L))
     val nD = col("n").cast("double")
     def mD(c: String) = col(c).cast("double")
     withRp.groupBy(col("f"))
@@ -2736,10 +2684,9 @@ object Stats {
   /** Kruskal–Wallis H test — the k-group generalization of
     * `statsMannWhitney` (does ANY event type's value distribution
     * differ?), the nonparametric cross-check for `statsAnova` when
-    * normality is off the table. Mid-ranks reuse the bucketed prefix
-    * decomposition proven on the two-sample key: per-distinct-value
-    * totals, per-bucket intra prefix (partitioned window), a bounded
-    * bucket-offset window, midrank = offset + prev + (tv+1)/2. Per-type
+    * normality is off the table. Mid-ranks come from
+    * [[Windows.bucketPrefix]] over the per-distinct-value totals:
+    * midrank = tv_before + (tv+1)/2. Per-type
     * rank sums R_j are exact (half-integer products ≪ 2⁵³, order-free);
     * the one cross-group reduction Σ R_j²/n_j folds SEQUENTIALLY in
     * event-type order on both engines (sorted array + `aggregate`
@@ -2759,19 +2706,10 @@ object Stats {
       .groupBy(col("value"), col("event_type"))
       .agg(count(lit(1)).as("c"))
     val v = vt.groupBy(col("value")).agg(sum(col("c")).as("tv"))
-      .withColumn("bkt", valueBucket(col("value")))
-    val wIntra = Window.partitionBy(col("bkt")).orderBy(col("value").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wPrevBkt = Window.orderBy(col("bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withPrev = v.withColumn("prev",
-      coalesce(sum(col("tv")).over(wIntra), lit(0L)))
-    val offs = withPrev.groupBy(col("bkt")).agg(sum(col("tv")).as("st"))
-      .withColumn("offt", coalesce(sum(col("st")).over(wPrevBkt), lit(0L)))
-      .select(col("bkt"), col("offt"))
-    val mid = withPrev.join(broadcast(offs), Seq("bkt"))
+      .withColumn("bkt", Windows.valueBucket(col("value")))
+    val mid = Windows.bucketPrefix(v, "bkt", Seq(col("value").asc), Seq("tv"))
       .select(col("value"), col("tv"),
-        ((col("offt") + col("prev")).cast("double") +
+        (col("tv_before").cast("double") +
          (col("tv") + 1).cast("double") / 2).as("midrank"))
     val tot = mid.agg(
       sum(col("tv") * col("tv") * col("tv") - col("tv")).as("ties"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -15,7 +15,8 @@ import graft.Tables
   * per-partition sort. All windows here partition on a key with bounded or
   * data-proportional cardinality (user_id, c_custkey, mktsegment) — no
   * single-partition global windows except over pre-aggregated day counts
-  * (win_running: ~30 rows after the groupBy, safe at any input scale).
+  * (win_running: ~30 rows after the groupBy, safe at any input scale) and
+  * [[bucketPrefix]]'s offset window over one row per bucket.
   */
 object Windows {
 
@@ -116,18 +117,70 @@ object Windows {
       .orderBy("user_id", "d")
   }
 
+  /** Monotone log-scale bucket key (±8 subdivisions per e-fold),
+    * sign-symmetric so any real metric domain chunks monotonically:
+    * ordering by (bucket, value) equals ordering by value, which is what
+    * lets a global running sum split into [[bucketPrefix]]'s parallel
+    * per-bucket prefixes plus a small per-bucket offset pass. */
+  private[graft] def valueBucket(v: Column): Column =
+    (signum(v) * floor(log1p(abs(v)) * 8.0)).cast("bigint")
+
+  /** Sum of `c` over the buckets before this one, on a frame already at
+    * bucket grain (one row per `partition`, `bucket`): the offset phase of
+    * [[bucketPrefix]]. With no `partition` this is the one single-
+    * partition window of the scan, bounded by the bucket count. */
+  private[graft] def priorBuckets(c: Column, bucket: String,
+                                  partition: String*): Column =
+    coalesce(sum(c).over(Window.partitionBy(partition.map(col): _*)
+      .orderBy(col(bucket))
+      .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
+  /** Global running sums without a single-partition window over
+    * row-grain data — the two-phase prefix scan (Blelloch 1990). For each
+    * `c` in `sums` adds `<c>_before` (the sum of `c` over all rows before
+    * this one in (`partition`; `bucket`, `order`) order) and `<c>_total`
+    * (the sum over the whole `partition`). The caller's `bucket` column
+    * must be monotone in `order` (every key of bucket i precedes every
+    * key of bucket j for i < j) and `order` must end in a unique
+    * tiebreak, or the ROWS frame sees an arbitrary tie order:
+    *   1. intra-bucket running sum (window PARTITIONED by bucket —
+    *      parallel);
+    *   2. [[priorBuckets]] and the partition total over the per-bucket
+    *      summary (one window, bounded by the bucket count);
+    *   3. a broadcast join back on (`partition`, `bucket`).
+    * Sums of integers or decimals are exact in any order, so
+    * `<c>_before` equals the serial running sum. Unused `_before` /
+    * `_total` columns prune away. */
+  private[graft] def bucketPrefix(df: DataFrame, bucket: String,
+                                  order: Seq[Column], sums: Seq[String],
+                                  partition: Seq[String] = Nil): DataFrame = {
+    val keys = partition :+ bucket
+    // the total shares priorBuckets' partition and order, so both are one
+    // Window over the summary (Catalyst groups window expressions by spec)
+    val byBucket = Window.partitionBy(partition.map(col): _*)
+      .orderBy(col(bucket))
+    val summary = df.groupBy(keys.map(col): _*)
+      .agg(sum(col(sums.head)).as(sums.head),
+           sums.tail.map(c => sum(col(c)).as(c)): _*)
+      .select(keys.map(col) ++ sums.flatMap(c => Seq(
+        priorBuckets(col(c), bucket, partition: _*).as(s"${c}_prior"),
+        sum(col(c)).over(byBucket.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as(s"${c}_total"))): _*)
+    val intra = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.select(col("*") +: sums.map(c => sum(col(c)).over(intra).as(s"${c}_run")): _*)
+      .join(broadcast(summary), keys)
+      .select(df.columns.map(col) ++ sums.map(c =>
+          (col(s"${c}_prior") + (col(s"${c}_run") - col(c))).as(s"${c}_before")) ++
+        sums.map(c => col(s"${c}_total")): _*)
+  }
+
   /** Global running aggregate WITHOUT a single-partition window — the
-    * distributed prefix-sum. A bare `Window.orderBy(k)` moves the whole
-    * input through one task (Spark even warns); the scale shape is:
-    *   1. assign each row a chunk id that is monotone in the order key
-    *      (chunk i's keys all precede chunk j's for i < j) and derived
-    *      purely from the key value;
-    *   2. per-chunk local running sum (window PARTITIONED by the chunk
-    *      id — parallel);
-    *   3. exclusive prefix over the per-chunk totals (a window over
-    *      ≤ nParts rows — the only single-partition step, bounded by
-    *      chunk COUNT, not data size) broadcast-joined back;
-    *   4. global running value = chunk offset + local running sum. */
+    * distributed prefix-sum, adding `running_sum` (inclusive) to `df`
+    * over `valueCol` in `orderCol` order: [[bucketPrefix]] with `nParts`
+    * equal-width chunks of the order key as the bucket. A bare
+    * `Window.orderBy(k)` moves the whole input through one task (Spark
+    * even warns). */
   def distributedRunningSum(df: DataFrame, orderCol: String,
                             valueCol: String, nParts: Int): DataFrame = {
     // The chunk id must be a PURE FUNCTION OF THE KEY VALUE, never of
@@ -149,22 +202,9 @@ object Windows {
             (col(orderCol).cast("double") - col("lo")) * nParts /
               greatest(col("hi") - col("lo") + 1d, lit(1d))).cast("int")))))
       .drop("lo", "hi")
-    val localW = Window.partitionBy(col("pid")).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = bucketed.groupBy(col("pid"))
-      .agg(sum(col(valueCol)).as("ptotal"))
-      .withColumn("offset",
-        coalesce(sum(col("ptotal")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    bucketed
-      .withColumn("local_run", sum(col(valueCol)).over(localW))
-      .join(broadcast(offsets), "pid")
-      .withColumn("running_sum", col("local_run") + col("offset"))
-      // drop the internals INCLUDING offset: two chained prefix passes
-      // otherwise collide on an ambiguous `offset` reference
-      .drop("pid", "local_run", "offset")
+    bucketPrefix(bucketed, "pid", Seq(col(orderCol)), Seq(valueCol))
+      .select(df.columns.map(col) :+
+        (col(s"${valueCol}_before") + col(valueCol)).as("running_sum"): _*)
   }
 
   /** Running DISTINCT count over a growing global frame. Spark disallows
@@ -301,36 +341,23 @@ object Windows {
     * accumulation order; the only double ops are the final share
     * divisions.
     *
-    * Scale shape: the global revenue-descending prefix uses the
-    * midranks discipline — log-bucket the per-part revenues, bucket
-    * offsets from a bucket-grain window (bounded rows), intra-bucket
-    * cumsums partitioned BY bucket ordered (revenue desc, partkey) —
-    * no global window ever sees part-grain data. The class roll-up is
-    * a 3-row aggregate.
+    * Scale shape: the global revenue-descending prefix and the revenue
+    * total come from [[bucketPrefix]] over the (negated) log bucket of
+    * the per-part revenues, ordered (revenue desc, partkey) — no global
+    * window ever sees part-grain data. The class roll-up is a 3-row
+    * aggregate.
     */
   def winParetoAbc(s: SparkSession, sf: String): DataFrame = {
     val rev = Tables.lineitem(s, sf)
       .groupBy(col("l_partkey"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
         4).cast("decimal(18,4)").as("rev"))
-      .withColumn("bkt", Stats.valueBucket(col("rev").cast("double")))
-    val wPrevBkt = Window.orderBy(col("bkt").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = rev.groupBy(col("bkt"))
-      .agg(sum(col("rev")).as("bsum"))
-      .select(col("bkt"),
-        coalesce(sum(col("bsum")).over(wPrevBkt),
-          lit(0).cast("decimal(18,4)")).as("off"))
-    val total = rev.agg(sum(col("rev")).as("total"))
-    val wIntra = Window.partitionBy(col("bkt"))
-      .orderBy(col("rev").desc, col("l_partkey").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rev
-      .join(broadcast(offsets), Seq("bkt"))
-      .crossJoin(broadcast(total))
-      .select(col("l_partkey"), col("rev"),
-        ((col("off") + sum(col("rev")).over(wIntra)).cast("double") /
-          col("total").cast("double")).as("cum_share"))
+      // negated so that ascending buckets walk revenue descending
+      .withColumn("bkt", -valueBucket(col("rev").cast("double")))
+    bucketPrefix(rev, "bkt", Seq(col("rev").desc, col("l_partkey").asc),
+        Seq("rev"))
+      .withColumn("cum_share", (col("rev_before") + col("rev"))
+        .cast("double") / col("rev_total").cast("double"))
       .select(col("rev"),
         when(col("cum_share") <= 0.80, lit("A"))
           .when(col("cum_share") <= 0.95, lit("B"))

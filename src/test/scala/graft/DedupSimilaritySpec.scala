@@ -125,6 +125,11 @@ class DedupSimilaritySpec extends SparkSpecBase {
         s"largest $block block is exactly 42 858 rows")
       assert(!Similarity.maxBlockAtMost(df, block, 42857L),
         s"one row under the largest $block block must fail")
+      // the collected frame must carry no join hint (Spark drops a
+      // broadcast hint outside a join and logs a warning per probe)
+      assert(Similarity.blockStats(df, block).queryExecution.analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }.isEmpty, s"$block: the probed block stats must not be hinted")
     }
   }
 

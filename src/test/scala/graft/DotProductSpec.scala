@@ -94,6 +94,9 @@ class DotProductSpec extends SparkSpecBase {
       "graft_minhash16" -> "SELECT graft_minhash16()",
       "graft_lsh_buckets" -> s"SELECT graft_lsh_buckets($emb, 2)",
       "graft_asof_marker" -> "SELECT graft_asof_marker(1, 2, 3)")
+    val outOfRange = Seq(
+      "graft_topk" -> s"SELECT graft_topk(w, 1, 2) $agg",
+      "graft_tdigest" -> s"SELECT graft_tdigest(v, 5) $agg")
     for ((name, sql) <- notLiteral) {
       val text = errorText(sql)
       assert(text.contains(s"$name ") && text.contains("integer literal"),
@@ -102,6 +105,11 @@ class DotProductSpec extends SparkSpecBase {
     for ((name, sql) <- wrongArity) {
       val text = errorText(sql)
       assert(text.contains(s"$name takes"), s"$sql: $text")
+    }
+    for ((name, sql) <- outOfRange) {
+      val text = errorText(sql)
+      assert(text.contains(s"IllegalArgumentException: $name needs"),
+        s"$sql: $text")
     }
     val r = spark.sql(
       """SELECT graft_shingles(array('a', 'b'), CAST(2 AS BIGINT)) AS big,

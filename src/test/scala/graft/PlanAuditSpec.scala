@@ -2,7 +2,12 @@ package graft
 
 import graft.operators.Relational
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, InputAdapter,
+  ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
 
 /** Physical-plan audits: the properties that make these operators hold
@@ -16,6 +21,30 @@ class PlanAuditSpec extends SparkSpecBase {
 
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
+
+  /** Unpartitioned windows of `df`'s executed plan that do NOT read the
+    * per-bucket summary: walking down from each one through sorts,
+    * exchanges, projections and stacked windows, the first other node
+    * must be a HashAggregate grouped on exactly `grain` (the bucket
+    * column, after any partition columns), before any row-grain node. */
+  private def windowsOffBucketSummary(df: DataFrame,
+                                      grain: Seq[String]): Seq[String] = {
+    def onSummary(p: SparkPlan): Boolean = p match {
+      case a: HashAggregateExec => a.groupingExpressions.map(_.name) == grain
+      case _: SortExec | _: ShuffleExchangeExec | _: ProjectExec |
+           _: WindowExec | _: WholeStageCodegenExec | _: InputAdapter =>
+        p.children.size == 1 && onSummary(p.children.head)
+      case _ => false
+    }
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    root.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty && !onSummary(w.child) =>
+        w.simpleString(400)
+    }
+  }
 
   test("filter_pred pushes its predicates into the parquet scan") {
     val plan = formatted(Relational.filterPred(spark, sfSmoke))
@@ -143,17 +172,14 @@ class PlanAuditSpec extends SparkSpecBase {
       s"set-state-per-row idiom must stay gone:\n$plan")
     assert(plan.contains("hashpartitioning(pid"),
       s"chunk-local sums must hash-partition on the chunk id:\n$plan")
-    // a partitioned Window prints `], [partSpec], [orderSpec]` (two
-    // `], [`), an unpartitioned one only `], [orderSpec]` — every
-    // unpartitioned window must be the per-chunk TOTALS prefix
-    // (≤ nParts rows); the row-level event stream may never appear
-    // under one. (The remaining SinglePartition exchanges are the
-    // min/max bounds scalar agg — also bounded.)
-    val unpartitioned = plan.linesIterator
-      .filter(l => l.contains("Window [") && "\\], \\[".r.findAllIn(l).length == 1)
-      .toSeq
-    assert(unpartitioned.forall(_.contains("ptotal")),
-      s"an unpartitioned window touches row-level data:\n${unpartitioned.mkString("\n")}")
+    // every unpartitioned window must be the per-chunk TOTALS prefix
+    // (≤ nParts rows) — it reads the aggregate grouped on the chunk id;
+    // the row-level event stream may never appear under one. (The
+    // remaining SinglePartition exchanges are the min/max bounds scalar
+    // agg — also bounded.)
+    val offSummary = windowsOffBucketSummary(df, Seq("pid"))
+    assert(offSummary.isEmpty,
+      s"an unpartitioned window touches row-level data:\n${offSummary.mkString("\n")}")
   }
 
   test("train/val split plans exactly one exchange (the cluster window)") {
@@ -239,8 +265,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // via a bare Window.orderBy(value) over the per-distinct-value frame
     // (~linear in corpus size). The rewrite must window PARTITIONED BY
     // the monotone value bucket; any unpartitioned window may only sit
-    // above the per-bucket summary aggregate (its lines reference the
-    // bucket totals sa/sb/st, never the row-grain arm counts av/bv).
+    // above the per-bucket summary aggregate (grouped on bkt), never
+    // above the row-grain arm counts.
     for ((name, df) <- Seq(
         "stats_ks_test" -> graft.operators.Stats.statsKsTest(spark, sfSmoke),
         "stats_mann_whitney" -> graft.operators.Stats.statsMannWhitney(spark, sfSmoke),
@@ -248,15 +274,10 @@ class PlanAuditSpec extends SparkSpecBase {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("windowspecdefinition(bkt"),
         s"$name: the running-sum window must partition by bucket:\n$plan")
-      val unpartitioned = plan.linesIterator
-        .filter(l => l.contains("Window [") && "\\], \\[".r.findAllIn(l).length <= 1)
-        .toSeq
-      assert(unpartitioned.forall(l =>
-          (l.contains("sa") || l.contains("sb") || l.contains("st") ||
-           l.contains("sw")) &&
-          !l.contains("av") && !l.contains("bv") && !l.contains("wv")),
+      val offSummary = windowsOffBucketSummary(df, Seq("bkt"))
+      assert(offSummary.isEmpty,
         s"$name: an unpartitioned window touches the distinct-value frame:\n" +
-          unpartitioned.mkString("\n"))
+          offSummary.mkString("\n"))
     }
   }
 
@@ -343,21 +364,19 @@ class PlanAuditSpec extends SparkSpecBase {
   test("roc auc: midrank windows stay bucket-partitioned (no global rank)") {
     // the constant AUC group lets Catalyst drop the group key from the
     // offsets window's partition spec — the surviving unpartitioned
-    // window may only ride the BUCKET SUMMARY (its lines reference the
-    // per-bucket count sums sc, never the row-grain cnt), the same
+    // window may only ride the BUCKET SUMMARY (the aggregate grouped on
+    // the constant group and bkt, never the row-grain counts), the same
     // bounded single-partition point the ks/mann-whitney pin allows
-    val plan = graft.operators.Stats.statsRocAuc(spark, sfSmoke)
-      .queryExecution.executedPlan.toString
+    val df = graft.operators.Stats.statsRocAuc(spark, sfSmoke)
+    val plan = df.queryExecution.executedPlan.toString
     // Catalyst folds the constant group key out of the partition specs
     // entirely, so the per-value window must still partition by bucket
     assert(plan.contains("windowspecdefinition(bkt"),
       s"the per-value midrank window must partition by bucket:\n$plan")
-    val unpartitioned = plan.linesIterator
-      .filter(l => l.contains("Window [") && "\\], \\[".r.findAllIn(l).length <= 1)
-      .toSeq
-    assert(unpartitioned.forall(l => l.contains("sc") && !l.contains("cnt")),
+    val offSummary = windowsOffBucketSummary(df, Seq("all", "bkt"))
+    assert(offSummary.isEmpty,
       s"an unpartitioned window touches the distinct-value frame:\n" +
-        unpartitioned.mkString("\n"))
+        offSummary.mkString("\n"))
   }
 
   test("native as-of join plans as AsOfJoinExec over two clustered sorts") {

@@ -139,7 +139,7 @@ class PropertiesSpec extends SparkSpecBase {
     forSamples(doubles) { vs =>
       val sorted = vs.sorted
       val buckets = sorted.toDF("v")
-        .select(graft.operators.Stats.valueBucket(col("v")).as("b"))
+        .select(graft.operators.Windows.valueBucket(col("v")).as("b"))
         .collect().map(r => r.getLong(0))
       sorted.zip(buckets).sliding(2).foreach {
         case Seq((v1, b1), (v2, b2)) =>

@@ -26,26 +26,25 @@ class WindowWhitelistSpec extends SparkSpecBase {
     * are structural (calendar / fixed cardinality / LIMIT upstream),
     * not observed row counts. */
   private val whitelist: Map[String, String] = Map(
-    // -- distributedRunningSum phase 2: one row per shuffle partition
-    //    (the two-phase prefix-sum design; phase 1 is partitioned)
-    "event_peak_concurrency" -> "phase-2 prefix over per-partition totals",
-    "stats_auc_delong" -> "phase-2 prefix over per-partition totals (x2 arms)",
-    "text_heaps_law" -> "phase-2 prefix over per-partition totals (x2 passes)",
-    "win_distinct_running" -> "phase-2 prefix over per-partition totals",
-    // -- bucketed-midrank / bucket-prefix passes: one row per value
-    //    bucket, bucket count fixed by the operator, never data-sized
-    "agg_gini" -> "Lorenz prefix over fixed value buckets",
-    "agg_weighted_median" -> "global weight scalar + prefix over fixed buckets",
-    "pipeline_shuffle_order" -> "prefix over fixed hash buckets",
-    "stats_kruskal_wallis" -> "bucketed-midrank prefix (fixed buckets, x2 vars)",
-    "stats_ks_test" -> "bucketed ECDF prefix + two count scalars",
-    "stats_mann_whitney" -> "bucketed-midrank prefix (fixed buckets)",
-    "stats_roc_auc" -> "bucketed score prefix (fixed buckets)",
+    // -- Windows.bucketPrefix / priorBuckets: the offset window runs
+    //    over one row per bucket, bucket count fixed by the operator
+    //    (distributedRunningSum: nParts chunks), never data-sized
+    "event_peak_concurrency" -> "Windows.bucketPrefix over nParts chunks",
+    "stats_auc_delong" -> "Windows.bucketPrefix over nParts chunks (x2 arms)",
+    "text_heaps_law" -> "Windows.bucketPrefix over nParts chunks (x2 passes)",
+    "win_distinct_running" -> "Windows.bucketPrefix over nParts chunks",
+    "agg_gini" -> "Windows.priorBuckets over fixed value buckets",
+    "agg_weighted_median" -> "Windows.bucketPrefix over fixed value buckets",
+    "pipeline_shuffle_order" -> "Windows.bucketPrefix over fixed hash buckets",
+    "stats_kruskal_wallis" -> "Windows.bucketPrefix over fixed value buckets",
+    "stats_ks_test" -> "Windows.bucketPrefix over fixed value buckets",
+    "stats_mann_whitney" -> "Windows.priorBuckets over fixed value buckets",
+    "stats_roc_auc" -> "Windows.bucketPrefix over fixed score buckets",
     "stats_pr_auc" -> "threshold-bin prefix + scalars (fixed bins)",
     "model_lift_deciles" -> "decile frame: cum/total over fixed score bins",
     "pipeline_length_histogram" -> "length-bucket frame (fixed bucket grid)",
     "stats_brier_calibration" -> "calibration-bin frame (fixed bins)",
-    "win_pareto_abc" -> "value-bucket prefix (fixed buckets)",
+    "win_pareto_abc" -> "Windows.bucketPrefix over fixed value buckets",
     "stream_late_audit" -> "hour-bucket high-water-mark prefix (calendar)",
     // -- k-group / contingency-cell frames: rows = small categorical
     //    cardinality (|event_type|, digit, treatment), not data

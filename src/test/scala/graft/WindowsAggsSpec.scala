@@ -47,6 +47,54 @@ class WindowsAggsSpec extends SparkSpecBase {
     assert(math.abs(rows.last.getAs[Double]("running_sum") - total) < 0.01)
   }
 
+  test("bucketPrefix and priorBuckets equal a driver-side running sum") {
+    import spark.implicits._
+    // partition a spans negative, zero and positive buckets with ties
+    // inside a bucket (7.0, 7.0, 7.2); partition b is one row
+    val rows = Seq(
+      ("a", -50.0, 1L, 3L), ("a", -0.5, 2L, -2L), ("a", 0.0, 3L, 5L),
+      ("a", 0.0, 4L, 0L), ("a", 0.3, 5L, 7L), ("a", 7.0, 6L, 1L),
+      ("a", 7.0, 7L, 4L), ("a", 7.2, 8L, -6L), ("a", 120.0, 9L, 11L),
+      ("b", 2.5, 10L, 9L))
+    val df = rows.toDF("g", "v", "id", "x").withColumn("w", lit(1L))
+    // running order: v descending, id the unique tiebreak
+    val ord = Seq(col("v").desc, col("id").asc)
+    val naive = rows.groupBy(_._1).values.flatMap { part =>
+      val sorted = part.sortBy(r => (-r._2, r._3))
+      sorted.zipWithIndex.map { case (r, i) =>
+        r._3 -> (sorted.take(i).map(_._4).sum, i.toLong,
+                 part.map(_._4).sum, part.size.toLong)
+      }
+    }.toMap
+    def check(bucket: org.apache.spark.sql.Column): Unit = {
+      val got = Windows.bucketPrefix(df.withColumn("bkt", bucket), "bkt", ord,
+          Seq("x", "w"), partition = Seq("g"))
+        .select("id", "x_before", "w_before", "x_total", "w_total")
+        .collect().map(r => r.getLong(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+      assert(got == naive)
+    }
+    // negated so ascending buckets follow the descending order
+    val bkt = -Windows.valueBucket(col("v"))
+    assert(df.select(bkt).distinct().count() == 7)
+    check(bkt)
+    check(lit(0L))   // every row in one bucket
+    assert(Windows.bucketPrefix(df.filter(lit(false)).withColumn("bkt", bkt),
+      "bkt", ord, Seq("x")).count() == 0)
+    // priorBuckets on a bucket-grain frame: the sum of earlier buckets
+    val grain = df.withColumn("bkt", bkt).groupBy("g", "bkt")
+      .agg(sum(col("x")).as("sx"))
+    val prior = grain
+      .select(col("g"), col("bkt"), col("sx"),
+        Windows.priorBuckets(col("sx"), "bkt", "g").as("before"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(prior.length == 7)
+    prior.foreach { case (g, b, _, before) =>
+      assert(before == prior.filter(p => p._1 == g && p._2 < b).map(_._3).sum,
+        s"group $g bucket $b")
+    }
+  }
+
   test("topk per group: no customer has more than 3 rows, ranks are 1..k") {
     val df = Windows.winTopKPerGroup(spark, sfSmoke)
     val maxPer = df.groupBy("o_custkey").count().agg(max("count")).head().getLong(0)

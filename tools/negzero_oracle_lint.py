@@ -14,11 +14,9 @@ so the class is checked from the oracle direction too.
 Usage: python3 tools/negzero_oracle_lint.py <sfDir> <verifyOutDir>
 (needs only <verifyOutDir>/oracle_sql.json from a prior Verify run)
 """
-import json, math, struct, sys
-import duckdb
+import json, math, sys
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from oracle_check import corpus
 
 
 def is_neg_zero(v):
@@ -30,10 +28,7 @@ def is_neg_zero(v):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = corpus(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_bad = 0
     for name, sql in sorted(oracle.items()):

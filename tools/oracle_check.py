@@ -16,11 +16,31 @@ import duckdb
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def main(sf_dir, out_dir):
+
+def corpus(sf_dir, threads=None):
+    """A DuckDB connection with each corpus table registered as a view
+    over <sf_dir>/<table>.parquet, the way the oracle SQL names them."""
     con = duckdb.connect()
+    if threads is not None:
+        con.execute(f"SET threads={threads}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def canon(df):
+    """Driver-style canonical text of a result: columns sorted by name,
+    cells stringified (so array cells and NaNs sort deterministically),
+    rows fully re-sorted."""
+    df = df[sorted(df.columns)]
+    s = df.astype(str)
+    s = s.sort_values(list(s.columns), kind="mergesort").reset_index(drop=True)
+    return s.to_csv(index=False)
+
+
+def main(sf_dir, out_dir):
+    con = corpus(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):

@@ -14,26 +14,12 @@ Usage: python3 tools/oracle_stability.py <sfDir> <verifyOutDir>
 (needs only <verifyOutDir>/oracle_sql.json from a prior Verify run)
 """
 import json, sys
-import duckdb
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def canon(df):
-    df = df[sorted(df.columns)]
-    # stringify first so array cells and NaNs sort deterministically
-    s = df.astype(str)
-    s = s.sort_values(list(s.columns), kind="mergesort").reset_index(drop=True)
-    return s.to_csv(index=False)
+from oracle_check import canon, corpus
 
 
 def run_all(sf_dir, sql_map, threads):
-    con = duckdb.connect()
-    con.execute(f"SET threads={threads}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = corpus(sf_dir, threads)
     out = {}
     for name, sql in sql_map.items():
         try:

@@ -25,14 +25,12 @@ import sys
 
 import duckdb
 
+from oracle_check import canon
 
-def canon(con, parquet_glob):
-    df = con.execute(
-        f"SELECT * FROM read_parquet('{parquet_glob}')").fetchdf()
-    df = df[sorted(df.columns)]
-    s = df.astype(str)
-    s = s.sort_values(list(s.columns), kind="mergesort").reset_index(drop=True)
-    return s.to_csv(index=False)
+
+def read(con, parquet_glob):
+    return canon(con.execute(
+        f"SELECT * FROM read_parquet('{parquet_glob}')").fetchdf())
 
 
 def main(dir_a, dir_b):
@@ -47,8 +45,8 @@ def main(dir_a, dir_b):
     n_pass = n_fail = 0
     for name in sorted(names_a & names_b):
         try:
-            a = canon(con, f"{dir_a}/{name}/*.parquet")
-            b = canon(con, f"{dir_b}/{name}/*.parquet")
+            a = read(con, f"{dir_a}/{name}/*.parquet")
+            b = read(con, f"{dir_b}/{name}/*.parquet")
         except Exception as e:  # noqa: BLE001 - report and continue
             print(f"ERR  {name}: {e}")
             n_fail += 1
