@@ -69,24 +69,12 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // Local-iteration filter (unset in the driver's run), the Verify
-    // convention: comma-separated key list restricts the timed set.
-    // Banners loudly on stderr and fails fast on typo'd keys; and since
-    // the stderr banner is NOT captured by the driver's stdout
-    // tail-parse, the total line itself carries the timed-key count and
-    // an explicit "partial" flag (totalLine below) so a leaked env var
-    // naming VALID keys still cannot pass a shrunken board off as a
-    // full-board result.
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { keys =>
-      val unknown = keys.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        sys.error(s"GRAFT_BENCH_ONLY names unknown queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(s"[bench] GRAFT_BENCH_ONLY active: timing " +
-        s"${keys.size} of ${SparkEntry.queries.size} queries")
-    }
+    // GRAFT_BENCH_ONLY restricts the timed set. The stderr banner is NOT
+    // captured by the driver's stdout tail-parse, so the total line
+    // itself carries the timed-key count and an explicit "partial" flag
+    // (totalLine below): a leaked env var naming VALID keys still cannot
+    // pass a shrunken board off as a full-board result.
+    val only = SparkEntry.onlyKeys("GRAFT_BENCH_ONLY", "bench")
     val firstPass = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) => (name, fn, once(name, fn)) }

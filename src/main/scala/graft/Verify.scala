@@ -7,20 +7,8 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local(GraftSession.cpus())
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (unset in the driver's run): comma-separated
-    // key list restricts both the query dump and the oracle manifest.
-    // When active it banners loudly and fails fast on typo'd keys, so a
-    // leaked env var or bad key can never silently shrink the graded set.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { keys =>
-      val unknown = keys.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        sys.error(s"GRAFT_VERIFY_ONLY names unknown queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(s"[verify] GRAFT_VERIFY_ONLY active: keeping " +
-        s"${keys.size} of ${SparkEntry.queries.size} queries")
-    }
+    // GRAFT_VERIFY_ONLY restricts both the query dump and the oracle manifest
+    val only = SparkEntry.onlyKeys("GRAFT_VERIFY_ONLY", "verify")
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

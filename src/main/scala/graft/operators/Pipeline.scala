@@ -857,9 +857,8 @@ object Pipeline {
     * upsampled without letting any one dominate. τ = 0.5 is chosen
     * deliberately: p^0.5 = sqrt(p) is IEEE-correctly-rounded on BOTH
     * engines (a general pow(p, 0.7) is libm-dependent and could split
-    * in the last ulp). The normalizer Σ√p folds SEQUENTIALLY in lang
-    * order (sorted-array `aggregate` vs ORDER BY list_reduce) so its
-    * op order is pinned; the per-million allocation floors the scaled
+    * in the last ulp). The normalizer Σ√p is a [[Stats.orderedSum]]
+    * in lang order; the per-million allocation floors the scaled
     * weight (floor of identical doubles — boundary-safe).
     *
     * Scale shape: ONE lang-grain combinable count aggregate is the
@@ -873,10 +872,8 @@ object Pipeline {
       .groupBy(col("lang")).agg(sum(col("n_chars")).as("nc"))
     val withTot = c.crossJoin(broadcast(c.agg(sum(col("nc")).as("tot"))))
     val z = withTot
-      .agg(sort_array(collect_list(struct(col("lang"), col("nc"),
-        col("tot")))).as("arr"))
-      .select(expr(
-        "aggregate(arr, cast(0.0 as double), (acc, r) -> acc + sqrt(cast(r.nc as double) / r.tot))")
+      .agg(Stats.keyOrdered(col("lang"), col("nc"), col("tot")).as("arr"))
+      .select(Stats.orderedSum("arr", "sqrt(cast(r.nc as double) / r.tot)")
         .as("z"))
     withTot.crossJoin(broadcast(z))
       .select(col("lang"), col("nc").cast("bigint").as("n_chars_total"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -51,6 +51,25 @@ object Profiling {
       .orderBy("column_name")
   }
 
+  /** Equi-width bin `bin` of `v` over [`lo`, `hi`] in `n` bins, the
+    * max landing in the last. hi == lo (a constant column) would make
+    * the ratio NaN — and NaN orders as the LARGEST double in Spark,
+    * silently binning everything at n − 1 — so the degenerate case pins
+    * to bin 0 on both engines. */
+  private def equiWidthBin(n: Int): Column =
+    when(col("hi") === col("lo"), lit(0L))
+      .otherwise(least(floor(((col("v") - col("lo")) /
+        (col("hi") - col("lo"))) * n.toDouble), lit(n - 1.0)).cast("bigint"))
+      .as("bin")
+
+  /** The [`bin_lo`, `bin_hi`] edges of [[equiWidthBin]]'s `bin`, each
+    * rounded at 4. */
+  private def binEdges(n: Int): Seq[Column] = Seq(
+    round(col("lo") + col("bin") * (col("hi") - col("lo")) / n.toDouble, 4)
+      .as("bin_lo"),
+    round(col("lo") + (col("bin") + 1) * (col("hi") - col("lo")) / n.toDouble, 4)
+      .as("bin_hi"))
+
   /** Equi-width histogram of o_totalprice in 20 bins — profile_table's
     * companion: distribution shape, not just min/max. Scale shape: the
     * (min, max) bounds are one scalar aggregate broadcast back into the
@@ -65,24 +84,12 @@ object Profiling {
     val o = Tables.orders(s, sf)
     val bounds = o.agg(min(col("o_totalprice")).as("lo"),
                        max(col("o_totalprice")).as("hi"))
-    // hi == lo (constant column) would make the bin expression NaN —
-    // and NaN orders as the LARGEST double in Spark, silently binning
-    // everything at 19; pin the degenerate case to bin 0 on both engines
     o.select(col("o_totalprice").as("v"))
       .crossJoin(broadcast(bounds))
-      .select(when(col("hi") === col("lo"), lit(0L))
-                .otherwise(least(floor(((col("v") - col("lo")) /
-                  (col("hi") - col("lo"))) * 20.0), lit(19.0)).cast("bigint"))
-                .as("bin"),
-              col("lo"), col("hi"))
+      .select(equiWidthBin(20), col("lo"), col("hi"))
       .groupBy(col("bin"), col("lo"), col("hi"))
       .agg(count(lit(1)).as("n"))
-      .select(col("bin"),
-              round(col("lo") + col("bin") * (col("hi") - col("lo")) / 20.0, 4)
-                .as("bin_lo"),
-              round(col("lo") + (col("bin") + 1) * (col("hi") - col("lo")) / 20.0, 4)
-                .as("bin_hi"),
-              col("n"))
+      .select(col("bin") +: binEdges(20) :+ col("n"): _*)
       .orderBy("bin")
   }
 
@@ -207,21 +214,12 @@ object Profiling {
                        count(lit(1)).as("n_total"))
     e.select(hour(col("ts")).cast("bigint").as("hh"), col("value").as("v"))
       .crossJoin(broadcast(bounds))
-      .select(col("hh"),
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(floor(((col("v") - col("lo")) /
-            (col("hi") - col("lo"))) * 10.0), lit(9.0)).cast("bigint"))
-          .as("bin"),
-        col("lo"), col("hi"), col("n_total"))
+      .select(col("hh"), equiWidthBin(10), col("lo"), col("hi"),
+        col("n_total"))
       .groupBy(col("hh"), col("bin"), col("lo"), col("hi"), col("n_total"))
       .agg(count(lit(1)).as("n"))
-      .select(col("hh"), col("bin"),
-        round(col("lo") + col("bin") * (col("hi") - col("lo")) / 10.0, 4)
-          .as("bin_lo"),
-        round(col("lo") + (col("bin") + 1) * (col("hi") - col("lo")) / 10.0, 4)
-          .as("bin_hi"),
-        col("n"),
-        round(col("n") / col("n_total"), 6).as("share"))
+      .select(Seq(col("hh"), col("bin")) ++ binEdges(10) ++ Seq(col("n"),
+        round(col("n") / col("n_total"), 6).as("share")): _*)
       .orderBy("hh", "bin")
   }
 
@@ -249,11 +247,7 @@ object Profiling {
     val eps = 1e-6
     d.select(col("n_chars").cast("double").as("v"), isRef.as("is_ref"))
       .crossJoin(broadcast(bounds))
-      .select(
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(floor(((col("v") - col("lo")) /
-            (col("hi") - col("lo"))) * 10.0), lit(9.0)).cast("bigint"))
-          .as("bin"),
+      .select(equiWidthBin(10),
         col("is_ref"), col("n_ref_total"), col("n_cur_total"))
       .groupBy(col("bin"), col("n_ref_total"), col("n_cur_total"))
       .agg(sum(col("is_ref").cast("long")).as("n_ref"),

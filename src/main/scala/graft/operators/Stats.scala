@@ -21,6 +21,25 @@ object Stats {
     substring(md5(col("user_id").cast("string").cast("binary")), 1, 1)
       .isin("0", "1", "2", "3", "4", "5", "6", "7")
 
+  /** A group's rows as an array sorted on `key` — the input of
+    * [[orderedSum]]. `sort_array` compares whole structs, so `fields`
+    * after the key break key ties. */
+  private[graft] def keyOrdered(key: Column, fields: Column*): Column =
+    sort_array(collect_list(struct(key +: fields: _*)))
+
+  /** The one order-pinned double sum: a left fold of `term` over the
+    * array `arr` in array order from a +0.0 seed, `r` naming the
+    * element inside `term`. A plain SUM over doubles adds in whatever
+    * order the engine's partial aggregates arrive, so its last bits
+    * move with the plan and the thread count (SURVEY §0.3); over a
+    * [[keyOrdered]] array the IEEE op sequence is fixed. The DuckDB twin
+    * is `list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(… ORDER BY
+    * key)), …)`, which replays the same additions. A SQL-string lambda,
+    * not `functions.aggregate`, so the lambda variable names (and the
+    * plan text) are the same on every run. */
+  private[graft] def orderedSum(arr: String, term: String): Column =
+    expr(s"aggregate($arr, cast(0.0 as double), (acc, r) -> acc + $term)")
+
   /** The treatment midpoint of `ev`'s day column `d` — d0 + (d1 − d0)
     * div 2 over the corpus span — as a broadcast one-row frame `mid`.
     * Days before it are the pre period, the rest the post period. */
@@ -626,8 +645,8 @@ object Stats {
     *
     * Determinism: all propensity moments are exact longs/decimals; the
     * 3×3 Cramer solve and the score are round-6 arithmetic; per-stratum
-    * means are decimal-sum ratios; the ≤5-term ATT reduction is a
-    * seeded fold in stratum order.
+    * means are decimal-sum ratios; the ≤5-term ATT reduction is an
+    * [[orderedSum]] in stratum order.
     *
     * Scale shape: one user-grain aggregate, one broadcast moment/
     * cutpoint pass, one stratum rollup — no joins beyond broadcast
@@ -702,11 +721,11 @@ object Stats {
         col("mean_y_control"), 6))
     val att = broadcast(strata
       .groupBy()
-      .agg(sum(col("nt")).as("tot_t"), sort_array(collect_list(
-        struct(col("stratum"), col("nt"), col("diff")))).as("s"))
-      .select(round(expr("aggregate(s, cast(0.0 as double)," +
-        " (acc, r) -> acc + cast(r.nt as double) / cast(tot_t as double)" +
-        " * r.diff)"), 6).as("att")))
+      .agg(sum(col("nt")).as("tot_t"),
+        keyOrdered(col("stratum"), col("nt"), col("diff")).as("s"))
+      .select(round(orderedSum("s",
+        "cast(r.nt as double) / cast(tot_t as double) * r.diff"), 6)
+        .as("att")))
     strata.crossJoin(att)
       .select(col("stratum"), col("nt").cast("bigint").as("n_treated"),
         col("nc").cast("bigint").as("n_control"),
@@ -2102,7 +2121,7 @@ object Stats {
     *
     * Determinism: values ride integer 1e-4 units so every group moment
     * is exact; per-group SSW is an exact-ratio double and the k-term
-    * pooled sum is a seeded fold in type order; means round at 6
+    * pooled sum is an [[orderedSum]] in type order; means round at 6
     * before the pairwise arithmetic.
     *
     * Scale shape: one (type) moment aggregate off the scan, a ≤ k-row
@@ -2125,10 +2144,8 @@ object Stats {
     val mse = broadcast(g
       .groupBy()
       .agg(sum(col("n")).as("bign"), count(lit(1)).as("k"),
-        sort_array(collect_list(struct(col("event_type"), col("ssw"))))
-          .as("s"))
-      .select(round(expr("aggregate(s, cast(0.0 as double)," +
-          " (acc, r) -> acc + r.ssw)") /
+        keyOrdered(col("event_type"), col("ssw")).as("s"))
+      .select(round(orderedSum("s", "r.ssw") /
         nullif((col("bign") - col("k")).cast("double"), lit(0.0d)) /
         lit(100000000.0d), 6).as("mse")))
     val a = g.select(col("event_type").as("t1"), col("n").as("n1"),
@@ -2164,23 +2181,21 @@ object Stats {
     * integers (≡ the Mann–Whitney identity) and only the final
     * variance/SE/z divide in round-6 doubles.
     *
-    * Scale shape: one (score, class) count aggregate, TWO
-    * [[Windows.distributedRunningSum]] prefixes over the distinct-score
-    * frame (bucketed — never a global window), one moment rollup. */
+    * Scale shape: one (score, class) count aggregate, one
+    * [[Windows.distributedRunningSum]] carrying both class prefixes over
+    * the distinct-score frame (bucketed — never a global window), one
+    * moment rollup. */
   def statsAucDelong(s: SparkSession, sf: String): DataFrame = {
     val byScore = Tables.events(s, sf)
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .groupBy(round(col("value"), 4).as("sc"))
       .agg(sum((col("event_type") === "purchase").cast("long")).as("npos"),
            sum((col("event_type") =!= "purchase").cast("long")).as("nneg"))
-    val negRun = Windows.distributedRunningSum(byScore, "sc", "nneg", 8)
-      .withColumnRenamed("running_sum", "cneg")
-    val bothRun = Windows.distributedRunningSum(negRun, "sc", "npos", 8)
-      .withColumnRenamed("running_sum", "cpos")
+    val bothRun = Windows.distributedRunningSum(byScore, "sc", "nneg", "npos")
       // w = 2*(#opposite strictly below) + (#opposite tied) — integers
       .select(col("sc"), col("npos"), col("nneg"),
-        (lit(2L) * (col("cneg") - col("nneg")) + col("nneg")).as("wp"),
-        (lit(2L) * (col("cpos") - col("npos")) + col("npos")).as("wn"))
+        (lit(2L) * (col("running_nneg") - col("nneg")) + col("nneg")).as("wp"),
+        (lit(2L) * (col("running_npos") - col("npos")) + col("npos")).as("wn"))
     def dsq(c: String) =
       sum(col(c).cast("decimal(19,0)") * col(c).cast("decimal(19,0)") *
         col(if (c == "wp") "npos" else "nneg").cast("decimal(19,0)"))
@@ -2381,18 +2396,18 @@ object Stats {
     * series — the EWMA/CUSUM bound again, no global window anywhere.
     */
   def timeseriesStlDecompose(s: SparkSession, sf: String): DataFrame = {
-    // Every mean here is an ORDERED SEQUENTIAL FOLD, not a bare window
-    // avg (r11 stability find): the unordered partition avg behind the
+    // Every mean here is an `orderedSum`, not a bare window avg
+    // (r11 stability find): the unordered partition avg behind the
     // seasonal term summed in physical row order, and the (view,
     // Friday) cell at sf0.001 sits EXACTLY on a round-6 half-boundary
     // — DuckDB's parallel scan flipped it between …285 and …286 run to
     // run (caught by tools/oracle_stability.py, which re-runs every
-    // oracle at 3 thread counts). Folding in (d) / (dow) order — the
-    // eventMarkovStationary discipline — pins the IEEE op sequence on
-    // both engines: trend folds the 7-day frame in frame order,
-    // the per-dow seasonal sum folds by day, and the centering mean
-    // folds the dow-grain (sraw·n_days) products in Sunday-first dow
-    // order (both engines number days Sunday-first ascending).
+    // oracle at 3 thread counts). Folding in (d) / (dow) order pins
+    // the IEEE op sequence on both engines: trend folds the 7-day
+    // frame in frame order, the per-dow seasonal sum folds by day, and
+    // the centering mean folds the dow-grain (sraw·n_days) products in
+    // Sunday-first dow order (both engines number days Sunday-first
+    // ascending).
     val daily = DailyFrames.daily(s, sf)
       .filter(col("event_type").isNotNull)
       .select(col("event_type"), col("d"), col("x4").as("x"))
@@ -2402,23 +2417,22 @@ object Stats {
       .withColumn("nrows", count(lit(1)).over(w7))
       .withColumn("farr", collect_list(col("x")).over(w7))
       .withColumn("trend", when(col("nrows") === 7 && size(col("farr")) > 0,
-        round(expr("aggregate(farr, 0.0d, (a, v) -> a + v)") /
+        round(orderedSum("farr", "r") /
           size(col("farr")), 6)))
       .withColumn("detr", col("x") - col("trend"))
       .withColumn("dow", dayofweek(col("d")))
       .drop("nrows", "farr")
     val sdow = base.groupBy(col("event_type"), col("dow"))
       .agg(
-        expr("aggregate(sort_array(collect_list(if(isnotnull(detr), " +
-          "struct(d, detr), null))), 0.0d, (a, r) -> a + r.detr)").as("ssum"),
+        orderedSum("sort_array(collect_list(if(isnotnull(detr), " +
+          "struct(d, detr), null)))", "r.detr").as("ssum"),
         count(col("detr")).as("m"),
         count(lit(1)).as("nd"))
       .withColumn("sraw", when(col("m") > 0, col("ssum") / col("m")))
     val smean = sdow.groupBy(col("event_type"))
       .agg(
-        expr("aggregate(sort_array(collect_list(if(isnotnull(sraw), " +
-          "struct(dow, sraw, nd), null))), 0.0d, (a, r) -> a + r.sraw * r.nd)")
-          .as("wsum"),
+        orderedSum("sort_array(collect_list(if(isnotnull(sraw), " +
+          "struct(dow, sraw, nd), null)))", "r.sraw * r.nd").as("wsum"),
         sum(when(col("sraw").isNotNull, col("nd")).otherwise(lit(0L)))
           .as("wn"))
       .withColumn("mean_all", when(col("wn") > 0, col("wsum") / col("wn")))
@@ -2634,12 +2648,10 @@ object Stats {
     * row totals and the 3-step π per type.
     *
     * Determinism: P's entries are exact integer-count ratios; each
-    * π update is a ≤|types|-term dot product folded SEQUENTIALLY in
-    * from-type order (sorted collect_list + `aggregate` lambda on
-    * Spark, ORDER BY list + list_reduce on DuckDB) — a windowed sum
-    * would NOT give this guarantee (DuckDB's segment-tree window
-    * aggregation may re-associate the additions), the explicit fold
-    * does.
+    * π update is a ≤|types|-term dot product, an [[orderedSum]] in
+    * from-type order — a windowed sum would NOT give this guarantee
+    * (DuckDB's segment-tree window aggregation may re-associate the
+    * additions), the explicit fold does.
     *
     * Scale shape: the data-sized work is ONE (from, to) pair count off
     * the per-user lag window (user-grain parallelism, see
@@ -2659,19 +2671,12 @@ object Stats {
     var pi = rowTot.crossJoin(broadcast(nTypes))
       .select(col("from_t").as("t"), (lit(1.0) / col("k")).as("pi"))
     for (_ <- 1 to 3) {
-      // π_j = Σ_i π_i·P_ij as an explicit left fold over the terms
-      // sorted by from-type: seed 0.0, one addition per term, the
-      // literal op order both engines replay (a plain groupBy sum is
-      // order-free math on paper but order-DEPENDENT doubles in
-      // practice; a windowed prefix sum may be tree-re-associated)
+      // π_j = Σ_i π_i·P_ij over the terms sorted by from-type
       pi = p.join(pi.withColumnRenamed("t", "from_t"), Seq("from_t"))
         .select(col("to_t"), col("from_t"), (col("pi") * col("p")).as("term"))
         .groupBy(col("to_t"))
-        .agg(sort_array(collect_list(struct(col("from_t"), col("term"))))
-          .as("s"))
-        .select(col("to_t").as("t"),
-          expr("aggregate(s, cast(0.0 as double), (acc, r) -> acc + r.term)")
-            .as("pi"))
+        .agg(keyOrdered(col("from_t"), col("term")).as("s"))
+        .select(col("to_t").as("t"), orderedSum("s", "r.term").as("pi"))
     }
     rowTot.select(col("from_t").as("t"), col("tot").cast("bigint")
         .as("n_transitions_out"))
@@ -2688,10 +2693,8 @@ object Stats {
     * [[Windows.bucketPrefix]] over the per-distinct-value totals:
     * midrank = tv_before + (tv+1)/2. Per-type
     * rank sums R_j are exact (half-integer products ≪ 2⁵³, order-free);
-    * the one cross-group reduction Σ R_j²/n_j folds SEQUENTIALLY in
-    * event-type order on both engines (sorted array + `aggregate`
-    * lambda vs ORDER BY list + list_reduce) so its IEEE op order is
-    * pinned. H carries the standard tie correction
+    * the one cross-group reduction Σ R_j²/n_j is an [[orderedSum]] in
+    * event-type order. H carries the standard tie correction
     * 1 − Σ(t³−t)/(n³−n).
     *
     * Scale shape: a (value, type) aggregate + a value-grain aggregate
@@ -2711,32 +2714,35 @@ object Stats {
       .select(col("value"), col("tv"),
         (col("tv_before").cast("double") +
          (col("tv") + 1).cast("double") / 2).as("midrank"))
-    val tot = mid.agg(
+    // off `v`, not `mid`: the same rows and tv, without planning the
+    // prefix windows and their join-back a second time
+    val tot = v.agg(
       sum(col("tv") * col("tv") * col("tv") - col("tv")).as("ties"),
       sum(col("tv")).as("n"))
     val grp = vt.join(mid.select(col("value"), col("midrank")), Seq("value"))
       .groupBy(col("event_type"))
       .agg(sum(col("c")).as("nj"),
            sum(col("c").cast("double") * col("midrank")).as("rj"))
-    val h = grp
-      .agg(sort_array(collect_list(struct(col("event_type"), col("nj"),
-             col("rj")))).as("g"),
+    // the per-type rows come back out of the folded array, so grp (and
+    // the midrank prefix under it) is planned once
+    grp
+      .agg(keyOrdered(col("event_type"), col("nj"), col("rj")).as("g"),
            count(lit(1)).as("k"))
       .crossJoin(broadcast(tot))
-      .select(col("k"),
-        expr("aggregate(g, cast(0.0 as double), (acc, r) -> acc + r.rj * r.rj / r.nj)")
-          .as("srn"),
-        col("ties"), col("n"))
-      .select(col("k").cast("bigint").as("k_groups"),
+      .select(col("g"), col("k"),
+        orderedSum("g", "r.rj * r.rj / r.nj").as("srn"), col("ties"), col("n"))
+      .select(explode(col("g")).as("r"),
+        col("k").cast("bigint").as("k_groups"),
         round((lit(12.0) / (col("n").cast("double") * (col("n") + 1)) *
                  col("srn") - lit(3.0) * (col("n").cast("double") + 1)) /
               (lit(1.0) - col("ties").cast("double") /
                  (col("n").cast("double") * col("n") * col("n") - col("n"))),
           6).as("h_stat"))
-    grp.select(col("event_type"), col("nj").cast("bigint").as("n_j"),
-        round(col("rj"), 4).as("rank_sum"),
-        round(col("rj") / col("nj"), 6).as("mean_rank"))
-      .crossJoin(broadcast(h))
+      .select(col("r.event_type").as("event_type"),
+        col("r.nj").cast("bigint").as("n_j"),
+        round(col("r.rj"), 4).as("rank_sum"),
+        round(col("r.rj") / col("r.nj"), 6).as("mean_rank"),
+        col("k_groups"), col("h_stat"))
       .orderBy("event_type")
   }
 
@@ -2750,10 +2756,8 @@ object Stats {
     *
     * Determinism: per-group n/m/v come from the same single-pass
     * moments as `statsAnova` (established engine parity); every
-    * cross-group reduction (Σw, Σwm, A, B) folds SEQUENTIALLY in
-    * event-type order via the sorted-array `aggregate` lambda — the
-    * markov/kruskal idiom — so no double sum depends on engine
-    * aggregation order.
+    * cross-group reduction (Σw, Σwm, A, B) is an [[orderedSum]] in
+    * event-type order.
     *
     * Scale shape: one map-side-combinable moments aggregate is the only
     * data-sized work; the folds run over a k ≤ |types| element array.
@@ -2764,18 +2768,15 @@ object Stats {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), avg(col("value")).as("m"),
            var_samp(col("value")).as("v"))
-    g.agg(sort_array(collect_list(struct(col("event_type"), col("n"),
-            col("m"), col("v")))).as("arr"),
+    g.agg(keyOrdered(col("event_type"), col("n"), col("m"), col("v"))
+            .as("arr"),
           count(lit(1)).as("k"))
-      .withColumn("sw",
-        expr("aggregate(arr, cast(0.0 as double), (acc, r) -> acc + r.n / r.v)"))
-      .withColumn("swm",
-        expr("aggregate(arr, cast(0.0 as double), (acc, r) -> acc + r.n / r.v * r.m)"))
+      .withColumn("sw", orderedSum("arr", "r.n / r.v"))
+      .withColumn("swm", orderedSum("arr", "r.n / r.v * r.m"))
       .withColumn("mw", col("swm") / col("sw"))
-      .withColumn("a",
-        expr("aggregate(arr, cast(0.0 as double), (acc, r) -> acc + r.n / r.v * (r.m - mw) * (r.m - mw))"))
-      .withColumn("b",
-        expr("aggregate(arr, cast(0.0 as double), (acc, r) -> acc + (1.0d - r.n / r.v / sw) * (1.0d - r.n / r.v / sw) / (r.n - 1))"))
+      .withColumn("a", orderedSum("arr", "r.n / r.v * (r.m - mw) * (r.m - mw)"))
+      .withColumn("b", orderedSum("arr",
+        "(1.0d - r.n / r.v / sw) * (1.0d - r.n / r.v / sw) / (r.n - 1)"))
       .select(col("k").cast("bigint").as("k_groups"),
         round(col("mw"), 6).as("weighted_grand_mean"),
         round(col("a") / (col("k") - 1) /
@@ -3357,11 +3358,11 @@ object Stats {
       .unionAll(sessions
         .select((unix_micros(col("en")) + 1).as("k"), lit(-1L).as("delta")))
       .groupBy(col("k")).agg(sum(col("delta")).as("net"))
-    val peaks = Windows.distributedRunningSum(edges, "k", "net", 8)
+    val peaks = Windows.distributedRunningSum(edges, "k", "net")
       .select(to_date(expr("timestamp_micros(k)")).as("d"),
-              col("running_sum"))
+              col("running_net"))
       .groupBy(col("d"))
-      .agg(max(col("running_sum")).cast("bigint").as("peak_concurrent"))
+      .agg(max(col("running_net")).cast("bigint").as("peak_concurrent"))
     val started = sessions
       .groupBy(to_date(col("st")).as("d"))
       .agg(count(lit(1)).cast("bigint").as("n_started"))
@@ -3558,7 +3559,7 @@ object Stats {
       .groupBy(col("l_partkey"), to_date(col("l_shipdate")).as("d"))
       .agg(sum(col("l_quantity")).cast("double").as("x"))
       .groupBy(col("l_partkey"))
-      .agg(sort_array(collect_list(struct(col("d"), col("x")))).as("s"))
+      .agg(keyOrdered(col("d"), col("x")).as("s"))
       .select(col("l_partkey"), size(col("s")).cast("bigint")
           .as("n_demand_days"),
         expr("""aggregate(s,
@@ -3620,7 +3621,7 @@ object Stats {
       .groupBy(col("event_type"))
       .agg(max(col("n")).as("n"), max(col("a")).as("a"),
            max(col("b")).as("b"),
-           sort_array(collect_list(struct(col("t"), col("th2")))).as("s"))
+           keyOrdered(col("t"), col("th2")).as("s"))
       .select(col("event_type"), col("n").cast("bigint").as("n_days"),
         col("a").as("intercept"), col("b").as("slope"),
         round(expr("""aggregate(s, cast(null as double),
@@ -3888,8 +3889,8 @@ object Stats {
     * scaled through by m (D_j = m·ΣX_{≤j} − j·S_b — exact bigints, so
     * the running-window sum is reassociation-proof where a float
     * prefix would be engine-dependent), R and S recovered as single
-    * exact-ratio doubles, per-block R/S rounded at 6 → DECIMAL sums
-    * for the cross-block mean. Only log₂ touches libm, on round-6
+    * exact-ratio doubles, and the cross-block mean of R/S an
+    * [[orderedSum]] in block order. Only log₂ touches libm, on round-6
     * agreed inputs.
     *
     * Scale shape: data-sized work is the shared daily rollup; block
@@ -3946,10 +3947,9 @@ object Stats {
       .filter(col("rs").isNotNull)
     val perScale = perBlock.groupBy(col("event_type"), col("m"))
       .agg(count(lit(1)).as("nb"),
-        sort_array(collect_list(struct(col("blk"), col("rs")))).as("s"))
+        keyOrdered(col("blk"), col("rs")).as("s"))
       .select(col("event_type"), col("m"), col("nb"),
-        round(expr("aggregate(s, cast(0.0 as double)," +
-          " (acc, r) -> acc + r.rs)") / col("nb"), 6).as("mean_rs"))
+        round(orderedSum("s", "r.rs") / col("nb"), 6).as("mean_rs"))
     perScale.groupBy(col("event_type"))
       .agg(
         max(when(col("m") === 7L, col("nb"))).cast("bigint").as("n_blocks_7"),
@@ -3969,8 +3969,7 @@ object Stats {
     * give P(reach purchase within 4 steps | start = i) — the
     * conversion-modeling quantity [[eventMarkovStationary]]'s
     * long-run π cannot answer. Exact-ratio transition rows; each
-    * iteration's reduction is the seeded to-type-ordered fold (the
-    * markov discipline).
+    * iteration's reduction is an [[orderedSum]] in to-type order.
     *
     * Scale shape: the data-sized work is `transitionCounts`' per-user
     * lag window + (from, to) count aggregate; iterations run on the ≤ k²
@@ -3991,12 +3990,10 @@ object Stats {
       a = p.join(a.withColumnRenamed("t", "to_t"), Seq("to_t"))
         .select(col("from_t"), col("to_t"), (col("p") * col("a")).as("term"))
         .groupBy(col("from_t"))
-        .agg(sort_array(collect_list(struct(col("to_t"), col("term"))))
-          .as("s"))
+        .agg(keyOrdered(col("to_t"), col("term")).as("s"))
         .select(col("from_t").as("t"),
-          when(col("from_t") === "purchase", lit(1.0d)).otherwise(
-            expr("aggregate(s, cast(0.0 as double)," +
-              " (acc, r) -> acc + r.term)")).as("a"))
+          when(col("from_t") === "purchase", lit(1.0d))
+            .otherwise(orderedSum("s", "r.term")).as("a"))
     }
     rowTot.select(col("from_t").as("t"),
         col("tot").cast("bigint").as("n_transitions_out"))
@@ -4069,9 +4066,8 @@ object Stats {
     * EMPIRICAL from-state distribution (exact count ratios — no power
     * iteration, so the whole statistic is replayable arithmetic). The
     * per-state conditional entropy Hᵢ is reported per row; the inner
-    * and outer reductions are explicit seeded folds in to-type /
-    * from-type order (the markov discipline — a bare float SUM is
-    * order-dependent).
+    * and outer reductions are [[orderedSum]]s in to-type / from-type
+    * order.
     *
     * Scale shape: the data-sized work is `transitionCounts`' per-user
     * lag window + (from, to) count aggregate; every fold runs over
@@ -4085,10 +4081,9 @@ object Stats {
       .select(col("from_t"), col("to_t"),
         (col("c").cast("double") / col("tot").cast("double")).as("p"))
       .groupBy(col("from_t"))
-      .agg(sort_array(collect_list(struct(col("to_t"), col("p")))).as("s"))
+      .agg(keyOrdered(col("to_t"), col("p")).as("s"))
       .select(col("from_t"),
-        expr("aggregate(s, cast(0.0 as double)," +
-          " (acc, r) -> acc - r.p * log2(r.p))").as("h_i"))
+        orderedSum("s", "-(r.p * log2(r.p))").as("h_i"))
     val perState = rowTot.join(hCond, Seq("from_t"))
       .crossJoin(grand)
       .select(col("from_t"), col("tot"),
@@ -4096,10 +4091,8 @@ object Stats {
         col("h_i"))
     val rate = perState
       .groupBy()
-      .agg(sort_array(collect_list(struct(col("from_t"), col("pi"),
-        col("h_i")))).as("s"))
-      .select(expr("aggregate(s, cast(0.0 as double)," +
-        " (acc, r) -> acc + r.pi * r.h_i)").as("hr"))
+      .agg(keyOrdered(col("from_t"), col("pi"), col("h_i")).as("s"))
+      .select(orderedSum("s", "r.pi * r.h_i").as("hr"))
     perState.crossJoin(broadcast(rate))
       .select(col("from_t").as("event_type"),
         col("tot").cast("bigint").as("n_transitions_out"),

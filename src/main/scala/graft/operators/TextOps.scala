@@ -1042,12 +1042,13 @@ object TextOps {
     * counts via each word's min first-doc — distinct-so-far without
     * set state, the win_distinct_running decomposition); the only
     * float reduction is the 4-moment OLS over the ≤ n/50 checkpoint
-    * rows, run as seeded ordered folds (one per moment — a struct
-    * accumulator is unsafe on the oracle engine).
+    * rows, one [[Stats.orderedSum]] in doc_id order per moment (a
+    * struct accumulator is unsafe on the oracle engine).
     *
     * Scale shape: word-grain first-doc aggregate + doc-grain rollup,
-    * both via [[Windows.distributedRunningSum]] (range-bucketed
-    * prefix, never a global-window sort over the doc frame). */
+    * both cumulatives from one [[Windows.distributedRunningSum]]
+    * (range-bucketed prefix, never a global-window sort over the doc
+    * frame). */
   def textHeapsLaw(s: SparkSession, sf: String): DataFrame = {
     val words = Tables.documents(s, sf)
       .filter(col("text").isNotNull)
@@ -1058,23 +1059,21 @@ object TextOps {
     val base = toks.join(newv, Seq("doc_id"), "left")
       .select(col("doc_id"), col("toks"),
         coalesce(col("newv"), lit(0L)).as("newv"))
-    val ct = Windows.distributedRunningSum(base, "doc_id", "toks", 8)
-      .select(col("doc_id"), col("running_sum").as("ct"))
-    val cv = Windows.distributedRunningSum(base, "doc_id", "newv", 8)
-      .select(col("doc_id"), col("running_sum").as("cv"))
-    val samples = ct.join(cv, Seq("doc_id"))
+    val samples = Windows.distributedRunningSum(base, "doc_id", "toks", "newv")
+      .select(col("doc_id"), col("running_toks").as("ct"),
+        col("running_newv").as("cv"))
       .filter(col("doc_id") % 50 === 0 && col("ct") > 0L && col("cv") > 0L)
       .select(col("doc_id"), log2(col("ct").cast("double")).as("lx"),
         log2(col("cv").cast("double")).as("ly"))
-    def fold(term: String) =
-      expr(s"aggregate(s, cast(0.0 as double), (acc, r) -> acc + $term)")
     val fit = samples
       .groupBy()
-      .agg(count(lit(1)).as("n"), sort_array(collect_list(
-        struct(col("doc_id"), col("lx"), col("ly")))).as("s"))
+      .agg(count(lit(1)).as("n"),
+        Stats.keyOrdered(col("doc_id"), col("lx"), col("ly")).as("s"))
       .select(col("n"),
-        fold("r.lx").as("sx"), fold("r.ly").as("sy"),
-        fold("r.lx * r.lx").as("sxx"), fold("r.lx * r.ly").as("sxy"))
+        Stats.orderedSum("s", "r.lx").as("sx"),
+        Stats.orderedSum("s", "r.ly").as("sy"),
+        Stats.orderedSum("s", "r.lx * r.lx").as("sxx"),
+        Stats.orderedSum("s", "r.lx * r.ly").as("sxy"))
       .withColumn("beta", round(
         (col("n") * col("sxy") - col("sx") * col("sy")) /
           nullif(col("n") * col("sxx") - col("sx") * col("sx"),

@@ -175,14 +175,18 @@ object Windows {
         sums.map(c => col(s"${c}_total")): _*)
   }
 
-  /** Global running aggregate WITHOUT a single-partition window — the
-    * distributed prefix-sum, adding `running_sum` (inclusive) to `df`
-    * over `valueCol` in `orderCol` order: [[bucketPrefix]] with `nParts`
-    * equal-width chunks of the order key as the bucket. A bare
-    * `Window.orderBy(k)` moves the whole input through one task (Spark
-    * even warns). */
+  /** Chunk count of [[distributedRunningSum]]: fixes the size of its one
+    * unpartitioned (chunk-offset) window. */
+  private val nParts = 8
+
+  /** Global running sums WITHOUT a single-partition window — the
+    * distributed prefix sum, adding `running_<c>` (inclusive) to `df`
+    * for each `c` in `valueCols`, in `orderCol` order: one
+    * [[bucketPrefix]] with [[nParts]] equal-width chunks of the order
+    * key as the bucket. A bare `Window.orderBy(k)` moves the whole
+    * input through one task (Spark even warns). */
   def distributedRunningSum(df: DataFrame, orderCol: String,
-                            valueCol: String, nParts: Int): DataFrame = {
+                            valueCols: String*): DataFrame = {
     // The chunk id must be a PURE FUNCTION OF THE KEY VALUE, never of
     // physical placement: the chunked frame feeds two plan branches
     // (local sums, chunk totals), and spark_partition_id() over a range
@@ -202,9 +206,9 @@ object Windows {
             (col(orderCol).cast("double") - col("lo")) * nParts /
               greatest(col("hi") - col("lo") + 1d, lit(1d))).cast("int")))))
       .drop("lo", "hi")
-    bucketPrefix(bucketed, "pid", Seq(col(orderCol)), Seq(valueCol))
-      .select(df.columns.map(col) :+
-        (col(s"${valueCol}_before") + col(valueCol)).as("running_sum"): _*)
+    bucketPrefix(bucketed, "pid", Seq(col(orderCol)), valueCols)
+      .select(df.columns.map(col) ++ valueCols.map(c =>
+        (col(s"${c}_before") + col(c)).as(s"running_$c")): _*)
   }
 
   /** Running DISTINCT count over a growing global frame. Spark disallows
@@ -226,9 +230,9 @@ object Windows {
         (row_number().over(Window.partitionBy(col("user_id"))
            .orderBy(col("event_id"))) === 1 &&
          col("user_id").isNotNull).cast("long"))
-    distributedRunningSum(marked, "event_id", "is_first", 8)
+    distributedRunningSum(marked, "event_id", "is_first")
       .select(col("event_id"),
-              col("running_sum").cast("bigint").as("distinct_users_so_far"))
+              col("running_is_first").cast("bigint").as("distinct_users_so_far"))
       .orderBy("event_id")
   }
 

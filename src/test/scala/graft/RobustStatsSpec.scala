@@ -28,6 +28,30 @@ class RobustStatsSpec extends SparkSpecBase {
     }
   }
 
+  test("orderedSum folds a keyOrdered array in key order, not arrival " +
+      "order, bit for bit") {
+    import spark.implicits._
+    // in key order 1e16 + 1.0 rounds back to 1e16 and -1e16 cancels it
+    // to 0.0; the same terms arriving with 1.0 last sum to 1.0
+    val byKey = Seq(1L -> 1e16, 2L -> 1.0, 3L -> -1e16)
+    val want = byKey.map(_._2).foldLeft(0.0)(_ + _)
+    assert(want == 0.0)
+    val feed = for (g <- Seq("a", "b"); i <- Seq(2, 0, 1))
+      yield (g, byKey(i)._1, byKey(i)._2)
+    assert(feed.filter(_._1 == "a").map(_._3).foldLeft(0.0)(_ + _) == 1.0)
+    // one row per partition, in feed order
+    val got = spark.sparkContext.parallelize(feed, feed.size).toDF("g", "k", "x")
+      .groupBy(col("g"))
+      .agg(Stats.keyOrdered(col("k"), col("x")).as("s"))
+      .select(col("g"), Stats.orderedSum("s", "r.x").as("sum_x"))
+      .collect()
+    assert(got.map(_.getString(0)).sorted.toSeq == Seq("a", "b"))
+    got.foreach { r =>
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+        java.lang.Double.doubleToRawLongBits(want), s"group ${r.getString(0)}")
+    }
+  }
+
   test("welch anova: F nonnegative, df2 positive, grand mean inside " +
       "the group-mean envelope") {
     val r = Stats.statsWelchAnova(spark, sfSmoke).head()

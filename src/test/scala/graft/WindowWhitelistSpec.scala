@@ -30,8 +30,8 @@ class WindowWhitelistSpec extends SparkSpecBase {
     //    over one row per bucket, bucket count fixed by the operator
     //    (distributedRunningSum: nParts chunks), never data-sized
     "event_peak_concurrency" -> "Windows.bucketPrefix over nParts chunks",
-    "stats_auc_delong" -> "Windows.bucketPrefix over nParts chunks (x2 arms)",
-    "text_heaps_law" -> "Windows.bucketPrefix over nParts chunks (x2 passes)",
+    "stats_auc_delong" -> "Windows.bucketPrefix over nParts chunks (both arms, one pass)",
+    "text_heaps_law" -> "Windows.bucketPrefix over nParts chunks (toks and newv, one pass)",
     "win_distinct_running" -> "Windows.bucketPrefix over nParts chunks",
     "agg_gini" -> "Windows.priorBuckets over fixed value buckets",
     "agg_weighted_median" -> "Windows.bucketPrefix over fixed value buckets",

@@ -93,6 +93,22 @@ class WindowsAggsSpec extends SparkSpecBase {
       assert(before == prior.filter(p => p._1 == g && p._2 < b).map(_._3).sum,
         s"group $g bucket $b")
     }
+    // distributedRunningSum: inclusive sums of x and w in id order over
+    // equal-width id chunks; a null order key sorts first, into chunk 0
+    val nullKey = Seq(("c", 0.0, 13L)).toDF("g", "v", "x")
+      .select(col("g"), col("v"), lit(null).cast("long").as("id"), col("x"),
+        lit(1L).as("w"))
+    val inOrder: Seq[(Option[Long], Long)] =
+      (None, 13L) +: rows.sortBy(_._3).map(r => (Some(r._3), r._4))
+    val naiveRun = inOrder.indices.map { i =>
+      val upTo = inOrder.take(i + 1)
+      inOrder(i)._1 -> (upTo.map(_._2).sum, upTo.size.toLong)
+    }.toMap
+    val run = Windows.distributedRunningSum(df.unionByName(nullKey), "id", "x", "w")
+      .select("id", "running_x", "running_w")
+      .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+        (r.getLong(1), r.getLong(2))).toMap
+    assert(run == naiveRun)
   }
 
   test("topk per group: no customer has more than 3 rows, ranks are 1..k") {

@@ -6,7 +6,7 @@
 # stability, and (if a second CPU count is given) the Spark
 # parallelism-sweep diff between two dumps. First, before the build, a
 # lint that every scaladoc in src/main attaches to the definition below
-# it.
+# it, and a check that src/main writes its order-pinned double sum once.
 #
 # Usage: tools/run_gates.sh [sfDir] [cpusA] [cpusB]
 #   tools/run_gates.sh                          # sf0.01, single 4-way dump
@@ -29,6 +29,17 @@ awk 'FNR == 1 { prev = "" }
        print FILENAME ":" FNR - 1; bad = 1 }
      { prev = $0 }
      END { exit bad }' $(find src/main -name '*.scala' | sort)
+
+# Every order-pinned double sum goes through Stats.orderedSum, so its
+# lambda is the only `(acc, r) -> acc` fold left in src/main; a second
+# match is a hand-written copy of the device.
+echo "== one ordered fold =="
+folds=$(grep -rn '(acc, r) -> acc' src/main || true)
+echo "$folds"
+if [[ "$(grep -c . <<<"$folds")" != 1 || "$folds" != *Stats.scala:*'acc + $term'* ]]; then
+  echo "expected exactly one '(acc, r) -> acc' fold, in Stats.orderedSum" >&2
+  exit 1
+fi
 
 echo "== build =="
 sbt -batch Test/compile | tail -1
