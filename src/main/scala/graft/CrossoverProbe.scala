@@ -48,8 +48,8 @@ object CrossoverProbe {
     },
     "embed" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      AB("plain", () => Similarity.dedupEmbedCosinePlain(s, e).count(),
-         "quantized", () => Similarity.dedupEmbedCosineQuantized(s, e).count(),
+      AB("plain", () => Similarity.dedupEmbedCosinePlain(e).count(),
+         "quantized", () => Similarity.dedupEmbedCosineQuantized(e).count(),
          () => if (Similarity.embedPicksPlainGrid(e)) "plain" else "quantized")
     })
 

@@ -1,16 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftExtensions
 
 /** The one local SparkSession every graft main and the test suite run
   * on: Verify, Bench, PlanAudit, ScaleGen and the probes all build it
   * here, so the graded dump, the bench and every measurement share one
-  * configuration. */
+  * configuration, and each gets graft's native tier at build
+  * (`GraftExtensions.register`). */
 object GraftSession {
 
-  /** `SPARK_GRAFT_CPUS`, else the JVM's available core count. */
-  def cpus(): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+  /** `SPARK_GRAFT_CPUS` (or `setting`) when it is a positive integer,
+    * else the JVM's available core count: `local[0]` and `local[-n]` are
+    * not masters Spark can start. */
+  def cpus(setting: Option[String] = sys.env.get("SPARK_GRAFT_CPUS")): Int =
+    setting.flatMap(_.trim.toIntOption).filter(_ > 0)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
   def local(cpus: Int): SparkSession = {
@@ -31,6 +35,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(spark)
     spark
   }
 

@@ -49,7 +49,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleProbe {
 
-  /** ~40 keys: the bench-expensive tail plus one representative per
+  /** 45 keys: the bench-expensive tail plus one representative per
     * shuffle-heavy family (dedup banding, ANN, graph iteration, text
     * n-grams, rank stats, skew/bucket joins, corpus pipeline). */
   val DefaultKeys: Seq[String] = Seq(

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.functions.Families
+import graft.functions.{Families, GraftExtensions}
 import graft.operators._
 import graft.streaming.Streaming
 
@@ -37,6 +37,11 @@ object SparkEntry {
     only
   }
 
+  /** Every graded key's builder. Each entry first installs graft's
+    * native tier on the session it is given (`GraftExtensions.register`,
+    * idempotent), so a caller that builds its own session, like the
+    * bench harness, resolves the `graft_*` functions and the as-of
+    * marker without passing through `GraftSession`. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.1 scans
     "scan_parquet"      -> Relational.scanParquet _,
@@ -470,7 +475,12 @@ object SparkEntry {
     "set_except"        -> Relational.setExcept _,
     "set_ops_all"       -> Relational.setOpsAll _,
     "join_null_safe"    -> Relational.joinNullSafe _,
-  )
+  ).map { case (key, build) =>
+    key -> { (s: SparkSession, sf: String) =>
+      GraftExtensions.register(s)
+      build(s, sf)
+    }
+  }
 
   /** profile_corr_matrix oracle, generated so the 16 cells are the
     * IDENTICAL closed-form double expression the Spark side evaluates

@@ -14,7 +14,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: " +
+          Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
       }
     }
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
+import graft.plans.{AsOfCondition, AsOfJoinRule, AsOfJoinStrategy}
 
 /** Native Catalyst expression: dot product of two float arrays as a
   * double, with whole-stage codegen (SURVEY.md §2.11 expr_custom_catalyst;
@@ -90,8 +91,8 @@ case class DotProduct(left: Expression, right: Expression)
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.AsOfJoinRule)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectOptimizerRule(_ => AsOfJoinRule)
+    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }
 
@@ -137,10 +138,10 @@ object GraftExtensions {
           s"graft_tdigest needs delta >= 10, got delta=$d")
         TDigestQuantiles(v, d)
       },
-      // the as-of marker condition; it needs the rule and strategy too
-      // (`AsOfJoin.ensureRegistered`)
+      // the as-of marker condition; it needs the rule and strategy too,
+      // which the extension injects and `register` appends
       fn("graft_asof_marker", 4) {
-        case Seq(lk, rk, lt, rt) => graft.plans.AsOfCondition(lk, rk, lt, rt)
+        case Seq(lk, rk, lt, rt) => AsOfCondition(lk, rk, lt, rt)
       })
 
   /** One registry entry. The builder checks the arity before building;
@@ -173,13 +174,26 @@ object GraftExtensions {
     }
   }
 
-  /** Register every function on a live session (the harness builds its
-    * SparkSession without extension configs, so operators
-    * self-register). Idempotent and silent: the registry warns only when
-    * a name's stored (info, builder) pair changes, and [[functions]] is
-    * a val built once. */
-  def register(s: SparkSession): Unit =
+  /** Install graft's whole native tier on a live session: every entry
+    * of [[functions]], then `AsOfJoinRule` on
+    * `experimental.extraOptimizations` and `AsOfJoinStrategy` on
+    * `experimental.extraStrategies`, each appended only if absent. The
+    * live twin of the extension, for sessions built without
+    * `spark.sql.extensions`. Called from the two places a session
+    * enters graft: `GraftSession.local` at build, and every
+    * `SparkEntry.queries` entry on the session it is given (the bench
+    * harness builds its own bare session). Idempotent and silent: the
+    * registry warns only when a name's stored (info, builder) pair
+    * changes, and [[functions]] is a val built once. */
+  def register(s: SparkSession): Unit = synchronized {
     functions.foreach { case (ident, info, builder) =>
       s.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
+    if (!s.experimental.extraOptimizations.contains(AsOfJoinRule))
+      s.experimental.extraOptimizations =
+        s.experimental.extraOptimizations :+ AsOfJoinRule
+    if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy))
+      s.experimental.extraStrategies =
+        s.experimental.extraStrategies :+ AsOfJoinStrategy
+  }
 }

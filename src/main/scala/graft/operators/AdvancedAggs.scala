@@ -516,7 +516,6 @@ object AdvancedAggs {
     * bounds that hold under any merge order.
     */
   def aggHeavyHittersSketch(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Tables.documents(s, sf)
       .filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("word"))
@@ -542,7 +541,6 @@ object AdvancedAggs {
     * baseline; this key grades the engine's sketch machinery.
     */
   def aggTdigest(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Tables.events(s, sf)
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .groupBy(col("event_type"))

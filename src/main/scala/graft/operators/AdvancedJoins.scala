@@ -275,7 +275,6 @@ object AdvancedJoins {
     * and this one proves the extension tier works end to end.
     */
   def joinAsofNative(s: SparkSession, sf: String): DataFrame = {
-    graft.plans.AsOfJoin.ensureRegistered(s)
     val e = Tables.events(s, sf)
     val purchases = e
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull)

@@ -138,10 +138,8 @@ object Pipeline {
     * counter swapped for the native graft_bpe_count expression; the
     * whitespace twin stays oracle-paired, this one is oracle-N (vocab is
     * engine-specific) and spec-pinned. */
-  def packBpe(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
+  def packBpe(s: SparkSession, sf: String): DataFrame =
     packBins(s, sf, expr("graft_bpe_count(text)"))
-  }
 
   /** Conversion funnel (signup → click → purchase, ordered): per user,
     * the earliest signup, the earliest click AFTER that signup, and the
@@ -739,7 +737,6 @@ object Pipeline {
     * docs-per-shingle on a deduped corpus.
     */
   def pipelineCorpusBuild(s: SparkSession, sf: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     val ws = split(col("text"), " ")
     val alphaR = round(
       length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double") /

@@ -22,28 +22,25 @@ object Similarity {
   /** Codegen'd native dot product (graft.functions.DotProduct) — same
     * left-to-right double fold as the declarative
     * `aggregate(zip_with(...))` form, compiled instead of interpreted. */
-  private def dot(s: SparkSession)(a: String, b: String) = {
-    graft.functions.GraftExtensions.register(s)
-    expr(s"graft_dot($a, $b)")
-  }
+  private def dot(a: String, b: String) = expr(s"graft_dot($a, $b)")
 
   /** The brute-force query scan shared by the top-k, range, MMR and
     * hybrid keys: the in-data query vector (vec_id 0) is broadcast as
     * `qv`, and every OTHER vector is scored against it as the 6-rounded
     * codegen dot product, named `score`, after the caller's `cols`. */
-  private def queryScan(s: SparkSession, e: DataFrame, score: String,
+  private def queryScan(e: DataFrame, score: String,
                         cols: Column*): DataFrame = {
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(cols :+ round(dot(s)("embedding", "qv"), 6).as(score): _*)
+      .select(cols :+ round(dot("embedding", "qv"), 6).as(score): _*)
   }
 
   /** Brute-force cosine top-10 against an in-data query vector (vec_id 0).
     * The single query row is broadcast; TakeOrderedAndProject keeps the
     * top-k per partition, so nothing global is sorted. */
   def simCosineTopk(s: SparkSession, sf: String): DataFrame =
-    queryScan(s, Tables.embeddings(s, sf), "cos", col("vec_id"))
+    queryScan(Tables.embeddings(s, sf), "cos", col("vec_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(10)
 
@@ -63,7 +60,7 @@ object Similarity {
     * the exact baseline they are recall-measured against.
     */
   def simRangeSearch(s: SparkSession, sf: String): DataFrame =
-    queryScan(s, Tables.embeddings(s, sf), "cos", col("vec_id"))
+    queryScan(Tables.embeddings(s, sf), "cos", col("vec_id"))
       .filter(col("cos") >= 0.2)
       .orderBy(col("cos").desc, col("vec_id").asc)
 
@@ -89,7 +86,7 @@ object Similarity {
     */
   def simMmrDiversify(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    val cands = queryScan(s, Tables.embeddings(s, sf), "rel",
+    val cands = queryScan(Tables.embeddings(s, sf), "rel",
         col("vec_id"), col("embedding"))
       .orderBy(col("rel").desc, col("vec_id").asc)
       .limit(50)
@@ -284,7 +281,7 @@ object Similarity {
     q.join(c, Seq("label", "chunk"))
       .filter(col("qid") =!= col("nid"))
       .select(col("label"), col("chunk"), col("qid"), col("nid"),
-              round(dot(s)("qv", "nv"), 6).as("cos"))
+              round(dot("qv", "nv"), 6).as("cos"))
       .withColumn("prn", row_number().over(wPartial))
       .filter(col("prn") <= 3)
       .withColumn("rn", row_number().over(wFinal).cast("bigint"))
@@ -325,8 +322,8 @@ object Similarity {
     * measured time α 1.25 is SUBLINEAR in the operator's own output. */
   def dedupEmbedCosine(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    if (embedPicksPlainGrid(e)) dedupEmbedCosinePlain(s, e)
-    else dedupEmbedCosineQuantized(s, e)
+    if (embedPicksPlainGrid(e)) dedupEmbedCosinePlain(e)
+    else dedupEmbedCosineQuantized(e)
   }
 
   /** Dispatch predicate: is the largest label block small enough that
@@ -348,8 +345,7 @@ object Similarity {
 
   /** The sub-threshold plan: plain fragment-replicate grid over float
     * vectors. */
-  private[graft] def dedupEmbedCosinePlain(s: SparkSession,
-                                           e: DataFrame): DataFrame = {
+  private[graft] def dedupEmbedCosinePlain(e: DataFrame): DataFrame = {
     val stats = blockStats(e, "label")
     val l = gridReplicated(e, stats,
       col("label"), col("vec_id").as("id1"), col("embedding").as("v1"))
@@ -358,7 +354,7 @@ object Similarity {
     l.join(r, Seq("label", "chunk"))
       .filter(col("id1") < col("id2"))
       .select(col("label"), col("id1"), col("id2"),
-              round(dot(s)("v1", "v2"), 6).as("cos"))
+              round(dot("v1", "v2"), 6).as("cos"))
       .filter(col("cos") >= 0.35)
       .orderBy("label", "id1", "id2")
   }
@@ -383,9 +379,7 @@ object Similarity {
     * Survivors are output-proportional (the prescreen bound sits
     * ~0.016 wide on this corpus), so the float fetch joins are sized
     * by the result, not the pair space. */
-  private[graft] def dedupEmbedCosineQuantized(s: SparkSession,
-                                               e: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
+  private[graft] def dedupEmbedCosineQuantized(e: DataFrame): DataFrame = {
     val stats = blockStats(e, "label")
     val q = e
       .select(col("label"), col("vec_id"), col("embedding"),
@@ -415,7 +409,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("id1"), col("embedding").as("v1")), "id1")
       .join(e.select(col("vec_id").as("id2"), col("embedding").as("v2")), "id2")
       .select(col("label"), col("id1"), col("id2"),
-              round(dot(s)("v1", "v2"), 6).as("cos"))
+              round(dot("v1", "v2"), 6).as("cos"))
       .filter(col("cos") >= 0.35)
       .orderBy("label", "id1", "id2")
   }
@@ -466,7 +460,7 @@ object Similarity {
     * force. */
   def simIvfTopk(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
-    ivfTopk(s, e, nProbeFor(collectionCount(e)), codebookFor(s, sf))
+    ivfTopk(e, nProbeFor(collectionCount(e)), codebookFor(s, sf))
   }
 
   /** Session-memoized coarse-quantizer codebook over the corpus
@@ -490,7 +484,7 @@ object Similarity {
   }
 
   private def codebookFor(s: SparkSession, sf: String): DataFrame =
-    memoizedCodebook(s, sf)(trainCodebook(s, Tables.embeddings(s, sf)))
+    memoizedCodebook(s, sf)(trainCodebook(Tables.embeddings(s, sf)))
 
   /** Nearest-centroid assignment: argmax dot, tiebreak LOWER centroid
     * id — expressed as a max_by hash aggregate (struct ordering key,
@@ -506,11 +500,10 @@ object Similarity {
     * input and the key's dominant spill (per-stage probed); the narrow
     * form's agg state is a constant few bytes per vector. Result is
     * identical — max_by is unchanged and the join key is unique. */
-  private def assignCells(s: SparkSession, vecs: DataFrame,
-                          cents: DataFrame): DataFrame =
+  private def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
-              dot(s)("embedding", "cv").as("cdot"))
+              dot("embedding", "cv").as("cdot"))
       .groupBy(col("vec_id"))
       .agg(expr("max_by(cent_id, struct(cdot, -cent_id))").as("cent_id"))
       .join(vecs.select(col("vec_id"), col("embedding")), "vec_id")
@@ -527,7 +520,7 @@ object Similarity {
     * and the broadcast stays C×64 floats — both bounded growth, unlike
     * a fixed sampling stride (C = n/k grows linearly and the n×C
     * assignment goes quadratic). */
-  private[graft] def trainCodebook(s: SparkSession, e: DataFrame): DataFrame = {
+  private[graft] def trainCodebook(e: DataFrame): DataFrame = {
     // The codebook is MATERIALIZED once per Lloyd round (C ≈ √n rows —
     // the same bounded collect the final return always did): without
     // it, round i's broadcast(cents) re-executes rounds 1..i−1's whole
@@ -544,7 +537,7 @@ object Similarity {
     val trainSet = e.filter(col("vec_id") % 2 === 0)
     for (_ <- 1 to KMeansIters) {
       val dims = 0 until 64
-      val means = assignCells(s, trainSet, cents).groupBy(col("cent_id"))
+      val means = assignCells(trainSet, cents).groupBy(col("cent_id"))
         .agg(avg(element_at(col("embedding"), 1)).as("m0"),
              dims.drop(1).map(i =>
                avg(element_at(col("embedding"), i + 1)).as(s"m$i")): _*)
@@ -561,9 +554,9 @@ object Similarity {
     cents
   }
 
-  private def ivfTopk(s: SparkSession, e: DataFrame, nprobe: Int,
+  private def ivfTopk(e: DataFrame, nprobe: Int,
                       cents: DataFrame): DataFrame = {
-    val assigned = assignCells(s, e, cents)
+    val assigned = assignCells(e, cents)
     // queries probe their nprobe nearest cells
     val wProbe = Window.partitionBy(col("qid"))
       .orderBy(col("cdot").desc, col("cent_id").asc)
@@ -571,7 +564,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .crossJoin(broadcast(cents))
       .select(col("qid"), col("qv"), col("cent_id"),
-              dot(s)("qv", "cv").as("cdot"))
+              dot("qv", "cv").as("cdot"))
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nprobe)
       .select(col("qid"), col("qv"), col("cent_id"))
@@ -581,7 +574,7 @@ object Similarity {
     probes.join(assigned, "cent_id")
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id").as("nid"), col("cent_id"),
-              round(dot(s)("qv", "embedding"), 6).as("cos"))
+              round(dot("qv", "embedding"), 6).as("cos"))
       .withColumn("rn", row_number().over(wRank).cast("bigint"))
       .filter(col("rn") <= 5)
       .orderBy("qid", "rn")
@@ -620,7 +613,7 @@ object Similarity {
   def simAnnLsh(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
-    annLshTopk(e, dot(s), nPlanes = planes, nTables = lshTablesFor(planes))
+    annLshTopk(e, nPlanes = planes, nTables = lshTablesFor(planes))
   }
 
   /** Query phase shared by every LSH key (one-shot, incremental,
@@ -632,8 +625,8 @@ object Similarity {
     * flipped, i < p). The candidate side (cap included) is the same
     * either way, and the distinct on (qid, nid, cos) collapses hits
     * found through several probes or tables. */
-  private def lshQueryTopk(index: DataFrame, dotF: (String, String) => Column,
-                           flips: Int, maxBucket: Int, k: Int): DataFrame = {
+  private def lshQueryTopk(index: DataFrame, flips: Int, maxBucket: Int,
+                           k: Int): DataFrame = {
     val queries = index.filter(col("vec_id") < 20)
     // flips = 0 keeps the plain projection: sequence(0, -1) is [0, -1],
     // not empty, so a zero-width explode would add two spurious probes
@@ -661,7 +654,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("nid").asc)
     q.join(c, Seq("tbl", "bucket"))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), round(dotF("qv", "nv"), 6).as("cos"))
+      .select(col("qid"), col("nid"), round(dot("qv", "nv"), 6).as("cos"))
       .distinct()
       .withColumn("rn", row_number().over(w).cast("bigint"))
       .filter(col("rn") <= k)
@@ -674,13 +667,10 @@ object Similarity {
       posexplode(expr(s"graft_lsh_buckets(embedding, $nTables, $nPlanes)")))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
 
-  private[graft] def annLshTopk(e: DataFrame, dotF: (String, String) => Column,
-                                nPlanes: Int = 4, maxBucket: Int = 4096,
-                                k: Int = 5, nTables: Int = 8): DataFrame = {
-    graft.functions.GraftExtensions.register(e.sparkSession)
-    lshQueryTopk(lshBucketRows(e, nTables, nPlanes), dotF, flips = 0,
-      maxBucket, k)
-  }
+  private[graft] def annLshTopk(e: DataFrame, nPlanes: Int = 4,
+                                maxBucket: Int = 4096, k: Int = 5,
+                                nTables: Int = 8): DataFrame =
+    lshQueryTopk(lshBucketRows(e, nTables, nPlanes), flips = 0, maxBucket, k)
 
   /** INCREMENTAL ANN index maintenance — the day-2 operation the
     * one-shot builds above skip (flagged beyond-contract in the r7
@@ -703,7 +693,6 @@ object Similarity {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
     val tables = lshTablesFor(planes)
-    graft.functions.GraftExtensions.register(s)
     val cut = broadcast(e.agg(floor(max(col("vec_id")) / 2)
       .cast("long").as("cut")))
     // The standing half is a per-session INVESTMENT (Scratch.stagedDir
@@ -722,7 +711,7 @@ object Similarity {
       .filter(col("vec_id") > col("cut")).drop("cut"), tables, planes)
     lshQueryTopk(standing.unionByName(
         delta.select(standing.columns.toIndexedSeq.map(col): _*)),
-      dot(s), flips = 0, maxBucket = 4096, k = 5)
+      flips = 0, maxBucket = 4096, k = 5)
   }
 
   /** PERSISTED ANN index round-trip — the production deployment shape
@@ -741,12 +730,11 @@ object Similarity {
   def simAnnIndexPersist(s: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
-    graft.functions.GraftExtensions.register(s)
     val index = lshBucketRows(e, lshTablesFor(planes), planes)
     val name = "graft_ann_index_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val persisted = ScalePatterns.persistBucketed(s, index,
       Seq("tbl", "bucket"), 8, name)
-    lshQueryTopk(persisted, dot(s), flips = 0, maxBucket = 4096, k = 5)
+    lshQueryTopk(persisted, flips = 0, maxBucket = 4096, k = 5)
   }
 
   /** Hybrid retrieval with Reciprocal Rank Fusion — the RAG-serving
@@ -773,7 +761,7 @@ object Similarity {
     val e = Tables.embeddings(s, sf)
     val docs = Tables.documents(s, sf)
     val wDense = Window.orderBy(col("cos").desc, col("id").asc)
-    val dense = queryScan(s, e, "cos", col("vec_id").as("id"))
+    val dense = queryScan(e, "cos", col("vec_id").as("id"))
       .orderBy(col("cos").desc, col("id").asc).limit(100)
       .withColumn("r_dense", row_number().over(wDense).cast("bigint"))
     val qw = broadcast(docs.filter(col("doc_id") === 0)
@@ -818,8 +806,7 @@ object Similarity {
     val e = Tables.embeddings(s, sf)
     val planes = lshPlanesFor(collectionCount(e))
     val tables = math.max(1, lshTablesFor(planes) / 2)
-    graft.functions.GraftExtensions.register(s)
-    lshQueryTopk(lshBucketRows(e, tables, planes), dot(s), flips = planes,
+    lshQueryTopk(lshBucketRows(e, tables, planes), flips = planes,
       maxBucket = 4096, k = 5)
   }
 
@@ -842,18 +829,18 @@ object Similarity {
     * it). Oracle-N (k-means cells are engine-specific); the spec plants
     * semantic duplicates and asserts exactly one survivor per group. */
   def dedupSemantic(s: SparkSession, sf: String): DataFrame =
-    semDedup(s, Tables.embeddings(s, sf), codebookFor(s, sf))
+    semDedup(Tables.embeddings(s, sf), codebookFor(s, sf))
 
-  private[graft] def semDedup(s: SparkSession, e: DataFrame, cents: DataFrame,
+  private[graft] def semDedup(e: DataFrame, cents: DataFrame,
                               threshold: Double = 0.4): DataFrame = {
-    val a = assignCells(s, e, cents)
+    val a = assignCells(e, cents)
     val l = a.select(col("cent_id"), col("vec_id").as("id1"),
                      col("embedding").as("v1"))
     val r = a.select(col("cent_id"), col("vec_id").as("id2"),
                      col("embedding").as("v2"))
     val edges = l.join(r, "cent_id")
       .filter(col("id1") < col("id2"))
-      .filter(round(dot(s)("v1", "v2"), 6) >= threshold)
+      .filter(round(dot("v1", "v2"), 6) >= threshold)
       .select(col("id1").as("a"), col("id2").as("b"))
     Dedup.connectedComponents(e.select(col("vec_id").as("id")), edges)
       .select(col("id").as("vec_id"), col("label").as("rep_id"))
@@ -914,7 +901,7 @@ object Similarity {
     * materialized (the trainCodebook lesson — without it, round i's
     * broadcast re-executes rounds 1..i−1). Returns the 128-row
     * (sub, code, cv) frame. */
-  private def pqTrainCodebook(s: SparkSession, sub: DataFrame): DataFrame = {
+  private def pqTrainCodebook(sub: DataFrame): DataFrame = {
     // min_by, not first(): several vectors share a seed code and
     // first() is partition-order-dependent — seeds must be stable
     var cb = Checkpoints.local(sub.filter(col("vec_id") % 2 === 0)
@@ -929,7 +916,7 @@ object Similarity {
         .select(col("vec_id"), col("sub"), col("sv"), col("code"),
           // L2 argmin via the expansion |a|^2 - 2a.c + |c|^2; |a|^2 is
           // constant per row so argmin needs only c.c - 2 a.c
-          (dot(s)("cv", "cv") - lit(2.0) * dot(s)("sv", "cv")).as("d"))
+          (dot("cv", "cv") - lit(2.0) * dot("sv", "cv")).as("d"))
         .groupBy(col("vec_id"), col("sub"))
         .agg(expr("max_by(code, struct(-d, -code))").as("code"),
              first(col("sv")).as("sv"))
@@ -969,11 +956,11 @@ object Similarity {
     // per-session index investment, not a per-query cost
     // the "pq:" key namespaces the PQ codebook apart from the IVF one
     val cbB = broadcast(
-      memoizedCodebook(s, s"pq:$sf")(pqTrainCodebook(s, sub)))
+      memoizedCodebook(s, s"pq:$sf")(pqTrainCodebook(sub)))
     val encoded = sub
       .join(cbB, Seq("sub"))
       .select(col("vec_id"), col("sub"), col("code"),
-        (dot(s)("cv", "cv") - lit(2.0) * dot(s)("sv", "cv")).as("d"))
+        (dot("cv", "cv") - lit(2.0) * dot("sv", "cv")).as("d"))
       .groupBy(col("vec_id"), col("sub"))
       .agg(expr("max_by(code, struct(-d, -code))").as("code"))
     // ADC: query-to-codeword partial dots, |Q| x 128 rows, broadcast
@@ -981,7 +968,7 @@ object Similarity {
       .withColumnRenamed("vec_id", "qid").withColumnRenamed("sv", "qsv")
       .join(cbB, Seq("sub"))
       .select(col("qid"), col("sub"), col("code"),
-        dot(s)("qsv", "cv").as("pdot"))
+        dot("qsv", "cv").as("pdot"))
     val wAdc = Window.partitionBy(col("qid"))
       .orderBy(col("approx").desc, col("nid").asc)
     // stage 1 — ADC candidate generation: top-R by the quantized score,
@@ -1016,7 +1003,7 @@ object Similarity {
       .join(broadcast(e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))), Seq("qid"))
       .select(col("qid"), col("nid"), col("approx"),
-        round(dot(s)("qv", "embedding"), 6).as("cos"))
+        round(dot("qv", "embedding"), 6).as("cos"))
       .withColumn("rn", row_number().over(wFinal).cast("bigint"))
       .filter(col("rn") <= 5)
       .orderBy("qid", "rn")
@@ -1045,9 +1032,9 @@ object Similarity {
           expr("slice(embedding, 1, 16)").as("p16")))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        greatest(round(dot(s)("qv", "embedding"), 6), lit(0.0)).as("gain"),
+        greatest(round(dot("qv", "embedding"), 6), lit(0.0)).as("gain"),
         round(expr("graft_dot(slice(qv, 1, 16), p16)") /
-          sqrt(dot(s)("p16", "p16")), 6).as("sc_trunc"))
+          sqrt(dot("p16", "p16")), 6).as("sc_trunc"))
     val wTrunc = Window.partitionBy(col("qid"))
       .orderBy(col("sc_trunc").desc, col("nid").asc)
     val wIdeal = Window.partitionBy(col("qid"))
@@ -1095,9 +1082,9 @@ object Similarity {
       expr("slice(embedding, 1, 16)").as("p16"))
     val pairs = qs.crossJoin(cands).filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        round(dot(s)("qv", "embedding"), 6).as("cos_full"),
+        round(dot("qv", "embedding"), 6).as("cos_full"),
         round((expr("graft_dot(slice(qv, 1, 16), p16)") /
-          sqrt(dot(s)("p16", "p16"))), 6).as("cos_trunc"))
+          sqrt(dot("p16", "p16"))), 6).as("cos_trunc"))
     val wFull = Window.partitionBy(col("qid"))
       .orderBy(col("cos_full").desc, col("nid").asc)
     val wTrunc = Window.partitionBy(col("qid"))

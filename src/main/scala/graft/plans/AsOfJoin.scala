@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -12,8 +11,14 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
-/** A NATIVE as-of join — the whole-operator Catalyst extension tier:
-  * when composing built-ins can't express an operator's physical
+/** Boolean carrier for as-of semantics inside a join condition. Never
+  * evaluated: `AsOfJoinRule` must rewrite the enclosing join before
+  * planning (Unevaluable fails loudly at codegen if the rule was never
+  * installed). References both sides, so no pushdown rule can split it
+  * off the join.
+  *
+  * It opens a NATIVE as-of join — the whole-operator Catalyst extension
+  * tier: when composing built-ins can't express an operator's physical
   * shape, Spark's sanctioned path is a custom `LogicalPlan` node, a
   * `Rule[LogicalPlan]` that plants it, a `SparkStrategy` that plans
   * it, and a `SparkPlan` that executes it. This file is that full
@@ -23,42 +28,15 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * materialization, no null-carrier columns — a sorted per-partition
   * merge directly on the two inputs).
   *
-  * Flow: `graft_asof_marker(lk, rk, lt, rt)` (an Unevaluable boolean
-  * carrier, registered like every graft SQL function) rides an inner
-  * join's condition through analysis; `AsOfJoinRule` (injected via
-  * `experimental.extraOptimizations` / `GraftExtensions`) rewrites
-  * that join into the custom `AsOfJoinPlan` node; `AsOfJoinStrategy`
-  * (via `experimental.extraStrategies`) plans it as `AsOfJoinExec`.
-  *
-  * Scale shape: the exec declares ClusteredDistribution on the keys
-  * and (key, time) sort order for both children, so EnsureRequirements
-  * provisions exactly the SortMergeJoin layout — one hash shuffle per
-  * side, in-partition sort, then a streaming merge whose state is ONE
-  * held row per key (never a buffered time range). AQE coalesces the
-  * two shuffles as one group, the same guarantee SortMergeJoinExec
-  * relies on; `zipPartitions` asserts the co-partitioning.
-  */
-object AsOfJoin {
-  /** Register marker function (with the rest of
-    * `GraftExtensions.functions`) + optimizer rule + strategy on a live
-    * session (the harness builds sessions without extension configs,
-    * so operators self-register). Idempotent. */
-  def ensureRegistered(s: SparkSession): Unit = synchronized {
-    graft.functions.GraftExtensions.register(s)
-    if (!s.experimental.extraOptimizations.contains(AsOfJoinRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ AsOfJoinRule
-    if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsOfJoinStrategy
-  }
-}
-
-/** Boolean carrier for as-of semantics inside a join condition. Never
-  * evaluated: `AsOfJoinRule` must rewrite the enclosing join before
-  * planning (Unevaluable fails loudly at codegen if registration was
-  * skipped). References both sides, so no pushdown rule can split it
-  * off the join. */
+  * Flow: `graft_asof_marker(lk, rk, lt, rt)` builds this marker, which
+  * rides an inner join's condition through analysis; `AsOfJoinRule`
+  * rewrites that join into the custom `AsOfJoinPlan` node;
+  * `AsOfJoinStrategy` plans it as `AsOfJoinExec`. The marker function,
+  * the rule (on `experimental.extraOptimizations`) and the strategy (on
+  * `experimental.extraStrategies`) are installed together by
+  * `GraftExtensions.register`, at session build and on entry to every
+  * `SparkEntry.queries` key, or injected by the `GraftExtensions`
+  * extension. */
 case class AsOfCondition(leftKey: Expression, rightKey: Expression,
     leftTime: Expression, rightTime: Expression)
     extends Expression with Unevaluable {
@@ -165,6 +143,14 @@ object AsOfJoinStrategy extends SparkStrategy {
   * merge holding one right row per key. Null keys/times must be
   * filtered upstream (the operator wrapper does) — as-of over a null
   * instant is meaningless and null-ordering would be engine-arbitrary.
+  *
+  * Scale shape: the exec declares ClusteredDistribution on the keys
+  * and (key, time) sort order for both children, so EnsureRequirements
+  * provisions exactly the SortMergeJoin layout — one hash shuffle per
+  * side, in-partition sort, then a streaming merge whose state is ONE
+  * held row per key (never a buffered time range). AQE coalesces the
+  * two shuffles as one group, the same guarantee SortMergeJoinExec
+  * relies on; `zipPartitions` asserts the co-partitioning.
   */
 case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     leftKey: Expression, rightKey: Expression,

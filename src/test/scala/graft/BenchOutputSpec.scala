@@ -62,6 +62,14 @@ class BenchOutputSpec extends AnyFunSuite {
     assert(math.abs(withSteal.get("steal").asDouble() - 0.0171) < 1e-9)
   }
 
+  test("a cpu count that is not a positive integer falls back to the cores") {
+    val cores = Runtime.getRuntime.availableProcessors
+    assert(GraftSession.cpus(Some(" 3 ")) == 3)
+    for (bad <- Seq("0", "-2", "four", ""))
+      assert(GraftSession.cpus(Some(bad)) == cores, bad)
+    assert(GraftSession.cpus(None) == cores)
+  }
+
   test("cpuTicks reads plausible steal/total tick counts on this host") {
     Bench.cpuTicks().foreach { case (steal, total) =>
       assert(steal >= 0L && total > 0L && steal <= total)

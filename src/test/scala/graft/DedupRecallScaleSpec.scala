@@ -147,8 +147,8 @@ class DedupRecallScaleSpec extends SparkSpecBase {
     }.toSeq
     val union = e.unionAll(planted.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>")))
-    val reps = Similarity.semDedup(spark, union,
-        Similarity.trainCodebook(spark, union))
+    val reps = Similarity.semDedup(union,
+        Similarity.trainCodebook(union))
       .select(col("vec_id"), col("rep_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     pairs.count { case (a, b) => reps(a) == reps(b) }.toDouble / pairs.size

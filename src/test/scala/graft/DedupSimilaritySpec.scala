@@ -206,9 +206,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // zero) degenerate vector.
     for (sf <- Seq(sfSmoke, sfOracle)) {
       val e = Tables.embeddings(spark, sf)
-      val plain = Similarity.dedupEmbedCosinePlain(spark, e)
+      val plain = Similarity.dedupEmbedCosinePlain(e)
         .collect().map(_.toSeq)
-      val quant = Similarity.dedupEmbedCosineQuantized(spark, e)
+      val quant = Similarity.dedupEmbedCosineQuantized(e)
         .collect().map(_.toSeq)
       assert(plain.length == quant.length &&
              plain.zip(quant).forall { case (a, b) => a == b },
@@ -232,9 +232,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
       (5L, norm(base.map(-_)).toSeq, 0L)    // anti-parallel (pruned)
     ).toDF("vec_id", "embedding", "label")
       .select(col("vec_id"), col("embedding").cast("array<float>"), col("label"))
-    val p = Similarity.dedupEmbedCosinePlain(spark, planted)
+    val p = Similarity.dedupEmbedCosinePlain(planted)
       .collect().map(_.toSeq)
-    val qz = Similarity.dedupEmbedCosineQuantized(spark, planted)
+    val qz = Similarity.dedupEmbedCosineQuantized(planted)
       .collect().map(_.toSeq)
     assert(p.nonEmpty, "planted fixture produced no qualifying pair")
     assert(p.length == qz.length && p.zip(qz).forall { case (a, b) => a == b },
@@ -258,11 +258,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // hyperplane family is deterministic in (table, plane, dim); this
     // asserts the resulting top-k is bit-identical to hashing the whole
     // collection from scratch at the same derived (planes, tables).
-    graft.functions.GraftExtensions.register(spark)
-    val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
-    val full = Similarity.annLshTopk(e, dotF, nPlanes = planes,
+    val full = Similarity.annLshTopk(e, nPlanes = planes,
       nTables = Similarity.lshTablesFor(planes)).collect()
     val inc = Similarity.simAnnLshIncremental(spark, sfOracle).collect()
     assert(inc.nonEmpty)
@@ -271,11 +269,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("persisted ann index: bucketed table round-trip answers identically to a rebuild") {
-    graft.functions.GraftExtensions.register(spark)
-    val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
-    val rebuilt = Similarity.annLshTopk(e, dotF, nPlanes = planes,
+    val rebuilt = Similarity.annLshTopk(e, nPlanes = planes,
       nTables = Similarity.lshTablesFor(planes)).collect()
     // first call writes the bucketed table; second exercises the
     // fingerprint reuse path (no rebuild jobs) — both must equal the
@@ -296,13 +292,11 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("ann lsh: wider signature (16 planes) refines 8-plane buckets, deterministic") {
-    graft.functions.GraftExtensions.register(spark)
-    val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfSmoke)
-    val wide = Similarity.annLshTopk(e, dotF, nPlanes = 16)
+    val wide = Similarity.annLshTopk(e, nPlanes = 16)
     val rows = wide.collect()
     assert(rows.nonEmpty)
-    assert(Similarity.annLshTopk(e, dotF, nPlanes = 16).collect().sameElements(rows))
+    assert(Similarity.annLshTopk(e, nPlanes = 16).collect().sameElements(rows))
     // plane j of table t is seeded by (t, j, dim) regardless of the
     // plane count, so the extra 8 planes refine (subdivide) the first 8
     // within every table: vectors sharing a 16-bit bucket necessarily
@@ -312,7 +306,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // set) cannot exceed its narrow top-k count. (Strict result-subset
     // would be too strong — narrow trims at k — but the per-query count
     // bound is exact. Holds because no bucket trips the default cap.)
-    val narrowCounts = Similarity.annLshTopk(e, dotF, nPlanes = 8).collect()
+    val narrowCounts = Similarity.annLshTopk(e, nPlanes = 8).collect()
       .groupBy(_.getAs[Long]("qid")).view.mapValues(_.length).toMap
     val wideCounts = rows.groupBy(_.getAs[Long]("qid")).view.mapValues(_.length).toMap
     for ((qid, wn) <- wideCounts)
@@ -322,8 +316,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("multiprobe: at HALF the tables, recall beats single-probe at the same half and holds the family floor") {
-    graft.functions.GraftExtensions.register(spark)
-    val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
     val halfTables = math.max(1, Similarity.lshTablesFor(planes) / 2)
@@ -342,7 +334,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "nid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val single = pairs(Similarity.annLshTopk(e, dotF, nPlanes = planes,
+    val single = pairs(Similarity.annLshTopk(e, nPlanes = planes,
       nTables = halfTables))
     val multi = pairs(Similarity.simAnnMultiprobe(spark, sfOracle))
     val rSingle = (single & brute).size.toDouble / brute.size
@@ -361,7 +353,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("ann lsh: recall@5 >= 0.5 vs brute force at the default knobs") {
-    graft.functions.GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sfOracle)
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -409,11 +400,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("ann lsh: stop-bucket cap drops oversized buckets' candidates") {
-    graft.functions.GraftExtensions.register(spark)
-    val dotF = (a: String, b: String) => expr(s"graft_dot($a, $b)")
     val e = Tables.embeddings(spark, sfSmoke)
     // cap of 1 excludes every bucket with >1 member → no candidates at all
-    assert(Similarity.annLshTopk(e, dotF, maxBucket = 1).count() == 0)
+    assert(Similarity.annLshTopk(e, maxBucket = 1).count() == 0)
   }
 
   test("ann candidates are a subset of brute-force rankings (consistency)") {
@@ -443,8 +432,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val e = vecs.toDF("vec_id", "embedding")
       .withColumn("label", lit("t"))
       .withColumn("embedding", col("embedding").cast("array<float>"))
-    val out = graft.operators.Similarity.semDedup(spark, e,
-        graft.operators.Similarity.trainCodebook(spark, e), threshold = 0.9)
+    val out = graft.operators.Similarity.semDedup(e,
+        graft.operators.Similarity.trainCodebook(e), threshold = 0.9)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(Seq(0L, 1L, 2L).map(out(_)._1).toSet == Set(0L), "identical trio merges to rep 0")
     assert(out(0L)._2 == 1L && out(1L)._2 == 0L && out(2L)._2 == 0L)
@@ -462,7 +451,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(Similarity.simIvfTopk(spark, sfOracle).collect().sameElements(rows))
     // recall@5 vs brute force (informational lower bound: must beat
     // picking 5 of N at random by a wide margin)
-    graft.functions.GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sfOracle)
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))

@@ -1,14 +1,17 @@
 package graft
 
 import graft.functions.GraftExtensions
+import graft.plans.{AsOfJoinRule, AsOfJoinStrategy}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Native DotProduct expression: parity with the declarative HOF form,
-  * null semantics, codegen path. */
+  * null semantics, codegen path; and how the native tier reaches a
+  * session (extension injection, `GraftSession.local`,
+  * `SparkEntry.queries`). */
 class DotProductSpec extends SparkSpecBase {
 
   test("graft_dot is bit-identical to aggregate(zip_with(...)) on the corpus") {
-    GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sfSmoke).limit(200)
     val both = e.crossJoin(
         Tables.embeddings(spark, sfSmoke).limit(1)
@@ -20,7 +23,6 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("null array yields null; self-dot of unit vectors is ~1") {
-    GraftExtensions.register(spark)
     val df = Tables.embeddings(spark, sfSmoke).limit(50)
       .select(expr("graft_dot(embedding, embedding)").as("selfdot"),
               expr("graft_dot(embedding, CAST(NULL AS ARRAY<FLOAT>))").as("n"))
@@ -29,7 +31,6 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("graft_minhash16 equals the declarative seeded-family formulation") {
-    GraftExtensions.register(spark)
     val both = Tables.documents(spark, sfSmoke)
       .select(array_distinct(split(col("text"), " ")).as("ws"))
       .select(
@@ -41,7 +42,6 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("graft_shingles equals the declarative slice/concat_ws/xxhash64 chain") {
-    GraftExtensions.register(spark)
     val both = Tables.documents(spark, sfSmoke)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
@@ -62,7 +62,6 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("type check rejects non-float arrays") {
-    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       Tables.embeddings(spark, sfSmoke)
         .select(expr("graft_dot(array(1L, 2L), array(1L, 2L))")).collect()
@@ -71,7 +70,6 @@ class DotProductSpec extends SparkSpecBase {
   }
 
   test("literal and arity errors name the function; literals may be bigint") {
-    GraftExtensions.register(spark)
     // every message on the cause chain: analysis may wrap the builder's
     val errorText = (sql: String) => {
       val err = intercept[Throwable](spark.sql(sql).collect())
@@ -125,18 +123,34 @@ class DotProductSpec extends SparkSpecBase {
     }
   }
 
-  test("GraftExtensions injects every function in the shared list at session build") {
-    import org.apache.spark.sql.SparkSession
-    // withExtensions only applies at builder time, and getOrCreate
-    // short-circuits to an existing session — detach the suite session,
-    // build a sibling (shares the SparkContext, fresh sessionState), and
-    // restore. The sibling's registry has ONLY the injected functions.
+  /** Runs `body` with the suite session detached (no active or default
+    * session), so a builder in it makes a sibling session: it shares
+    * the SparkContext but gets a fresh sessionState. `getOrCreate`
+    * would otherwise short-circuit to the suite session. Never stop a
+    * sibling — it shares the suite's SparkContext. */
+  private def detached[T](body: => T): T = {
     val prev = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[2]")
-      .withExtensions(new graft.functions.GraftExtensions()).getOrCreate()
-    try {
+    try body
+    finally {
+      SparkSession.setActiveSession(prev)
+      SparkSession.setDefaultSession(prev)
+    }
+  }
+
+  /** How many times the as-of rule and strategy sit on `s`'s
+    * experimental lists. */
+  private def asofInstalls(s: SparkSession): (Int, Int) =
+    (s.experimental.extraOptimizations.count(_ == AsOfJoinRule),
+     s.experimental.extraStrategies.count(_ == AsOfJoinStrategy))
+
+  test("GraftExtensions injects every function in the shared list at session build") {
+    // withExtensions only applies at builder time; the sibling's
+    // registry has ONLY the injected functions.
+    detached {
+      val s2 = SparkSession.builder().master("local[2]")
+        .withExtensions(new graft.functions.GraftExtensions()).getOrCreate()
       val r = s2.sql(
         """SELECT
           |  graft_dot(array(CAST(0.5 AS FLOAT)), array(CAST(4.0 AS FLOAT))) AS d,
@@ -158,10 +172,39 @@ class DotProductSpec extends SparkSpecBase {
           |FROM VALUES (CAST(1.0 AS DOUBLE)), (CAST(2.0 AS DOUBLE)) AS t(v)
           |""".stripMargin).head()
       assert(td.getInt(0) == 3)
-    } finally {
-      // never stop s2 — it shares the suite's SparkContext
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
+    }
+  }
+
+  test("a fresh GraftSession.local session has the whole native tier installed") {
+    detached {
+      val s2 = GraftSession.local(4)
+      assert(s2 ne spark)
+      val missing = GraftExtensions.functions.map(_._1)
+        .filterNot(s2.sessionState.functionRegistry.functionExists)
+      assert(missing.isEmpty, s"not installed at build: $missing")
+      assert(asofInstalls(s2) == ((1, 1)))
+    }
+  }
+
+  test("SparkEntry.queries installs the native tier on a bare session it is given") {
+    // built like the bench harness builds its own session: a plain
+    // builder, nothing of graft's installed
+    val keys = Seq("join_asof_native", "dedup_simhash", "text_bpe_token_count")
+    val want = keys.map(k => SparkEntry.queries(k)(spark, sfSmoke).count())
+    detached {
+      val s2 = SparkSession.builder().master("local[2]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+      val registry = s2.sessionState.functionRegistry
+      assert(!registry.functionExists(GraftExtensions.functions.head._1))
+      assert(asofInstalls(s2) == ((0, 0)))
+      assert(keys.map(k => SparkEntry.queries(k)(s2, sfSmoke).count()) == want)
+      assert(GraftExtensions.functions.map(_._1).forall(registry.functionExists))
+      // each call above installed again; one more leaves one rule and
+      // one strategy all the same
+      assert(SparkEntry.queries(keys.head)(s2, sfSmoke).count() == want.head)
+      assert(asofInstalls(s2) == ((1, 1)))
     }
   }
 }

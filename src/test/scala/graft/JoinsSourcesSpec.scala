@@ -154,7 +154,6 @@ class JoinsSourcesSpec extends SparkSpecBase {
   }
 
   test("native as-of join is reachable from pure SQL via the marker") {
-    graft.plans.AsOfJoin.ensureRegistered(spark)
     Tables.events(spark, sfSmoke)
       .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
       .createOrReplaceTempView("v_sql_p")

@@ -192,7 +192,6 @@ class WindowsAggsSpec extends SparkSpecBase {
   }
 
   test("misra-gries: exact below capacity, eps-bounded under forced overflow") {
-    graft.functions.GraftExtensions.register(spark)
     val words = Tables.documents(spark, sfOracle)
       .filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("word"))

@@ -6,7 +6,8 @@
 # stability, and (if a second CPU count is given) the Spark
 # parallelism-sweep diff between two dumps. First, before the build, a
 # lint that every scaladoc in src/main attaches to the definition below
-# it, and a check that src/main writes its order-pinned double sum once.
+# it, a check that src/main writes its order-pinned double sum once, and
+# a check that graft's native tier is installed at its two sites only.
 #
 # Usage: tools/run_gates.sh [sfDir] [cpusA] [cpusB]
 #   tools/run_gates.sh                          # sf0.01, single 4-way dump
@@ -41,6 +42,28 @@ if [[ "$(grep -c . <<<"$folds")" != 1 || "$folds" != *Stats.scala:*'acc + $term'
   exit 1
 fi
 
+# A session enters graft through GraftSession.local or SparkEntry.queries,
+# and each installs the native tier (GraftExtensions.register) there; an
+# install call anywhere else, specs included, is a copy of that rule.
+echo "== one install site =="
+installs=$(grep -rn 'GraftExtensions.register(' src/main || true)
+echo "$installs"
+if [[ "$(grep -c . <<<"$installs")" != 2 \
+      || "$installs" != *GraftSession.scala:* \
+      || "$installs" != *SparkEntry.scala:* ]]; then
+  echo "expected exactly two GraftExtensions.register calls in src/main," \
+    "in GraftSession.scala and SparkEntry.scala" >&2
+  exit 1
+fi
+if grep -rn 'GraftExtensions.register(' src/test; then
+  echo "specs get the native tier from GraftSession.local; no spec installs it" >&2
+  exit 1
+fi
+if grep -rn 'ensureRegistered' src; then
+  echo "ensureRegistered is gone; GraftExtensions.register installs the as-of tier" >&2
+  exit 1
+fi
+
 echo "== build =="
 sbt -batch Test/compile | tail -1
 
@@ -62,9 +85,10 @@ run_verify() {
     echo "Verify reported per-query failures" >&2
     exit 1
   fi
-  # Operators re-register graft's native functions on every call; the
-  # registry logs this line whenever a name's (info, builder) pair is
-  # not the stored one, i.e. when the pair is rebuilt per call.
+  # Every SparkEntry.queries call installs graft's native functions again
+  # on its session; the registry logs this line whenever a name's
+  # (info, builder) pair is not the stored one, i.e. when the pair is
+  # rebuilt per call instead of read from the one `functions` val.
   local replaced
   replaced=$(grep -c 'replaced a previously registered function' \
     /tmp/graft_gates_verify.log || true)
