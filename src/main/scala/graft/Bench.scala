@@ -36,6 +36,12 @@ object Bench {
     val loadStart = load1()
     val ticksStart = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // GRAFT_BENCH_ONLY restricts the timed set. The stderr banner is NOT
+    // captured by the driver's stdout tail-parse, so the total line
+    // itself carries the timed-key count and an explicit "partial" flag
+    // (totalLine below): a leaked env var naming VALID keys still cannot
+    // pass a shrunken board off as a full-board result.
+    val only = SparkEntry.onlyKeys("GRAFT_BENCH_ONLY", "bench")
     val spark = GraftSession.local(GraftSession.cpus())
     GraftSession.warmUp(spark, sfDir)
     // Each query is timed as the min of two runs: single-shot numbers on a
@@ -59,22 +65,12 @@ object Bench {
     // A failing key times as -1.0; its reason goes to stderr, so the
     // two parsed stdout lines stay unchanged.
     def once(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try Probe.clock(fn(spark, sfDir).count())._1 catch {
         case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
-            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
-          return -1.0
+          System.err.println(s"[bench] $name failed: ${SparkEntry.failure(e)}")
+          -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // GRAFT_BENCH_ONLY restricts the timed set. The stderr banner is NOT
-    // captured by the driver's stdout tail-parse, so the total line
-    // itself carries the timed-key count and an explicit "partial" flag
-    // (totalLine below): a leaked env var naming VALID keys still cannot
-    // pass a shrunken board off as a full-board result.
-    val only = SparkEntry.onlyKeys("GRAFT_BENCH_ONLY", "bench")
     val firstPass = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) => (name, fn, once(name, fn)) }

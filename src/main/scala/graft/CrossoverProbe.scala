@@ -20,10 +20,8 @@ import graft.operators.{Dedup, Similarity}
   *    block-row picker. The quantized prescreen is proven lossless;
   *    `rowsEqual` is the empirical check of that proof at scale.
   *
-  * Protocol per (dir, side): SPARK_GRAFT_PROBE_RUNS timed runs
-  * (`ScaleProbe.timedRuns`, default 2), min reported; with more than
-  * one run an untimed warm run comes first. 100× corpora set it to 1:
-  * a single run is then minutes long and JIT noise is seconds.
+  * Protocol per (dir, side): `Probe.timed`, ScaleProbe's rule — a warm
+  * run, then the min of SPARK_GRAFT_PROBE_RUNS timed runs.
   *
   * Usage: runMain graft.CrossoverProbe <containment|embed> <sfDir> [<sfDir2> ...]
   * Output: one JSON line per dir (stdout).
@@ -59,20 +57,11 @@ object CrossoverProbe {
     val check = checks(args(0))
     val spark = GraftSession.local(GraftSession.cpus())
     GraftSession.warmUp(spark, args.toIndexedSeq.tail: _*)
-    val runs = ScaleProbe.timedRuns()
-    def minOf(f: () => Long): (Double, Long) = {
-      var rows = if (runs > 1) f() else 0L // warm
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); rows = f()
-        (System.nanoTime() - t0) / 1e9
-      }
-      (times.min, rows)
-    }
     def t(name: String): String = "t" + name.capitalize
     for (dir <- args.tail) {
       val ab = check(spark, dir)
-      val (tA, nA) = minOf(ab.runA)
-      val (tB, nB) = minOf(ab.runB)
+      val (_, tA, nA) = Probe.timed(ab.runA())
+      val (_, tB, nB) = Probe.timed(ab.runB())
       val faster = if (tA <= tB) ab.a else ab.b
       val picked = ab.picked()
       val fields = Seq("check" -> s"\"${args(0)}\"", "dir" -> Verify.jsonString(dir)) ++

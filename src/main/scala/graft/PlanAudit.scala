@@ -10,6 +10,7 @@ object PlanAudit {
     val keys = if (args.length > 1) args.tail.toSeq
       else Seq("filter_pred", "join_multiway", "join_theta_range",
                "agg_groupby", "dedup_ngram_jaccard", "sim_knn_join")
+    SparkEntry.requireKeys(keys, "PlanAudit")
     val spark = GraftSession.local(GraftSession.cpus())
     keys.foreach { k =>
       println(s"\n=== PLAN: $k ===")

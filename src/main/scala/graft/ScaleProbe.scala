@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent probe (r11 verdict ask #1, extended r13 with MEMORY
   * measurement per the r12 verdict's top ask): times a curated key set
   * at two corpus sizes on the SAME session config and reports each
@@ -15,15 +11,12 @@ import org.apache.spark.sql.SparkSession
   * that tracks corpus size, a fat collect_list cell) — the byte
   * exponents catch what the time exponents cannot.
   *
-  * Protocol per (dir, key): one untimed WARM run first (pays the JIT /
-  * codegen / session-memo investment — codebooks, staged layouts,
-  * UserFrames — so the timed runs measure the steady-state query, the
-  * thing that must scale), then min-of-N timed runs (`timedRuns`).
-  * The warm (first) run's time is also reported: for memoized keys it
-  * shows how the INVESTMENT grows, which matters independently (an
+  * Protocol per (dir, key): `Probe.timed`, a warm run then min-of-N.
+  * The warm run's time is also reported: for memoized keys (codebooks,
+  * staged layouts, UserFrames) it shows how the INVESTMENT grows (an
   * n^1.5 codebook training is fine; an n^2 one is not). Byte metrics
-  * come from the LAST timed run only (counters reset right before it),
-  * so they are steady-state too.
+  * come from the LAST timed run only (the `Probe.Ledger` is reset right
+  * before it).
   *
   * Reading the exponents: keys have a fixed ~0.1-0.2 s scheduling floor
   * that data growth does not touch, so CHEAP keys (tA under ~0.3 s)
@@ -79,37 +72,7 @@ object ScaleProbe {
     "win_distinct_running", "event_peak_concurrency",
     "agg_heavy_hitters_sketch", "pipeline_corpus_build")
 
-  /** Aggregates task-end metrics between resets. Listener events post
-    * asynchronously on the bus; snapshot() is called after a short
-    * drain pause (see the call site) — a probe tool tolerates the
-    * millisecond-grain slop that a grader could not. */
-  private final class MemListener extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val spill        = new AtomicLong // memory + disk spill bytes
-    val peakExec     = new AtomicLong // max over tasks
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        peakExec.updateAndGet(p => math.max(p, m.peakExecutionMemory))
-      }
-    }
-    def reset(): Unit = { shuffleWrite.set(0); spill.set(0); peakExec.set(0) }
-  }
-
   private case class Mem(sw: Long, spill: Long, px: Long)
-
-  /** SPARK_GRAFT_PROBE_RUNS, the timed-run count this probe and
-    * CrossoverProbe share (default 2): more than one run means one
-    * untimed warm run plus min-of-runs. The knob is for DEEP probe
-    * points (100×): when a single run is minutes long, warm + min-of-2
-    * triples a probe that JIT/session constants (~3-5 s) cannot
-    * meaningfully bias, and 1 collapses it to one timed run whose own
-    * byte capture is used. */
-  private[graft] def timedRuns(): Int =
-    scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt)
-      .getOrElse(2).max(1)
 
   def main(args: Array[String]): Unit = {
     // the per-key lines below use f"%.3f": on a decimal-comma default
@@ -120,21 +83,11 @@ object ScaleProbe {
       if (args.length > 3 && args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else DefaultKeys
-    val unknown = keys.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
+    SparkEntry.requireKeys(keys, "the ScaleProbe key list")
     val spark = GraftSession.local(GraftSession.cpus())
-    val mem = new MemListener
-    spark.sparkContext.addSparkListener(mem)
-
     // session bring-up is not a scaling signal
     GraftSession.warmUp(spark, dirA, dirB)
-
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-             dir: String): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val ledger = new Probe.Ledger(spark)
 
     // dir-major order: all keys at A, then all at B — session memos are
     // keyed by sf dir, so each dir pays its own investments exactly once.
@@ -142,20 +95,13 @@ object ScaleProbe {
     // of the exponent summary instead of killing the whole probe (full-
     // board runs hit a handful of keys whose staging assumes the
     // driver's exact corpus layout).
-    val runs = timedRuns()
     val results = (for (key <- keys) yield {
       val fn = SparkEntry.queries(key)
       def probe(dir: String): (Double, Double, Mem) = {
-        val warm = if (runs > 1) Some(time(fn, dir)) else None
-        val times = (1 to runs).map { i =>
-          // steady-state byte capture: reset right before the last timed
-          // run, then give the async listener bus a moment to drain
-          if (i == runs) { Thread.sleep(200); mem.reset() }
-          time(fn, dir)
-        }
-        Thread.sleep(200)
-        (warm.getOrElse(times.head), times.min,
-         Mem(mem.shuffleWrite.get, mem.spill.get, mem.peakExec.get))
+        val (warm, t, _) = Probe.timed(fn(spark, dir).count(), () => ledger.reset())
+        val st = ledger.stages
+        (warm, t, Mem(st.map(_.shuffleWrite).sum,
+          st.map(s => s.spillMem + s.spillDisk).sum, ledger.peakExecutionMemory))
       }
       try {
         val (warmA, tA, mA) = probe(dirA)
@@ -176,10 +122,7 @@ object ScaleProbe {
         Some((key, tA, tB, alpha, mA, mB))
       } catch {
         case e: Throwable =>
-          val msg = (e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").linesIterator.take(1)
-              .mkString).take(160)
-          println(s"""{"key":"$key","err":${Verify.jsonString(msg)}}""")
+          println(s"""{"key":"$key","err":${Verify.jsonString(SparkEntry.failure(e))}}""")
           System.out.flush()
           None
       }

@@ -18,19 +18,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.aggGroupBy(spark, "/root/testdata/sf0.001")
 
+  /** Fails, naming each, on the `keys` that `queries` lacks. Mains call
+    * it before building a session, so a typo'd key fails at once, not
+    * after every key before it ran. `source` says where `keys` came from. */
+  private[graft] def requireKeys(keys: Iterable[String], source: String): Unit = {
+    val unknown = keys.filterNot(queries.contains).toSeq.distinct.sorted
+    require(unknown.isEmpty, s"$source names unknown queries: ${unknown.mkString(", ")}")
+  }
+
+  /** A failed key's one-line reason: exception class, first message line. */
+  private[graft] def failure(e: Throwable): String =
+    s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}"
+
   /** The key subset named by env var `envVar` (comma-separated), or None
     * when it is unset — a local-iteration filter for the Bench and Verify
     * mains, never set in a graded run. When set it fails fast on unknown
-    * keys and banners on stderr under `[tag]`, so a leaked env var or a
-    * typo'd key can never silently shrink the run. */
+    * keys (`requireKeys`) and banners on stderr under `[tag]`, so a
+    * leaked env var or a typo'd key can never silently shrink the run. */
   private[graft] def onlyKeys(envVar: String, tag: String): Option[Set[String]] = {
     val only = sys.env.get(envVar)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { keys =>
-      val unknown = keys.diff(queries.keySet)
-      if (unknown.nonEmpty)
-        sys.error(s"$envVar names unknown queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
+      requireKeys(keys, envVar)
       System.err.println(s"[$tag] $envVar active: keeping " +
         s"${keys.size} of ${queries.size} queries")
     }

@@ -5,17 +5,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.local(GraftSession.cpus())
-    new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY restricts both the query dump and the oracle manifest
     val only = SparkEntry.onlyKeys("GRAFT_VERIFY_ONLY", "verify")
+    val spark = GraftSession.local(GraftSession.cpus())
+    new java.io.File(outDir).mkdirs()
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: " +
-          Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
+        System.err.println(s"[verify] $name failed: ${SparkEntry.failure(e)}")
       }
     }
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))

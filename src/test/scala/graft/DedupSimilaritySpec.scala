@@ -9,6 +9,24 @@ import org.apache.spark.sql.functions._
   * (FIXTURES.md: the corpus has no exact dups at sf0.001). */
 class DedupSimilaritySpec extends SparkSpecBase {
 
+  /** The exact top-5 neighbours of `e`'s first 20 vectors (by cosine
+    * rounded to 6 places, ties on the lower `nid`): the brute-force
+    * reference the ANN recall cases score against. */
+  private def bruteTop5(e: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+    val q = e.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
+    q.join(e.select(col("vec_id").as("nid"), col("embedding").as("nv")))
+      .filter(col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"),
+              expr("round(graft_dot(qv, nv), 6)").as("cos"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 5)
+      .select("qid", "nid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
   /** 3 near-dup pairs with known overlap + disjoint controls. */
   private def fixture = {
     import spark.implicits._
@@ -319,18 +337,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val e = Tables.embeddings(spark, sfOracle)
     val planes = Similarity.lshPlanesFor(e.count())
     val halfTables = math.max(1, Similarity.lshTablesFor(planes) / 2)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    val brute = q.join(e.select(col("vec_id").as("nid"), col("embedding").as("nv")))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-              expr("round(graft_dot(qv, nv), 6)").as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = bruteTop5(e)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "nid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -354,18 +361,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
 
   test("ann lsh: recall@5 >= 0.5 vs brute force at the default knobs") {
     val e = Tables.embeddings(spark, sfOracle)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    val brute = q.join(e.select(col("vec_id").as("nid"), col("embedding").as("nv")))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-              expr("round(graft_dot(qv, nv), 6)").as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = bruteTop5(e)
     val got = Similarity.simAnnLsh(spark, sfOracle)
       .select("qid", "nid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -452,18 +448,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // recall@5 vs brute force (informational lower bound: must beat
     // picking 5 of N at random by a wide margin)
     val e = Tables.embeddings(spark, sfOracle)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    val brute = q.join(e.select(col("vec_id").as("nid"), col("embedding").as("nv")))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-              expr("round(graft_dot(qv, nv), 6)").as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = bruteTop5(e)
     val got = rows.map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid"))).toSet
     val recall = (got & brute).size.toDouble / brute.size
     info(s"IVF recall@5 = $recall (nprobe=nProbeFor(n), 2 Lloyd rounds, 50% train)")

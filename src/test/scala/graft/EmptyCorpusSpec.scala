@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{expr, lit}
 
@@ -29,15 +28,14 @@ class EmptyCorpusSpec extends SparkSpecBase {
     * events.parquet carries TIMESTAMP(NANOS); read it the same way
     * Tables.events does (raw long) so the twin round-trips. */
   private def writeCorpus(prefix: String)(derive: (String, DataFrame) => DataFrame): String = {
-    val dir = Files.createTempDirectory(prefix).toFile
-    dir.deleteOnExit()
+    val dir = Scratch.dir(prefix)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.names.foreach { t =>
       derive(t, spark.read.parquet(s"$sfSmoke/$t.parquet"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/$t.parquet")
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
-    dir.getAbsolutePath
+    dir
   }
 
   private def assertAllKeysExecute(corpusDir: String, what: String): Unit = {
@@ -45,8 +43,7 @@ class EmptyCorpusSpec extends SparkSpecBase {
       case (name, fn) =>
         try { fn(spark, corpusDir).count(); None }
         catch { case e: Throwable =>
-          Some(s"$name: ${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
+          Some(s"$name: ${SparkEntry.failure(e)}")
         }
     }
     assert(failures.isEmpty,

@@ -148,14 +148,13 @@ class ModelEvalSpec extends SparkSpecBase {
     // CJK path needs a planted corpus: a real zh doc (cjk, not suspect),
     // a CJK leak into an en doc (suspect), and a clean ascii doc
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-moji").toFile
-    dir.deleteOnExit()
+    val dir = Scratch.dir("graft-moji")
     Seq((1L, "hello world", "en", "web", 11L),
         (2L, "你好 世界", "zh", "web", 5L),
         (3L, "mixed 你好 text", "en", "web", 13L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
-    val planted = TextOps.textMojibakeDetect(spark, dir.getAbsolutePath)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val planted = TextOps.textMojibakeDetect(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(planted(1L).getAs[String]("charset_class") == "ascii")
     assert(!planted(1L).getAs[Boolean]("is_suspect"))

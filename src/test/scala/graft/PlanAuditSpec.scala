@@ -4,7 +4,6 @@ import graft.operators.Relational
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FormattedMode, InputAdapter,
   ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -36,14 +35,8 @@ class PlanAuditSpec extends SparkSpecBase {
         p.children.size == 1 && onSummary(p.children.head)
       case _ => false
     }
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    root.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty && !onSummary(w.child) =>
-        w.simpleString(400)
-    }
+    WindowWhitelistSpec.unpartitionedWindows(df)
+      .filterNot(w => onSummary(w.child)).map(_.simpleString(400))
   }
 
   test("filter_pred pushes its predicates into the parquet scan") {
@@ -313,16 +306,14 @@ class PlanAuditSpec extends SparkSpecBase {
     // values through one task; pin that NO unpartitioned window exists
     // anywhere in the plan (even the offset windows partition by the
     // group key).
-    val plan = graft.operators.Stats.statsSpearman(spark, sfSmoke)
-      .queryExecution.executedPlan.toString
+    val df = graft.operators.Stats.statsSpearman(spark, sfSmoke)
+    val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("windowspecdefinition("),
       s"midrank windows missing entirely:\n$plan")
-    val unpartitioned = plan.linesIterator
-      .filter(l => l.contains("Window [") && "\\], \\[".r.findAllIn(l).length <= 1)
-      .toSeq
+    val unpartitioned = WindowWhitelistSpec.unpartitionedWindows(df)
     assert(unpartitioned.isEmpty,
       s"spearman must not plan any unpartitioned window:\n" +
-        unpartitioned.mkString("\n"))
+        unpartitioned.map(_.simpleString(400)).mkString("\n"))
   }
 
   test("link-prediction kernels broadcast the node-grain degree frame") {
@@ -350,15 +341,14 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("pq: codebook and ADC table broadcast; ranking windows partition per query") {
-    val plan = graft.operators.Similarity.simAnnPq(spark, sfSmoke)
-      .queryExecution.executedPlan.toString
+    val df = graft.operators.Similarity.simAnnPq(spark, sfSmoke)
+    val plan = df.queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(plan).length >= 2,
       s"the 128-row codebook and |Q|x128 ADC table must broadcast:\n$plan")
-    val unpartitioned = plan.linesIterator
-      .filter(l => l.contains("Window [") && "\\], \\[".r.findAllIn(l).length <= 1)
-      .toSeq
+    val unpartitioned = WindowWhitelistSpec.unpartitionedWindows(df)
     assert(unpartitioned.isEmpty,
-      s"pq rank windows must partition by query:\n${unpartitioned.mkString("\n")}")
+      s"pq rank windows must partition by query:\n" +
+        unpartitioned.map(_.simpleString(400)).mkString("\n"))
   }
 
   test("roc auc: midrank windows stay bucket-partitioned (no global rank)") {
@@ -473,21 +463,9 @@ class PlanAuditSpec extends SparkSpecBase {
     val scans = fmt.linesIterator
       .count(l => l.contains("Location:") && l.contains("documents"))
     assert(scans == 1, s"corpus build must read documents exactly once:\n$fmt")
-    // WindowExec prints `Window [exprs], [partition]` (no order) or
-    // `Window [exprs], [partition], [order]`; an UNPARTITIONED window
-    // puts the order spec (or nothing) in the second group — detect by
-    // the second group being empty or holding sort directions
-    val plan = df.queryExecution.executedPlan.toString
-    val unpartitioned = plan.linesIterator
-      .filter(_.contains("Window ["))
-      .filter { l =>
-        val groups = l.substring(l.indexOf("Window [")).split("\\], \\[")
-        groups.length < 2 || {
-          val second = groups(1).takeWhile(_ != ']').trim
-          second.isEmpty || second.contains(" ASC") || second.contains(" DESC")
-        }
-      }.toSeq
+    val unpartitioned = WindowWhitelistSpec.unpartitionedWindows(df)
     assert(unpartitioned.isEmpty,
-      s"every corpus-build window must be partitioned:\n${unpartitioned.mkString("\n")}")
+      s"every corpus-build window must be partitioned:\n" +
+        unpartitioned.map(_.simpleString(400)).mkString("\n"))
   }
 }

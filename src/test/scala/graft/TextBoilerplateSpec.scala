@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 
 /** Semantic checks for cross-document boilerplate pruning on a PLANTED
@@ -13,8 +12,7 @@ import org.apache.spark.sql.Row
 class TextBoilerplateSpec extends SparkSpecBase {
 
   private lazy val corpusDir: String = {
-    val dir = Files.createTempDirectory("graft-bp-corpus").toFile
-    dir.deleteOnExit()
+    val dir = Scratch.dir("graft-bp-corpus")
     import spark.implicits._
     // docs 0..5 embed the shared span "foo bar baz" (df = 7 with doc 6)
     // inside otherwise-unique text; doc 6 IS the span; doc 7 is clean.
@@ -24,8 +22,8 @@ class TextBoilerplateSpec extends SparkSpecBase {
       .selectExpr("doc_id", "text", "'en' AS lang", "'test' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
     docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"${dir.getAbsolutePath}/documents.parquet")
-    dir.getAbsolutePath
+      .parquet(s"$dir/documents.parquet")
+    dir
   }
 
   private lazy val byDoc: Map[Long, Row] =

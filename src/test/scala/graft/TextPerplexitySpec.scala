@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 
 /** Semantic checks for the unigram-LM perplexity gate on a PLANTED
@@ -13,8 +12,7 @@ import org.apache.spark.sql.Row
 class TextPerplexitySpec extends SparkSpecBase {
 
   private lazy val corpusDir: String = {
-    val dir = Files.createTempDirectory("graft-ppl-corpus").toFile
-    dir.deleteOnExit()
+    val dir = Scratch.dir("graft-ppl-corpus")
     import spark.implicits._
     // 10 docs of "common common common common", one doc of four distinct
     // hapaxes. Corpus totals: 44 tokens; p(common) = 40/44, p(hapax) = 1/44.
@@ -24,8 +22,8 @@ class TextPerplexitySpec extends SparkSpecBase {
       .selectExpr("doc_id", "text", "'en' AS lang", "'test' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
     docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"${dir.getAbsolutePath}/documents.parquet")
-    dir.getAbsolutePath
+      .parquet(s"$dir/documents.parquet")
+    dir
   }
 
   private lazy val byDoc: Map[Long, Row] =

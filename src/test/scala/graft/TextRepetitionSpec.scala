@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 
 /** Semantic checks for the intra-document repetition filter on PLANTED
@@ -12,8 +11,7 @@ import org.apache.spark.sql.Row
 class TextRepetitionSpec extends SparkSpecBase {
 
   private lazy val corpusDir: String = {
-    val dir = Files.createTempDirectory("graft-rep-corpus").toFile
-    dir.deleteOnExit()
+    val dir = Scratch.dir("graft-rep-corpus")
     import spark.implicits._
     val docs = Seq(
       // doc 0: "a b" × 8 — top 2-gram ("a b" or "b a") dominates, and the
@@ -33,8 +31,8 @@ class TextRepetitionSpec extends SparkSpecBase {
       .selectExpr("doc_id", "text", "'en' AS lang", "'test' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
     docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"${dir.getAbsolutePath}/documents.parquet")
-    dir.getAbsolutePath
+      .parquet(s"$dir/documents.parquet")
+    dir
   }
 
   private lazy val byDoc: Map[Long, Row] =

@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Global-window whitelist over EVERY graded key (r11 verdict ask #3).
   *
   * An unpartitioned Window funnels its whole input through ONE task —
@@ -78,28 +84,11 @@ class WindowWhitelistSpec extends SparkSpecBase {
     "pipeline_repeat_upsample" -> "per-source rollup scalar (|source| rows)"
   )
 
-  /** Unpartitioned-window detector shared with PlanAuditSpec's
-    * corpus-build pin: WindowExec prints
-    * `Window [exprs], [partitionSpec], [orderSpec]`; with an empty
-    * partition spec the second bracket group is empty or holds sort
-    * directions. */
-  private def globalWindows(plan: String): Seq[String] =
-    plan.linesIterator
-      .filter(_.contains("Window ["))
-      .filter { l =>
-        val groups = l.substring(l.indexOf("Window [")).split("\\], \\[")
-        groups.length < 2 || {
-          val second = groups(1).takeWhile(_ != ']').trim
-          second.isEmpty || second.contains(" ASC") || second.contains(" DESC")
-        }
-      }.map(_.trim).toSeq
-
   test("every key's unpartitioned windows are whitelisted with a row bound") {
     val found = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val gw = globalWindows(
-          fn(spark, sfSmoke).queryExecution.executedPlan.toString)
-        if (gw.isEmpty) None else Some(name -> gw)
+        val gw = WindowWhitelistSpec.unpartitionedWindows(fn(spark, sfSmoke))
+        if (gw.isEmpty) None else Some(name -> gw.map(_.simpleString(400)))
     }.toMap
     val unlisted = found.keySet.diff(whitelist.keySet)
     assert(unlisted.isEmpty,
@@ -111,5 +100,29 @@ class WindowWhitelistSpec extends SparkSpecBase {
     assert(stale.isEmpty,
       s"\nstale whitelist entries (no unpartitioned window in the plan " +
         s"anymore — delete them): ${stale.toSeq.sorted.mkString(", ")}")
+  }
+}
+
+object WindowWhitelistSpec {
+
+  /** The specs' one unpartitioned-window detector: every `WindowExec`
+    * with an empty `partitionSpec` in `df`'s executed plan. The walk
+    * enters `AdaptiveSparkPlanExec` and query stages through the plan
+    * they wrap, and follows inner children (subqueries among them) as
+    * well as children. */
+  def unpartitionedWindows(df: DataFrame): Seq[WindowExec] = {
+    def walk(p: QueryPlan[_]): Seq[WindowExec] = {
+      val here = p match {
+        case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
+        case _ => Nil
+      }
+      val below = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children ++ p.innerChildren
+      }
+      here ++ below.collect { case q: QueryPlan[_] => q }.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
   }
 }

@@ -14,6 +14,11 @@ Normalized (replaced by a fixed token):
   - RDD ids                        `MapPartitionsRDD[12]`, `rdd 12` -> `[_]`
   - JVM lambda class names         `$Lambda$123/0x0000...@1a2b3c` -> `$Lambda_`
   - random scratch/temp dir suffixes  `graft_lsh_index_9234933...` -> `graft_lsh_index__`
+  - identity hashes of Scala objects  `AdvancedAggs$GeoMean$@21e7206a` -> `AdvancedAggs$GeoMean$@_`
+  - part-file write UUIDs          `part-00000-<uuid>-c000.snappy.parquet` -> `part-00000-_-c000.snappy.parquet`
+
+Content hashes stay: `UnsafeArrayData@f1dd012b` hashes the array's bytes,
+so a change there is a change in the plan's literal.
 
 Usage:
   python3 tools/plan_diff.py <parentDump> <changeDump>
@@ -38,6 +43,11 @@ NORMALIZE = [
     # (File.createTempFile / Files.createTempDirectory style names)
     (re.compile(r"(/[A-Za-z][\w.-]*?_)-?\d{6,}"), r"\1_"),
     (re.compile(r"(/(?:spark|blockmgr|temp|tmp)-)[0-9a-f-]{8,}"), r"\1_"),
+    # a Scala object's default toString carries its per-JVM identity hash
+    (re.compile(r"\$@[0-9a-f]+\b"), "$@_"),
+    # the UUID Spark puts in every file name it writes
+    (re.compile(r"\b(part-\d+-)[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"),
+     r"\1_"),
 ]
 
 

@@ -6,8 +6,9 @@
 # stability, and (if a second CPU count is given) the Spark
 # parallelism-sweep diff between two dumps. First, before the build, a
 # lint that every scaladoc in src/main attaches to the definition below
-# it, a check that src/main writes its order-pinned double sum once, and
-# a check that graft's native tier is installed at its two sites only.
+# it, a check that src/main writes its order-pinned double sum once, a
+# check that graft's native tier is installed at its two sites only, and
+# a check that the measurement mains share one probe kit.
 #
 # Usage: tools/run_gates.sh [sfDir] [cpusA] [cpusB]
 #   tools/run_gates.sh                          # sf0.01, single 4-way dump
@@ -61,6 +62,25 @@ if grep -rn 'GraftExtensions.register(' src/test; then
 fi
 if grep -rn 'ensureRegistered' src; then
   echo "ensureRegistered is gone; GraftExtensions.register installs the as-of tier" >&2
+  exit 1
+fi
+
+# The measurement mains share one probe kit (graft.Probe): its Ledger is
+# the one SparkListener in src/main, and every read of it first drains
+# the listener bus exactly. A sleep in src/main is a guessed drain and a listener
+# elsewhere a second ledger. A deleteOnExit directory that holds files
+# outlives the JVM; temp dirs go through Scratch.dir.
+echo "== one probe kit =="
+if grep -rn 'Thread.sleep' src/main; then
+  echo "no Thread.sleep in src/main; a Probe.Ledger read waits for the listener bus" >&2
+  exit 1
+fi
+if grep -rn 'deleteOnExit' src; then
+  echo "deleteOnExit leaves a non-empty directory behind; use Scratch.dir" >&2
+  exit 1
+fi
+if grep -rn 'SparkListener' src/main | grep -v '^src/main/scala/graft/Probe.scala:'; then
+  echo "Probe.Ledger in Probe.scala is the one SparkListener in src/main" >&2
   exit 1
 fi
 
