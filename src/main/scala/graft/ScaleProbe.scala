@@ -38,6 +38,7 @@ package graft
   * structure growing with the corpus.
   *
   * Usage: runMain graft.ScaleProbe <dirA> <dirB> <ratio> [keysCsv]
+  * (`ratio` = size B / size A: finite, positive and not 1)
   * Output: one JSON line per key + a summary line (stdout).
   */
 object ScaleProbe {
@@ -74,6 +75,12 @@ object ScaleProbe {
 
   private case class Mem(sw: Long, spill: Long, px: Long)
 
+  /** Fails unless ln(`ratio`), the exponents' divisor, is finite and
+    * non-zero; otherwise the JSON lines would carry NaN or Infinity. */
+  private[graft] def requireRatio(ratio: Double): Unit =
+    require(ratio > 0 && ratio != 1 && !ratio.isInfinite,
+      s"ScaleProbe ratio must be finite, positive and not 1: $ratio")
+
   def main(args: Array[String]): Unit = {
     // the per-key lines below use f"%.3f": on a decimal-comma default
     // locale they would emit invalid JSON — pin the process locale
@@ -84,6 +91,7 @@ object ScaleProbe {
       else if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else DefaultKeys
     SparkEntry.requireKeys(keys, "the ScaleProbe key list")
+    requireRatio(ratio)
     val spark = GraftSession.local(GraftSession.cpus())
     // session bring-up is not a scaling signal
     GraftSession.warmUp(spark, dirA, dirB)

@@ -13,6 +13,19 @@ import graft.Tables
   */
 object Pipeline {
 
+  /** Share of a document's characters that are ASCII letters, over
+    * max(length, 1): the low_alpha rule of the quality gates. */
+  private val alphaRatio: Column =
+    length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double") /
+      greatest(length(col("text")), lit(1))
+
+  /** Distinct share of a document's space-split words, over
+    * max(word count, 1): the repetitive rule of the quality gates. */
+  private val distinctWordRatio: Column = {
+    val ws = split(col("text"), " ")
+    size(array_distinct(ws)).cast("double") / greatest(size(ws), lit(1))
+  }
+
   /** Clean-corpus pipeline over documents:
     * 1. cheap quality gate (length + vocabulary diversity);
     * 2. exact bag-of-words dedup keeping the lowest doc_id;
@@ -84,20 +97,14 @@ object Pipeline {
     * explains: auditability should never cost a second pipeline.
     */
   def qualityGate(s: SparkSession, sf: String): DataFrame = {
-    val ws = split(col("text"), " ")
-    val alphaRatio = round(
-      length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double") /
-        greatest(length(col("text")), lit(1)), 6)
-    val distinctRatio = round(
-      size(array_distinct(ws)).cast("double") / greatest(size(ws), lit(1)), 6)
     Tables.documents(s, sf)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
         concat_ws(",",
           when(coalesce(col("n_chars"), lit(0L)) < 100, lit("too_short")),
           when(col("lang").isNull, lit("no_lang")),
-          when(alphaRatio < 0.5, lit("low_alpha")),
-          when(distinctRatio < 0.3, lit("repetitive"))).as("reasons"))
+          when(round(alphaRatio, 6) < 0.5, lit("low_alpha")),
+          when(round(distinctWordRatio, 6) < 0.3, lit("repetitive"))).as("reasons"))
       .select(col("doc_id"), (col("reasons") === "").as("passed"),
               col("reasons"))
       .orderBy("doc_id")
@@ -483,9 +490,7 @@ object Pipeline {
   def pipelineCurriculum(s: SparkSession, sf: String): DataFrame = {
     val d = Tables.documents(s, sf)
       .filter(col("text").isNotNull && col("doc_id").isNotNull)
-      .withColumn("score", round(
-        (length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double") /
-          greatest(length(col("text")), lit(1))) *
+      .withColumn("score", round(alphaRatio *
         (length(col("text")).cast("double") /
           greatest(size(split(col("text"), " ")), lit(1))), 6))
     val qs = Seq(0.2, 0.4, 0.6, 0.8)
@@ -505,8 +510,9 @@ object Pipeline {
     * quality gate removed, in order): non-empty → min length → word
     * count band → alpha-ratio → exact dedup (keep-first among
     * survivors). Gates reuse the graded operators' exact expressions
-    * (the alpha ratio is textQualityScore's, the duplicate key is THE
-    * bagHash), so the funnel's numbers reconcile with the per-doc keys.
+    * (the alpha gate is textQualityScore's [[TextOps.nonAlphaRatio]],
+    * the duplicate key is THE bagHash), so the funnel's numbers
+    * reconcile with the per-doc keys.
     *
     * Scale shape: one scan; the only shuffle is the dedup window on the
     * content hash (min survivor doc_id per bag — same shuffle
@@ -516,15 +522,13 @@ object Pipeline {
     */
   def filterFunnel(s: SparkSession, sf: String): DataFrame = {
     val nWords = size(split(col("text"), " "))
-    val nonAlpha = length(regexp_replace(col("text"), "[a-z ]", ""))
-      .cast("double") / greatest(length(col("text")), lit(1))
     val wH = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     val flagged = Tables.documents(s, sf)
       .select(col("doc_id"), col("text"))
       .withColumn("g1", col("text").isNotNull && length(col("text")) > 0)
       .withColumn("g2", col("g1") && length(col("text")) >= 100)
       .withColumn("g3", col("g2") && nWords.between(10, 10000))
-      .withColumn("g4", col("g3") && nonAlpha <= 0.3)
+      .withColumn("g4", col("g3") && TextOps.nonAlphaRatio <= 0.3)
       .withColumn("h", Dedup.bagHash)
       .withColumn("g5", col("g4") &&
         col("doc_id") === min(when(col("g4"), col("doc_id"))).over(wH))
@@ -738,11 +742,6 @@ object Pipeline {
     */
   def pipelineCorpusBuild(s: SparkSession, sf: String): DataFrame = {
     val ws = split(col("text"), " ")
-    val alphaR = round(
-      length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double") /
-        greatest(length(col("text")), lit(1)), 6)
-    val distR = round(
-      size(array_distinct(ws)).cast("double") / greatest(size(ws), lit(1)), 6)
     val wExact = Window.partitionBy(col("h_exact"))
     val wBag = Window.partitionBy(col("h_bag"))
     val flagged = Tables.documents(s, sf)
@@ -751,7 +750,8 @@ object Pipeline {
       .withColumn("g1", col("doc_id").isNotNull && col("text").isNotNull &&
         length(col("text")) > 0)
       .withColumn("g2", col("g1") && coalesce(col("n_chars"), lit(0L)) >= 100 &&
-        col("lang").isNotNull && alphaR >= 0.5 && distR >= 0.3)
+        col("lang").isNotNull && round(alphaRatio, 6) >= 0.5 &&
+        round(distinctWordRatio, 6) >= 0.3)
       .withColumn("h_exact", md5(col("text").cast("binary")))
       .withColumn("h_bag",
         md5(concat_ws(" ", array_sort(ws)).cast("binary")))

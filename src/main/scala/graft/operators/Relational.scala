@@ -46,8 +46,7 @@ object Relational {
     Tables.lineitem(s, sf)
       .select(
         col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)
-          .as("revenue"))
+        round(TpchShapes.revenue, 4).as("revenue"))
       .orderBy("l_orderkey", "l_linenumber")
 
   /** Conjunctive predicates: date range + IN set + numeric between.
@@ -104,8 +103,7 @@ object Relational {
       .join(n, col("c_nationkey") === col("n_nationkey"))
       .join(r, col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-             .as("revenue"),
+      .agg(round(sum(TpchShapes.revenue), 2).as("revenue"),
            count(lit(1)).as("n_items"))
       .orderBy("r_name", "n_name")
   }
@@ -167,8 +165,7 @@ object Relational {
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("sum_disc_price"),
+        round(sum(TpchShapes.revenue), 2).as("sum_disc_price"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         round(avg(col("l_discount")), 6).as("avg_disc"),
         count(lit(1)).as("count_order"))
@@ -185,8 +182,7 @@ object Relational {
     c.join(o, col("c_custkey") === col("o_custkey"))
       .join(l, col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-        .as("revenue"))
+      .agg(round(sum(TpchShapes.revenue), 2).as("revenue"))
       .orderBy(col("revenue").desc, col("l_orderkey").asc)
       .limit(10)
   }
@@ -210,8 +206,7 @@ object Relational {
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"),
                year(col("o_orderdate")).cast("bigint").as("o_year"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
-             .as("profit"),
+      .agg(round(sum(TpchShapes.revenue), 4).as("profit"),
            count(lit(1)).as("n_items"))
       .orderBy("n_name", "o_year")
   }
@@ -237,8 +232,7 @@ object Relational {
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
-             .as("revenue"),
+      .agg(round(sum(TpchShapes.revenue), 4).as("revenue"),
            count(lit(1)).as("n_items"))
       .orderBy(col("revenue").desc, col("n_name").asc)
   }
@@ -258,8 +252,7 @@ object Relational {
       .join(l, col("o_orderkey") === col("l_orderkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
-             .as("revenue"))
+      .agg(round(sum(TpchShapes.revenue), 4).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey").asc)
       .limit(20)
   }
@@ -341,10 +334,9 @@ object Relational {
               col("l_shipdate") < lit("1996-10-01").cast("timestamp"))
       .join(Tables.part(s, sf), col("l_partkey") === col("p_partkey"))
       .agg(
-        round(sum(when(col("p_type").startsWith("PROMO"),
-                       col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        round(sum(when(col("p_type").startsWith("PROMO"), TpchShapes.revenue)
                   .otherwise(lit(0.0))) * 100.0 /
-              sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 6)
+              sum(TpchShapes.revenue), 6)
           .as("promo_revenue_pct"),
         count(lit(1)).as("n_items"))
 

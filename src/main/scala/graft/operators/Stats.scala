@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.language.reflectiveCalls
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -122,6 +124,17 @@ object Stats {
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("obs"))
 
+  /** The row (source), column (lang) and grand totals of the `obs`
+    * contingency cells, as windows over the ≤|sources|·|langs|-row cell
+    * frame of [[sourceLangCells]]. */
+  private def sourceLangMargins: (Column, Column, Column) = {
+    val wRow = Window.partitionBy(col("source"))
+    val wCol = Window.partitionBy(col("lang"))
+    val wAll = Window.partitionBy()
+    (sum(col("obs")).over(wRow), sum(col("obs")).over(wCol),
+     sum(col("obs")).over(wAll))
+  }
+
   /** A/B experiment comparison (Welch's t): users hash deterministically
     * into arms (md5 first hex char, 0-7 → A, else B — md5 is the
     * cross-engine-identical hash), the purchase-value metric aggregates
@@ -224,13 +237,9 @@ object Stats {
     * data-sized cost is the first aggregate.
     */
   def statsChiSquare(s: SparkSession, sf: String): DataFrame = {
-    val wRow = Window.partitionBy(col("source"))
-    val wCol = Window.partitionBy(col("lang"))
-    val wAll = Window.partitionBy()
+    val (rx, cy, n) = sourceLangMargins
     sourceLangCells(s, sf)
-      .withColumn("exp",
-        sum(col("obs")).over(wRow) * sum(col("obs")).over(wCol) /
-          sum(col("obs")).over(wAll))
+      .withColumn("exp", rx * cy / n)
       .select(col("source"), col("lang"), col("obs"),
         round(col("exp"), 4).as("expected"),
         round(pow(col("obs") - col("exp"), 2) / col("exp"), 6)
@@ -477,13 +486,25 @@ object Stats {
     * map-side combinable); the grand mean and F are windows/scalar math
     * over that tiny frame. Identical cost to a plain groupBy-avg.
     */
-  def statsAnova(s: SparkSession, sf: String): DataFrame = {
+  def statsAnova(s: SparkSession, sf: String): DataFrame =
+    anovaTable(typeMoments(
+      Tables.events(s, sf).filter(col("value").isNotNull), col("value")),
+      "f_stat")
+
+  /** Per-event-type moments of `x` over `rows`: (event_type, n, m, v) —
+    * count, mean and sample variance from one map-side-combinable
+    * aggregate, the per-group input of the one-way ANOVA keys. */
+  private def typeMoments(rows: DataFrame, x: Column): DataFrame =
+    rows.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), avg(x).as("m"), var_samp(x).as("v"))
+
+  /** The one-way ANOVA table over per-group (n, m, v) rows: n_total,
+    * k_groups, ss_between and ss_within (rounded at 4) and the F ratio
+    * (rounded at 6) named `stat`. The grand mean is a window over the
+    * ≤|groups|-row frame and the sums of squares one aggregate over it. */
+  private def anovaTable(groups: DataFrame, stat: String): DataFrame = {
     val wAll = Window.partitionBy()
-    Tables.events(s, sf)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("m"),
-           var_samp(col("value")).as("v"))
+    groups
       .select(
         sum(col("n")).over(wAll).as("n_total"),
         count(lit(1)).over(wAll).as("k"),
@@ -499,7 +520,7 @@ object Stats {
         round(col("ss_within"), 4).as("ss_within"),
         round((col("ss_between") / (col("k") - 1)) /
               (col("ss_within") / (col("n_total") - col("k"))), 6)
-          .as("f_stat"))
+          .as(stat))
   }
 
   /** Lag-k autocorrelation (k = 1, 2, 3) of each event type's daily
@@ -908,19 +929,12 @@ object Stats {
     * means are small exact-ish sums (≤ days addends), rounded at 6 —
     * the green lag-features discipline.
     *
-    * Scale shape: (type, day) aggregate + ONE lag window partitioned by
-    * type (calendar-bounded) + one moments aggregate. Nothing else
-    * touches the scan.
+    * Scale shape: (type, day) aggregate + ONE calendar-bounded d−7
+    * self-join ([[seasonalNaivePairs]]) + one moments aggregate. Nothing
+    * else touches the scan.
     */
-  def timeseriesSnaiveBacktest(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("d"), col("x4").as("x"))
-    // calendar-correct lag: join on d−7 rather than "7 observed rows
-    // back", so a gap week never silently shifts the weekday alignment
-    val prior = daily.select(col("event_type"),
-      date_add(col("d"), 7).as("d"), col("x").as("f"))
-    daily.join(prior, Seq("event_type", "d"))
+  def timeseriesSnaiveBacktest(s: SparkSession, sf: String): DataFrame =
+    seasonalNaivePairs(s, sf)
       .filter(col("x") =!= 0.0)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("bigint").as("n_scored"),
@@ -928,6 +942,19 @@ object Stats {
            round(avg(abs(col("x") - col("f")) / abs(col("x"))), 6).as("mape"),
            round(avg(col("f") - col("x")), 6).as("bias"))
       .orderBy("event_type")
+
+  /** Each typed day's 4-rounded total x beside the seasonal-naive
+    * forecast f, the same type's total seven days earlier:
+    * (event_type, d, x, f), one row per day that has a d−7 row. The
+    * lag is a join on the calendar day d−7, not "7 observed rows
+    * back", so a gap week never silently shifts the weekday alignment. */
+  private def seasonalNaivePairs(s: SparkSession, sf: String): DataFrame = {
+    val daily = DailyFrames.daily(s, sf)
+      .filter(col("event_type").isNotNull)
+      .select(col("event_type"), col("d"), col("x4").as("x"))
+    val prior = daily.select(col("event_type"),
+      date_add(col("d"), 7).as("d"), col("x").as("f"))
+    daily.join(prior, Seq("event_type", "d"))
   }
 
   /** Ljung–Box portmanteau test at h = 3 lags over each type's
@@ -975,45 +1002,53 @@ object Stats {
       .orderBy("event_type")
   }
 
+  /** Each event type's rows in day order, handed to `scan` once per
+    * type: the shape of the ewma, holt, cusum, ewm_var and holt_winters
+    * recursions. A group is one calendar-bounded series held in memory,
+    * so a recursion replays in O(days), where a SQL `aggregate` fold
+    * with an `acc || array(…)` accumulator copies the array per step
+    * (O(days²)). `T` is the key's row tuple, led by (event_type, d) and
+    * read through a structural type: tuples of each arity share no trait. */
+  private def dayOrderedScan[
+      T <: { def _1: String; def _2: java.sql.Date }: ClassTag, U: Encoder](
+      rows: Dataset[T])(scan: (String, Array[T]) => Iterator[U]): Dataset[U] = {
+    import rows.sparkSession.implicits._
+    rows.groupByKey(_._1)
+      .flatMapGroups((t: String, it: Iterator[T]) =>
+        scan(t, it.toArray.sortBy(_._2.getTime)))
+  }
+
   /** Exponentially weighted moving average (α = 0.3, s₀ = x₀) of each
     * event type's daily purchase total — the smoothing baseline next to
     * `timeseries_resample`'s raw grid. The recursion s_t = αx_t +
-    * (1−α)s_{t−1} folds over each type's ordered day array with the
-    * `aggregate` higher-order function: exact, no pow(1−α, −k) rescaling
-    * (which overflows on long series), and one output row per day via
-    * posexplode of the running-state array.
+    * (1−α)s_{t−1} replays over each type's day-ordered series
+    * ([[dayOrderedScan]]): exact, no pow(1−α, −k) rescaling (which
+    * overflows on long series), one output row per day.
     *
     * Scale shape: the data-sized work is the (type, day) aggregate; the
-    * fold runs per type over day-count-sized arrays (bounded by the
-    * calendar, not the data). A per-row window formulation would need a
-    * non-distributive recursive frame — the fold is the honest shape,
-    * and its state (one running array per type) is explicitly bounded.
+    * recursion runs per type over a calendar-bounded series. A per-row
+    * window formulation would need a non-distributive recursive frame.
     */
   def timeseriesEwma(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    // Per-type imperative scan instead of the SQL `aggregate` fold whose
-    // `acc || array(…)` accumulator copies the whole array per step
-    // (O(days²)) — the timeseriesEwmVar shape (r10 verdict ask #5).
-    // Same IEEE op order as the fold (0.3·x + 0.7·prev), and the same
-    // null propagation: an all-null purchase day poisons the series from
-    // that point on, exactly as 0.3·NULL does in both engines' folds —
-    // hence the boxed Double (a primitive would silently zero it).
+    // Same IEEE op order as the oracle's fold (0.3·x + 0.7·prev), and the
+    // same null propagation: an all-null purchase day poisons the series
+    // from that point on, exactly as 0.3·NULL does in both engines' folds
+    // — hence the boxed Double (a primitive would silently zero it).
     val daily = DailyFrames.daily(s, sf)
       .filter(col("event_type") === "purchase")
       .select(col("event_type"), col("d"), col("x4").as("x"))
       .as[(String, java.sql.Date, java.lang.Double)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, java.lang.Double)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        var e: java.lang.Double = null
-        var first = true
-        rows.iterator.map { case (_, d, x) =>
-          e = if (first) { first = false; x }
-              else if (x == null || e == null) null
-              else java.lang.Double.valueOf(0.3d * x + 0.7d * e)
-          (t, d, x, e)
-        }
+    dayOrderedScan(daily) { (t, rows) =>
+      var e: java.lang.Double = null
+      var first = true
+      rows.iterator.map { case (_, d, x) =>
+        e = if (first) { first = false; x }
+            else if (x == null || e == null) null
+            else java.lang.Double.valueOf(0.3d * x + 0.7d * e)
+        (t, d, x, e)
       }
+    }
       .toDF("event_type", "d", "x", "e")
       .select(col("event_type"), col("d"),
               round(col("x"), 4).as("x"), round(col("e"), 6).as("ewma"))
@@ -1222,41 +1257,37 @@ object Stats {
     * struct-fold evaluates the LITERAL same expression tree.
     *
     * Scale shape: identical to the EWMA — the data-sized work is the
-    * (type, day) aggregate; the recursion folds per type over
-    * calendar-bounded arrays. */
+    * (type, day) aggregate; the recursion runs per type over a
+    * calendar-bounded series ([[dayOrderedScan]]). */
   def timeseriesHolt(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    // Imperative O(days) scan replacing the O(days²) `acc || array(…)`
-    // fold (r10 verdict ask #5; the timeseriesEwmVar shape). newL is
-    // computed ONCE and reused in the b-step — the same double the
-    // fold's inline re-statement of the identical expression tree
-    // yields, so the series is bit-identical. Boxed Doubles preserve
-    // the fold's null propagation (an all-null day poisons l and b
-    // from that point on in both engines).
+    // newL is computed ONCE and reused in the b-step — the same double
+    // the fold's inline re-statement of the identical expression tree
+    // yields, so the series is bit-identical. Boxed Doubles preserve the
+    // fold's null propagation (an all-null day poisons l and b from that
+    // point on in both engines).
     val daily = DailyFrames.daily(s, sf)
       .filter(col("event_type") === "purchase")
       .select(col("event_type"), col("d"), col("x4").as("x"))
       .as[(String, java.sql.Date, java.lang.Double)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, java.lang.Double)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        var l: java.lang.Double = null
-        var b: java.lang.Double = null
-        var first = true
-        rows.iterator.map { case (_, d, x) =>
-          if (first) { l = x; b = java.lang.Double.valueOf(0.0d); first = false }
-          else {
-            val newL: java.lang.Double =
-              if (x == null || l == null || b == null) null
-              else java.lang.Double.valueOf(0.5d * x + 0.5d * (l + b))
-            val newB: java.lang.Double =
-              if (newL == null || l == null || b == null) null
-              else java.lang.Double.valueOf(0.3d * (newL - l) + 0.7d * b)
-            l = newL; b = newB
-          }
-          (t, d, x, l, b)
+    dayOrderedScan(daily) { (t, rows) =>
+      var l: java.lang.Double = null
+      var b: java.lang.Double = null
+      var first = true
+      rows.iterator.map { case (_, d, x) =>
+        if (first) { l = x; b = java.lang.Double.valueOf(0.0d); first = false }
+        else {
+          val newL: java.lang.Double =
+            if (x == null || l == null || b == null) null
+            else java.lang.Double.valueOf(0.5d * x + 0.5d * (l + b))
+          val newB: java.lang.Double =
+            if (newL == null || l == null || b == null) null
+            else java.lang.Double.valueOf(0.3d * (newL - l) + 0.7d * b)
+          l = newL; b = newB
         }
+        (t, d, x, l, b)
       }
+    }
       .toDF("event_type", "d", "x", "l", "b")
       .select(col("event_type"), col("d"),
               round(col("x"), 4).as("x"),
@@ -1275,34 +1306,31 @@ object Stats {
     *
     * Scale shape: the data-sized work is the (type, day) count
     * aggregate; μ/σ are one window over the tiny daily frame, and the
-    * recursive max-fold runs per type over calendar-bounded arrays —
-    * same honest-recursion shape as `timeseriesEwma`, with the oracle
-    * replaying the identical prefix folds.
+    * recursive max-fold runs per type over a calendar-bounded series
+    * ([[dayOrderedScan]]), with the oracle replaying the identical
+    * prefix folds.
     */
   def statsCusum(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
-    // Imperative O(days) scan replacing the O(days²) `acc || array(…)`
-    // fold (r10 verdict ask #5). μ/σ stay WINDOW-computed (not re-summed
-    // in the scan) so their doubles remain the exact values the oracle's
-    // avg/stddev_samp agree with; the scan replays only the max-fold,
-    // left-associated exactly like the SQL step ((prev + x) − μ) − σ/2.
-    // x is a count cast to double — never null, so primitives are safe,
-    // and math.max(0.0, −0.0) = +0.0 keeps the −0.0 lint clean.
+    // μ/σ stay WINDOW-computed (not re-summed in the scan) so their
+    // doubles remain the exact values the oracle's avg/stddev_samp agree
+    // with; the scan replays only the max-fold, left-associated exactly
+    // like the SQL step ((prev + x) − μ) − σ/2. x is a count cast to
+    // double — never null, so primitives are safe, and
+    // math.max(0.0, −0.0) = +0.0 keeps the −0.0 lint clean.
     val wT = Window.partitionBy(col("event_type"))
     val daily = DailyFrames.daily(s, sf)
       .select(col("event_type"), col("d"), col("c").cast("double").as("x"))
       .withColumn("mu", avg(col("x")).over(wT))
       .withColumn("sigma", coalesce(stddev_samp(col("x")).over(wT), lit(0.0)))
       .as[(String, java.sql.Date, Double, Double, Double)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double, Double, Double)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        var c = 0.0
-        rows.iterator.map { case (_, d, x, mu, sigma) =>
-          c = math.max(0.0, c + x - mu - sigma / 2)
-          (t, d, x, sigma, c)
-        }
+    dayOrderedScan(daily) { (t, rows) =>
+      var c = 0.0
+      rows.iterator.map { case (_, d, x, mu, sigma) =>
+        c = math.max(0.0, c + x - mu - sigma / 2)
+        (t, d, x, sigma, c)
       }
+    }
       .toDF("event_type", "d", "x", "sigma", "c")
       .select(col("event_type"), col("d"), col("x"),
         round(col("c"), 6).as("cusum"),
@@ -1693,16 +1721,7 @@ object Stats {
     * the user-grain aggregates.
     */
   def eventFunnelTime(s: SparkSession, sf: String): DataFrame = {
-    val ev = Tables.events(s, sf).filter(col("user_id").isNotNull)
-    val firstView = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("vt"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"))
-    val pAfter = firstView.join(purchases, Seq("user_id"))
-      .filter(col("ts") >= col("vt"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("pt"))
-    val conv = firstView.join(pAfter.select("user_id", "pt"),
-        Seq("user_id"), "left")
+    val conv = viewToPurchase(s, sf)
       .select(col("user_id"),
               datediff(to_date(col("pt")), to_date(col("vt")))
                 .cast("bigint").as("days"))
@@ -1714,6 +1733,23 @@ object Stats {
         min(col("days")).as("min_days"),
         round(avg(col("days")), 6).as("avg_days"),
         max(col("days")).as("max_days"))
+  }
+
+  /** Each viewer's first view `vt` beside the first purchase `pt` at or
+    * after it, NULL when there is none: (user_id, vt, pt), one row per
+    * user with a view. Two user-grain min-aggregates (the purchase side
+    * filtered to purchases before its join) and one user-grain left
+    * join. */
+  private def viewToPurchase(s: SparkSession, sf: String): DataFrame = {
+    val ev = Tables.events(s, sf).filter(col("user_id").isNotNull)
+    val firstView = ev.filter(col("event_type") === "view")
+      .groupBy(col("user_id")).agg(min(col("ts")).as("vt"))
+    val firstPurchase = firstView
+      .join(ev.filter(col("event_type") === "purchase")
+              .select(col("user_id"), col("ts")), Seq("user_id"))
+      .filter(col("ts") >= col("vt"))
+      .groupBy(col("user_id")).agg(min(col("ts")).as("pt"))
+    firstView.join(firstPurchase, Seq("user_id"), "left")
   }
 
   /** Distributed midrank (average rank over ties) of `valCol` within
@@ -1877,13 +1913,14 @@ object Stats {
     * homogeneity across event types — the assumption check run BEFORE
     * trusting `statsAnova`'s F (ANOVA assumes equal group variances;
     * when Levene rejects, the analyst switches to Welch). The statistic
-    * is itself a one-way ANOVA F computed on the absolute deviations
-    * z = |x − x̄_g| from each group's (4-rounded) mean.
+    * is itself a one-way ANOVA F ([[anovaTable]]) computed on the
+    * absolute deviations z = |x − x̄_g| from each group's (4-rounded)
+    * mean.
     *
     * Scale shape: two data-sized passes — the group-mean HashAggregate
     * (map-side combinable) broadcast back onto the scan, then ONE
-    * moments aggregate over the deviations; the F assembles from the
-    * ≤|types|-row summary exactly like statsAnova. The median-centered
+    * moments aggregate ([[typeMoments]]) over the deviations; the F
+    * assembles from the ≤|types|-row summary. The median-centered
     * Brown–Forsythe variant needs a distributed median per group (the
     * midranks/bucketed-prefix machinery); the mean form is the one
     * that stays a pure two-aggregate plan.
@@ -1894,27 +1931,9 @@ object Stats {
       .select(col("event_type"), col("value"))
     val means = base.groupBy(col("event_type"))
       .agg(round(avg(col("value")), 4).as("mu"))
-    val wAll = Window.partitionBy()
-    base.join(broadcast(means), Seq("event_type"))
+    val dev = base.join(broadcast(means), Seq("event_type"))
       .select(col("event_type"), abs(col("value") - col("mu")).as("z"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), avg(col("z")).as("mz"),
-           var_samp(col("z")).as("vz"))
-      .select(
-        sum(col("n")).over(wAll).as("n_total"),
-        count(lit(1)).over(wAll).as("k"),
-        (sum(col("n") * col("mz")).over(wAll) / sum(col("n")).over(wAll))
-          .as("gm"),
-        col("n"), col("mz"), col("vz"))
-      .groupBy(col("n_total"), col("k"), col("gm"))
-      .agg(sum(col("n") * pow(col("mz") - col("gm"), 2)).as("ssb"),
-           sum((col("n") - 1) * col("vz")).as("ssw"))
-      .select(col("n_total").cast("bigint").as("n_total"),
-        col("k").cast("bigint").as("k_groups"),
-        round(col("ssb"), 4).as("ss_between"),
-        round(col("ssw"), 4).as("ss_within"),
-        round((col("ssb") / (col("k") - 1)) /
-              (col("ssw") / (col("n_total") - col("k"))), 6).as("w_stat"))
+    anovaTable(typeMoments(dev, col("z")), "w_stat")
   }
 
   /** Wilcoxon signed-rank test on paired daily view vs purchase counts —
@@ -2305,13 +2324,9 @@ object Stats {
     * data-sized cost is the first aggregate.
     */
   def statsCramersV(s: SparkSession, sf: String): DataFrame = {
-    val wRow = Window.partitionBy(col("source"))
-    val wCol = Window.partitionBy(col("lang"))
-    val wAll = Window.partitionBy()
+    val (rx, cy, n) = sourceLangMargins
     sourceLangCells(s, sf)
-      .withColumn("exp",
-        sum(col("obs")).over(wRow) * sum(col("obs")).over(wCol) /
-          sum(col("obs")).over(wAll))
+      .withColumn("exp", rx * cy / n)
       .agg(sum(col("obs")).cast("bigint").as("n"),
            countDistinct(col("source")).cast("bigint").as("r_levels"),
            countDistinct(col("lang")).cast("bigint").as("c_levels"),
@@ -2505,14 +2520,11 @@ object Stats {
     * touches the scan.
     */
   def statsMutualInfo(s: SparkSession, sf: String): DataFrame = {
-    val wRow = Window.partitionBy(col("source"))
-    val wCol = Window.partitionBy(col("lang"))
-    val wAll = Window.partitionBy()
+    val (rx, cy, n) = sourceLangMargins
     sourceLangCells(s, sf)
       .select(col("obs").cast("double").as("obs"),
-        sum(col("obs")).over(wRow).cast("double").as("rx"),
-        sum(col("obs")).over(wCol).cast("double").as("cy"),
-        sum(col("obs")).over(wAll).cast("double").as("n"))
+        rx.cast("double").as("rx"), cy.cast("double").as("cy"),
+        n.cast("double").as("n"))
       .agg(max(col("n")).cast("bigint").as("n"),
            (-sum(col("obs") / col("n") * log(col("rx") / col("n")))).as("hs"),
            (-sum(col("obs") / col("n") * log(col("cy") / col("n")))).as("hl"),
@@ -2592,14 +2604,14 @@ object Stats {
     * extended with the volatility track every adaptive alerting
     * threshold needs: m_t = αx_t + (1−α)m_{t−1},
     * v_t = (1−α)(v_{t−1} + α(x_t − m_{t−1})²), seeded m₀ = x₀, v₀ = 0.
-    * The recursion folds over each type's ordered day array exactly
-    * like the ewma key (the honest shape for a non-distributive
-    * frame); the oracle replays the identical two-state fold with
-    * list_reduce over [m, v] pairs — same IEEE op order, so the key
-    * stays hash-checked despite being sequential.
+    * The recursion replays over each type's day-ordered series
+    * ([[dayOrderedScan]]) like the ewma key; the oracle replays the
+    * identical two-state fold with list_reduce over [m, v] pairs — same
+    * IEEE op order, so the key stays hash-checked despite being
+    * sequential.
     *
     * Scale shape: data-sized work is the (type, day) aggregate; the
-    * fold runs per type over calendar-bounded arrays.
+    * recursion runs per type over a calendar-bounded series.
     */
   def timeseriesEwmVar(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
@@ -2610,27 +2622,21 @@ object Stats {
       .filter(col("event_type").isNotNull && col("cv") > 0)
       .select(col("event_type"), col("d"), col("x4").as("x"))
       .as[(String, java.sql.Date, Double)]
-    // Per-type imperative scan instead of a SQL `aggregate` fold whose
-    // `acc || array(…)` accumulator copies the whole array per step
-    // (O(days²)). flatMapGroups holds ONE group (calendar-bounded) in
-    // memory, sorts it by day, and replays the recursion in O(days)
-    // with running (m, v) state — the identical IEEE op sequence
+    // Running (m, v) state replays the oracle fold's IEEE op sequence
     // (0.3·x + 0.7·m; 0.7·(v + 0.3·(x−m)·(x−m)), v reading the OLD m),
     // so the hash-checked values are bit-identical to the fold's.
-    daily.groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        var m = 0.0; var v = 0.0; var first = true
-        rows.iterator.map { case (_, d, x) =>
-          if (first) { m = x; v = 0.0; first = false }
-          else {
-            val prevM = m
-            m = 0.3d * x + 0.7d * prevM
-            v = 0.7d * (v + 0.3d * (x - prevM) * (x - prevM))
-          }
-          (t, d, x, m, v)
+    dayOrderedScan(daily) { (t, rows) =>
+      var m = 0.0; var v = 0.0; var first = true
+      rows.iterator.map { case (_, d, x) =>
+        if (first) { m = x; v = 0.0; first = false }
+        else {
+          val prevM = m
+          m = 0.3d * x + 0.7d * prevM
+          v = 0.7d * (v + 0.3d * (x - prevM) * (x - prevM))
         }
+        (t, d, x, m, v)
       }
+    }
       .toDF("event_type", "d", "x", "m", "v")
       .select(col("event_type"), col("d"),
               round(col("x"), 4).as("x"),
@@ -2754,20 +2760,18 @@ object Stats {
     * B = Σ(1−w_j/Σw)²/(n_j−1), F* = A / (1 + 2(k−2)/(k²−1)·B), and the
     * Satterthwaite df₂ = (k²−1)/(3B).
     *
-    * Determinism: per-group n/m/v come from the same single-pass
-    * moments as `statsAnova` (established engine parity); every
-    * cross-group reduction (Σw, Σwm, A, B) is an [[orderedSum]] in
-    * event-type order.
+    * Determinism: per-group n/m/v come from [[typeMoments]], the
+    * single-pass moments under `statsAnova` (established engine
+    * parity); every cross-group reduction (Σw, Σwm, A, B) is an
+    * [[orderedSum]] in event-type order.
     *
     * Scale shape: one map-side-combinable moments aggregate is the only
     * data-sized work; the folds run over a k ≤ |types| element array.
     */
   def statsWelchAnova(s: SparkSession, sf: String): DataFrame = {
-    val g = Tables.events(s, sf)
-      .filter(col("value").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("m"),
-           var_samp(col("value")).as("v"))
+    val g = typeMoments(Tables.events(s, sf)
+      .filter(col("value").isNotNull && col("event_type").isNotNull),
+      col("value"))
     g.agg(keyOrdered(col("event_type"), col("n"), col("m"), col("v"))
             .as("arr"),
           count(lit(1)).as("k"))
@@ -2803,9 +2807,7 @@ object Stats {
     * moments stream through one combinable aggregate, no iteration.
     */
   def statsOlsMulti(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type") === "purchase" && col("cv") > 0)
-      .select(col("d"), col("x4").cast("decimal(18,4)").as("y"))
+    val daily = purchaseDayRevenue(s, sf)
       .select(
         datediff(col("d"), lit("2024-01-01").cast("date")).cast("long").as("t"),
         when(dayofweek(col("d")).isin(1, 7), lit(1L)).otherwise(lit(0L))
@@ -3037,11 +3039,30 @@ object Stats {
     * broadcast back, argmax via a bounded (calendar-grain) sort —
     * nothing data-sized after the first shuffle.
     */
-  def statsGrubbs(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
+  def statsGrubbs(s: SparkSession, sf: String): DataFrame =
+    largestDeviation(purchaseDayRevenue(s, sf))
+      .select(col("n").cast("bigint").as("n_days"),
+        round(col("m"), 6).as("mean_daily"),
+        round(col("sd"), 6).as("sd_daily"),
+        col("d").as("suspect_day"),
+        round(col("y").cast("double"), 4).as("suspect_revenue"),
+        round(col("dev") / col("sd"), 6).as("g_stat"))
+
+  /** Exact daily purchase revenue (d, y): one row per purchase day with
+    * a non-NULL value, y its total as DECIMAL(18,4), so moment sums
+    * over y are order-free on both engines. */
+  private def purchaseDayRevenue(s: SparkSession, sf: String): DataFrame =
+    DailyFrames.daily(s, sf)
       .filter(col("event_type") === "purchase" && col("cv") > 0)
       .select(col("d"), col("x4").cast("decimal(18,4)").as("y"))
-    val mo = daily.agg(count(lit(1)).as("n"),
+
+  /** The day of `frame` (d, y) farthest from its mean, as one row of
+    * (d, y, n, m, sd, dev): the frame's count n, mean m and sample sd
+    * (exact-decimal moments Σy, Σy², one √), and dev = |y − m|; ties go
+    * to the earlier day. The moments row is broadcast back, and the
+    * argmax is a bounded (calendar-grain) top-1 sort. */
+  private def largestDeviation(frame: DataFrame): DataFrame = {
+    val mo = frame.agg(count(lit(1)).as("n"),
         sum(col("y")).as("sy"), sum(col("y") * col("y")).as("syy"))
       .select(col("n"),
         (col("sy").cast("double") / col("n").cast("double")).as("m"),
@@ -3049,16 +3070,10 @@ object Stats {
               col("sy").cast("double") * col("sy").cast("double") /
                 col("n").cast("double")) /
              (col("n").cast("double") - 1.0)).as("sd"))
-    daily.crossJoin(broadcast(mo))
+    frame.crossJoin(broadcast(mo))
       .withColumn("dev", abs(col("y").cast("double") - col("m")))
       .orderBy(col("dev").desc, col("d").asc)
       .limit(1)
-      .select(col("n").cast("bigint").as("n_days"),
-        round(col("m"), 6).as("mean_daily"),
-        round(col("sd"), 6).as("sd_daily"),
-        col("d").as("suspect_day"),
-        round(col("y").cast("double"), 4).as("suspect_revenue"),
-        round(col("dev") / col("sd"), 6).as("g_stat"))
   }
 
   /** AR(2) fit + one-step backtest per event type — the autoregressive
@@ -3296,33 +3311,20 @@ object Stats {
     *
     * All three rounds are IN-PLAN: removal is a broadcast left-anti
     * join against the previous round's 1-row argmax (no driver
-    * collects); each round's moment aggregate is the same exact-decimal
-    * Grubbs algebra. The day-grain frame is calendar-bounded, so the
-    * 3× recomputation is bounded work stacked on one events scan.
+    * collects); each round is [[largestDeviation]], the exact-decimal
+    * moments and argmax under [[statsGrubbs]]. The day-grain frame is
+    * calendar-bounded, so the 3× recomputation is bounded work stacked
+    * on one events scan.
     */
   def timeseriesEsdAnomaly(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type") === "purchase" && col("cv") > 0)
-      .select(col("d"), col("x4").cast("decimal(18,4)").as("y"))
-    def argmaxRound(frame: DataFrame, i: Int): DataFrame = {
-      val mo = frame.agg(count(lit(1)).as("n"),
-          sum(col("y")).as("sy"), sum(col("y") * col("y")).as("syy"))
-        .select(col("n"),
-          (col("sy").cast("double") / col("n").cast("double")).as("m"),
-          sqrt((col("syy").cast("double") -
-                col("sy").cast("double") * col("sy").cast("double") /
-                  col("n").cast("double")) /
-               (col("n").cast("double") - 1.0)).as("sd"))
-      frame.crossJoin(broadcast(mo))
-        .withColumn("dev", abs(col("y").cast("double") - col("m")))
-        .orderBy(col("dev").desc, col("d").asc)
-        .limit(1)
+    val daily = purchaseDayRevenue(s, sf)
+    def argmaxRound(frame: DataFrame, i: Int): DataFrame =
+      largestDeviation(frame)
         .select(lit(i).cast("int").as("round"),
           col("n").cast("bigint").as("n_remaining"),
           col("d").as("suspect_day"),
           round(col("y").cast("double"), 4).as("suspect_revenue"),
           round(col("dev") / col("sd"), 6).as("r_stat"))
-    }
     val r1 = argmaxRound(daily, 1)
     val d2 = daily.join(broadcast(r1.select(col("suspect_day").as("d"))),
       Seq("d"), "left_anti")
@@ -3381,18 +3383,13 @@ object Stats {
     * the tails — the signal a symmetric MAE cannot carry.
     *
     * Determinism: forecasts and actuals are the same 4-rounded daily
-    * values as snaive (calendar d−7 join); the loss is exact arithmetic
+    * values as snaive ([[seasonalNaivePairs]]); the loss is exact arithmetic
     * on agreed values, averaged then rounded at 6.
     *
     * Scale shape: daily-memo frame, one self-join on (type, d), a 3×
     * map-side explode of the quantile levels, one aggregate. */
-  def statsQuantilePinball(s: SparkSession, sf: String): DataFrame = {
-    val daily = DailyFrames.daily(s, sf)
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("d"), col("x4").as("x"))
-    val prior = daily.select(col("event_type"),
-      date_add(col("d"), 7).as("d"), col("x").as("f"))
-    daily.join(prior, Seq("event_type", "d"))
+  def statsQuantilePinball(s: SparkSession, sf: String): DataFrame =
+    seasonalNaivePairs(s, sf)
       .select(col("event_type"), col("x"), col("f"),
         explode(array(lit(0.1d), lit(0.5d), lit(0.9d))).as("q"))
       .withColumn("loss",
@@ -3402,7 +3399,6 @@ object Stats {
       .agg(count(lit(1)).cast("bigint").as("n_scored"),
            round(avg(col("loss")), 6).as("pinball"))
       .orderBy("event_type", "q")
-  }
 
   /** Holt–Winters additive triple exponential smoothing (weekly season,
     * m = 7; α=0.3, β=0.2, γ=0.1) — the seasonal rung between
@@ -3410,48 +3406,52 @@ object Stats {
     * the level update reads the season from SEVEN steps back
     * (l_t = α(x_t − s_{t−7}) + (1−α)(l_{t−1}+b_{t−1})), so the
     * recursion state is (l, b, last-7-seasons) — carried here as a
-    * rolling 7-slot array in the per-type imperative scan (the
-    * timeseriesEwmVar O(days) discipline), and as a LIST column in the
-    * oracle's recursive CTE. Seeds: l₇ = round₆(mean of the first 7
-    * observed days), b₇ = 0, s₁..₇ = x_i − l₇; the seed mean rounds at
+    * rolling 7-slot array in the [[dayOrderedScan]] recursion, and as a
+    * LIST column in the oracle's recursive CTE. Seeds: l₇ =
+    * round₆(mean of the first 7 observed days), b₇ = 0,
+    * s₁..₇ = x_i − l₇; the seed mean rounds at
     * 6 BEFORE entering the recursion so both engines replay the
     * identical IEEE op sequence from agreed values. Emits every day
     * past the seed week with level/trend/season and the one-step
     * forecast l + b + s_{t−6}.
     *
     * Scale shape: one (type, day) frame off the daily memo; each
-    * calendar-bounded series scans once per type inside flatMapGroups.
+    * calendar-bounded series scans once per type.
     */
   def timeseriesHoltWinters(s: SparkSession, sf: String): DataFrame = {
     import s.implicits._
     val daily = DailyFrames.daily(s, sf)
       .filter(col("event_type") === "purchase")
       .select(col("event_type"), col("d"), col("x4").as("x"))
-      .as[(String, java.sql.Date, Double)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val rows = it.toArray.sortBy(_._2.getTime)
-        if (rows.length <= 7) Iterator.empty
-        else {
-          var sum0 = 0.0
-          var i = 0
-          while (i < 7) { sum0 += rows(i)._3; i += 1 }
-          val m0 = BigDecimal(sum0 / 7.0d)
+      .as[(String, java.sql.Date, java.lang.Double)]
+    // An all-NULL purchase day reads as a NULL x (boxed, as in ewma and
+    // holt) and follows the oracle's NULL rules: the seed sum skips NULL
+    // days (NULL only when all seven are), a NULL day's season slot is
+    // NULL, and every later step is NULL when any operand is.
+    def step(operands: java.lang.Double*)(v: => Double): java.lang.Double =
+      if (operands.contains(null)) null else java.lang.Double.valueOf(v)
+    dayOrderedScan(daily) { (t, rows) =>
+      if (rows.length <= 7) Iterator.empty
+      else {
+        val seed = rows.take(7).flatMap(r => Option(r._3)).map(_.doubleValue)
+        val m0: java.lang.Double = if (seed.isEmpty) null
+          else BigDecimal(seed.foldLeft(0.0d)(_ + _) / 7.0d)
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          val sArr = Array.tabulate(7)(j => rows(j)._3 - m0)
-          var l = m0; var b = 0.0d
-          (8 to rows.length).iterator.map { tt =>
-            val (_, d, x) = rows(tt - 1)
-            val sOld = sArr((tt - 8) % 7)
-            val lPrev = l
-            l = 0.3d * (x - sOld) + 0.7d * (lPrev + b)
-            b = 0.2d * (l - lPrev) + 0.8d * b
-            val sNew = 0.1d * (x - l) + 0.9d * sOld
-            sArr((tt - 8) % 7) = sNew
-            (t, d, x, l, b, sNew, l + b + sArr((tt - 7) % 7))
-          }
+        val sArr = rows.take(7).map(r => step(r._3, m0)(r._3 - m0))
+        var l = m0; var b: java.lang.Double = 0.0d
+        (8 to rows.length).iterator.map { tt =>
+          val (_, d, x) = rows(tt - 1)
+          val sOld = sArr((tt - 8) % 7)
+          val lPrev = l
+          l = step(x, sOld, lPrev, b)(0.3d * (x - sOld) + 0.7d * (lPrev + b))
+          b = step(l, lPrev, b)(0.2d * (l - lPrev) + 0.8d * b)
+          val sNew = step(x, l, sOld)(0.1d * (x - l) + 0.9d * sOld)
+          sArr((tt - 8) % 7) = sNew
+          val sNext = sArr((tt - 7) % 7)
+          (t, d, x, l, b, sNew, step(l, b, sNext)(l + b + sNext))
         }
       }
+    }
       .toDF("event_type", "d", "x", "l", "b", "sn", "fc")
       .select(col("event_type"), col("d"), round(col("x"), 4).as("x"),
         round(col("l"), 6).as("level"), round(col("b"), 6).as("trend"),
@@ -3475,16 +3475,7 @@ object Stats {
     * map-side combinable, no windows.
     */
   def eventConversionWindow(s: SparkSession, sf: String): DataFrame = {
-    val ev = Tables.events(s, sf).filter(col("user_id").isNotNull)
-    val firstView = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("vt"))
-    val firstPurchase = firstView
-      .join(ev.filter(col("event_type") === "purchase")
-              .select(col("user_id"), col("ts")), Seq("user_id"))
-      .filter(col("ts") >= col("vt"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("pt"))
-    val deltas = firstView
-      .join(firstPurchase, Seq("user_id"), "left")
+    val deltas = viewToPurchase(s, sf)
       .select((unix_micros(col("pt")) - unix_micros(col("vt")))
         .as("delta_us"))
     def within(us: Long) =

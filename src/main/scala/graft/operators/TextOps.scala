@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -14,6 +14,12 @@ import graft.Tables
 object TextOps {
 
   private def words(c: String = "text") = split(col(c), " ")
+
+  /** Share of a document's characters that are neither lowercase ASCII
+    * letters nor spaces, over max(length, 1). */
+  private[operators] val nonAlphaRatio: Column =
+    length(regexp_replace(col("text"), "[a-z ]", "")).cast("double") /
+      greatest(length(col("text")), lit(1))
 
   /** TF-IDF: term frequency per (doc, word), document frequency per word,
     * tf·idf score. Two shuffles (tf groupBy, df groupBy) + one broadcast
@@ -128,9 +134,7 @@ object TextOps {
         size(words()).cast("bigint").as("n_words"),
         round(length(col("text")).cast("double") / size(words()), 4)
           .as("avg_word_len"),
-        round(length(regexp_replace(col("text"), "[a-z ]", ""))
-          .cast("double") / greatest(length(col("text")), lit(1)), 6)
-          .as("non_alpha_ratio"),
+        round(nonAlphaRatio, 6).as("non_alpha_ratio"),
         round(size(array_distinct(words())).cast("double") / size(words()), 6)
           .as("vocab_diversity"))
       .withColumn("quality",

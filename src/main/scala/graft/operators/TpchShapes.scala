@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -29,7 +29,10 @@ import graft.Tables
   */
 object TpchShapes {
 
-  private def revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+  /** TPC-H discounted revenue, l_extendedprice · (1 − l_discount): the
+    * one definition every lineitem revenue and profit sum reads. */
+  private[operators] def revenue: Column =
+    col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
   /** TPC-H Q2 shape (lite: "supplied by" = appears in lineitem, cost
     * preference = highest account balance): for each LARGE small-size part

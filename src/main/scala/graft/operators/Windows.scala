@@ -354,8 +354,8 @@ object Windows {
   def winParetoAbc(s: SparkSession, sf: String): DataFrame = {
     val rev = Tables.lineitem(s, sf)
       .groupBy(col("l_partkey"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-        4).cast("decimal(18,4)").as("rev"))
+      .agg(round(sum(TpchShapes.revenue), 4).cast("decimal(18,4)")
+        .as("rev"))
       // negated so that ascending buckets walk revenue descending
       .withColumn("bkt", -valueBucket(col("rev").cast("double")))
     bucketPrefix(rev, "bkt", Seq(col("rev").desc, col("l_partkey").asc),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{expr, lit}
+import org.apache.spark.sql.types.LongType
 
 /** Degenerate-input robustness: every graded key must EXECUTE (not
   * necessarily return rows) against three adversarial corpora that are
@@ -14,6 +15,8 @@ import org.apache.spark.sql.functions.{expr, lit}
   *    the fragile spots are custom Catalyst expressions (null must
   *    short-circuit in BOTH codegen and interpreted paths), primitive-
   *    field encoders, and `size(split(...))`-style derivations (-1);
+  *    events also gain a purchase whose value is NULL on a day of its
+  *    own, so that day's total is NULL in every daily series;
   *  - monoculture: every document the SAME text, every embedding the
   *    SAME vector — worst-case duplicate skew where one LSH bucket holds
   *    everything, the dup graph is one giant component, similarities tie
@@ -56,10 +59,22 @@ class EmptyCorpusSpec extends SparkSpecBase {
   }
 
   test("every graded key executes against a corpus containing all-null rows") {
-    val dir = writeCorpus("graft-nulls-corpus") { (_, df) =>
+    val dir = writeCorpus("graft-nulls-corpus") { (t, df) =>
       val allNull = df.limit(1).select(
         df.schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
-      df.limit(50).union(allNull)
+      val rows = df.limit(50).union(allNull)
+      if (t != "events") rows
+      else {
+        // 2024-03-01 12:00 UTC, after every sf0.001 event; ts reads as
+        // epoch nanos from a TIMESTAMP(NANOS) generation
+        val day = df.schema("ts").dataType match {
+          case LongType => lit(1709294400L * 1000000000L)
+          case tsType => lit("2024-03-01 12:00:00").cast(tsType)
+        }
+        rows.union(df.limit(1).withColumn("ts", day)
+          .withColumn("event_type", lit("purchase"))
+          .withColumn("value", lit(null).cast("double")))
+      }
     }
     assertAllKeysExecute(dir, "a null-row corpus")
   }

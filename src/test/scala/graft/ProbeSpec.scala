@@ -2,7 +2,8 @@ package graft
 
 /** The measurement mains' shared kit: the stage ledger read after one
   * exact drain of the listener bus, the key-name check every main runs
-  * before it builds a session, and the one failed-key line. */
+  * before it builds a session (and ScaleProbe's size-ratio check), and
+  * the one failed-key line. */
 class ProbeSpec extends SparkSpecBase {
 
   test("one drain, no sleep: the ledger holds both stages of a two-stage job") {
@@ -30,6 +31,14 @@ class ProbeSpec extends SparkSpecBase {
     assert(err.getMessage.endsWith("PlanAudit names unknown queries: agg_grupby, nope"),
       err.getMessage)
     SparkEntry.requireKeys(Seq("agg_groupby", "dedup_exact"), "PlanAudit")
+  }
+
+  test("ScaleProbe rejects a size ratio its exponents cannot divide by") {
+    Seq(1.0, 0.0, -10.0, Double.NaN, Double.PositiveInfinity).foreach { r =>
+      val err = intercept[IllegalArgumentException](ScaleProbe.requireRatio(r))
+      assert(err.getMessage.endsWith(s"not 1: $r"), err.getMessage)
+    }
+    Seq(10.0, 0.1).foreach(ScaleProbe.requireRatio)
   }
 
   test("a failed key's line is its exception class and first message line") {

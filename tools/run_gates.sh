@@ -7,8 +7,9 @@
 # parallelism-sweep diff between two dumps. First, before the build, a
 # lint that every scaladoc in src/main attaches to the definition below
 # it, a check that src/main writes its order-pinned double sum once, a
-# check that graft's native tier is installed at its two sites only, and
-# a check that the measurement mains share one probe kit.
+# check that graft's native tier is installed at its two sites only, a
+# check that the measurement mains share one probe kit, and a check that
+# two shared formulas are each written once.
 #
 # Usage: tools/run_gates.sh [sfDir] [cpusA] [cpusB]
 #   tools/run_gates.sh                          # sf0.01, single 4-way dump
@@ -81,6 +82,26 @@ if grep -rn 'deleteOnExit' src; then
 fi
 if grep -rn 'SparkListener' src/main | grep -v '^src/main/scala/graft/Probe.scala:'; then
   echo "Probe.Ledger in Probe.scala is the one SparkListener in src/main" >&2
+  exit 1
+fi
+
+# A formula several keys share is written once, behind a helper of the
+# module that owns it: TPC-H discounted revenue is TpchShapes.revenue,
+# and the per-type day-ordered scan under Stats' typed recursions is
+# Stats.dayOrderedScan. A second match is a hand-written copy.
+echo "== one shared formula =="
+revenue=$(grep -rnE 'col\("l_extendedprice"\) \* \(lit\(1(\.0)?\) - col\("l_discount"\)\)' \
+  src/main || true)
+echo "$revenue"
+if [[ "$(grep -c . <<<"$revenue")" != 1 || "$revenue" != *TpchShapes.scala:* ]]; then
+  echo "expected the discounted-revenue expression once in src/main," \
+    "in TpchShapes.revenue" >&2
+  exit 1
+fi
+scans=$(grep -nF 'groupByKey(_._1)' src/main/scala/graft/operators/Stats.scala || true)
+echo "$scans"
+if [[ "$(grep -c . <<<"$scans")" != 1 ]]; then
+  echo "expected groupByKey(_._1) once in Stats.scala, in dayOrderedScan" >&2
   exit 1
 fi
 
